@@ -158,14 +158,16 @@ def collect_point_query_batch(
     op: str,
     cap: int = BROADCAST_QUERY_CAP,
     extra_cols: tuple = (),
-) -> list:
+) -> tuple:
     """Collect the query side of a point-query-batch operator with the cap
     enforced in the SAME job: ``take(cap + 1)`` both bounds driver memory
     (a corpus-sized query side fails loudly instead of OOMing) and returns
     the rows the operator needs — the query-side plan executes once, not
-    once for a guard count and again for the collect. ``extra_cols`` ride
-    along after (id, vec) for operators that need more per-query state
-    (e.g. the hard-negative label)."""
+    once for a guard count and again for the collect.
+
+    Returns ``(qids, qmat)``: int64 ids and the (m, d) f64 query matrix.
+    Each of ``extra_cols`` (per-query state such as the hard-negative
+    label) appends one more array to the tuple."""
     rows = queries.select(id_col, vec_col, *extra_cols).take(cap + 1)
     if len(rows) > cap:
         raise ValueError(
@@ -173,7 +175,10 @@ def collect_point_query_batch(
             f"got more than {cap} query rows. Use exact.knn_join(strategy="
             f"'blocked') for corpus-sized query sets, or chunk the queries."
         )
-    return rows
+    qids = np.array([r[0] for r in rows], dtype=np.int64)
+    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    extras = tuple(np.array([r[2 + i] for r in rows]) for i in range(len(extra_cols)))
+    return (qids, qmat) + extras
 
 
 def knn_join(
@@ -240,7 +245,21 @@ def knn_join(
     raise ValueError(f"unknown strategy {strategy!r}")
 
 
+def empty_hits() -> pd.DataFrame:
+    """The zero-row ``(qid, id, score)`` frame a scoring task returns when
+    it has nothing to emit."""
+    return pd.DataFrame(
+        {
+            "qid": pd.Series(dtype="int64"),
+            "id": pd.Series(dtype="int64"),
+            "score": pd.Series(dtype="float64"),
+        }
+    )
+
+
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k window under the score-desc / id-asc total order
+    (T4), ranked and ordered by (qid, rank)."""
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -272,11 +291,9 @@ def _knn_join_numpy(
     from jvector_spark.functions.registry import resolve_kernel
 
     kernel = resolve_kernel(metric)  # driver-side: X1 registry lives here
-    qrows = collect_point_query_batch(
+    qids, qmat = collect_point_query_batch(
         queries, query_id_col, query_vec_col, "exact.knn_join(strategy='numpy')"
     )
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
     sc = corpus.sparkSession.sparkContext
     bq = sc.broadcast((qids, qmat))
 
@@ -339,13 +356,10 @@ def hard_negative_join(
     from jvector_spark.functions.registry import resolve_kernel
 
     kernel = resolve_kernel(metric)
-    qrows = collect_point_query_batch(
+    qids, qmat, qlab = collect_point_query_batch(
         queries, query_id_col, query_vec_col, "exact.hard_negative_join",
         extra_cols=(query_label_col,),
     )
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qlab = np.array([r[2] for r in qrows])
     sc = corpus.sparkSession.sparkContext
     bq = sc.broadcast((qids, qmat, qlab))
 
@@ -438,9 +452,7 @@ def _knn_join_blocked(
         qs = pdf[pdf["is_q"] == 1]
         cs = pdf[pdf["is_q"] == 0]
         if len(qs) == 0 or len(cs) == 0:
-            return pd.DataFrame({"qid": [], "id": [], "score": []}).astype(
-                {"qid": "int64", "id": "int64", "score": "float64"}
-            )
+            return empty_hits()
         cids = cs["rid"].to_numpy(dtype=np.int64)
         qids = qs["rid"].to_numpy(dtype=np.int64)
         cmat = kernels.as_matrix(cs["v"])

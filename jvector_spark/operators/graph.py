@@ -70,11 +70,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jvector_spark.functions import kernels
-from jvector_spark.operators.exact import collect_point_query_batch
+from jvector_spark.operators.exact import collect_point_query_batch, empty_hits
 
 __all__ = ["build_graph", "graph_search"]
 
@@ -753,45 +753,29 @@ def build_graph(
     (default) picks incremental above ``_INCR_BUILD_THRESHOLD`` rows —
     the deliberately-coarse-layout path (few large partitions for bulk
     traversal)."""
+    from jvector_spark.operators.index import _rerank_cols, _rerank_rows
+
     if method not in ("auto", "exact", "incremental"):
         raise ValueError(f"unknown graph build method {method!r}")
     ef_c = int(ef_construction or 2 * degree)
     manifest = index.manifest
     met = manifest.metric
-    packed = manifest.vec_format == "packed_f32"
-    slim = getattr(manifest, "store_fp32", "all") == "none"
-    dim = manifest.dim
+    slim = index._slim
     names = segments or [s.name for s in manifest.segments]
     for seg_name in names:
         gdir = _graph_dir(index, seg_name)
         if graph_meta(index, seg_name) is not None and not rebuild:
             continue
-        cols = ["part_id", "id"] + (["nvq", "nvq_params"] if slim else ["vec"])
+        cols = ["part_id", "id", *_rerank_cols(slim)]
         b = index.spark.sparkContext.broadcast(
-            (degree, alpha, overflow, ef_c, met, packed, slim, dim, method)
+            (degree, alpha, overflow, ef_c, met, index._nvq_codec(slim), method)
         )
 
         def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            deg, al, ov, efc, m_, pk, sl, d_, mth = b.value
+            deg, al, ov, efc, m_, nvq_c, mth = b.value
             part = int(pdf["part_id"].iloc[0])
             pdf = pdf.sort_values("id", kind="stable").reset_index(drop=True)
-            if sl:
-                from jvector_spark.operators.quantize.nvq import NVQuantizer
-
-                codec = NVQuantizer(dim=d_)
-                codes = np.frombuffer(b"".join(pdf["nvq"]), np.uint8).reshape(
-                    len(pdf), d_
-                )
-                params = np.stack(
-                    [np.asarray(p, dtype=np.float64) for p in pdf["nvq_params"]]
-                )
-                x = codec.decode_numpy(codes, params).astype(np.float32)
-            elif pk:
-                x = np.frombuffer(b"".join(pdf["vec"]), np.float32).reshape(
-                    len(pdf), d_
-                ).copy()
-            else:
-                x = kernels.as_matrix(pdf["vec"], dtype=np.float32)
+            x = _rerank_rows(pdf, nvq_c, block=True).astype(np.float32, copy=False)
             if mth == "incremental" or (
                 mth == "auto" and len(x) > _INCR_BUILD_THRESHOLD
             ):
@@ -944,13 +928,14 @@ def _traverse_scores(
     if stage1[0] == "bq":
         from jvector_spark.operators.index import _POP8
 
-        _, q_words, bdim, _words = stage1
+        _, q_words, bdim = stage1
         xor = np.bitwise_xor(q_words[qsel][:, None, :], codes[safe])
         pop = _POP8[xor.view(np.uint8).reshape(a_n, c_n, -1)].sum(
             axis=2, dtype=np.int64
         )
         return (1.0 - pop / float(bdim)).astype(np.float32)
-    _, luts32, _mag_lut, m = stage1
+    luts32 = stage1[1]
+    m = luts32.shape[1]
     # reused scratch + per-subspace accumulation: the one-shot fancy
     # gather materialized TWO fresh (A, C, m) intermediates per hop —
     # pure page-fault cost at bulk shapes (see _scratch)
@@ -1100,27 +1085,19 @@ def _batch_beam(
     return masked
 
 
-def _empty_result() -> pd.DataFrame:
-    return pd.DataFrame(
-        {"qid": pd.Series([], dtype="int64"),
-         "id": pd.Series([], dtype="int64"),
-         "score": pd.Series([], dtype="float64")}
-    )
-
-
 def _decode_partition(
     data_pdf: pd.DataFrame,
     edge_pdf: pd.DataFrame,
-    is_bq: bool,
-    width: int,
+    codec,
     need_mags: bool,
-    mag_lut,
     res_m: bool,
 ):
     """Sort + decode one partition's rows for traversal: returns
     (data_pdf_sorted, ids, nbr_mat, entries, codes, mags, rsq) or None
     when either side is empty. Neighbors hold GLOBAL ids; local ordinals
-    resolve via one flattened searchsorted (no per-row Python loop)."""
+    resolve via one flattened searchsorted (no per-row Python loop).
+    ``codec`` is the stage-1 codec, None under exact steering (stage-1
+    codes never touched)."""
     if len(data_pdf) == 0 or len(edge_pdf) == 0:
         return None
     data_pdf = data_pdf.sort_values("id", kind="stable").reset_index(drop=True)
@@ -1155,21 +1132,11 @@ def _decode_partition(
     entries = np.flatnonzero(edge_pdf["entry"].to_numpy())
     if len(entries) == 0:
         entries = np.array([0])
-    if width is None:  # exact steering: stage-1 codes never touched
-        codes = None
-    elif is_bq:
-        codes = np.frombuffer(
-            b"".join(data_pdf["codes"]), dtype=np.uint64
-        ).reshape(n_local, width)
-    else:
-        codes = np.frombuffer(
-            b"".join(data_pdf["codes"]), dtype=np.uint8
-        ).reshape(n_local, width).astype(np.int64)
-    mags = None
-    if need_mags and not is_bq and codes is not None:
-        mags = np.sqrt(
-            np.maximum(mag_lut[np.arange(width), codes].sum(axis=1), 1e-30)
-        ).astype(np.float32)
+    codes = mags = None
+    if codec is not None:
+        codes = codec.decode_codes(data_pdf["codes"])
+        if need_mags:
+            mags = codec.row_magnitudes(codes)
     rsq = data_pdf["rsq"].to_numpy(dtype=np.float32) if res_m else None
     return data_pdf, ids, nbr_mat, entries, codes, mags, rsq
 
@@ -1189,18 +1156,22 @@ def _traverse_rerank(
     tel_acc,
 ) -> pd.DataFrame:
     """Batched beam traversal + fused exact rerank of ONE partition for
-    the GIVEN (already selected) queries. ``s1_sel`` carries per-query
-    stage-1 payloads (("pq", luts, mag_lut, m) / ("bq", q_words, dim,
-    words), arrays aligned with ``q_ids``); ``qc_vec`` is the per-query
+    the GIVEN (already selected) queries. ``s1_sel`` is the codec's
+    ``query_stage1`` payload for exactly these queries (aligned with
+    ``q_ids``), or None for exact steering; ``qc_vec`` is the per-query
     q.centroid dot for residual decomposition. Shared by the broadcast
     and distributed routes — identical scoring on both."""
-    from jvector_spark.operators.index import _fused_block_topk
+    from jvector_spark.operators.index import (
+        _fused_block_topk,
+        _rerank_rows,
+        _stage1_rows,
+    )
 
     data_pdf, ids, nbr_mat, entries, codes, mags, rsq = part_pack
     n_local = len(ids)
     n_q = len(q_ids)
 
-    if s1_sel[0] == "exact":
+    if s1_sel is None:
         # EXACT steering (steer='exact'): the beam scores hops from the
         # stored fp32 vectors, so beam scores ARE the final exact scores
         # — no second-pass rerank, and within-partition beam recall is
@@ -1210,13 +1181,7 @@ def _traverse_rerank(
         # coarse to steer LONG traversals across big mixed partitions).
         # At d<=~128 the gathered-vector hop costs the same as the LUT
         # hop (both allocator/bandwidth-bound, ~2.6 s per 2000 queries).
-        pk, dim = s1_sel[1], s1_sel[2]
-        if pk:
-            xm = np.frombuffer(
-                b"".join(data_pdf["vec"]), np.float32
-            ).reshape(n_local, dim)
-        else:
-            xm = kernels.as_matrix(data_pdf["vec"], dtype=np.float32)
+        xm = kernels.as_matrix(data_pdf["vec"], dtype=np.float32)
         xnn = np.einsum("ij,ij->i", xm, xm)
         q32 = q_mat.astype(np.float32, copy=False)
         qnn = np.einsum("ij,ij->i", q32, q32)
@@ -1253,7 +1218,7 @@ def _traverse_rerank(
                 "id": ids[tid[valid]],
                 "score": tsc[valid].astype(np.float64),
             }))
-        return pd.concat(out, ignore_index=True) if out else _empty_result()
+        return pd.concat(out, ignore_index=True) if out else empty_hits()
 
     def score_fn(aq: np.ndarray, cand: np.ndarray) -> np.ndarray:
         return _traverse_scores(
@@ -1271,6 +1236,7 @@ def _traverse_rerank(
     # Qr x uniq to ~2^25 f32 cells (128 MB), min 64 queries per pass.
     out = []
     pil = _pilot_entries(entries, n_local, ef)
+    rerank_rows = _rerank_rows(data_pdf, nvq_c, block=False)
     for lo in range(0, n_q, qc_chunk):
         hi = min(lo + qc_chunk, n_q)
         sub = np.arange(lo, hi)
@@ -1293,22 +1259,9 @@ def _traverse_rerank(
                 bm = rbeams[qi][rbeams[qi] >= 0]
                 mask[qi, np.searchsorted(uniq, bm)] = True
             oq, oi, osc = _fused_block_topk(
-                met, kk, ef,
-                q_ids[rsub], q_mat[rsub],
-                s1_sel[1][rsub] if s1_sel[0] == "pq" else None,
-                s1_sel[2] if s1_sel[0] == "pq" else None,
-                q_nrm[rsub], ids[uniq], codes[uniq],
-                vec_rows=(
-                    None if nvq_c is not None
-                    else data_pdf["vec"].iloc[uniq].reset_index(drop=True)
-                ),
-                nvq=(
-                    (nvq_c,
-                     data_pdf["nvq"].iloc[uniq].reset_index(drop=True),
-                     data_pdf["nvq_params"].iloc[uniq].reset_index(drop=True))
-                    if nvq_c is not None else None
-                ),
-                bq=(s1_sel[1][rsub], s1_sel[2]) if s1_sel[0] == "bq" else None,
+                met, kk, ef, q_ids[rsub], q_mat[rsub],
+                _stage1_rows(s1_sel, rsub), q_nrm[rsub], ids[uniq],
+                codes[uniq], lambda idx: rerank_rows(uniq[idx]),
                 mask=mask,
                 counters=tel_acc,
                 residual=(
@@ -1317,7 +1270,7 @@ def _traverse_rerank(
                 strict_mask=True,  # results come ONLY from this query's beam
             )
             out.append(pd.DataFrame({"qid": oq, "id": oi, "score": osc}))
-    return pd.concat(out, ignore_index=True) if out else _empty_result()
+    return pd.concat(out, ignore_index=True) if out else empty_hits()
 
 
 def graph_search(
@@ -1400,7 +1353,7 @@ def graph_search(
     d=1024/ef640: wall 17.9 -> 9.9 s, recall 0.789 -> 0.754 at W=20).
     Default ``max(1, ef_search // 64)``."""
     from jvector_spark.operators.exact import query_side_is_big
-    from jvector_spark.operators.index import _partition_score_bounds
+    from jvector_spark.operators.index import _merge_topk, _rerank_cols
 
     manifest = index.manifest
     met = manifest.metric
@@ -1458,16 +1411,9 @@ def graph_search(
                 query_id_col=query_id_col, query_vec_col=query_vec_col,
                 probe_ratio=probe_ratio, m_hint=m_hint, telemetry=telemetry,
             )
-    tel_acc = (
-        (telemetry._visited, telemetry._reranked, telemetry._stages)
-        if telemetry is not None
-        else None
-    )
-    data_cols = ["id", "codes"]  # hive part_id lives in the dir name
-    if use_nvq:
-        data_cols += ["nvq", "nvq_params"]
-    else:
-        data_cols += ["vec"]
+    tel_acc = telemetry.counters() if telemetry is not None else None
+    # hive part_id lives in the dir name
+    data_cols = ["id", "codes", *_rerank_cols(use_nvq)]
 
     t = index.tombstones()
     # Per-partition EMITTED rows: the global top-k over the union of
@@ -1482,35 +1428,23 @@ def graph_search(
     emit_k = k_ret if t is not None else min(k, k_ret)
 
     if strategy == "distributed":
-        scanned = _graph_search_distributed(
+        parts = _graph_search_distributed(
             index, queries_df, met, emit_k, ef, n_probe,
             query_id_col, query_vec_col, probe_ratio, beam_width,
             use_nvq, data_cols, tel_acc, steer_exact=steer == "exact",
         )
     elif strategy == "broadcast":
-        scanned = _graph_search_broadcast(
+        parts = _graph_search_broadcast(
             index, queries_df, met, emit_k, ef, n_probe,
             query_id_col, query_vec_col, probe_ratio, beam_width,
-            use_nvq, data_cols, tel_acc, _partition_score_bounds,
-            steer_exact=steer == "exact",
+            use_nvq, data_cols, tel_acc, steer_exact=steer == "exact",
         )
     else:
         raise ValueError(f"unknown search strategy {strategy!r}")
-    if scanned is None:
+    if not parts:
         return index.spark.createDataFrame([], "qid long, id long, score double")
-    if manifest.spill > 1:
-        # U3 visited-set dedup; repartition(qid) first so the dedup
-        # aggregate and the top-k window below share ONE exchange
-        # (hash(qid) satisfies the (qid, id) clustering — guide §2.4)
-        scanned = scanned.repartition("qid").dropDuplicates(["qid", "id"])
-    if t is not None:  # traversed-but-filtered (two-phase delete, F2)
-        scanned = scanned.join(t.select("id"), "id", "left_anti")
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
-    return (
-        scanned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("qid", "rank")
-    )
+    # tombstoned rows are traversed but filtered (two-phase delete, F2)
+    return _merge_topk(parts, k, manifest.spill, tombstones=t)
 
 
 def _bulk_traversal_pays(index, ef: int) -> bool:
@@ -1553,12 +1487,14 @@ def _bulk_traversal_pays(index, ef: int) -> bool:
     return part_rows > 16 * visited_est
 
 
-def _seg_dirs(index, seg_name: str, data_cols: list[str]) -> tuple:
+def _seg_dirs(index, seg_name: str, data_cols: list[str], res_mode: bool) -> tuple:
+    """(data dir, edges dir, data columns to read — plus the residual
+    ``rsq`` column in residual mode) for ``_read_partition``."""
     info = index._segments[seg_name]
     return (
         os.path.join(info["dir"], "data.parquet"),
         os.path.join(_graph_dir(index, seg_name), "edges.parquet"),
-        tuple(data_cols),
+        tuple(data_cols) + (("rsq",) if res_mode else ()),
     )
 
 
@@ -1579,67 +1515,36 @@ def _read_partition(dirs: tuple, part: int):
 def _graph_search_broadcast(
     index, queries_df, met, k_ret, ef, n_probe,
     query_id_col, query_vec_col, probe_ratio, beam_width,
-    use_nvq, data_cols, tel_acc, score_bounds, steer_exact=False,
-) -> DataFrame | None:
+    use_nvq, data_cols, tel_acc, steer_exact=False,
+) -> list[DataFrame]:
+    from jvector_spark.operators.index import _probe_plan, _stage1_rows
+
     manifest = index.manifest
-    qrows = collect_point_query_batch(
+    qids, qmat = collect_point_query_batch(
         queries_df, query_id_col, query_vec_col, "graph_search"
     )
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
     qnorms = np.linalg.norm(qmat, axis=1)
     parts_out = []
     for seg in manifest.segments:
         info = index._segments[seg.name]
-        pq = info["pq"]
-        res_mode = bool(info.get("residual"))
-        npk = min(n_probe, len(info["centroids"]))
-        _, d2 = score_bounds(info, qmat, met)
-        d2 = np.where(info["has_rows"][None, :], d2, np.inf)
-        probe = np.argsort(d2, axis=1)[:, :npk]
-        probe_valid = None
-        if probe_ratio is not None:
-            dt = np.take_along_axis(d2, probe, axis=1)
-            probe_valid = dt <= dt[:, :1] * (probe_ratio**2) * (1.0 + 1e-9)
-        p2q: dict[int, list[int]] = {}
-        for qi in range(len(qids)):
-            for jj, p in enumerate(probe[qi]):
-                if probe_valid is not None and not probe_valid[qi, jj]:
-                    continue
-                if np.isfinite(d2[qi, int(p)]):
-                    p2q.setdefault(int(p), []).append(qi)
+        _, _, p2q = _probe_plan(info, qmat, n_probe, probe_ratio)
         probed = sorted(p2q)
         if not probed:
             continue
-        from jvector_spark.operators.quantize.bq import BinaryQuantizer
-
-        if steer_exact:
-            res_mode = False  # stage-1 codes unused
-            stage1 = ("exact", manifest.vec_format == "packed_f32",
-                      manifest.dim, None)
-            need_mags = False
-        elif isinstance(pq, BinaryQuantizer):
-            stage1 = ("bq", pq.encode_numpy(qmat), pq.dim, pq.words)
-            need_mags = False
-        else:
-            luts = pq.adc_lut_batch(
-                qmat, "DOT_PRODUCT" if res_mode else met
-            ).astype(np.float32)
-            stage1 = ("pq", luts, pq.magnitude_lut(), pq.m)
-            need_mags = met == "COSINE" and not res_mode
+        # exact steering never touches the stage-1 codes
+        codec = None if steer_exact else info["pq"]
+        res_mode = bool(info.get("residual")) and not steer_exact
+        stage1 = (
+            codec.query_stage1(qmat, met, residual=res_mode)
+            if codec is not None
+            else None
+        )
         qc_all = qmat @ info["centroids"].T if res_mode else None
-        nvq_codec = None
-        if use_nvq:
-            from jvector_spark.operators.quantize.nvq import NVQuantizer
-
-            nvq_codec = NVQuantizer(dim=manifest.dim)
         b = index.spark.sparkContext.broadcast(
-            (stage1, qids, qmat, qnorms, met, k_ret, ef, p2q, nvq_codec,
-             qc_all, res_mode, need_mags, beam_width)
+            (codec, stage1, qids, qmat, qnorms, met, k_ret, ef, p2q,
+             index._nvq_codec(use_nvq), qc_all, res_mode, beam_width)
         )
-        dirs = _seg_dirs(
-            index, seg.name, data_cols + (["rsq"] if res_mode else [])
-        )
+        dirs = _seg_dirs(index, seg.name, data_cols, res_mode)
 
         # factory binds THIS segment's broadcast — the returned scan is
         # consumed lazily, and a free `b` in a loop-shared scope would
@@ -1653,8 +1558,8 @@ def _graph_search_broadcast(
         # exactly once (the DiskANN contract: task = partition).
         def _make_scan(b, tel_acc, dirs):
             def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                (s1, q_ids, q_mat, q_nrm, m_, kk, ef_, p2q_, nvq_c, qc_a,
-                 res_m, nm, bw) = b.value
+                (cdc, s1, q_ids, q_mat, q_nrm, m_, kk, ef_, p2q_, nvq_c, qc_a,
+                 res_m, bw) = b.value
                 for pdf in batches:
                     for p in pdf["part_id"].tolist():
                         q_idx = p2q_.get(int(p))
@@ -1664,22 +1569,16 @@ def _graph_search_broadcast(
                         if data_pdf is None:
                             continue
                         pack = _decode_partition(
-                            data_pdf, edge_pdf, s1[0] == "bq", s1[3],
-                            nm, s1[2] if s1[0] == "pq" else None, res_m,
+                            data_pdf, edge_pdf, cdc,
+                            m_ == "COSINE" and not res_m, res_m,
                         )
                         if pack is None:
                             continue
                         qsel = np.asarray(q_idx)
-                        if s1[0] == "exact":
-                            s1_sel = s1  # no per-query stage-1 payload
-                        elif s1[0] == "pq":
-                            s1_sel = ("pq", s1[1][qsel], s1[2], s1[3])
-                        else:
-                            s1_sel = ("bq", s1[1][qsel], s1[2], s1[3])
                         out = _traverse_rerank(
                             pack, m_, kk, ef_, bw,
                             q_ids[qsel], q_mat[qsel], q_nrm[qsel],
-                            s1_sel,
+                            _stage1_rows(s1, qsel) if s1 is not None else None,
                             qc_a[qsel, int(p)] if qc_a is not None else None,
                             nvq_c, tel_acc,
                         )
@@ -1697,19 +1596,14 @@ def _graph_search_broadcast(
                 schema="qid long, id long, score double",
             )
         )
-    if not parts_out:
-        return None
-    scanned = parts_out[0]
-    for d in parts_out[1:]:
-        scanned = scanned.unionByName(d)  # J6 multi-segment merge
-    return scanned
+    return parts_out
 
 
 def _graph_search_distributed(
     index, queries_df, met, k_ret, ef, n_probe,
     query_id_col, query_vec_col, probe_ratio, beam_width,
     use_nvq, data_cols, tel_acc, steer_exact=False,
-) -> DataFrame | None:
+) -> list[DataFrame]:
     """Bulk graph route: query replicas shuffle to their probed
     partitions (the ONLY exchange — Q x n_probe rows); each (partition,
     query-group) task direct-reads its partition and runs the shared
@@ -1717,19 +1611,12 @@ def _graph_search_distributed(
     Corpus bytes NEVER shuffle (vs the fused tile route's per-query-block
     corpus replication)."""
     manifest = index.manifest
-    packed = manifest.vec_format == "packed_f32"
     parts_out = []
     for seg in manifest.segments:
         info = index._segments[seg.name]
-        pq = info["pq"]
-        res_mode = bool(info.get("residual"))
-        from jvector_spark.operators.quantize.bq import BinaryQuantizer
-
-        is_bq = isinstance(pq, BinaryQuantizer)
-        if steer_exact:  # stage-1 codes unused: no LUTs, no residual math
-            res_mode = False
-        need_mags = met == "COSINE" and not res_mode and not is_bq
-        need_mags = need_mags and not steer_exact
+        # exact steering: stage-1 codes unused — no LUTs, no residual math
+        codec = None if steer_exact else info["pq"]
+        res_mode = bool(info.get("residual")) and not steer_exact
         assigned = index._assign_probes(
             queries_df, info, n_probe, query_id_col, query_vec_col,
             metric=met, probe_ratio=probe_ratio,
@@ -1752,46 +1639,25 @@ def _graph_search_distributed(
             )
         cents = info["centroids"] if res_mode else None
         b = index.spark.sparkContext.broadcast(
-            (pq, met, k_ret, ef, beam_width, use_nvq, manifest.dim,
-             res_mode, cents, need_mags, packed, steer_exact)
+            (codec, met, k_ret, ef, beam_width, index._nvq_codec(use_nvq),
+             res_mode, cents)
         )
-        dirs = _seg_dirs(
-            index, seg.name, data_cols + (["rsq"] if res_mode else [])
-        )
+        dirs = _seg_dirs(index, seg.name, data_cols, res_mode)
 
         def _make_bulk(b, tel_acc, dirs):
             def bulk(key, qpdf: pd.DataFrame) -> pd.DataFrame:
-                (pq_, m_, kk, ef_, bw, unvq, dim, res_m, cents_, nm,
-                 pk, sx) = b.value
+                cdc, m_, kk, ef_, bw, nvq_c, res_m, cents_ = b.value
                 part = int(key[0])
                 data_pdf, edge_pdf = _read_partition(dirs, part)
                 if data_pdf is None or len(qpdf) == 0:
-                    return _empty_result()
-                is_bq_ = hasattr(pq_, "words")
-                width = (
-                    None if sx
-                    else (pq_.words if is_bq_ else pq_.m)
-                )
-                mag_lut = (
-                    None if (is_bq_ or sx) else pq_.magnitude_lut()
-                )
+                    return empty_hits()
                 pack = _decode_partition(
-                    data_pdf, edge_pdf, is_bq_, width, nm, mag_lut, res_m
+                    data_pdf, edge_pdf, cdc, m_ == "COSINE" and not res_m, res_m
                 )
                 if pack is None:
-                    return _empty_result()
-                nvq_c = None
-                if unvq:
-                    from jvector_spark.operators.quantize.nvq import NVQuantizer
-
-                    nvq_c = NVQuantizer(dim=dim)
+                    return empty_hits()
                 q_ids = qpdf["qid"].to_numpy(dtype=np.int64)
-                if pk:
-                    qmat = np.frombuffer(
-                        b"".join(qpdf["vec"]), dtype=np.float32
-                    ).reshape(len(qpdf), dim).astype(np.float64)
-                else:
-                    qmat = kernels.as_matrix(qpdf["vec"])
+                qmat = kernels.as_matrix(qpdf["vec"])
                 qnrm = np.linalg.norm(qmat, axis=1)
                 qc_vec = (qmat @ cents_[part]) if res_m else None
                 # outer chunk bounds the per-chunk LUT footprint
@@ -1802,26 +1668,21 @@ def _graph_search_distributed(
                 for lo in range(0, len(q_ids), step):
                     hi = min(lo + step, len(q_ids))
                     qm = qmat[lo:hi]
-                    if sx:
-                        s1_sel = ("exact", pk, dim, None)
-                    elif is_bq_:
-                        s1_sel = ("bq", pq_.encode_numpy(qm), pq_.dim,
-                                  pq_.words)
-                    else:
-                        luts = pq_.adc_lut_batch(
-                            qm, "DOT_PRODUCT" if res_m else m_
-                        ).astype(np.float32)
-                        s1_sel = ("pq", luts, mag_lut, pq_.m)
                     r = _traverse_rerank(
                         pack, m_, kk, ef_, bw,
-                        q_ids[lo:hi], qm, qnrm[lo:hi], s1_sel,
+                        q_ids[lo:hi], qm, qnrm[lo:hi],
+                        (
+                            cdc.query_stage1(qm, m_, residual=res_m)
+                            if cdc is not None
+                            else None
+                        ),
                         qc_vec[lo:hi] if qc_vec is not None else None,
                         nvq_c, tel_acc,
                     )
                     if len(r):
                         out.append(r)
                 return (
-                    pd.concat(out, ignore_index=True) if out else _empty_result()
+                    pd.concat(out, ignore_index=True) if out else empty_hits()
                 )
 
             return bulk
@@ -1833,9 +1694,4 @@ def _graph_search_distributed(
                 schema="qid long, id long, score double",
             )
         )
-    if not parts_out:
-        return None
-    scanned = parts_out[0]
-    for d in parts_out[1:]:
-        scanned = scanned.unionByName(d)
-    return scanned
+    return parts_out

@@ -45,6 +45,7 @@ n_partitions grows with sqrt(n) at build/compaction time.
 
 from __future__ import annotations
 
+import dataclasses
 import math
 import os
 import time
@@ -52,7 +53,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark.accumulators import AccumulatorParam
@@ -60,11 +61,13 @@ from pyspark.accumulators import AccumulatorParam
 from jvector_spark.functions import kernels
 from jvector_spark.operators.exact import (
     _C_TILE,
-    BROADCAST_QUERY_CAP,
+    _rank_topk,
+    collect_point_query_batch,
+    empty_hits,
     query_side_is_big,
 )
 from jvector_spark.operators.quantize.pq import ProductQuantizer
-from jvector_spark.types import IndexManifest, SegmentInfo
+from jvector_spark.types import MANIFEST_VERSION, IndexManifest, SegmentInfo
 
 MAX_CENTROIDS = 4096  # keep the broadcast "upper layer" small
 
@@ -233,7 +236,9 @@ def _blockwise_adc_topk(
     m = code_idx.shape[1]
     k_run = min(rerank_k, n)
     cols = np.arange(m)
-    lut_t = np.ascontiguousarray(luts.astype(np.float32).transpose(1, 2, 0))
+    lut_t = np.ascontiguousarray(
+        luts.astype(np.float32, copy=False).transpose(1, 2, 0)
+    )
     # query-side epilogue constants (computed once, exactly as the
     # full-matrix expressions did)
     if residual is not None:
@@ -337,20 +342,57 @@ def _blockwise_adc_topk(
     return run_c, adc_us, topk_us
 
 
+def _stage1_rows(stage1, qsel: np.ndarray):
+    """A codec's ``query_stage1`` payload restricted to the queries
+    ``qsel`` (only the middle element is per-query)."""
+    kind, q_side, aux = stage1
+    return (kind, q_side[qsel], aux)
+
+
+def _rerank_cols(use_nvq: bool) -> list[str]:
+    """The stored columns ``_rerank_rows`` reads."""
+    return ["nvq", "nvq_params"] if use_nvq else ["vec"]
+
+
+def _rerank_rows(frame: pd.DataFrame, nvq_c, block: bool):
+    """Stage-2 rerank payload of a row frame, for ``_fused_block_topk``.
+
+    The frame carries either the fp32 ``vec`` column (packed bytes or
+    float lists — ``kernels.as_matrix`` decodes both) or, when ``nvq_c``
+    is given, the ``nvq`` / ``nvq_params`` columns (the reference's
+    default rerank feature, NVQScorer.java; parquet column pruning means
+    the 4-bytes/dim fp32 column is never read in that mode).
+
+    ``block=True`` decodes the WHOLE frame once, for tiles whose expected
+    candidate coverage reaches the row count (r9: bulk corpus-as-queries
+    tiles re-gathered the same rows in every 512-query chunk — the
+    per-chunk pandas iloc + bytes-join was 3,238 of 14,540 kernel
+    core-seconds at the 1M bulk shape). Otherwise returns a gather
+    ``idx -> (len(idx), d)`` that decodes only the candidate rows. fp32
+    blocks stay f32 (lossless storage values) and the kernel casts each
+    gathered chunk to f64, so both forms give bit-identical scores."""
+    if nvq_c is not None:
+        nvq, params = frame["nvq"], frame["nvq_params"]
+        if block:
+            return nvq_c.decode_columns(nvq, params)
+        return lambda idx: nvq_c.decode_columns(nvq.iloc[idx], params.iloc[idx])
+    vec = frame["vec"]
+    if block:
+        return kernels.as_matrix(vec, dtype=np.float32)
+    return lambda idx: kernels.as_matrix(vec.iloc[idx])
+
+
 def _fused_block_topk(
     met: str,
     k: int,
     rerank_k: int,
     q_ids: np.ndarray,
     q_mat: np.ndarray,
-    luts: np.ndarray,
-    mag_lut,
+    stage1,
     q_norms: np.ndarray,
     ids: np.ndarray,
     code_idx: np.ndarray,
-    vec_rows=None,
-    nvq=None,
-    bq=None,
+    rows,
     mask=None,
     counters=None,
     residual=None,
@@ -358,16 +400,17 @@ def _fused_block_topk(
 ):
     """Fused two-phase scoring of one (query block × row block).
 
-    Phase 1: approximate scores from the stage-1 codec — ADC over PQ codes
-    (``luts`` is the per-query LUT stack) or, when ``bq`` is given as
-    (q_words, dim), hamming over packed sign bits (``code_idx`` is then the
-    (n, words) uint64 word matrix; hamming is a metric-agnostic ranking
-    proxy, exactly the reference's BQ first pass,
-    BuildScoreProvider.java:170-212). Keep the block-local top ``rerank_k``.
-    Phase 2: high-resolution rerank of just those rows — from fp32
-    (``vec_rows``: the batch's vec column) or dequantized NVQ bytes
-    (``nvq`` = (codec, nvq_series, params_series)) — then per-query exact
-    top-k with the score-desc/id-asc tie-break (T4).
+    Phase 1: approximate scores from the stage-1 codec, whose query-side
+    payload ``stage1`` is the codec's ``query_stage1`` output for these
+    queries and whose ``code_idx`` is its ``decode_codes`` output for
+    these rows: ADC over PQ codes for ``("pq", luts, mag_lut)``, or
+    hamming over packed sign bits for ``("bq", q_words, dim)`` (hamming
+    is a metric-agnostic ranking proxy, exactly the reference's BQ first
+    pass, BuildScoreProvider.java:170-212). Keep the block-local top
+    ``rerank_k``. Phase 2: high-resolution rerank of just those rows from
+    ``rows`` (see ``_rerank_rows``: the decoded block, or a gather over
+    fp32 or dequantized NVQ rows) — then per-query exact top-k with the
+    score-desc/id-asc tie-break (T4).
 
     ``mask`` (mq, n) bool: per-(query, row) candidate restriction (the
     two-level per-query fine-cell filter). Non-member rows are demoted to
@@ -385,8 +428,11 @@ def _fused_block_topk(
     graph.py refill note). The IVF fine-cell route keeps refill — its
     cells are a recall lever, not a visited-set contract.
 
-    Shared by the broadcast-query scan and the distributed tile join so
-    both routes score identically. Returns (qid, id, score) arrays.
+    Four routes score through this kernel, so they score identically:
+    the IVF broadcast scan (``IVFIndex._segment_fused_scan``), the IVF
+    tile join and the index-less two-phase tile (both via
+    ``_tile_topk``), and graph-traversal rerank
+    (``graph._traverse_rerank``). Returns (qid, id, score) arrays.
 
     ``counters``: (visited_acc, reranked_acc) or (visited_acc,
     reranked_acc, stage_accs) — stage_accs is SearchTelemetry's
@@ -395,17 +441,17 @@ def _fused_block_topk(
 
     ``residual`` = (qc_dot (mq,), rsq (n,)): residual-PQ mode. Every call
     covers rows of ONE coarse cell (both routes group by ``part_id``), so
-    the per-(query, cell) term is a vector. ``luts`` must then be
-    DOT-partials over the residual codebooks for EVERY metric; the score
-    decomposes as q·(c+r̂) = qc_dot + gather, with the stored ‖c+r̂‖²
-    (``rsq``) supplying the L2/cosine magnitude — no per-cell LUT rebuild,
-    the gather kernel is byte-identical to the global-PQ path.
+    the per-(query, cell) term is a vector. ``stage1`` must then hold
+    DOT-partial LUTs over the residual codebooks for EVERY metric; the
+    score decomposes as q·(c+r̂) = qc_dot + gather, with the stored
+    ‖c+r̂‖² (``rsq``) supplying the L2/cosine magnitude — no per-cell LUT
+    rebuild, the gather kernel is byte-identical to the global-PQ path.
     """
     stages = counters[2] if counters is not None and len(counters) > 2 else None
     t_mark = time.perf_counter() if stages is not None else 0.0
-    if bq is not None:
-        q_words, bq_dim = bq
-        approx = _bq_hamming_block(q_words, code_idx, bq_dim)
+    kind, q_side, aux = stage1
+    if kind == "bq":
+        approx = _bq_hamming_block(q_side, code_idx, aux)
         if stages is not None:
             now = time.perf_counter()
             stages["adc"].add(int((now - t_mark) * 1e6))
@@ -424,7 +470,7 @@ def _fused_block_topk(
         # Candidate set and order are bit-identical to the full-matrix
         # path (see _blockwise_adc_topk).
         cand_idx, adc_us, topk_us = _blockwise_adc_topk(
-            met, rerank_k, luts, mag_lut, q_norms, ids, code_idx,
+            met, rerank_k, q_side, aux, q_norms, ids, code_idx,
             mask=mask, residual=residual, timed=stages is not None,
         )
         if stages is not None:
@@ -436,7 +482,7 @@ def _fused_block_topk(
         # (n_q, r_w) bool: which selected candidates the query's own mask
         # admits — refilled (out-of-mask) slots get dropped after rerank
         valid_all = np.take_along_axis(mask, cand_idx, axis=1)
-    block_mat = isinstance(vec_rows, np.ndarray)
+    block_mat = isinstance(rows, np.ndarray)
     uniq = (
         np.unique(cand_idx.ravel())
         if (counters is not None or not block_mat)
@@ -448,27 +494,9 @@ def _fused_block_topk(
         t_mark = now
     if counters is not None:
         counters[1].add(int(len(uniq)))  # stage-2 reranked rows
-    if block_mat:
-        # r9 fast path: the caller pre-decoded the WHOLE row block once
-        # (tile/batch-level), so each chunk gathers candidate rows with a
-        # plain numpy index instead of a per-chunk pandas .iloc +
-        # bytes-join + frombuffer (profiled: the rerank stage was 3,238
-        # kernel core-seconds of the 1M bulk search, mostly that Python
-        # object churn — rows re-gather across every 512-query chunk).
-        # f32 block values cast to f64 per gathered chunk below — exact,
-        # so rerank scores are bit-identical.
-        x = vec_rows
-    elif nvq is not None:
-        nvq_codec, nvq_series, params_series = nvq
-        nvq_rows = np.frombuffer(
-            b"".join(nvq_series.iloc[uniq]), dtype=np.uint8
-        ).reshape(len(uniq), nvq_codec.dim)
-        nvq_params = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in params_series.iloc[uniq]]
-        )
-        x = nvq_codec.decode_numpy(nvq_rows, nvq_params)
-    else:
-        x = kernels.as_matrix(vec_rows.iloc[uniq])
+    # a pre-decoded block is indexed directly (see _rerank_rows);
+    # otherwise decode just the unique candidates
+    x = rows if block_mat else rows(uniq)
     # Vectorized stage-2 rerank (r5: the per-QUERY loop here was the last
     # Python hot loop on the corpus-as-queries bulk path). Same math as
     # kernels.similarity, same (score desc, id asc) T4 ordering — the
@@ -524,6 +552,94 @@ def _fused_block_topk(
         keep = np.isfinite(flat_s)
         return out_q[keep], out_i.ravel()[keep], flat_s[keep]
     return out_q, out_i.ravel(), out_s.ravel()
+
+
+def _cell_mask(subs_list: list, n_cells: int) -> np.ndarray:
+    """(len(subs_list), n_cells) bool: each query's probed fine cells, by
+    one vectorized scatter (no per-query Python loop)."""
+    lens = np.fromiter(
+        (len(a) for a in subs_list), dtype=np.int64, count=len(subs_list)
+    )
+    out = np.zeros((len(subs_list), n_cells), dtype=bool)
+    if lens.sum():
+        out[np.repeat(np.arange(len(subs_list)), lens), np.concatenate(subs_list)] = True
+    return out
+
+
+def _tile_topk(
+    qs: pd.DataFrame,
+    cs: pd.DataFrame,
+    codec,
+    met: str,
+    k: int,
+    rerank_k: int,
+    nvq_c=None,
+    res_cent: np.ndarray | None = None,
+    n_fine: int | None = None,
+    counters=None,
+) -> pd.DataFrame:
+    """Fused two-phase top-k of one tile-join tile: query rows ``qs``
+    (rid, vec[, subs]) against corpus rows ``cs`` (rid, codes, then vec
+    or nvq/nvq_params[, rsq][, sub_id]), both non-empty. The IVF tile join
+    and the index-less two-phase tile both score through here.
+
+    ``res_cent``: residual-PQ mode's coarse centroid for this tile (one
+    coarse cell per IVF tile — part_id is the leading group key — so the
+    per-(query, cell) dot is a vector); None otherwise. ``n_fine``: the
+    fine-level size on a two-level index, for per-query cell masks.
+    ``counters`` as in ``_fused_block_topk``; on the tile route each
+    corpus row is visited once PER TILE REPLICA it lands in — the counter
+    measures scan work done, which includes the q_blocks replication."""
+    stages = counters[2] if counters is not None else None
+    t_mark = time.perf_counter() if stages is not None else 0.0
+    if counters is not None:
+        counters[0].add(int(len(cs)))  # stage-1 visited (per replica)
+    ids = cs["rid"].to_numpy(dtype=np.int64)
+    q_ids = qs["rid"].to_numpy(dtype=np.int64)
+    q_mat_all = kernels.as_matrix(qs["vec"])
+    code_idx = codec.decode_codes(cs["codes"])
+    res_rsq = cs["rsq"].to_numpy(np.float32) if res_cent is not None else None
+    # decode the rerank payload once when the expected candidate coverage
+    # reaches the tile size; sparse point-query tiles gather per chunk
+    rows = _rerank_rows(cs, nvq_c, block=len(qs) * rerank_k >= len(cs))
+    subs_rows = cs["sub_id"].to_numpy(dtype=np.int64) if n_fine else None
+    if stages is not None:
+        now = time.perf_counter()
+        stages["setup"].add(int((now - t_mark) * 1e6))
+    frames = []
+    # chunk the query axis so LUT stack, score matrix AND the per-(query,
+    # row) fine-cell mask stay bounded per chunk — masks are built per
+    # 512-query slice (a full-tile mask at the r6 q-tile of 8,192 queries
+    # x 16,384 rows would be 134 MB)
+    for lo in range(0, len(q_ids), 512):
+        if stages is not None:
+            t_mark = time.perf_counter()
+        q_mat = q_mat_all[lo : lo + 512]
+        stage1 = codec.query_stage1(q_mat, met, residual=res_cent is not None)
+        qn = np.linalg.norm(q_mat, axis=1)
+        if stages is not None:
+            now = time.perf_counter()
+            stages["lut"].add(int((now - t_mark) * 1e6))
+            t_mark = now
+        chunk_mask = None
+        if n_fine:
+            # same semantics as the broadcast scan's mask — each query
+            # ranks only rows from its OWN probed fine cells
+            subs_list = [
+                np.asarray(s, dtype=np.int64) for s in qs["subs"].iloc[lo : lo + 512]
+            ]
+            chunk_mask = _cell_mask(subs_list, n_fine)[:, subs_rows]
+        if stages is not None:
+            stages["mask"].add(int((time.perf_counter() - t_mark) * 1e6))
+        oq, oi, osc = _fused_block_topk(
+            met, k, rerank_k, q_ids[lo : lo + 512], q_mat, stage1, qn,
+            ids, code_idx, rows, mask=chunk_mask, counters=counters,
+            residual=(
+                (q_mat @ res_cent, res_rsq) if res_cent is not None else None
+            ),
+        )
+        frames.append(pd.DataFrame({"qid": oq, "id": oi, "score": osc}))
+    return pd.concat(frames, ignore_index=True)
 
 
 def _assign_fine_hierarchical(
@@ -903,15 +1019,39 @@ class IVFIndexBuilder:
         the default. Explicit ints always win."""
         if self.spill != "auto":
             return self.spill
-        from jvector_spark.operators.quantize.pq import ProductQuantizer
+        return 1 if self._copy_bytes(dim, pq, nvq) >= 512 else 2
 
-        per_copy = (
+    def _copy_bytes(self, dim: int, pq, nvq) -> int:
+        """Estimated stored bytes of one row copy: fp32 column, NVQ bytes
+        + params, stage-1 codes and ~24 bytes of id/part/row overhead."""
+        return (
             (0 if self.store_fp32 == "none" else 4 * dim)
-            + (dim + 64 if nvq is not None else 0)  # NVQ bytes + params
+            + (dim + 64 if nvq is not None else 0)
             + (pq.m if isinstance(pq, ProductQuantizer) else pq.words * 8)
             + 24
         )
-        return 1 if per_copy >= 512 else 2
+
+    @classmethod
+    def from_manifest(cls, manifest: IndexManifest) -> "IVFIndexBuilder":
+        """A builder carrying an existing index's build settings, so an
+        ``append`` segment or a ``compact`` rebuild is built exactly like
+        the original (``auto`` knobs arrive already resolved). ``seed``,
+        ``sample_cap``, ``kmeans_iterations`` and ``fine_assign_cells``
+        are not recorded in the manifest and keep the defaults."""
+        return cls(
+            metric=manifest.metric,
+            n_partitions=manifest.n_partitions,
+            pq_m=manifest.pq_m,
+            pq_clusters=manifest.pq_clusters,
+            spill=manifest.spill,
+            rerank=manifest.rerank,
+            fine_factor=manifest.fine_factor,
+            first_pass=manifest.first_pass,
+            anisotropic_threshold=manifest.anisotropic_threshold,
+            pq_residual=manifest.pq_residual,
+            vec_format=manifest.vec_format,
+            store_fp32=manifest.store_fp32,
+        )
 
     def fit(
         self,
@@ -1420,11 +1560,7 @@ class IVFIndexBuilder:
         # task per ~128 MB of (vec + codes) payload. At sf0.1 that is ONE
         # task (tiny index builds stop paying 32-task × 44-dir small-file
         # overhead); at 100 TB it is thousands, all clustered by part_id.
-        est_bytes = n * spill * (
-            (0 if slim else 4 * dim)
-            + (dim + 64 if nvq is not None else 0)  # NVQ bytes + params
-            + (pq.m if isinstance(pq, ProductQuantizer) else pq.words * 8) + 24
-        )
+        est_bytes = n * spill * self._copy_bytes(dim, pq, nvq)
         n_write_tasks = int(min(max(1, est_bytes // (128 << 20) + 1), 4096))
         # A single task writing hundreds of part_id dirs serializes on file
         # open/commit (measured: ~60 s of a 100k-row build). Once the
@@ -1555,6 +1691,112 @@ def _persist_assignment(assigned: DataFrame) -> DataFrame:
     return assigned.persist(StorageLevel.MEMORY_AND_DISK)
 
 
+def _centroid_dist2(qmat: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """(nq, n_cells) squared query-centroid distances. Association order
+    matters for route bit-parity: the distributed assignment pass
+    computes (-2*q@c + cc) + qq (it needs the qq-free matrix for the
+    argmin), so the driver-side routes MUST accumulate in the same order
+    — probe_ratio keeps/drops a boundary probe identically on both routes
+    only if dist^2 is bit-identical (r6 ADVICE)."""
+    return np.maximum(
+        (-2.0 * qmat @ cents.T + np.einsum("ij,ij->i", cents, cents)[None, :])
+        + np.einsum("ij,ij->i", qmat, qmat)[:, None],
+        0.0,
+    )
+
+
+def _probe_plan(
+    info: dict, qmat: np.ndarray, n_probe: int, probe_ratio: float | None = None
+) -> tuple[np.ndarray, np.ndarray | None, dict[int, list[int]]]:
+    """Driver-side probe selection for a collected query batch — the
+    hierarchical-descent analog shared by the IVF broadcast scan, graph
+    broadcast search and ``probe_io_stats`` (the distributed assignment
+    pass applies the same rule per query batch).
+
+    Each query probes its ``n_probe`` nearest non-empty centroids.
+    (Bound-ranked probing was tried and measured WORSE for top-k recall:
+    the score bound describes the best single vector a partition could
+    hold — outlier-driven — while top-k recall wants partitions dense in
+    near neighbors, which centroid distance proxies better. Bounds still
+    drive threshold pruning, where they are exact.)
+
+    ``probe_ratio`` (adaptive probe depth, the zipf-1.5 lever) keeps only
+    probes within probe_ratio x the query's nearest centroid distance —
+    n_probe becomes the CAP. A query inside a k-means-split mega-cluster
+    sees many near-equidistant centroids and keeps them all; an isolated
+    query keeps one or two. dist^2 includes the query norm, so the
+    relative rule is scale-free; the nearest probe is always kept.
+
+    Returns ``(probe, probe_valid, part_to_queries)``: (nq, n_probe)
+    centroid ids sorted nearest-first, the (nq, n_probe) keep mask (None
+    without ``probe_ratio``), and part_id -> ascending query positions
+    over the kept, non-empty probes."""
+    d2 = _centroid_dist2(qmat, info["centroids"])
+    d2 = np.where(info["has_rows"][None, :], d2, np.inf)
+    probe = np.argsort(d2, axis=1)[:, : min(n_probe, d2.shape[1])]
+    dt = np.take_along_axis(d2, probe, axis=1)  # sorted, (nq, n_probe)
+    probe_valid = None
+    keep = np.isfinite(dt)
+    if probe_ratio is not None:
+        # RELATIVE epsilon: an absolute 1e-12 is below one ulp of a
+        # large dist^2, so it could not absorb any rounding at scale
+        probe_valid = dt <= dt[:, :1] * (probe_ratio**2) * (1.0 + 1e-9)
+        keep &= probe_valid
+    qi, jj = np.nonzero(keep)
+    part_to_queries: dict[int, list[int]] = {}
+    for q, p in zip(qi.tolist(), probe[qi, jj].tolist()):
+        part_to_queries.setdefault(p, []).append(q)
+    return probe, probe_valid, part_to_queries
+
+
+def _probed_groups(batches: Iterator[pd.DataFrame], part_to_queries: dict):
+    """``(part_id, rows, query positions)`` for every group of a
+    broadcast scan's batch stream that some query probes."""
+    for pdf in batches:
+        for part, grp in pdf.groupby("part_id"):
+            q_idx = part_to_queries.get(int(part))
+            if q_idx:
+                yield int(part), grp, np.asarray(q_idx)
+
+
+def _merge_topk(
+    parts: list[DataFrame], k: int, spill: int, tombstones: DataFrame | None = None
+) -> DataFrame:
+    """Final merge of per-segment (qid, id, score) candidates: J6 segment
+    union, the U3 visited-set dedup across spilled copies (identical
+    rows), then the per-query top-k window. ``tombstones`` (graph
+    traversal, which walks deleted rows) are anti-joined before the
+    window.
+
+    The dedup repartitions by qid FIRST so the dedup aggregate and the
+    top-k window share ONE exchange: hash(qid) satisfies the aggregate's
+    (qid, id) clustering requirement, and the aggregate preserves it for
+    the window — the plain dropDuplicates paid Exchange(qid, id) +
+    Exchange(qid) back to back (guide §2.4; duplicates only arise across
+    part_id tiles, i.e. across tasks, so the lost map-side partial dedup
+    was removing ~nothing)."""
+    scanned = parts[0]
+    for d in parts[1:]:
+        scanned = scanned.unionByName(d)
+    if spill > 1:
+        scanned = scanned.repartition("qid").dropDuplicates(["qid", "id"])
+    if tombstones is not None:
+        scanned = scanned.join(tombstones.select("id"), "id", "left_anti")
+    return _rank_topk(scanned, k)
+
+
+def _merge_threshold(parts: list[DataFrame], spill: int) -> DataFrame:
+    """Threshold-route merge: segment union, then the spill dedup as a
+    plain dropDuplicates ON PURPOSE (no repartition("qid") first): unlike
+    the k-NN routes, no qid window follows the dedup here, so there is no
+    downstream exchange to share — forcing one would ADD a shuffle (r9
+    ADVICE asked for this asymmetry to be documented, not "fixed")."""
+    out = parts[0]
+    for d in parts[1:]:
+        out = out.unionByName(d)
+    return out.dropDuplicates(["qid", "id"]) if spill > 1 else out
+
+
 def _partition_score_bounds(
     info: dict, qmat: np.ndarray, metric: str
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -1575,16 +1817,7 @@ def _partition_score_bounds(
     cents: np.ndarray = info["centroids"]
     qn = np.linalg.norm(qmat, axis=1)
     cn = np.linalg.norm(cents, axis=1)
-    # association order matters for route bit-parity: the distributed
-    # assignment pass computes (-2*q@c + cc) + qq (it needs the qq-free
-    # matrix for the argmin), so the broadcast path MUST accumulate in the
-    # same order — probe_ratio keeps/drops a boundary probe identically on
-    # both routes only if dist^2 is bit-identical (r6 ADVICE).
-    d2 = np.maximum(
-        (-2.0 * qmat @ cents.T + np.einsum("ij,ij->i", cents, cents)[None, :])
-        + np.einsum("ij,ij->i", qmat, qmat)[:, None],
-        0.0,
-    )
+    d2 = _centroid_dist2(qmat, cents)
     if metric == "EUCLIDEAN":
         dmin = np.maximum(np.sqrt(d2) - info["radius"][None, :], 0.0)
         bound = 1.0 / (1.0 + dmin**2)
@@ -1746,6 +1979,15 @@ class IVFIndex:
             }
         return info["cell_counts"]
 
+    def _nvq_codec(self, use_nvq: bool = True):
+        """The NVQ decoder for rerank payloads (decoding needs only the
+        dimension), or None when the stage-2 payload is fp32."""
+        if not use_nvq:
+            return None
+        from jvector_spark.operators.quantize.nvq import NVQuantizer
+
+        return NVQuantizer(dim=self.manifest.dim)
+
     @staticmethod
     def _fine_own_pad(info: dict) -> np.ndarray:
         """Cached padded owner table for hierarchical fine probing (see
@@ -1788,9 +2030,7 @@ class IVFIndex:
             return df
 
         if self._slim:
-            from jvector_spark.operators.quantize.nvq import NVQuantizer
-
-            codec = NVQuantizer(dim=self.manifest.dim)
+            codec = self._nvq_codec()
             packed = self.manifest.vec_format == "packed_f32"
             b = self.spark.sparkContext.broadcast((codec, packed and not decode))
 
@@ -1799,13 +2039,9 @@ class IVFIndex:
                 for pdf in batches:
                     if len(pdf) == 0:
                         continue
-                    codes = np.frombuffer(
-                        b"".join(pdf["nvq"]), dtype=np.uint8
-                    ).reshape(len(pdf), cdc.dim)
-                    params = np.stack(
-                        [np.asarray(p, dtype=np.float64) for p in pdf["nvq_params"]]
-                    )
-                    mat = cdc.decode_numpy(codes, params).astype(np.float32)
+                    mat = cdc.decode_columns(
+                        pdf["nvq"], pdf["nvq_params"]
+                    ).astype(np.float32)
                     vec = (
                         pd.Series([mat[i].tobytes() for i in range(len(mat))])
                         if as_bytes
@@ -2024,8 +2260,6 @@ class IVFIndex:
         elif isinstance(accept_ids, DataFrame):
             accept_df = accept_ids.select("id")
 
-        from jvector_spark.operators.exact import collect_point_query_batch
-
         rerank_k = max(k, int(round(overquery * k)))
         if strategy == "auto":
             strategy = (
@@ -2040,11 +2274,9 @@ class IVFIndex:
             )
         if strategy != "broadcast":
             raise ValueError(f"unknown search strategy {strategy!r}")
-        qrows = collect_point_query_batch(
+        qids, qmat = collect_point_query_batch(
             queries_df, query_id_col, query_vec_col, "IVFIndex.search"
         )
-        qids = np.array([r[0] for r in qrows], dtype=np.int64)
-        qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
         parts = [
             self._segment_fused_scan(
                 self._segments[seg.name], qids, qmat, metric, k, rerank_k, n_probe,
@@ -2054,27 +2286,7 @@ class IVFIndex:
             )
             for seg in self.manifest.segments
         ]
-        scanned = parts[0]
-        for d in parts[1:]:
-            scanned = scanned.unionByName(d)  # J6: multi-segment merge
-        if self.manifest.spill > 1:
-            # U3 visited-set dedup across spilled copies (identical rows).
-            # Repartition by qid FIRST so the dedup aggregate and the
-            # top-k window below share ONE exchange: hash(qid) satisfies
-            # the aggregate's (qid, id) clustering requirement, and the
-            # aggregate preserves it for the window — the plain
-            # dropDuplicates paid Exchange(qid, id) + Exchange(qid)
-            # back to back (guide §2.4; duplicates only arise across
-            # part_id tiles, i.e. across tasks, so the lost map-side
-            # partial dedup was removing ~nothing).
-            scanned = scanned.repartition("qid").dropDuplicates(["qid", "id"])
-
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
-        return (
-            scanned.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .orderBy("qid", "rank")
-        )
+        return _merge_topk(parts, k, self.manifest.spill)
 
     def search_page(
         self,
@@ -2133,40 +2345,11 @@ class IVFIndex:
         probe_ratio: float | None = None,
         npf_per_probe: bool = False,
     ) -> DataFrame:
-        cents: np.ndarray = info["centroids"]
-        pq: ProductQuantizer = info["pq"]
-        n_probe = min(n_probe, len(cents))
-        # hierarchical descent analog: nearest n_probe centroids per query.
-        # (Bound-ranked probing was tried and measured WORSE for top-k
-        # recall: the score bound describes the best single vector a
-        # partition could hold — outlier-driven — while top-k recall wants
-        # partitions dense in near neighbors, which centroid distance
-        # proxies better. Bounds still drive threshold pruning, where they
-        # are exact.) Empty partitions are skipped.
-        bound, d2 = _partition_score_bounds(info, qmat, metric)
-        d2 = np.where(info["has_rows"][None, :], d2, np.inf)
-        probe = np.argsort(d2, axis=1)[:, :n_probe]  # (m, n_probe)
-        probe_valid = None
-        if probe_ratio is not None:
-            # adaptive probe depth (the zipf-1.5 lever): keep only probes
-            # within probe_ratio x the query's nearest centroid distance —
-            # n_probe becomes the CAP. A query inside a k-means-split
-            # mega-cluster sees many near-equidistant centroids and keeps
-            # them all; an isolated query keeps one or two. d2 here is the
-            # true centroid dist^2 (query norm included), so the relative
-            # rule is scale-free; the nearest probe is always kept.
-            dt = np.take_along_axis(d2, probe, axis=1)  # sorted, (m, np)
-            # RELATIVE epsilon: an absolute 1e-12 is below one ulp of a
-            # large dist^2, so it could not absorb any rounding at scale
-            probe_valid = dt <= dt[:, :1] * (probe_ratio**2) * (1.0 + 1e-9)
-        part_to_queries_raw: dict[int, list[int]] = {}
-        for qi in range(len(qids)):
-            for j, p in enumerate(probe[qi]):
-                if probe_valid is not None and not probe_valid[qi, j]:
-                    continue
-                if np.isfinite(d2[qi, int(p)]):
-                    part_to_queries_raw.setdefault(int(p), []).append(qi)
-        probed_parts = sorted(part_to_queries_raw)
+        codec = info["pq"]
+        probe, probe_valid, part_to_queries = _probe_plan(
+            info, qmat, n_probe, probe_ratio
+        )
+        probed_parts = sorted(part_to_queries)
         if not probed_parts:
             return self.spark.createDataFrame([], "qid long, id long, score double")
 
@@ -2197,16 +2380,7 @@ class IVFIndex:
             # (m, n_fine) membership bitmap; guarded so a huge query batch
             # over a huge fine level degrades to the union filter alone
             if len(qids) * len(fine_c) <= 1 << 28:
-                lens = np.fromiter(
-                    (len(a) for a in subs_list), dtype=np.int64,
-                    count=len(subs_list),
-                )
-                q_fine_mask = np.zeros((len(qids), len(fine_c)), dtype=bool)
-                if lens.sum():
-                    q_fine_mask[
-                        np.repeat(np.arange(len(qids)), lens),
-                        np.concatenate(subs_list),
-                    ] = True
+                q_fine_mask = _cell_mask(subs_list, len(fine_c))
         # F1 accept filter BEFORE candidate selection: batch-local top-k then
         # only ever ranks accepted rows — exact w.r.t. the filtered corpus
         # (the reference applies acceptOrds the same way, never as traversal
@@ -2218,96 +2392,47 @@ class IVFIndex:
             # side is small, and a shuffled join when it is corpus-sized
             data = data.join(accept_df, "id", "semi")
 
-        # stage-1 query-side precompute, by codec kind (X5 SPI)
-        from jvector_spark.operators.quantize.bq import BinaryQuantizer
-
         res_mode = bool(info.get("residual"))
-        if isinstance(pq, BinaryQuantizer):
-            stage1 = ("bq", pq.encode_numpy(qmat), pq.dim, pq.words)
-        else:
-            # residual mode: DOT-partial LUTs for every metric (the score
-            # decomposes as q·c_p + q·r̂; see _fused_block_topk) plus the
-            # per-(query, cell) dot table — Q x n_cells, driver-tiny.
-            luts = pq.adc_lut_batch(qmat, "DOT_PRODUCT" if res_mode else metric)
-            mag = pq.magnitude_lut() if metric == "COSINE" and not res_mode else None
-            stage1 = ("pq", luts, mag, pq.m)
-        qc_all = qmat @ cents.T if res_mode else None
+        stage1 = codec.query_stage1(qmat, metric, residual=res_mode)
+        # residual mode: the per-(query, cell) dot table — Q x n_cells,
+        # driver-tiny (see _fused_block_topk)
+        qc_all = qmat @ info["centroids"].T if res_mode else None
         qnorms = np.linalg.norm(qmat, axis=1)
-        part_to_queries = part_to_queries_raw
         use_nvq = (rerank or self.manifest.rerank) == "nvq"
-        nvq_codec = None
-        if use_nvq:
-            from jvector_spark.operators.quantize.nvq import NVQuantizer
-
-            nvq_codec = NVQuantizer(dim=self.manifest.dim)
+        nvq_codec = self._nvq_codec(use_nvq)
         b = self.spark.sparkContext.broadcast(
-            (stage1, qids, qmat, qnorms, metric, k, rerank_k, part_to_queries,
-             nvq_codec, q_fine_mask, qc_all)
+            (codec, stage1, qids, qmat, qnorms, metric, k, rerank_k,
+             part_to_queries, nvq_codec, q_fine_mask, qc_all)
         )
-
-        tel_acc = (
-            (telemetry._visited, telemetry._reranked, telemetry._stages)
-            if telemetry is not None
-            else None
-        )
+        tel_acc = telemetry.counters() if telemetry is not None else None
 
         def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            s1, q_ids, q_mat, q_norms, met, kk, keep, p2q, nvq_c, qfm, qc_a = b.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for part, grp in pdf.groupby("part_id"):
-                    q_idx = p2q.get(int(part))
-                    if not q_idx:
-                        continue
-                    if tel_acc is not None:
-                        tel_acc[0].add(int(len(grp)))  # stage-1 visited rows
-                    ids = grp["id"].to_numpy(dtype=np.int64)
-                    qsel = np.asarray(q_idx)
-                    mask = (
-                        qfm[qsel][:, grp["sub_id"].to_numpy(dtype=np.int64)]
-                        if qfm is not None
-                        else None
-                    )
-                    if s1[0] == "bq":
-                        _, q_words, bdim, words = s1
-                        code_idx = np.frombuffer(
-                            b"".join(grp["codes"]), dtype=np.uint64
-                        ).reshape(len(grp), words)
-                        luts_sel, mag_lut, bq_pack = None, None, (q_words[qsel], bdim)
-                    else:
-                        _, q_luts, mag_lut, m = s1
-                        code_idx = np.frombuffer(
-                            b"".join(grp["codes"]), dtype=np.uint8
-                        ).reshape(len(grp), m).astype(np.int64)
-                        luts_sel, bq_pack = q_luts[qsel], None
-                    # phase 1 ADC/hamming + phase 2 rerank (fp32, or
-                    # dequantized NVQ bytes — the reference's default rerank
-                    # feature, NVQScorer.java; parquet column pruning means
-                    # the 4-bytes/dim fp32 column is never read in that mode)
-                    res_pack = (
-                        (qc_a[qsel, int(part)], grp["rsq"].to_numpy(np.float32))
-                        if qc_a is not None
-                        else None
-                    )
-                    oq, oi, osc = _fused_block_topk(
-                        met, kk, keep,
-                        q_ids[qsel], q_mat[qsel], luts_sel, mag_lut,
-                        q_norms[qsel], ids, code_idx,
-                        vec_rows=None if nvq_c is not None else grp["vec"],
-                        nvq=(nvq_c, grp["nvq"], grp["nvq_params"]) if nvq_c is not None else None,
-                        bq=bq_pack,
-                        mask=mask,
-                        counters=tel_acc,
-                        residual=res_pack,
-                    )
-                    yield pd.DataFrame({"qid": oq, "id": oi, "score": osc})
+            (cdc, s1, q_ids, q_mat, q_norms, met, kk, keep, p2q, nvq_c, qfm,
+             qc_a) = b.value
+            for part, grp, qsel in _probed_groups(batches, p2q):
+                if tel_acc is not None:
+                    tel_acc[0].add(int(len(grp)))  # stage-1 visited rows
+                mask = (
+                    qfm[qsel][:, grp["sub_id"].to_numpy(dtype=np.int64)]
+                    if qfm is not None
+                    else None
+                )
+                res_pack = (
+                    (qc_a[qsel, part], grp["rsq"].to_numpy(np.float32))
+                    if qc_a is not None
+                    else None
+                )
+                oq, oi, osc = _fused_block_topk(
+                    met, kk, keep, q_ids[qsel], q_mat[qsel],
+                    _stage1_rows(s1, qsel), q_norms[qsel],
+                    grp["id"].to_numpy(dtype=np.int64),
+                    cdc.decode_codes(grp["codes"]),
+                    _rerank_rows(grp, nvq_c, block=False),
+                    mask=mask, counters=tel_acc, residual=res_pack,
+                )
+                yield pd.DataFrame({"qid": oq, "id": oi, "score": osc})
 
-        cols = (
-            ["part_id", "id", "codes", "nvq", "nvq_params"]
-            if use_nvq
-            else ["part_id", "id", "vec", "codes"]
-        )
+        cols = ["part_id", "id", "codes", *_rerank_cols(use_nvq)]
         if q_fine_mask is not None:
             cols.append("sub_id")
         if res_mode:
@@ -2552,39 +2677,15 @@ class IVFIndex:
                         F.explode("subs").alias("sub_id")
                     ).distinct().collect()
                 )
-            # PER-PARTITION tile sizing from the observed distributions
-            # (r6: uniform-average sizing gave zipf-hot partitions one
-            # oversized tile per block pair — straggler tasks; now every
-            # tile holds <= ~_C_TILE rows x _Q_TILE_IVF assignments no matter
-            # how skewed the partition)
-            cb_of = {
-                int(p): max(1, math.ceil(rows_p[p] / _C_TILE))
-                for p in np.flatnonzero(rows_p)
-            }
-            qb_of = {
-                p: max(1, math.ceil(c / _Q_TILE_IVF)) for p, c in assign_p.items()
-            }
             parts.append(
                 self._segment_tile_scan(
-                    info, assigned, metric, k, rerank_k, cb_of, qb_of,
+                    info, assigned, metric, k, rerank_k, rows_p, assign_p,
                     predicate, accept_df, use_nvq, None, sub_filter=sub_filter,
                     n_fine=(len(info["fine"]) if fine_npf else None),
                     telemetry=telemetry,
                 )
             )
-        scanned = parts[0]
-        for d in parts[1:]:
-            scanned = scanned.unionByName(d)  # J6: multi-segment merge
-        if self.manifest.spill > 1:
-            # U3 dedup; repartition(qid) first so dedup + window share
-            # one exchange (see _segment_fused_scan's caller for why)
-            scanned = scanned.repartition("qid").dropDuplicates(["qid", "id"])
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
-        return (
-            scanned.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .orderBy("qid", "rank")
-        )
+        return _merge_topk(parts, k, self.manifest.spill)
 
     def _segment_tile_scan(
         self,
@@ -2593,8 +2694,8 @@ class IVFIndex:
         metric: str,
         k: int,
         rerank_k: int,
-        cb_of: dict,
-        qb_of: dict,
+        rows_p: np.ndarray,
+        assign_p: dict,
         predicate,
         accept_df: DataFrame | None,
         use_nvq: bool,
@@ -2605,9 +2706,9 @@ class IVFIndex:
     ) -> DataFrame:
         """2-D blocked tile join between probe assignments and the probed
         scan — ``exact._knn_join_blocked``'s shape with ``part_id`` as an
-        extra key. Block counts are PER PARTITION (``cb_of``/``qb_of``:
-        part_id -> corpus/query block count, sized from the observed
-        per-partition row and assignment counts): corpus rows hash into
+        extra key. Block counts are PER PARTITION, sized from the observed
+        per-partition stored rows (``rows_p``) and assignment counts
+        (``assign_p``: part_id -> count): corpus rows hash into
         their partition's ``cbn`` blocks and replicate across its ``qbn``;
         assignments do the transpose; each (part_id, qb, cb) tile scores
         its pair with the fused ADC->rerank kernel (threshold mode: exact
@@ -2623,6 +2724,15 @@ class IVFIndex:
         min/max stats skip unprobed sub-clusters (files are sorted by
         (part_id, sub_id) at write time), and pruned rows never enter the
         tile shuffle."""
+        # PER-PARTITION tile sizing (r6: uniform-average sizing gave
+        # zipf-hot partitions one oversized tile per block pair —
+        # straggler tasks; now every tile holds <= ~_C_TILE rows x
+        # _Q_TILE_IVF assignments no matter how skewed the partition)
+        cb_of = {
+            int(p): max(1, math.ceil(rows_p[p] / _C_TILE))
+            for p in np.flatnonzero(rows_p)
+        }
+        qb_of = {p: max(1, math.ceil(c / _Q_TILE_IVF)) for p, c in assign_p.items()}
         data = self.spark.read.parquet(os.path.join(info["dir"], "data.parquet"))
         # Probed-partition scan pruning as a STATIC partition filter on
         # qb_of's keys, already on the driver: the EXACT probed set when
@@ -2700,174 +2810,47 @@ class IVFIndex:
             .withColumn("is_q", F.lit(1))
         )
 
-        pq_obj = info["pq"]
-        nvq_codec = None
-        if use_nvq and threshold is None:
-            from jvector_spark.operators.quantize.nvq import NVQuantizer
-
-            nvq_codec = NVQuantizer(dim=self.manifest.dim)
         bt = self.spark.sparkContext.broadcast(
-            (pq_obj, metric, k, rerank_k, threshold, nvq_codec, n_fine,
+            (info["pq"], metric, k, rerank_k, threshold,
+             self._nvq_codec(use_nvq and threshold is None), n_fine,
              info["centroids"] if res_mode else None)
         )
-        # On the tile route each corpus row is visited once PER TILE
-        # REPLICA it lands in — the counter measures scan work done, which
-        # includes the q_blocks replication (document over-count semantics)
-        tel_acc = (
-            (telemetry._visited, telemetry._reranked, telemetry._stages)
-            if telemetry is not None
-            else None
-        )
+        tel_acc = telemetry.counters() if telemetry is not None else None
 
         def tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            pq_o, met, kk, keep, thr, nvq_c, n_fine_, res_cents = bt.value
-            stages = tel_acc[2] if tel_acc is not None else None
-            t_mark = time.perf_counter() if stages is not None else 0.0
-            empty = pd.DataFrame(
-                {
-                    "qid": pd.Series(dtype="int64"),
-                    "id": pd.Series(dtype="int64"),
-                    "score": pd.Series(dtype="float64"),
-                }
-            )
+            codec, met, kk, keep, thr, nvq_c, n_fine_, res_cents = bt.value
             qs = pdf[pdf["is_q"] == 1]
             cs = pdf[pdf["is_q"] == 0]
             if len(qs) == 0 or len(cs) == 0:
-                return empty
-            if tel_acc is not None:
-                tel_acc[0].add(int(len(cs)))  # stage-1 visited (per replica)
+                return empty_hits()
+            if thr is None:
+                return _tile_topk(
+                    qs, cs, codec, met, kk, keep, nvq_c,
+                    res_cent=(
+                        res_cents[int(key[0])] if res_cents is not None else None
+                    ),
+                    n_fine=n_fine_, counters=tel_acc,
+                )
             ids = cs["rid"].to_numpy(dtype=np.int64)
             q_ids = qs["rid"].to_numpy(dtype=np.int64)
             q_mat_all = kernels.as_matrix(qs["vec"])
+            cmat = kernels.as_matrix(cs["vec"])
             frames = []
-            if thr is not None:
-                cmat = kernels.as_matrix(cs["vec"])
-                for lo in range(0, len(q_ids), 512):
-                    scores = kernels.similarity(met, q_mat_all[lo : lo + 512], cmat)
-                    qi, ri = np.nonzero(scores >= thr)
-                    if len(qi) == 0:
-                        continue
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "qid": q_ids[lo : lo + 512][qi],
-                                "id": ids[ri],
-                                "score": scores[qi, ri],
-                            }
-                        )
-                    )
-                return pd.concat(frames, ignore_index=True) if frames else empty
-            from jvector_spark.operators.quantize.bq import BinaryQuantizer as _BQ
-
-            is_bq = isinstance(pq_o, _BQ)
-            if is_bq:
-                code_idx = np.frombuffer(
-                    b"".join(cs["codes"]), dtype=np.uint64
-                ).reshape(len(cs), pq_o.words)
-                mag = None
-            else:
-                code_idx = np.frombuffer(
-                    b"".join(cs["codes"]), dtype=np.uint8
-                ).reshape(len(cs), pq_o.m).astype(np.int64)
-                mag = (
-                    pq_o.magnitude_lut()
-                    if met == "COSINE" and res_cents is None
-                    else None
-                )
-            # residual mode: one coarse cell per tile (part_id is the
-            # leading group key), so the per-(query, cell) dot is a vector
-            res_rsq = (
-                cs["rsq"].to_numpy(np.float32) if res_cents is not None else None
-            )
-            res_cent = res_cents[int(key[0])] if res_cents is not None else None
-            # r9: decode the tile's rerank payload ONCE when the expected
-            # candidate coverage reaches the tile size (bulk corpus-as-
-            # queries tiles re-gather the same rows in every 512-query
-            # chunk — the per-chunk pandas iloc + bytes-join was 3,238 of
-            # 14,540 kernel core-seconds at the 1M bulk shape); sparse
-            # point-query tiles keep the compacted per-chunk gather.
-            # fp32 blocks stay f32 here (lossless storage values) and are
-            # cast to f64 per gathered chunk — scores are bit-identical.
-            cs_vec, nvq_pack = None, None
-            block_cover = len(qs) * keep >= len(cs)
-            if nvq_c is not None:
-                if block_cover:
-                    nvq_rows_t = np.frombuffer(
-                        b"".join(cs["nvq"]), dtype=np.uint8
-                    ).reshape(len(cs), nvq_c.dim)
-                    nvq_params_t = np.stack(
-                        [np.asarray(v, dtype=np.float64) for v in cs["nvq_params"]]
-                    )
-                    cs_vec = nvq_c.decode_numpy(nvq_rows_t, nvq_params_t)
-                else:
-                    nvq_pack = (nvq_c, cs["nvq"], cs["nvq_params"])
-            else:
-                cs_vec = (
-                    kernels.as_matrix(cs["vec"], dtype=np.float32)
-                    if block_cover
-                    else cs["vec"]
-                )
-            subs_rows = (
-                cs["sub_id"].to_numpy(dtype=np.int64) if n_fine_ else None
-            )
-            if stages is not None:
-                now = time.perf_counter()
-                stages["setup"].add(int((now - t_mark) * 1e6))
-            # chunk the query axis so LUT stack, score matrix AND the
-            # per-(query, row) fine-cell mask stay bounded per chunk —
-            # masks are built per 512-query slice (a full-tile mask at the
-            # r6 q-tile of 8,192 queries x 16,384 rows would be 134 MB)
             for lo in range(0, len(q_ids), 512):
-                if stages is not None:
-                    t_mark = time.perf_counter()
-                q_mat = q_mat_all[lo : lo + 512]
-                if is_bq:
-                    luts, bq_pack = None, (pq_o.encode_numpy(q_mat), pq_o.dim)
-                else:
-                    luts = pq_o.adc_lut_batch(
-                        q_mat, "DOT_PRODUCT" if res_cent is not None else met
+                scores = kernels.similarity(met, q_mat_all[lo : lo + 512], cmat)
+                qi, ri = np.nonzero(scores >= thr)
+                if len(qi) == 0:
+                    continue
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "qid": q_ids[lo : lo + 512][qi],
+                            "id": ids[ri],
+                            "score": scores[qi, ri],
+                        }
                     )
-                    bq_pack = None
-                qn = np.linalg.norm(q_mat, axis=1)
-                if stages is not None:
-                    now = time.perf_counter()
-                    stages["lut"].add(int((now - t_mark) * 1e6))
-                    t_mark = now
-                chunk_mask = None
-                if n_fine_:
-                    # same semantics as the broadcast scan's mask — each
-                    # query ranks only rows from its OWN probed fine
-                    # cells. Vectorized scatter, no per-query Python loop.
-                    subs_list = [
-                        np.asarray(s, dtype=np.int64)
-                        for s in qs["subs"].iloc[lo : lo + 512]
-                    ]
-                    lens = np.fromiter(
-                        (len(s) for s in subs_list), dtype=np.int64,
-                        count=len(subs_list),
-                    )
-                    q_cells = np.zeros((len(subs_list), n_fine_), dtype=bool)
-                    if lens.sum():
-                        q_cells[
-                            np.repeat(np.arange(len(subs_list)), lens),
-                            np.concatenate(subs_list),
-                        ] = True
-                    chunk_mask = q_cells[:, subs_rows]
-                if stages is not None:
-                    stages["mask"].add(int((time.perf_counter() - t_mark) * 1e6))
-                oq, oi, osc = _fused_block_topk(
-                    met, kk, keep, q_ids[lo : lo + 512], q_mat, luts, mag, qn,
-                    ids, code_idx, vec_rows=cs_vec, nvq=nvq_pack, bq=bq_pack,
-                    mask=chunk_mask,
-                    counters=tel_acc,
-                    residual=(
-                        (q_mat @ res_cent, res_rsq)
-                        if res_cent is not None
-                        else None
-                    ),
                 )
-                frames.append(pd.DataFrame({"qid": oq, "id": oi, "score": osc}))
-            return pd.concat(frames, ignore_index=True) if frames else empty
+            return pd.concat(frames, ignore_index=True) if frames else empty_hits()
 
         # One tile ≈ one task: the session default (shuffle.partitions =
         # n_cores) hashes ~10^3 tiles into ~32 shuffle partitions, and the
@@ -2915,31 +2898,13 @@ class IVFIndex:
                 int(r["part_id"]): int(r["count"])
                 for r in assigned.groupBy("part_id").count().collect()
             }
-            rows_p = self._part_counts(seg.name)
-            cb_of = {
-                int(p): max(1, math.ceil(rows_p[p] / _C_TILE))
-                for p in np.flatnonzero(rows_p)
-            }
-            qb_of = {
-                p: max(1, math.ceil(c / _Q_TILE_IVF)) for p, c in assign_p.items()
-            }
             parts.append(
                 self._segment_tile_scan(
-                    info, assigned, metric, 0, 0, cb_of, qb_of,
-                    None, None, False, threshold,
+                    info, assigned, metric, 0, 0, self._part_counts(seg.name),
+                    assign_p, None, None, False, threshold,
                 )
             )
-        out = parts[0]
-        for d in parts[1:]:
-            out = out.unionByName(d)
-        if self.manifest.spill > 1:
-            # plain dropDuplicates ON PURPOSE (no repartition("qid")
-            # first): unlike the k-NN routes, no qid window follows the
-            # dedup here, so there is no downstream exchange to share —
-            # forcing one would ADD a shuffle (r9 ADVICE asked for this
-            # asymmetry to be documented, not "fixed").
-            out = out.dropDuplicates(["qid", "id"])
-        return out
+        return _merge_threshold(parts, self.manifest.spill)
 
     def threshold_search(
         self,
@@ -2978,8 +2943,6 @@ class IVFIndex:
                 "with store_fp32='none' — rebuild with store_fp32='all' "
                 "or run the threshold query against the source table"
             )
-        from jvector_spark.operators.exact import collect_point_query_batch
-
         metric = self.manifest.metric
         if strategy == "auto":
             strategy = (
@@ -2991,23 +2954,16 @@ class IVFIndex:
             )
         if strategy != "broadcast":
             raise ValueError(f"unknown search strategy {strategy!r}")
-        qrows = collect_point_query_batch(
+        qids, qmat = collect_point_query_batch(
             queries_df, query_id_col, query_vec_col, "IVFIndex.threshold_search"
         )
-        qids = np.array([r[0] for r in qrows], dtype=np.int64)
-        qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
         parts = [
             self._segment_threshold_scan(
                 self._segments[seg.name], qids, qmat, metric, threshold
             )
             for seg in self.manifest.segments
         ]
-        out = parts[0]
-        for d in parts[1:]:
-            out = out.unionByName(d)
-        if self.manifest.spill > 1:
-            out = out.dropDuplicates(["qid", "id"])
-        return out
+        return _merge_threshold(parts, self.manifest.spill)
 
     def _segment_threshold_scan(
         self,
@@ -3036,26 +2992,20 @@ class IVFIndex:
 
         def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             q_ids, q_mat, met, t, p2q = b.value
-            for pdf in batches:
-                if len(pdf) == 0:
+            for _, grp, qsel in _probed_groups(batches, p2q):
+                ids = grp["id"].to_numpy(dtype=np.int64)
+                x = kernels.as_matrix(grp["vec"])
+                scores = kernels.similarity(met, q_mat[qsel], x)
+                qi_idx, row_idx = np.nonzero(scores >= t)
+                if len(qi_idx) == 0:
                     continue
-                for part, grp in pdf.groupby("part_id"):
-                    q_idx = p2q.get(int(part))
-                    if not q_idx:
-                        continue
-                    ids = grp["id"].to_numpy(dtype=np.int64)
-                    x = kernels.as_matrix(grp["vec"])
-                    scores = kernels.similarity(met, q_mat[q_idx], x)
-                    qi_idx, row_idx = np.nonzero(scores >= t)
-                    if len(qi_idx) == 0:
-                        continue
-                    yield pd.DataFrame(
-                        {
-                            "qid": q_ids[np.asarray(q_idx)[qi_idx]],
-                            "id": ids[row_idx],
-                            "score": scores[qi_idx, row_idx],
-                        }
-                    )
+                yield pd.DataFrame(
+                    {
+                        "qid": q_ids[qsel[qi_idx]],
+                        "id": ids[row_idx],
+                        "score": scores[qi_idx, row_idx],
+                    }
+                )
 
         return data.select("part_id", "id", "vec").mapInPandas(
             scan, schema="qid long, id long, score double"
@@ -3110,20 +3060,7 @@ class IVFIndex:
         seg_name = seg_name or f"seg-{self.manifest.version:06d}"
         if any(s.name == seg_name for s in self.manifest.segments):
             return  # replayed batch: segment already durable
-        builder = IVFIndexBuilder(
-            metric=self.manifest.metric,
-            n_partitions=self.manifest.n_partitions,
-            pq_m=self.manifest.pq_m,
-            pq_clusters=self.manifest.pq_clusters,
-            spill=self.manifest.spill,
-            rerank=self.manifest.rerank,
-            fine_factor=self.manifest.fine_factor,
-            first_pass=self.manifest.first_pass,
-            anisotropic_threshold=self.manifest.anisotropic_threshold,
-            pq_residual=self.manifest.pq_residual,
-            vec_format=self.manifest.vec_format,
-            store_fp32=getattr(self.manifest, "store_fp32", "all"),
-        )
+        builder = IVFIndexBuilder.from_manifest(self.manifest)
         if df.isEmpty():  # limit-1 probe, far cheaper than a count
             return
         self.manifest = builder._build_segment(
@@ -3193,42 +3130,15 @@ class IVFIndex:
                 key: max(g[key] for g in src_graphs)
                 for key in ("degree", "alpha", "overflow", "ef_construction")
             }
-        builder = IVFIndexBuilder(
-            metric=self.manifest.metric,
-            n_partitions=self.manifest.n_partitions,
-            pq_m=self.manifest.pq_m,
-            pq_clusters=self.manifest.pq_clusters,
-            spill=self.manifest.spill,
-            rerank=self.manifest.rerank,
-            fine_factor=self.manifest.fine_factor,
-            first_pass=self.manifest.first_pass,
-            anisotropic_threshold=self.manifest.anisotropic_threshold,
-            pq_residual=self.manifest.pq_residual,
-            vec_format=self.manifest.vec_format,
-            store_fp32=getattr(self.manifest, "store_fp32", "all"),
-        )
+        builder = IVFIndexBuilder.from_manifest(self.manifest)
         seg_name = f"seg-{self.manifest.version:06d}c"
-        fresh = IndexManifest(
-            dim=self.manifest.dim,
-            metric=self.manifest.metric,
-            pq_m=self.manifest.pq_m,
-            pq_clusters=self.manifest.pq_clusters,
-            n_partitions=self.manifest.n_partitions,
-            spill=self.manifest.spill,
-            rerank=self.manifest.rerank,
-            fine_factor=self.manifest.fine_factor,
-            first_pass=self.manifest.first_pass,
-            anisotropic_threshold=self.manifest.anisotropic_threshold,
-            pq_residual=self.manifest.pq_residual,
-            vec_format=self.manifest.vec_format,
-            store_fp32=getattr(self.manifest, "store_fp32", "all"),
-            version=self.manifest.version,
-        )
         # subset compaction: untouched segments keep their entries (and
         # their files — GC below only sweeps what the manifest dropped)
-        fresh.segments = [
-            s for s in self.manifest.segments if s.name not in set(sel)
-        ]
+        fresh = dataclasses.replace(
+            self.manifest,
+            segments=[s for s in self.manifest.segments if s.name not in set(sel)],
+            format_version=MANIFEST_VERSION,
+        )
         # warm-start PQ from the largest MERGED segment's codebooks (the
         # balanced-sample retrain of ref PQRetrainer, not a from-scratch fit)
         largest = max(
@@ -3343,31 +3253,15 @@ class IVFIndex:
         search routes use, so the IO model predicts what an adaptive
         search actually scans (tune()'s cheapest-first ordering of
         adaptive lattice points uses this)."""
-        from jvector_spark.operators.exact import collect_point_query_batch
-
-        qrows = collect_point_query_batch(
+        _, qmat = collect_point_query_batch(
             queries_df, query_id_col, query_vec_col, "IVFIndex.probe_io_stats"
         )
-        qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
         nq = len(qmat)
         visited = np.zeros(nq, dtype=np.int64)
         stored = 0
         for seg in self.manifest.segments:
             info = self._segments[seg.name]
-            cents = info["centroids"]
-            npb = min(n_probe, len(cents))
-            # same association order as the search routes (route parity)
-            d2 = (
-                -2.0 * qmat @ cents.T
-                + np.einsum("ij,ij->i", cents, cents)[None, :]
-            ) + np.einsum("ij,ij->i", qmat, qmat)[:, None]
-            d2 = np.maximum(d2, 0.0)
-            d2[:, ~info["has_rows"]] = np.inf
-            probe = np.argsort(d2, axis=1)[:, :npb]
-            probe_valid = None
-            if probe_ratio is not None:
-                dt = np.take_along_axis(d2, probe, axis=1)  # sorted
-                probe_valid = dt <= dt[:, :1] * (probe_ratio**2) * (1.0 + 1e-9)
+            probe, probe_valid, _ = _probe_plan(info, qmat, n_probe, probe_ratio)
             if n_probe_fine and info.get("fine") is not None:
                 fine_c = info["fine"]
                 npf = min(int(n_probe_fine), len(fine_c))

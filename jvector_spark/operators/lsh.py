@@ -27,6 +27,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from jvector_spark.functions import kernels
+from jvector_spark.operators.exact import (
+    _rank_topk,
+    collect_point_query_batch,
+    query_side_is_big,
+)
 
 
 def _bucket_of(x: np.ndarray, planes: np.ndarray) -> np.ndarray:
@@ -113,8 +118,6 @@ def rp_lsh_knn_join(
     if n_planes is None:
         n = n_hint if n_hint is not None else corpus.count()
         n_planes = max(3, min(24, int(math.ceil(math.log2(max(n / 64.0, 2.0))))))
-    from jvector_spark.operators.exact import collect_point_query_batch, query_side_is_big
-
     if strategy == "auto":
         strategy = "distributed" if query_side_is_big(queries, m_hint) else "broadcast"
     if strategy == "distributed":
@@ -124,9 +127,9 @@ def rp_lsh_knn_join(
         )
     if strategy != "broadcast":
         raise ValueError(f"unknown strategy {strategy!r}")
-    qrows = collect_point_query_batch(queries, query_id_col, query_vec_col, "rp_lsh_knn_join")
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
+    qids, qmat = collect_point_query_batch(
+        queries, query_id_col, query_vec_col, "rp_lsh_knn_join"
+    )
     dim = qmat.shape[1]
 
     rng = np.random.RandomState(seed)
@@ -182,12 +185,7 @@ def rp_lsh_knn_join(
     candidates = corpus.select(id_col, vec_col).mapInPandas(
         scan, schema="qid long, id long, score double"
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("qid", "rank")
-    )
+    return _rank_topk(candidates, k)
 
 
 def _rp_lsh_distributed(
@@ -286,9 +284,4 @@ def _rp_lsh_distributed(
         .filter(F.col("_br") <= k)
         .drop("_br", "bkey")
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("qid", "rank")
-    )
+    return _rank_topk(pairs, k)

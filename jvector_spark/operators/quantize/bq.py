@@ -67,6 +67,22 @@ class BinaryQuantizer(VectorCompressor):
 
         return df.mapInPandas(enc, schema=f"{id_col} long, {codes_col} array<bigint>")
 
+    def query_stage1(self, qmat: np.ndarray, metric: str, residual: bool = False):
+        """Query-side stage-1 payload ``("bq", q_words, dim)``: hamming is
+        a metric-agnostic ranking proxy (BuildScoreProvider.java:170-212),
+        so ``metric`` and ``residual`` do not change it."""
+        return ("bq", self.encode_numpy(qmat), self.dim)
+
+    def decode_codes(self, col) -> np.ndarray:
+        """Stored ``codes`` cells (packed sign words) -> (n, words) uint64."""
+        return np.frombuffer(b"".join(col), dtype=np.uint64).reshape(
+            len(col), self.words
+        )
+
+    def row_magnitudes(self, code_idx: np.ndarray) -> None:
+        """Hamming scoring needs no row norms."""
+        return None
+
     def similarity(self, a: np.ndarray, b: np.ndarray) -> np.ndarray:
         """Pairwise 1 - hamming/dim over (m, words) x (n, words) int64 views
         (ref BQVectors.java:116-117)."""

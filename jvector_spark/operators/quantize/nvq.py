@@ -212,6 +212,16 @@ class NVQuantizer(VectorCompressor):
     def decode_numpy(self, codes: np.ndarray, params: np.ndarray) -> np.ndarray:
         return self._dequantize_rows(codes, params)
 
+    def decode_columns(self, nvq, params) -> np.ndarray:
+        """Dequantize stored ``nvq`` byte cells + ``nvq_params`` lists
+        (the index's NVQ_VECTORS columns) -> (n, dim) f64."""
+        codes = np.frombuffer(b"".join(nvq), dtype=np.uint8).reshape(
+            len(nvq), self.dim
+        )
+        return self._dequantize_rows(
+            codes, np.stack([np.asarray(p, dtype=np.float64) for p in params])
+        )
+
     def score_numpy(
         self, metric: str, query: np.ndarray, codes: np.ndarray, params: np.ndarray
     ) -> np.ndarray:

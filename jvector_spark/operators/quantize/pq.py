@@ -283,6 +283,34 @@ class ProductQuantizer(VectorCompressor):
         (ref calculatePartialSelfMagnitudes)."""
         return np.einsum("mkd,mkd->mk", self.codebooks, self.codebooks)
 
+    def query_stage1(self, qmat: np.ndarray, metric: str, residual: bool = False):
+        """Query-side stage-1 payload ``("pq", luts, mag_lut)`` for the
+        fused scan kernels (ref PQVectors.precomputedScoreFunctionFor).
+
+        ``luts`` (Q, m, k) are f32: the kernels accumulate ADC in f32, so
+        the cast is the same one they would apply. Residual mode scores
+        q·(c + r̂), so it needs DOT-partials for every metric and takes
+        its magnitudes from the stored ``rsq`` column instead of
+        ``mag_lut`` (None unless non-residual COSINE)."""
+        luts = self.adc_lut_batch(qmat, "DOT_PRODUCT" if residual else metric)
+        mag = self.magnitude_lut() if metric == "COSINE" and not residual else None
+        return ("pq", luts.astype(np.float32), mag)
+
+    def decode_codes(self, col) -> np.ndarray:
+        """Stored ``codes`` cells (m bytes each) -> (n, m) int64 gather
+        indices."""
+        return np.frombuffer(b"".join(col), dtype=np.uint8).reshape(
+            len(col), self.m
+        ).astype(np.int64)
+
+    def row_magnitudes(self, code_idx: np.ndarray) -> np.ndarray:
+        """(n,) f32 reconstructed-row norms of ``decode_codes`` output —
+        the cosine ADC denominator, precomputed per stored row."""
+        mag_lut = self.magnitude_lut()
+        return np.sqrt(
+            np.maximum(mag_lut[np.arange(self.m), code_idx].sum(axis=1), 1e-30)
+        ).astype(np.float32)
+
     def adc_score(
         self, codes: np.ndarray, query: np.ndarray, metric: str,
         lut: np.ndarray | None = None, mag_lut: np.ndarray | None = None,

@@ -7,9 +7,10 @@ capped at ``MAX_PQ_TRAINING_SET_SIZE`` plus a ``size()`` call; SURVEY.md
 §2.5 A4).
 
 Design (guide §8 "decide with small rows, move big rows once"): every row
-draws a uniform key **as a JVM expression** — ``xxhash64(seed, <row>)``
-mapped to [0,1). The key is a pure function of the row's CONTENT, so the
-sampled set is invariant under partitioning, core count and task retries
+draws a uniform key **as a JVM expression** — ``xxhash64(seed, <row>)``,
+mapped to [0,1) for the keep filter. The key is a pure function of the
+row's CONTENT, so the sampled set is invariant under partitioning, core
+count and task retries
 (``F.rand(seed)`` was seeded per partition index: the 8-core and 32-core
 driver runs drew different samples, different kmeans layouts, and recall
 entries that swung ±0.03 on identical code — r9 driver artifacts). The
@@ -61,20 +62,25 @@ def bottom_k_sample(
 ) -> np.ndarray:
     """The fetch half of :func:`sample_and_count` for callers that already
     hold the exact row count ``n`` (the index builder counts first so it
-    can size the cap from its trainers' true needs)."""
+    can size the cap from its trainers' true needs).
+
+    Column contract: the sample key hashes EVERY column of ``df``, so pass
+    exactly the id and vector columns. An extra column changes which rows
+    are drawn; a missing id makes exact-duplicate vectors share one key."""
     if n == 0:
         raise ValueError("cannot sample an empty DataFrame")
-    # content-keyed uniform draw: xxhash64 of (seed, EVERY input column)
-    # -> [0, 1). Hashing all columns keeps the key row-unique when the
-    # caller passes an id alongside the vector (the index builder and
-    # sample_and_count callers do), so exact-duplicate vectors still
-    # sample independently — a vec-only hash collapsed them onto one key
-    # and biased the draw on dedup corpora (test_skewed_partition_...).
-    keyed = df.withColumn(
-        "_k",
-        (F.xxhash64(F.lit(int(seed)), *[F.col(c) for c in df.columns])
-         .cast("double") / F.lit(float(2**64)) + F.lit(0.5)),
-    ).select(F.col(vec_col).alias("vec"), "_k")
+    # content-keyed uniform draw: xxhash64 of (seed, EVERY input column).
+    # Hashing all columns keeps the key row-unique when the caller passes
+    # an id alongside the vector (the index builder and sample_and_count
+    # callers do), so exact-duplicate vectors still sample independently
+    # — a vec-only hash collapsed them onto one key and biased the draw on
+    # dedup corpora (test_skewed_partition_...). The bottom-k orders by
+    # the int64 key itself; its [0, 1) double image keeps only 53 bits,
+    # so distinct keys can tie there, and it serves only the keep filter.
+    keyed = df.select(
+        F.col(vec_col).alias("vec"),
+        F.xxhash64(F.lit(int(seed)), *[F.col(c) for c in df.columns]).alias("_k"),
+    )
     if sample_cap >= n:
         pdf = keyed.toPandas()
     else:
@@ -82,7 +88,8 @@ def bottom_k_sample(
         frac = min(
             1.0, (sample_cap + 8.0 * math.sqrt(sample_cap) + 64.0) / n
         )
-        pdf = keyed.filter(F.col("_k") <= F.lit(frac)).toPandas()
+        unit = F.col("_k").cast("double") / F.lit(float(2**64)) + F.lit(0.5)
+        pdf = keyed.filter(unit <= F.lit(frac)).toPandas()
         if len(pdf) < sample_cap:
             # astronomically rare tail loss — one corrective full fetch
             # keeps the bottom-k EXACT rather than merely near-uniform

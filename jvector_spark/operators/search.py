@@ -119,6 +119,11 @@ class SearchTelemetry:
         # perf_counter calls per 512-query chunk).
         self._stages = {s: spark.sparkContext.accumulator(0) for s in self.STAGES}
 
+    def counters(self) -> tuple:
+        """``(visited, reranked, stages)`` accumulators, in the form the
+        scan kernels take as ``counters``."""
+        return (self._visited, self._reranked, self._stages)
+
     @property
     def visited_rows(self) -> int:
         return int(self._visited.value)
@@ -245,11 +250,6 @@ def pq_score_scan(
     )
 
 
-def _global_topk(df: DataFrame, k: int, score: str) -> DataFrame:
-    w = Window.partitionBy("qid").orderBy(F.desc(score), F.asc("id"))
-    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def two_phase_knn_join(
     codes_df: DataFrame,
     vectors_df: DataFrame,
@@ -285,6 +285,7 @@ def two_phase_knn_join(
     ``m_hint``/``n_hint`` skip the sizing jobs.
     """
     from jvector_spark.operators.exact import (
+        _rank_topk,
         collect_point_query_batch,
         query_side_is_big,
     )
@@ -300,11 +301,18 @@ def two_phase_knn_join(
         )
     if strategy != "broadcast":
         raise ValueError(f"unknown strategy {strategy!r}")
-    qrows = collect_point_query_batch(queries_df, query_id_col, query_vec_col, "two_phase_knn_join")
-    queries = [(r[0], np.asarray(r[1], dtype=np.float64)) for r in qrows]
+    qids, qmat = collect_point_query_batch(
+        queries_df, query_id_col, query_vec_col, "two_phase_knn_join"
+    )
+    queries = list(zip(qids.tolist(), qmat))
 
     stage1 = pq_score_scan(codes_df, pq, queries, metric, rerank_k, id_col, codes_col)
-    survivors = _global_topk(stage1, rerank_k, "score_approx").select("qid", "id")
+    w = Window.partitionBy("qid").orderBy(F.desc("score_approx"), F.asc("id"))
+    survivors = (
+        stage1.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= rerank_k)
+        .select("qid", "id")
+    )
 
     # stage 2: broadcast the survivor set against the rerank table; the join
     # output is tiny (rerank_k per query), so the rerank itself is cheap.
@@ -353,7 +361,7 @@ def two_phase_knn_join(
                 yield pd.DataFrame({"qid": pdf["qid"], "id": pdf["id"], "score": scores})
 
     reranked = joined.mapInPandas(rerank, schema="qid long, id long, score double")
-    return _global_topk(reranked, k, "score").orderBy("qid", "rank")
+    return _rank_topk(reranked, k)
 
 
 def _two_phase_blocked(
@@ -380,8 +388,8 @@ def _two_phase_blocked(
     the broadcast route's."""
     import math
 
-    from jvector_spark.operators.exact import _C_TILE, _Q_TILE
-    from jvector_spark.operators.index import _fused_block_topk
+    from jvector_spark.operators.exact import _C_TILE, _Q_TILE, _rank_topk, empty_hits
+    from jvector_spark.operators.index import _tile_topk
 
     spark = codes_df.sparkSession
     n = n_hint if n_hint is not None else codes_df.count()
@@ -393,10 +401,11 @@ def _two_phase_blocked(
     if use_nvq:
         nvq_df, nvq_codec = nvq
         payload = nvq_df.select(
-            F.col(id_col).alias("rid"), "nvq_bytes", "nvq_params"
+            F.col(id_col).alias("rid"), F.col("nvq_bytes").alias("nvq"),
+            "nvq_params",
         )
-        extra = ["nvq_bytes", "nvq_params"]
-        null_of = {"nvq_bytes": "binary", "nvq_params": "array<double>"}
+        extra = ["nvq", "nvq_params"]
+        null_of = {"nvq": "binary", "nvq_params": "array<double>"}
         vec_expr = F.lit(None).cast("array<float>").alias("vec")
     else:
         nvq_codec = None
@@ -432,46 +441,18 @@ def _two_phase_blocked(
 
     def tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
         pq_o, met, kk, keep, nvq_c = bt.value
-        empty = pd.DataFrame(
-            {
-                "qid": pd.Series(dtype="int64"),
-                "id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
         qs = pdf[pdf["is_q"] == 1]
         cs = pdf[pdf["is_q"] == 0]
         if len(qs) == 0 or len(cs) == 0:
-            return empty
-        ids = cs["rid"].to_numpy(dtype=np.int64)
-        q_ids = qs["rid"].to_numpy(dtype=np.int64)
-        q_mat_all = kernels.as_matrix(qs["vec"])
-        code_idx = np.frombuffer(b"".join(cs["codes"]), dtype=np.uint8).reshape(
-            len(cs), pq_o.m
-        ).astype(np.int64)
-        mag = pq_o.magnitude_lut() if met == "COSINE" else None
-        cs_vec = None if nvq_c is not None else cs["vec"]
-        nvq_pack = (
-            (nvq_c, cs["nvq_bytes"], cs["nvq_params"]) if nvq_c is not None else None
-        )
-        frames = []
-        for lo in range(0, len(q_ids), 512):
-            q_mat = q_mat_all[lo : lo + 512]
-            luts = pq_o.adc_lut_batch(q_mat, met)
-            qn = np.linalg.norm(q_mat, axis=1)
-            oq, oi, osc = _fused_block_topk(
-                met, kk, keep, q_ids[lo : lo + 512], q_mat, luts, mag, qn,
-                ids, code_idx, vec_rows=cs_vec, nvq=nvq_pack,
-            )
-            frames.append(pd.DataFrame({"qid": oq, "id": oi, "score": osc}))
-        return pd.concat(frames, ignore_index=True) if frames else empty
+            return empty_hits()
+        return _tile_topk(qs, cs, pq_o, met, kk, keep, nvq_c)
 
     tiled = (
         c_side.unionByName(q_side)
         .groupBy("qb", "cb")
         .applyInPandas(tile, schema="qid long, id long, score double")
     )
-    return _global_topk(tiled, k, "score").orderBy("qid", "rank")
+    return _rank_topk(tiled, k)
 
 
 def two_phase_topk(

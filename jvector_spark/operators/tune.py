@@ -343,7 +343,7 @@ def tune_graph_search(
     # traversal IO bound per (n_probe, ef): sum over each query's probed
     # partitions of min(stored_rows, ef x degree), normalized by the
     # total stored rows (same denominator as probe_io_stats)
-    from jvector_spark.operators.index import _partition_score_bounds
+    from jvector_spark.operators.index import _probe_plan
 
     total = 0
     probed_counts: dict[int, np.ndarray] = {}  # n_probe -> (m, np) stored
@@ -351,11 +351,9 @@ def tune_graph_search(
         info = index._segments[seg.name]
         counts = index._part_counts(seg.name).astype(np.float64)
         total += counts.sum()
-        _, d2 = _partition_score_bounds(info, qmat, metric)
-        d2 = np.where(info["has_rows"][None, :], d2, np.inf)
-        order = np.argsort(d2, axis=1)
+        order, _, _ = _probe_plan(info, qmat, max(n_probe_grid))
         for np_ in n_probe_grid:
-            sel = counts[order[:, : min(np_, order.shape[1])]]
+            sel = counts[order[:, :np_]]
             probed_counts.setdefault(np_, np.zeros_like(sel[:, :0]))
             probed_counts[np_] = (
                 sel if probed_counts[np_].shape[1] == 0

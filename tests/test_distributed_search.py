@@ -88,14 +88,25 @@ def test_search_auto_routes_over_cap_exact_parity(spark, big_setup):
         ), f"qid {q}: non-tie divergence {a} vs {b}"
 
 
-def test_search_distributed_matches_broadcast(spark, big_setup):
+@pytest.mark.parametrize(
+    "cfg",
+    [{}, {"first_pass": "bq"}, {"rerank": "nvq"}],
+    ids=["default", "bq", "nvq"],
+)
+def test_search_distributed_matches_broadcast(spark, big_setup, cfg, tmp_path):
     """Probe-selection parity at non-exhaustive n_probe: with rerank_k
     covering every probed row, both routes are exact over their probed
     subsets, so identical probe sets => identical results. (At partial
     overquery the two routes' rerank cuts run at different batch
     granularities — both within the documented batch-local contract — so
-    exact equality is only defined when the cut keeps everything.)"""
+    exact equality is only defined when the cut keeps everything.) The
+    BQ first pass and the NVQ rerank payload run through the same codec
+    adapters on both routes, so they must match as well."""
     corpus, idx, n = big_setup
+    if cfg:
+        idx = IVFIndexBuilder(
+            metric="COSINE", n_partitions=16, pq_m=4, **cfg
+        ).fit(corpus, str(tmp_path / "index"))
     queries = corpus.limit(64).selectExpr("id as qid", "vec")
     oq = float(n) / 10
     a = idx.search(queries, 10, n_probe=4, overquery=oq, strategy="distributed")

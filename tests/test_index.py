@@ -885,13 +885,25 @@ def test_slim_store_append_compact_lifecycle(spark, corpus_df, tmp_path_factory)
         metric="COSINE", n_partitions=16, pq_m=8, rerank="nvq",
         store_fp32="none",
     ).fit(half1, p)
+    lifecycle_fields = {"segments", "version", "created_at"}
+
+    def build_settings(m):
+        return {
+            f: getattr(m, f)
+            for f in m.__dataclass_fields__
+            if f not in lifecycle_fields
+        }
+
+    settings = build_settings(idx.manifest)
     idx.append(half2)
+    assert build_settings(idx.manifest) == settings
     assert all(
         "vec" not in idx._segment_data(s.name).columns
         for s in idx.manifest.segments
     )
     idx.delete([0, 1, 2, 3])
     idx2 = idx.compact()
+    assert build_settings(idx2.manifest) == settings
     assert len(idx2.manifest.segments) == 1
     assert idx2.manifest.store_fp32 == "none"
     assert "vec" not in idx2._segment_data(
