@@ -140,43 +140,54 @@ def threshold_search(
 BROADCAST_QUERY_CAP = 8192
 
 
-def query_side_is_big(queries: DataFrame, m_hint: int | None = None) -> bool:
-    """The one routing rule every query-side operator shares (exact knn,
-    IVF search/threshold, LSH, two-phase, the planner): is the query set
-    over ``BROADCAST_QUERY_CAP``? ``m_hint`` answers without a job; else a
-    LIMIT cap+1 probe — O(cap) regardless of query-side size, never a
-    full count."""
-    if m_hint is not None:
-        return m_hint > BROADCAST_QUERY_CAP
-    return queries.limit(BROADCAST_QUERY_CAP + 1).count() > BROADCAST_QUERY_CAP
-
-
-def collect_point_query_batch(
+def route_query_batch(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
     op: str,
-    cap: int = BROADCAST_QUERY_CAP,
+    strategy: str = "broadcast",
+    routes: tuple[str, str] = ("broadcast", "distributed"),
+    m_hint: int | None = None,
     extra_cols: tuple = (),
-) -> tuple:
-    """Collect the query side of a point-query-batch operator with the cap
-    enforced in the SAME job: ``take(cap + 1)`` both bounds driver memory
-    (a corpus-sized query side fails loudly instead of OOMing) and returns
-    the rows the operator needs — the query-side plan executes once, not
-    once for a guard count and again for the collect.
+) -> tuple | None:
+    """The query-side front end of every point-query-batch operator: route
+    the query side and, on the broadcast route, collect it.
 
-    Returns ``(qids, qmat)``: int64 ids and the (m, d) f64 query matrix.
-    Each of ``extra_cols`` (per-query state such as the hard-negative
-    label) appends one more array to the tuple."""
+    ``routes`` names the operator's (broadcast, distributed) strategies.
+    ``auto`` decides from ``m_hint`` when given (no job); otherwise ONE
+    ``take(cap + 1)`` decides and collects: at most
+    ``BROADCAST_QUERY_CAP`` rows is the broadcast route with those rows,
+    more is the distributed route (the rows are dropped). An explicit
+    broadcast collects the same way but fails loudly above the cap (a
+    corpus-sized query side must not OOM the driver).
+
+    Returns ``None`` for the distributed route, else ``(qids, qmat)``:
+    int64 ids and the (m, d) f64 query matrix ((0, 0) when empty), plus
+    one array per ``extra_cols`` entry (e.g. the hard-negative label)."""
+    broadcast, distributed = routes
+    cap = BROADCAST_QUERY_CAP
+    auto = strategy == "auto"
+    if auto and m_hint is not None:
+        strategy, auto = (distributed if m_hint > cap else broadcast), False
+    if strategy == distributed:
+        return None
+    if not auto and strategy != broadcast:
+        raise ValueError(f"unknown strategy {strategy!r}")
     rows = queries.select(id_col, vec_col, *extra_cols).take(cap + 1)
     if len(rows) > cap:
+        if auto:
+            return None
         raise ValueError(
             f"{op} is a point-query-batch operator (query side is broadcast); "
             f"got more than {cap} query rows. Use exact.knn_join(strategy="
             f"'blocked') for corpus-sized query sets, or chunk the queries."
         )
     qids = np.array([r[0] for r in rows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    qmat = (
+        np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+        if rows
+        else np.zeros((0, 0))
+    )
     extras = tuple(np.array([r[2 + i] for r in rows]) for i in range(len(extra_cols)))
     return (qids, qmat) + extras
 
@@ -210,8 +221,10 @@ def knn_join(
         × corpus-block) tiles scored with one matmul each (the
         ``dedup.embedding_neardup`` shape). The corpus-as-queries / wide
         path.
-      - ``auto``: counts the query side; ``numpy`` at or below
-        ``BROADCAST_QUERY_CAP`` rows, else ``blocked``.
+      - ``auto``: ``numpy`` at or below ``BROADCAST_QUERY_CAP`` query
+        rows, else ``blocked`` — decided by ``m_hint``, or by the same
+        ``take(cap + 1)`` that collects the broadcast side
+        (``route_query_batch``).
 
     ``n_hint`` / ``m_hint``: approximate corpus / query row counts used to
     size the blocked join's tiles. Passing them (or reusing a count the
@@ -221,13 +234,6 @@ def knn_join(
 
     Returns (qid, id, score, rank).
     """
-    if strategy == "auto":
-        strategy = "blocked" if query_side_is_big(queries, m_hint) else "numpy"
-    if strategy == "blocked":
-        return _knn_join_blocked(
-            corpus, queries, k, metric, id_col, vec_col, query_id_col, query_vec_col,
-            n_hint=n_hint, m_hint=m_hint,
-        )
     if strategy == "expr":
         q = queries.select(
             F.col(query_id_col).alias("qid"), F.col(query_vec_col).alias("_qvec")
@@ -238,11 +244,16 @@ def knn_join(
             similarity(metric, F.col(vec_col), F.col("_qvec")).alias("score"),
         )
         return _rank_topk(scored, k)
-    if strategy == "numpy":
-        return _knn_join_numpy(
-            corpus, queries, k, metric, id_col, vec_col, query_id_col, query_vec_col
+    batch = route_query_batch(
+        queries, query_id_col, query_vec_col, "exact.knn_join(strategy='numpy')",
+        strategy, ("numpy", "blocked"), m_hint,
+    )
+    if batch is None:
+        return _knn_join_blocked(
+            corpus, queries, k, metric, id_col, vec_col, query_id_col, query_vec_col,
+            n_hint=n_hint, m_hint=m_hint,
         )
-    raise ValueError(f"unknown strategy {strategy!r}")
+    return _knn_join_numpy(corpus, batch, k, metric, id_col, vec_col)
 
 
 def empty_hits() -> pd.DataFrame:
@@ -268,56 +279,60 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+def empty_ranked(spark) -> DataFrame:
+    """The zero-row ``(qid, id, score, rank)`` result of a top-k operator
+    whose query side is empty."""
+    return _rank_topk(spark.createDataFrame([], "qid long, id long, score double"), 1)
+
+
 def _knn_join_numpy(
     corpus: DataFrame,
-    queries: DataFrame,
+    batch: tuple,
     k: int,
     metric: str,
     id_col: str,
     vec_col: str,
-    query_id_col: str,
-    query_vec_col: str,
+    label_col: str | None = None,
 ) -> DataFrame:
-    """Map-side partial top-k k-NN join.
-
-    The query set is collected to the driver (it is the small side by
-    contract — same asymmetry the reference assumes: queries ≪ corpus) and
-    broadcast as dense numpy matrices; each corpus partition emits at most
-    k candidates per query. The collect is capped at
-    ``BROADCAST_QUERY_CAP`` rows and fails loudly above it (same contract
-    as every point-query-batch operator) — corpus-sized query sides must
-    use ``strategy='blocked'``.
+    """Map-side partial top-k k-NN join against a collected query batch
+    (``route_query_batch``'s ``(qids, qmat[, qlabels])``), broadcast as
+    dense numpy matrices (queries ≪ corpus by contract, the reference's
+    asymmetry); each corpus partition emits at most k candidates per
+    query. With ``label_col`` corpus rows sharing a query's label are
+    masked INSIDE the kernel, before the partial top-k (hard negatives).
     """
     from jvector_spark.functions.registry import resolve_kernel
 
     kernel = resolve_kernel(metric)  # driver-side: X1 registry lives here
-    qids, qmat = collect_point_query_batch(
-        queries, query_id_col, query_vec_col, "exact.knn_join(strategy='numpy')"
-    )
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((qids, qmat))
+    if not len(batch[0]):
+        return empty_ranked(corpus.sparkSession)
+    bq = corpus.sparkSession.sparkContext.broadcast(batch)
 
     # `kernel` rides the UDF closure (cloudpickle), NOT the broadcast —
     # plain pickle can't serialize user-local functions
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids, q_mat = bq.value
+        q_ids, q_mat, *q_lab = bq.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             x = kernels.as_matrix(pdf[vec_col])
             scores = kernel(q_mat, x)  # (m, batch)
+            if q_lab:
+                lab = pdf[label_col].to_numpy()
+                scores = np.where(q_lab[0][:, None] == lab[None, :], -np.inf, scores)
             idx, vals = kernels.topk_per_row(scores, k, ids=ids)
-            m, kk = idx.shape
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(q_ids, kk),
-                    "id": ids[idx.ravel()],
-                    "score": vals.ravel(),
-                }
-            )
+            kk = idx.shape[1]
+            qcol = np.repeat(q_ids, kk)
+            icol = ids[idx.ravel()]
+            scol = vals.ravel()
+            if q_lab:
+                keep = np.isfinite(scol)  # partitions with < k foreign-label rows
+                qcol, icol, scol = qcol[keep], icol[keep], scol[keep]
+            yield pd.DataFrame({"qid": qcol, "id": icol, "score": scol})
 
-    candidates = corpus.select(id_col, vec_col).mapInPandas(
+    cols = [id_col, vec_col] + ([label_col] if label_col else [])
+    candidates = corpus.select(*cols).mapInPandas(
         part, schema="qid long, id long, score double"
     )
     return _rank_topk(candidates, k)
@@ -353,40 +368,11 @@ def hard_negative_join(
 
     Returns (qid, id, score, rank).
     """
-    from jvector_spark.functions.registry import resolve_kernel
-
-    kernel = resolve_kernel(metric)
-    qids, qmat, qlab = collect_point_query_batch(
+    batch = route_query_batch(
         queries, query_id_col, query_vec_col, "exact.hard_negative_join",
         extra_cols=(query_label_col,),
     )
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((qids, qmat, qlab))
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids, q_mat, q_lab = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            lab = pdf[label_col].to_numpy()
-            x = kernels.as_matrix(pdf[vec_col])
-            scores = kernel(q_mat, x)  # (m, batch)
-            scores = np.where(q_lab[:, None] == lab[None, :], -np.inf, scores)
-            idx, vals = kernels.topk_per_row(scores, k, ids=ids)
-            m, kk = idx.shape
-            qcol = np.repeat(q_ids, kk)
-            icol = ids[idx.ravel()]
-            scol = vals.ravel()
-            keep = np.isfinite(scol)  # partitions with < k foreign-label rows
-            yield pd.DataFrame(
-                {"qid": qcol[keep], "id": icol[keep], "score": scol[keep]}
-            )
-
-    candidates = corpus.select(id_col, vec_col, label_col).mapInPandas(
-        part, schema="qid long, id long, score double"
-    )
-    return _rank_topk(candidates, k)
+    return _knn_join_numpy(corpus, batch, k, metric, id_col, vec_col, label_col)
 
 
 # Tile sizing for the blocked join: per-task corpus/query row targets.

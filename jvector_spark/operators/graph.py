@@ -74,7 +74,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jvector_spark.functions import kernels
-from jvector_spark.operators.exact import collect_point_query_batch, empty_hits
+from jvector_spark.operators.exact import empty_hits, empty_ranked, route_query_batch
 
 __all__ = ["build_graph", "graph_search"]
 
@@ -1319,8 +1319,10 @@ def graph_search(
       mitigated r8: only top-k rows per partition are emitted when no
       tombstones exist, 4x fewer rows through the final window at
       default overquery, provably identical results).
-    - ``auto``: broadcast at or below the cap; above it, route on
-      partition-size vs beam-visit arithmetic (``_bulk_traversal_pays``):
+    - ``auto``: broadcast at or below the cap (``m_hint``, or the same
+      ``take(cap + 1)`` that collects the broadcast side); above it,
+      route on partition-size vs beam-visit arithmetic
+      (``_bulk_traversal_pays``):
       distributed traversal when partitions dwarf the beam's visit
       estimate, else the FUSED TILE SCAN (``IVFIndex.search`` with a
       matched rerank pool, overquery = ef/k) — same exact/NVQ rerank
@@ -1352,7 +1354,6 @@ def graph_search(
     sequential hop count W-fold for a small recall give-back (measured
     d=1024/ef640: wall 17.9 -> 9.9 s, recall 0.789 -> 0.754 at W=20).
     Default ``max(1, ef_search // 64)``."""
-    from jvector_spark.operators.exact import query_side_is_big
     from jvector_spark.operators.index import _merge_topk, _rerank_cols
 
     manifest = index.manifest
@@ -1384,33 +1385,36 @@ def graph_search(
             "slim/NVQ-reranked (store_fp32='none' or rerank='nvq'); "
             "use the default PQ steering"
         )
-    if strategy == "auto":
-        if not query_side_is_big(queries_df, m_hint):
-            strategy = "broadcast"
-        elif _bulk_traversal_pays(index, ef):
-            strategy = "distributed"
-        else:
-            # Bulk queries over SMALL partitions: the beam would visit a
-            # large fraction of each partition anyway, and the fused tile
-            # scan's GEMMs beat per-query traversal by 3-10x at that shape
-            # (measured r7: 1M x 64, 2000-row partitions, ef40 — 1153 s
-            # traversal vs 110-390 s tile). Route to the fused scan with a
-            # matched candidate pool (rerank_k = ef); it reranks through
-            # the SAME exact/NVQ kernels, so scores live in the same
-            # space and recall is >= the beam's (it scans whole probed
-            # partitions instead of approximating within them). r7
-            # VERDICT item 3: auto must not hand a user the 10x penalty.
-            # The matched pool is the caller's RERANK budget (overquery*k),
-            # not the beam width ef — ef is a traversal concept (candidate
-            # frontier), and mapping from it doubled the fused rerank pool
-            # at default knobs (r8: auto 266.5 s vs direct fused 238.0 s
-            # at the 1M bench shape).
-            return index.search(
-                queries_df, k, n_probe=n_probe,
-                overquery=max(overquery, rerank_k / max(k, 1)),
-                query_id_col=query_id_col, query_vec_col=query_vec_col,
-                probe_ratio=probe_ratio, m_hint=m_hint, telemetry=telemetry,
-            )
+    batch = route_query_batch(
+        queries_df, query_id_col, query_vec_col, "graph_search", strategy,
+        m_hint=m_hint,
+    )
+    if batch is None and strategy != "distributed" and not _bulk_traversal_pays(
+        index, ef
+    ):
+        # auto, over the cap, SMALL partitions: the beam would visit a
+        # large fraction of each partition anyway, and the fused tile
+        # scan's GEMMs beat per-query traversal by 3-10x at that shape
+        # (measured r7: 1M x 64, 2000-row partitions, ef40 — 1153 s
+        # traversal vs 110-390 s tile). Route to the fused scan with a
+        # matched candidate pool (rerank_k = ef); it reranks through
+        # the SAME exact/NVQ kernels, so scores live in the same
+        # space and recall is >= the beam's (it scans whole probed
+        # partitions instead of approximating within them). r7
+        # VERDICT item 3: auto must not hand a user the 10x penalty.
+        # The matched pool is the caller's RERANK budget (overquery*k),
+        # not the beam width ef — ef is a traversal concept (candidate
+        # frontier), and mapping from it doubled the fused rerank pool
+        # at default knobs (r8: auto 266.5 s vs direct fused 238.0 s
+        # at the 1M bench shape). The route is already decided, so the
+        # fused search does not re-read the query side to route.
+        return index.search(
+            queries_df, k, n_probe=n_probe,
+            overquery=max(overquery, rerank_k / max(k, 1)),
+            query_id_col=query_id_col, query_vec_col=query_vec_col,
+            probe_ratio=probe_ratio, strategy="distributed", m_hint=m_hint,
+            telemetry=telemetry,
+        )
     tel_acc = telemetry.counters() if telemetry is not None else None
     # hive part_id lives in the dir name
     data_cols = ["id", "codes", *_rerank_cols(use_nvq)]
@@ -1427,22 +1431,19 @@ def graph_search(
     # on the 1M corpus-as-queries shape).
     emit_k = k_ret if t is not None else min(k, k_ret)
 
-    if strategy == "distributed":
+    if batch is None:
         parts = _graph_search_distributed(
             index, queries_df, met, emit_k, ef, n_probe,
             query_id_col, query_vec_col, probe_ratio, beam_width,
             use_nvq, data_cols, tel_acc, steer_exact=steer == "exact",
         )
-    elif strategy == "broadcast":
+    else:
         parts = _graph_search_broadcast(
-            index, queries_df, met, emit_k, ef, n_probe,
-            query_id_col, query_vec_col, probe_ratio, beam_width,
+            index, *batch, met, emit_k, ef, n_probe, probe_ratio, beam_width,
             use_nvq, data_cols, tel_acc, steer_exact=steer == "exact",
         )
-    else:
-        raise ValueError(f"unknown search strategy {strategy!r}")
     if not parts:
-        return index.spark.createDataFrame([], "qid long, id long, score double")
+        return empty_ranked(index.spark)
     # tombstoned rows are traversed but filtered (two-phase delete, F2)
     return _merge_topk(parts, k, manifest.spill, tombstones=t)
 
@@ -1513,21 +1514,20 @@ def _read_partition(dirs: tuple, part: int):
 
 
 def _graph_search_broadcast(
-    index, queries_df, met, k_ret, ef, n_probe,
-    query_id_col, query_vec_col, probe_ratio, beam_width,
+    index, qids, qmat, met, k_ret, ef, n_probe, probe_ratio, beam_width,
     use_nvq, data_cols, tel_acc, steer_exact=False,
 ) -> list[DataFrame]:
-    from jvector_spark.operators.index import _probe_plan, _stage1_rows
+    from jvector_spark.operators.index import _part_queries, _select_probes, _stage1_rows
 
     manifest = index.manifest
-    qids, qmat = collect_point_query_batch(
-        queries_df, query_id_col, query_vec_col, "graph_search"
-    )
+    if not len(qids):
+        return []
     qnorms = np.linalg.norm(qmat, axis=1)
     parts_out = []
     for seg in manifest.segments:
         info = index._segments[seg.name]
-        _, _, p2q = _probe_plan(info, qmat, n_probe, probe_ratio)
+        probe, keep = _select_probes(info, qmat, n_probe, probe_ratio)
+        p2q = _part_queries(np.nonzero(keep)[0], probe[keep])
         probed = sorted(p2q)
         if not probed:
             continue

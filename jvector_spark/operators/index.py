@@ -62,9 +62,9 @@ from jvector_spark.functions import kernels
 from jvector_spark.operators.exact import (
     _C_TILE,
     _rank_topk,
-    collect_point_query_batch,
     empty_hits,
-    query_side_is_big,
+    empty_ranked,
+    route_query_batch,
 )
 from jvector_spark.operators.quantize.pq import ProductQuantizer
 from jvector_spark.types import MANIFEST_VERSION, IndexManifest, SegmentInfo
@@ -713,7 +713,7 @@ def _hier_fine_subs(
     fine_c: np.ndarray,
     own_pad: np.ndarray,
     npf: int,
-    probe_valid: np.ndarray | None = None,
+    keep: np.ndarray,
     per_probe: bool = False,
 ) -> list[np.ndarray]:
     """Per-query top-``npf`` fine cells among those OWNED by the query's
@@ -729,10 +729,10 @@ def _hier_fine_subs(
     Returns one int32 array per query (<= npf ids; fewer when the probed
     cells own fewer than npf fine cells). Shared by the broadcast scan,
     the distributed assignment, and probe_io_stats so every route selects
-    identically (bit-parity across routes). ``probe_valid`` (same shape
-    as ``probe_cells``) marks probes DROPPED by adaptive probing
-    (probe_ratio): their owned cells are excluded so npf is never spent
-    on cells in partitions the query won't scan.
+    identically (bit-parity across routes). ``keep`` (``_select_probes``'
+    mask, same shape as ``probe_cells``) is false for probes DROPPED by
+    adaptive probing (probe_ratio): their owned cells are excluded so npf
+    is never spent on cells in partitions the query won't scan.
 
     ``per_probe=True`` makes ``npf`` a PER-KEPT-PROBE budget: each
     query selects its top ``npf x n_kept_probes`` cells instead of a
@@ -745,14 +745,8 @@ def _hier_fine_subs(
     visited fraction (npf / fine_factor) CONSTANT per query, like
     probe_ratio holds relative probe depth constant."""
     nq = len(qmat)
-    cand = own_pad[probe_cells]  # (nq, P, Lmax)
-    if probe_valid is not None:
-        cand = np.where(probe_valid[:, :, None], cand, -1)
-    kept = (
-        probe_valid.sum(axis=1)
-        if probe_valid is not None
-        else np.full(nq, probe_cells.shape[1], dtype=np.int64)
-    )
+    cand = np.where(keep[:, :, None], own_pad[probe_cells], -1)  # (nq, P, Lmax)
+    kept = keep.sum(axis=1)
     cand = cand.reshape(nq, -1)  # (nq, C)
     c_w, d = cand.shape[1], fine_c.shape[1]
     npf_q = (
@@ -1692,12 +1686,11 @@ def _persist_assignment(assigned: DataFrame) -> DataFrame:
 
 
 def _centroid_dist2(qmat: np.ndarray, cents: np.ndarray) -> np.ndarray:
-    """(nq, n_cells) squared query-centroid distances. Association order
-    matters for route bit-parity: the distributed assignment pass
-    computes (-2*q@c + cc) + qq (it needs the qq-free matrix for the
-    argmin), so the driver-side routes MUST accumulate in the same order
-    — probe_ratio keeps/drops a boundary probe identically on both routes
-    only if dist^2 is bit-identical (r6 ADVICE)."""
+    """(nq, n_cells) squared query-centroid distances, accumulated as
+    (-2*q@c + cc) + qq. Every route's probe selection goes through here,
+    so dist^2 — and with it probe_ratio's keep/drop of a boundary probe —
+    is bit-identical across routes (r6 ADVICE). The association order is
+    part of the result: changing it can move boundary probes."""
     return np.maximum(
         (-2.0 * qmat @ cents.T + np.einsum("ij,ij->i", cents, cents)[None, :])
         + np.einsum("ij,ij->i", qmat, qmat)[:, None],
@@ -1705,20 +1698,28 @@ def _centroid_dist2(qmat: np.ndarray, cents: np.ndarray) -> np.ndarray:
     )
 
 
-def _probe_plan(
-    info: dict, qmat: np.ndarray, n_probe: int, probe_ratio: float | None = None
-) -> tuple[np.ndarray, np.ndarray | None, dict[int, list[int]]]:
-    """Driver-side probe selection for a collected query batch — the
-    hierarchical-descent analog shared by the IVF broadcast scan, graph
-    broadcast search and ``probe_io_stats`` (the distributed assignment
-    pass applies the same rule per query batch).
+def _probe_depth(info: dict, n_probe: int) -> int:
+    """Probes per query: ``n_probe`` clamped to the segment's non-empty
+    cells (at least one)."""
+    return max(1, min(int(n_probe), int(info["has_rows"].sum())))
 
-    Each query probes its ``n_probe`` nearest non-empty centroids.
+
+def _select_probes(
+    info: dict, qmat: np.ndarray, n_probe: int, probe_ratio: float | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """The top-k probe rule of every search route — the driver-side plan
+    of the broadcast scans, graph search, ``probe_io_stats`` and tuning,
+    and the map-side distributed assignment pass, so both routes probe
+    identically.
+
+    Each query probes its ``_probe_depth`` nearest non-empty centroids.
     (Bound-ranked probing was tried and measured WORSE for top-k recall:
     the score bound describes the best single vector a partition could
     hold — outlier-driven — while top-k recall wants partitions dense in
     near neighbors, which centroid distance proxies better. Bounds still
-    drive threshold pruning, where they are exact.)
+    drive threshold pruning, where they are exact.) The selection is an
+    argpartition; only the kept columns are sorted, by (dist^2, cell id),
+    so ties order the same way everywhere.
 
     ``probe_ratio`` (adaptive probe depth, the zipf-1.5 lever) keeps only
     probes within probe_ratio x the query's nearest centroid distance —
@@ -1727,26 +1728,65 @@ def _probe_plan(
     query keeps one or two. dist^2 includes the query norm, so the
     relative rule is scale-free; the nearest probe is always kept.
 
-    Returns ``(probe, probe_valid, part_to_queries)``: (nq, n_probe)
-    centroid ids sorted nearest-first, the (nq, n_probe) keep mask (None
-    without ``probe_ratio``), and part_id -> ascending query positions
-    over the kept, non-empty probes."""
+    Returns ``(probe, keep)``: (nq, depth) centroid ids nearest-first and
+    the (nq, depth) keep mask (all true without ``probe_ratio``)."""
     d2 = _centroid_dist2(qmat, info["centroids"])
-    d2 = np.where(info["has_rows"][None, :], d2, np.inf)
-    probe = np.argsort(d2, axis=1)[:, : min(n_probe, d2.shape[1])]
-    dt = np.take_along_axis(d2, probe, axis=1)  # sorted, (nq, n_probe)
-    probe_valid = None
+    d2[:, ~info["has_rows"]] = np.inf
+    depth = _probe_depth(info, n_probe)
+    sel = np.argpartition(d2, depth - 1, axis=1)[:, :depth]
+    dt = np.take_along_axis(d2, sel, axis=1)
+    order = np.lexsort((sel, dt), axis=1)
+    probe = np.take_along_axis(sel, order, axis=1)
+    dt = np.take_along_axis(dt, order, axis=1)
     keep = np.isfinite(dt)
     if probe_ratio is not None:
         # RELATIVE epsilon: an absolute 1e-12 is below one ulp of a
         # large dist^2, so it could not absorb any rounding at scale
-        probe_valid = dt <= dt[:, :1] * (probe_ratio**2) * (1.0 + 1e-9)
-        keep &= probe_valid
-    qi, jj = np.nonzero(keep)
-    part_to_queries: dict[int, list[int]] = {}
-    for q, p in zip(qi.tolist(), probe[qi, jj].tolist()):
-        part_to_queries.setdefault(p, []).append(q)
-    return probe, probe_valid, part_to_queries
+        keep &= dt <= dt[:, :1] * (probe_ratio**2) * (1.0 + 1e-9)
+    return probe, keep
+
+
+def _threshold_probes(
+    info: dict, qmat: np.ndarray, metric: str, threshold: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """The threshold probe rule of both threshold routes: ``(qi, pi)``,
+    every (query position, partition) pair whose rigorous score bound
+    (``_partition_score_bounds``) reaches ``threshold``, in query order."""
+    bound, _ = _partition_score_bounds(info, qmat, metric)
+    return np.nonzero(bound + 1e-9 >= threshold)  # -inf = empty partition
+
+
+def _part_queries(qi: np.ndarray, pi: np.ndarray) -> dict[int, list[int]]:
+    """part_id -> ascending query positions, from (query, partition)
+    pairs in query order (``np.nonzero(keep)[0], probe[keep]`` for top-k
+    probes) — the broadcast scans' task routing table."""
+    out: dict[int, list[int]] = {}
+    for q, p in zip(qi.tolist(), pi.tolist()):
+        out.setdefault(p, []).append(q)
+    return out
+
+
+def _threshold_hits(
+    metric: str,
+    threshold: float,
+    q_ids: np.ndarray,
+    q_mat: np.ndarray,
+    ids: np.ndarray,
+    x: np.ndarray,
+) -> pd.DataFrame:
+    """The exact fp32 "score >= t" kernel of both threshold routes: every
+    (query, row) pair of the block scoring at or above ``threshold``. The
+    query axis is chunked so the score matrix stays bounded."""
+    frames = [empty_hits()]
+    for lo in range(0, len(q_ids), 512):
+        scores = kernels.similarity(metric, q_mat[lo : lo + 512], x)
+        qi, ri = np.nonzero(scores >= threshold)
+        frames.append(
+            pd.DataFrame(
+                {"qid": q_ids[lo : lo + 512][qi], "id": ids[ri], "score": scores[qi, ri]}
+            )
+        )
+    return pd.concat(frames, ignore_index=True)
 
 
 def _probed_groups(batches: Iterator[pd.DataFrame], part_to_queries: dict):
@@ -2166,11 +2206,13 @@ class IVFIndex:
           runs the same fused ADC→rerank scoring per tile. The
           corpus-as-queries path: bulk embedding joins, semantic dedup.
         - ``auto``: ``broadcast`` at or below ``BROADCAST_QUERY_CAP`` query
-          rows, else ``distributed`` (LIMIT-probe, not a full count).
+          rows, else ``distributed`` — decided by ``m_hint``, or by the
+          same ``take(cap + 1)`` that collects the broadcast side.
 
-        ``m_hint``: approximate query-side row count; skips the sizing
-        probe/count jobs (affects only routing + tile granularity, never
-        correctness). ``n_probe_fine`` works on BOTH routes: the
+        ``m_hint``: approximate query-side row count; routes without
+        reading the query side and skips the distributed sizing count
+        (affects only routing + tile granularity, never correctness).
+        ``n_probe_fine`` works on BOTH routes: the
         distributed route computes the probed fine-sub union with a
         map-only pass (no query collect) and pushes the same
         ``sub_id IN (...)`` scan filter the broadcast route uses, so
@@ -2261,22 +2303,20 @@ class IVFIndex:
             accept_df = accept_ids.select("id")
 
         rerank_k = max(k, int(round(overquery * k)))
-        if strategy == "auto":
-            strategy = (
-                "distributed" if query_side_is_big(queries_df, m_hint) else "broadcast"
-            )
-        if strategy == "distributed":
+        batch = route_query_batch(
+            queries_df, query_id_col, query_vec_col, "IVFIndex.search",
+            strategy, m_hint=m_hint,
+        )
+        if batch is None:
             return self._search_distributed(
                 queries_df, metric, k, rerank_k, n_probe,
                 query_id_col, query_vec_col, predicate, accept_df, rerank, m_hint,
                 n_probe_fine=n_probe_fine, telemetry=telemetry,
                 probe_ratio=probe_ratio, npf_per_probe=npf_per_probe,
             )
-        if strategy != "broadcast":
-            raise ValueError(f"unknown search strategy {strategy!r}")
-        qids, qmat = collect_point_query_batch(
-            queries_df, query_id_col, query_vec_col, "IVFIndex.search"
-        )
+        qids, qmat = batch
+        if not len(qids):
+            return empty_ranked(self.spark)
         parts = [
             self._segment_fused_scan(
                 self._segments[seg.name], qids, qmat, metric, k, rerank_k, n_probe,
@@ -2346,9 +2386,8 @@ class IVFIndex:
         npf_per_probe: bool = False,
     ) -> DataFrame:
         codec = info["pq"]
-        probe, probe_valid, part_to_queries = _probe_plan(
-            info, qmat, n_probe, probe_ratio
-        )
+        probe, keep = _select_probes(info, qmat, n_probe, probe_ratio)
+        part_to_queries = _part_queries(np.nonzero(keep)[0], probe[keep])
         probed_parts = sorted(part_to_queries)
         if not probed_parts:
             return self.spark.createDataFrame([], "qid long, id long, score double")
@@ -2373,7 +2412,7 @@ class IVFIndex:
             # so every selected cell lies in a partition this query scans
             subs_list = _hier_fine_subs(
                 qmat, probe, fine_c, self._fine_own_pad(info), npf,
-                probe_valid=probe_valid, per_probe=npf_per_probe,
+                keep, per_probe=npf_per_probe,
             )
             probed_subs = sorted({int(s) for a in subs_list for s in a})
             data = data.filter(F.col("sub_id").isin(probed_subs))
@@ -2464,8 +2503,8 @@ class IVFIndex:
         the query's probed fine-sub set (``subs``) for per-query candidate
         masking in the tile join.
 
-        ``threshold is None``: the ``n_probe`` nearest non-empty centroids
-        per query (same selection as the broadcast path). Otherwise: every
+        ``threshold is None``: ``_select_probes`` (the broadcast routes'
+        top-k probe rule). Otherwise ``_threshold_probes``: every
         partition whose rigorous score upper bound (X4 stats) reaches
         ``threshold`` — identical pruning to the broadcast path, so
         threshold results stay exact on this route too."""
@@ -2491,54 +2530,25 @@ class IVFIndex:
         )
         if fine is not None:
             schema += ", subs array<int>"
-        n_live = int(stats["has_rows"].sum())
-        if n_live == 0:
+        if not stats["has_rows"].any():
             return self.spark.createDataFrame([], schema)
-        npb = int(max(1, min(n_probe, n_live))) if threshold is None else 0
         bcast = self.spark.sparkContext.broadcast(
-            (stats, npb, metric, threshold, fine, npf, own_pad, packed,
+            (stats, n_probe, metric, threshold, fine, npf, own_pad, packed,
              probe_ratio, npf_per_probe)
         )
 
         def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            (st, npb_, met, thr, fine_c, npf_, own_pad_, packed_,
+            (st, n_probe_, met, thr, fine_c, npf_, own_pad_, packed_,
              ratio_, npf_pp_) = bcast.value
-            cents = st["centroids"]
-            live = st["has_rows"]
-            cc = np.einsum("ij,ij->i", cents, cents)
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
                 qmat = kernels.as_matrix(pdf["vec"])
-                probe_valid = None
                 if thr is None:
-                    d = -2.0 * qmat @ cents.T + cc[None, :]  # dist^2 - ||q||^2
-                    d[:, ~live] = np.inf
-                    # probe membership is a set — argpartition, no sort
-                    sel = np.argpartition(d, npb_ - 1, axis=1)[:, :npb_]
-                    if ratio_ is not None:
-                        # adaptive depth, same relative rule as the
-                        # broadcast route: true dist^2 within ratio^2 x
-                        # the query's nearest (npb_ stays the cap; the
-                        # min is over the row — argpartition is unsorted)
-                        qq = np.einsum("ij,ij->i", qmat, qmat)
-                        dt = np.maximum(
-                            np.take_along_axis(d, sel, axis=1)
-                            + qq[:, None],
-                            0.0,
-                        )
-                        probe_valid = (
-                            dt <= dt.min(axis=1, keepdims=True)
-                            * (ratio_**2) * (1.0 + 1e-9)
-                        )
-                        qi, jj = np.nonzero(probe_valid)
-                        pi = sel[qi, jj]
-                    else:
-                        qi = np.repeat(np.arange(len(pdf)), npb_)
-                        pi = sel.ravel()
+                    probe, keep = _select_probes(st, qmat, n_probe_, ratio_)
+                    qi, pi = np.nonzero(keep)[0], probe[keep]
                 else:
-                    bound, _ = _partition_score_bounds(st, qmat, met)
-                    qi, pi = np.nonzero(bound + 1e-9 >= thr)
+                    qi, pi = _threshold_probes(st, qmat, met, thr)
                 if len(qi) == 0:
                     continue
                 if packed_:
@@ -2554,12 +2564,12 @@ class IVFIndex:
                 if fine_c is not None:
                     # hierarchical: top-npf among the fine cells of the
                     # query's OWN probed coarse cells (fine is only used
-                    # on the top-k path, where `sel` exists; the global
+                    # on the top-k path, where `probe` exists; the global
                     # n_fine-wide matmul + argpartition this replaces was
                     # >half the 1M corpus-as-queries assignment compute)
                     subs_list = _hier_fine_subs(
-                        qmat, sel, fine_c, own_pad_, npf_,
-                        probe_valid=probe_valid, per_probe=npf_pp_,
+                        qmat, probe, fine_c, own_pad_, npf_,
+                        keep, per_probe=npf_pp_,
                     )
                     out["subs"] = pd.Series([subs_list[i] for i in qi])
                 yield pd.DataFrame(out)
@@ -2618,8 +2628,6 @@ class IVFIndex:
         parts = []
         for seg in self.manifest.segments:
             info = self._segments[seg.name]
-            n_live = max(1, int(info["has_rows"].sum()))
-            npb = max(1, min(n_probe, n_live))
             fine_npf = n_probe_fine if info.get("fine") is not None else None
             # The sub_id IN (...) pushdown is an IO optimization only (the
             # per-query mask preserves ranking semantics) — at bulk
@@ -2634,7 +2642,7 @@ class IVFIndex:
                 or int(m_hint) * int(fine_npf) < 4 * len(info["fine"])
             )
             assigned = self._assign_probes(
-                queries_df, info, npb, qid_col, qvec_col, fine_npf=fine_npf,
+                queries_df, info, n_probe, qid_col, qvec_col, fine_npf=fine_npf,
                 probe_ratio=probe_ratio, npf_per_probe=npf_per_probe,
             )
             if m_hint is None or derive_subfilter:
@@ -2649,7 +2657,7 @@ class IVFIndex:
                 # saturates the partitions anyway). Held-out batches are
                 # small enough that misestimation only shifts tile
                 # granularity, never correctness.
-                n_assign = int(m_hint) * npb
+                n_assign = int(m_hint) * _probe_depth(info, n_probe)
                 tot = max(int(rows_p.sum()), 1)
                 assign_p = {
                     int(p): max(1, int(n_assign * rows_p[p] / tot))
@@ -2831,26 +2839,11 @@ class IVFIndex:
                     ),
                     n_fine=n_fine_, counters=tel_acc,
                 )
-            ids = cs["rid"].to_numpy(dtype=np.int64)
-            q_ids = qs["rid"].to_numpy(dtype=np.int64)
-            q_mat_all = kernels.as_matrix(qs["vec"])
-            cmat = kernels.as_matrix(cs["vec"])
-            frames = []
-            for lo in range(0, len(q_ids), 512):
-                scores = kernels.similarity(met, q_mat_all[lo : lo + 512], cmat)
-                qi, ri = np.nonzero(scores >= thr)
-                if len(qi) == 0:
-                    continue
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "qid": q_ids[lo : lo + 512][qi],
-                            "id": ids[ri],
-                            "score": scores[qi, ri],
-                        }
-                    )
-                )
-            return pd.concat(frames, ignore_index=True) if frames else empty_hits()
+            return _threshold_hits(
+                met, thr,
+                qs["rid"].to_numpy(dtype=np.int64), kernels.as_matrix(qs["vec"]),
+                cs["rid"].to_numpy(dtype=np.int64), kernels.as_matrix(cs["vec"]),
+            )
 
         # One tile ≈ one task: the session default (shuffle.partitions =
         # n_cores) hashes ~10^3 tiles into ~32 shuffle partitions, and the
@@ -2929,7 +2922,8 @@ class IVFIndex:
         assignment and scoring fully distributed (the corpus-as-queries
         dedup path — exactness is preserved because pruning uses the same
         bounds and survivors are scored identically); ``auto`` routes on
-        query-side size (``m_hint`` skips the LIMIT-probe job).
+        query-side size — ``m_hint``, or the same ``take(cap + 1)`` that
+        collects the broadcast side.
 
         Bounds per metric (c = centroid, r/theta/M = stored stats):
           EUCLIDEAN:   d(q,x) >= max(0, ||q-c|| - r)  -> 1/(1+d^2) bound
@@ -2944,19 +2938,17 @@ class IVFIndex:
                 "or run the threshold query against the source table"
             )
         metric = self.manifest.metric
-        if strategy == "auto":
-            strategy = (
-                "distributed" if query_side_is_big(queries_df, m_hint) else "broadcast"
-            )
-        if strategy == "distributed":
+        batch = route_query_batch(
+            queries_df, query_id_col, query_vec_col, "IVFIndex.threshold_search",
+            strategy, m_hint=m_hint,
+        )
+        if batch is None:
             return self._threshold_distributed(
                 queries_df, metric, threshold, query_id_col, query_vec_col
             )
-        if strategy != "broadcast":
-            raise ValueError(f"unknown search strategy {strategy!r}")
-        qids, qmat = collect_point_query_batch(
-            queries_df, query_id_col, query_vec_col, "IVFIndex.threshold_search"
-        )
+        qids, qmat = batch
+        if not len(qids):
+            return self.spark.createDataFrame([], "qid long, id long, score double")
         parts = [
             self._segment_threshold_scan(
                 self._segments[seg.name], qids, qmat, metric, threshold
@@ -2973,12 +2965,9 @@ class IVFIndex:
         metric: str,
         threshold: float,
     ) -> DataFrame:
-        bound, _ = _partition_score_bounds(info, qmat, metric)
-        probe_mask = bound + 1e-9 >= threshold  # (nq, nparts); -inf = empty
-        part_to_queries: dict[int, list[int]] = {}
-        for qi in range(len(qids)):
-            for p in np.flatnonzero(probe_mask[qi]):
-                part_to_queries.setdefault(int(p), []).append(qi)
+        part_to_queries = _part_queries(
+            *_threshold_probes(info, qmat, metric, threshold)
+        )
         probed_parts = sorted(part_to_queries)
         if not probed_parts:
             return self.spark.createDataFrame([], "qid long, id long, score double")
@@ -2993,18 +2982,9 @@ class IVFIndex:
         def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             q_ids, q_mat, met, t, p2q = b.value
             for _, grp, qsel in _probed_groups(batches, p2q):
-                ids = grp["id"].to_numpy(dtype=np.int64)
-                x = kernels.as_matrix(grp["vec"])
-                scores = kernels.similarity(met, q_mat[qsel], x)
-                qi_idx, row_idx = np.nonzero(scores >= t)
-                if len(qi_idx) == 0:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "qid": q_ids[qsel[qi_idx]],
-                        "id": ids[row_idx],
-                        "score": scores[qi_idx, row_idx],
-                    }
+                yield _threshold_hits(
+                    met, t, q_ids[qsel], q_mat[qsel],
+                    grp["id"].to_numpy(dtype=np.int64), kernels.as_matrix(grp["vec"]),
                 )
 
         return data.select("part_id", "id", "vec").mapInPandas(
@@ -3253,7 +3233,7 @@ class IVFIndex:
         search routes use, so the IO model predicts what an adaptive
         search actually scans (tune()'s cheapest-first ordering of
         adaptive lattice points uses this)."""
-        _, qmat = collect_point_query_batch(
+        _, qmat = route_query_batch(
             queries_df, query_id_col, query_vec_col, "IVFIndex.probe_io_stats"
         )
         nq = len(qmat)
@@ -3261,7 +3241,7 @@ class IVFIndex:
         stored = 0
         for seg in self.manifest.segments:
             info = self._segments[seg.name]
-            probe, probe_valid, _ = _probe_plan(info, qmat, n_probe, probe_ratio)
+            probe, keep = _select_probes(info, qmat, n_probe, probe_ratio)
             if n_probe_fine and info.get("fine") is not None:
                 fine_c = info["fine"]
                 npf = min(int(n_probe_fine), len(fine_c))
@@ -3273,13 +3253,13 @@ class IVFIndex:
                 # IO model predicts what the search actually scans
                 subs_list = _hier_fine_subs(
                     qmat, probe, fine_c, self._fine_own_pad(info), npf,
-                    probe_valid=probe_valid, per_probe=npf_per_probe,
+                    keep, per_probe=npf_per_probe,
                 )
                 for q in range(nq):
                     subs_q = np.asarray(subs_list[q], dtype=np.int32)
                     v = 0
                     for j, p in enumerate(probe[q]):
-                        if probe_valid is not None and not probe_valid[q, j]:
+                        if not keep[q, j]:
                             continue  # dropped by adaptive depth
                         entry = cellmap.get(int(p))
                         if entry is None:
@@ -3290,10 +3270,7 @@ class IVFIndex:
             else:
                 rows = self._part_counts(seg.name)
                 stored += int(rows.sum())
-                pr = rows[probe]
-                if probe_valid is not None:
-                    pr = np.where(probe_valid, pr, 0)
-                visited += pr.sum(axis=1)
+                visited += np.where(keep, rows[probe], 0).sum(axis=1)
         return {
             "n_queries": nq,
             "stored_rows": stored,

@@ -27,11 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from jvector_spark.functions import kernels
-from jvector_spark.operators.exact import (
-    _rank_topk,
-    collect_point_query_batch,
-    query_side_is_big,
-)
+from jvector_spark.operators.exact import _rank_topk, empty_ranked, route_query_batch
 
 
 def _bucket_of(x: np.ndarray, planes: np.ndarray) -> np.ndarray:
@@ -95,7 +91,8 @@ def rp_lsh_knn_join(
     map-only and equi-joins on the bucket key — no driver collect, the
     same shuffle shape as the MinHash-LSH dedup self-join, with AQE's
     skew-join handling hot buckets — scoring JVM-side per collision;
-    ``auto`` routes on query-side size (``m_hint`` skips the probe job).
+    ``auto`` routes on query-side size (``m_hint``, or the same
+    ``take(cap + 1)`` that collects the broadcast side).
     Candidate SETS are identical on both routes (same planes, same
     buckets); reported scores are float64 on both but summed in different
     orders (BLAS vs codegen), so last-ulp rank flips between routes are
@@ -118,18 +115,18 @@ def rp_lsh_knn_join(
     if n_planes is None:
         n = n_hint if n_hint is not None else corpus.count()
         n_planes = max(3, min(24, int(math.ceil(math.log2(max(n / 64.0, 2.0))))))
-    if strategy == "auto":
-        strategy = "distributed" if query_side_is_big(queries, m_hint) else "broadcast"
-    if strategy == "distributed":
+    batch = route_query_batch(
+        queries, query_id_col, query_vec_col, "rp_lsh_knn_join", strategy,
+        m_hint=m_hint,
+    )
+    if batch is None:
         return _rp_lsh_distributed(
             corpus, queries, k, metric, n_planes, probe_bits, seed,
             id_col, vec_col, query_id_col, query_vec_col,
         )
-    if strategy != "broadcast":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    qids, qmat = collect_point_query_batch(
-        queries, query_id_col, query_vec_col, "rp_lsh_knn_join"
-    )
+    qids, qmat = batch
+    if not len(qids):
+        return empty_ranked(corpus.sparkSession)
     dim = qmat.shape[1]
 
     rng = np.random.RandomState(seed)

@@ -281,29 +281,26 @@ def two_phase_knn_join(
     no driver collect of either side, ADC stage 1 and rerank fused per
     tile (the un-indexed sibling of ``IVFIndex.search(strategy=
     "distributed")`` — every tile scans every corpus block, since there is
-    no partitioning to prune); ``auto`` routes on query-side size.
-    ``m_hint``/``n_hint`` skip the sizing jobs.
+    no partitioning to prune); ``auto`` routes on query-side size
+    (``m_hint``, or the same ``take(cap + 1)`` that collects the
+    broadcast side). ``m_hint``/``n_hint`` skip the sizing jobs.
     """
-    from jvector_spark.operators.exact import (
-        _rank_topk,
-        collect_point_query_batch,
-        query_side_is_big,
-    )
+    from jvector_spark.operators.exact import _rank_topk, empty_ranked, route_query_batch
 
     rerank_k = max(k, int(round(overquery * k)))
-    if strategy == "auto":
-        strategy = "blocked" if query_side_is_big(queries_df, m_hint) else "broadcast"
-    if strategy == "blocked":
+    batch = route_query_batch(
+        queries_df, query_id_col, query_vec_col, "two_phase_knn_join", strategy,
+        ("broadcast", "blocked"), m_hint,
+    )
+    if batch is None:
         return _two_phase_blocked(
             codes_df, vectors_df, pq, queries_df, k, rerank_k, metric,
             id_col, vec_col, codes_col, query_id_col, query_vec_col,
             nvq, m_hint, n_hint,
         )
-    if strategy != "broadcast":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    qids, qmat = collect_point_query_batch(
-        queries_df, query_id_col, query_vec_col, "two_phase_knn_join"
-    )
+    qids, qmat = batch
+    if not len(qids):
+        return empty_ranked(vectors_df.sparkSession)
     queries = list(zip(qids.tolist(), qmat))
 
     stage1 = pq_score_scan(codes_df, pq, queries, metric, rerank_k, id_col, codes_col)

@@ -343,7 +343,7 @@ def tune_graph_search(
     # traversal IO bound per (n_probe, ef): sum over each query's probed
     # partitions of min(stored_rows, ef x degree), normalized by the
     # total stored rows (same denominator as probe_io_stats)
-    from jvector_spark.operators.index import _probe_plan
+    from jvector_spark.operators.index import _select_probes
 
     total = 0
     probed_counts: dict[int, np.ndarray] = {}  # n_probe -> (m, np) stored
@@ -351,7 +351,7 @@ def tune_graph_search(
         info = index._segments[seg.name]
         counts = index._part_counts(seg.name).astype(np.float64)
         total += counts.sum()
-        order, _, _ = _probe_plan(info, qmat, max(n_probe_grid))
+        order, _ = _select_probes(info, qmat, max(n_probe_grid))
         for np_ in n_probe_grid:
             sel = counts[order[:, :np_]]
             probed_counts.setdefault(np_, np.zeros_like(sel[:, :0]))

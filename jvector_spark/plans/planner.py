@@ -73,14 +73,15 @@ def plan_knn(
         df = index.search(queries, k, accept_ids=accept_ids)
         return SearchPlan("exact_filter_first", df, {"accepted": len(accept_ids)})
 
-    # rule 2: indexed corpus -> fused IVF scan. The query-side route is
-    # probed HERE (one LIMIT job) and passed explicitly so the plan can
-    # report it and search() doesn't re-probe: broadcast for point-query
-    # batches, the uncapped tile join for corpus-sized query sides.
-    if index is not None:
-        from jvector_spark.operators.exact import query_side_is_big
+    # rules 2-4 route the query side HERE (route_query_batch's one
+    # take(cap + 1)) and pass the route explicitly so the plan can report
+    # it: broadcast for point-query batches, the uncapped distributed
+    # joins for corpus-sized query sides.
+    big = exact.route_query_batch(queries, "qid", "vec", "plan_knn", "auto") is None
 
-        route = "distributed" if query_side_is_big(queries) else "broadcast"
+    # rule 2: indexed corpus -> fused IVF scan
+    if index is not None:
+        route = "distributed" if big else "broadcast"
         df = index.search(
             queries, k, n_probe=n_probe, overquery=overquery,
             predicate=predicate, accept_ids=accept_ids, n_probe_fine=n_probe_fine,
@@ -104,7 +105,6 @@ def plan_knn(
             from pyspark.sql import functions as F
 
             c = c.filter(F.col("id").isin(accept_ids))
-    big = exact.query_side_is_big(queries)
     strategy = "blocked" if big else "numpy"
     df = exact.knn_join(c, queries, k, metric=metric, strategy=strategy)
     return SearchPlan(

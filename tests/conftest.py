@@ -1,4 +1,5 @@
 import os
+import uuid
 
 import numpy as np
 import pytest
@@ -47,3 +48,20 @@ def random_vectors(spark, rng):
     ]
     df = spark.createDataFrame(rows, "id long, vec array<float>, class int, attr double")
     return df, mat
+
+
+def count_jobs(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs: ``fn`` runs under a fresh
+    job group and the status tracker counts the group's jobs once the
+    listener bus has delivered every event. ``fn`` must materialize what
+    it builds (``collect()``, ``count()``) — a lazy plan starts no job."""
+    sc = spark.sparkContext
+    group = f"count_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

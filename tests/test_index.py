@@ -10,6 +10,7 @@
 import numpy as np
 import pytest
 
+from conftest import count_jobs
 from jvector_spark.metrics import recall_at_k
 from jvector_spark.operators import exact
 from jvector_spark.operators.index import IVFIndex, IVFIndexBuilder
@@ -463,15 +464,10 @@ def test_search_cursor_incremental_resume(spark, index, queries_df):
             )
             assert got == want and len(got) > 0
 
-        sc = spark.sparkContext
-        tracker = sc.statusTracker()
-        sc.setJobGroup("cursor_page", "slice of retained pool")
-        cur.page(3).collect()
-        jobs_cursor = len(tracker.getJobIdsForGroup("cursor_page"))
-        sc.setJobGroup("fresh_page", "stateless re-search")
-        index.search_page(queries_df, 5, 3, **kw).collect()
-        jobs_fresh = len(tracker.getJobIdsForGroup("fresh_page"))
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs_cursor = count_jobs(spark, lambda: cur.page(3).collect())
+        jobs_fresh = count_jobs(
+            spark, lambda: index.search_page(queries_df, 5, 3, **kw).collect()
+        )
         assert jobs_cursor < jobs_fresh, (jobs_cursor, jobs_fresh)
         assert jobs_cursor <= 2, f"cursor page ran {jobs_cursor} jobs"
 
