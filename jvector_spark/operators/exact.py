@@ -20,7 +20,8 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from typing import Iterator
+import math
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -216,11 +217,10 @@ def knn_join(
         reduced candidate set. Collects + broadcasts the query side, so
         it is the point-query-batch path (queries ≪ corpus by contract);
         query sides over ``BROADCAST_QUERY_CAP`` rows fail loudly.
-      - ``blocked``: fully distributed 2-D blocked BLAS join — NO driver
-        collect of either side; both sides shuffle once into (query-block
-        × corpus-block) tiles scored with one matmul each (the
-        ``dedup.embedding_neardup`` shape). The corpus-as-queries / wide
-        path.
+      - ``blocked``: fully distributed 2-D blocked BLAS join
+        (``tile_join``) — NO driver collect of either side; both sides
+        shuffle once into (query-block × corpus-block) tiles scored with
+        one matmul each. The corpus-as-queries / wide path.
       - ``auto``: ``numpy`` at or below ``BROADCAST_QUERY_CAP`` query
         rows, else ``blocked`` — decided by ``m_hint``, or by the same
         ``take(cap + 1)`` that collects the broadcast side
@@ -382,6 +382,91 @@ _C_TILE = 16384
 _Q_TILE = 2048
 
 
+def flat_blocks(
+    corpus: DataFrame, queries: DataFrame, n_hint: int | None, m_hint: int | None
+) -> dict[int, tuple[int, int]]:
+    """``tile_join`` block counts of an un-indexed blocked join (one
+    partition, ``part_id`` 0): ``ceil(m / _Q_TILE)`` query blocks ×
+    ``ceil(n / _C_TILE)`` corpus blocks. ``n_hint`` / ``m_hint`` replace
+    the sizing ``count()`` of their side (approximate is fine — they only
+    set granularity)."""
+    n = n_hint if n_hint is not None else corpus.count()
+    m = m_hint if m_hint is not None else queries.count()
+    return {0: (max(1, math.ceil(m / _Q_TILE)), max(1, math.ceil(n / _C_TILE)))}
+
+
+def tile_join(
+    c_side: DataFrame,
+    q_side: DataFrame,
+    blocks: dict[int, tuple[int, int]],
+    score_tile: Callable[[tuple, pd.DataFrame, pd.DataFrame], pd.DataFrame],
+) -> DataFrame:
+    """The 2-D blocked tile join behind every uncapped route: the exact
+    blocked k-NN join, the blocked two-phase join and the IVF tile scan
+    (top-k and threshold). No driver collect of either side.
+
+    ``c_side`` / ``q_side``: corpus rows and query rows, each with
+    ``part_id``, ``rid`` and its own payload columns (a column only one
+    side carries is null on the other). ``blocks``: part_id ->
+    (q_blocks, c_blocks). Corpus rows hash into their partition's
+    c-blocks by ``pmod(xxhash64(rid), c_blocks)`` and replicate to each of
+    its q-blocks; query rows do the transpose. Rows of a partition absent
+    from ``blocks`` are dropped. Every (part_id, qb, cb) tile holding rows
+    of both sides is scored by ``score_tile(key, qs, cs)``, which returns
+    (qid, id, score) rows. Shuffle volume is O(corpus·q_blocks +
+    queries·c_blocks) per partition — the standard all-pairs shape (cf.
+    ``dedup.embedding_neardup``) — and no task holds more than ~one tile.
+
+    The block counts ride the plan as constant arrays indexed by
+    ``part_id``, not as a broadcast-joined table: every broadcast join of
+    a local table costs one more Spark job per call.
+
+    One tile ≈ one task: the session default (shuffle.partitions =
+    n_cores) hashes ~10^3 tiles into ~32 shuffle partitions, and the
+    unlucky partition that draws several hot-cluster tiles becomes a
+    straggler AQE cannot split (skew handling only covers joins, not
+    applyInPandas exchanges). The tile count is known on the driver, so
+    the union repartitions by the group key to ~that many partitions;
+    groupBy reuses the hash partitioning — one exchange either way, same
+    shuffle volume, shorter tail."""
+    width = max(blocks, default=-1) + 1
+
+    def n_blocks(side: int) -> Column:
+        counts = [blocks[p][side] if p in blocks else None for p in range(width)]
+        return F.get(F.array(*map(F.lit, counts)).cast("array<int>"), F.col("part_id"))
+
+    qbn, cbn = n_blocks(0), n_blocks(1)
+    c = c_side.select(
+        "*",
+        F.pmod(F.xxhash64("rid"), cbn).cast("int").alias("cb"),
+        F.explode(F.sequence(F.lit(0), qbn - 1)).alias("qb"),
+        F.lit(False).alias("is_q"),
+    )
+    q = q_side.select(
+        "*",
+        F.pmod(F.xxhash64("rid"), qbn).cast("int").alias("qb"),
+        F.explode(F.sequence(F.lit(0), cbn - 1)).alias("cb"),
+        F.lit(True).alias("is_q"),
+    )
+
+    def tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        qs = pdf[pdf["is_q"]]
+        cs = pdf[~pdf["is_q"]]
+        if len(qs) == 0 or len(cs) == 0:
+            return empty_hits()
+        return score_tile(key, qs, cs)
+
+    n_tiles = sum(qb * cb for qb, cb in blocks.values())
+    spark = c_side.sparkSession
+    n_shuffle = int(min(4096, max(spark.sparkContext.defaultParallelism, n_tiles)))
+    return (
+        c.unionByName(q, allowMissingColumns=True)
+        .repartition(n_shuffle, "part_id", "qb", "cb")
+        .groupBy("part_id", "qb", "cb")
+        .applyInPandas(tile, schema="qid long, id long, score double")
+    )
+
+
 def _knn_join_blocked(
     corpus: DataFrame,
     queries: DataFrame,
@@ -394,51 +479,17 @@ def _knn_join_blocked(
     n_hint: int | None = None,
     m_hint: int | None = None,
 ) -> DataFrame:
-    """Fully-distributed exact k-NN join (no driver collect of either side).
-
-    2-D blocking: corpus rows hash into C corpus-blocks and replicate to
-    each of B query-blocks; query rows hash into B query-blocks and
-    replicate to each of C corpus-blocks. Every (qb, cb) tile scores its
-    |queries|/B × |corpus|/C pair with BLAS and emits per-query local
-    top-k; a global window merges the C×k candidates per query. Shuffle
-    volume is O(|corpus|·B + |queries|·C) — the standard all-pairs shape
-    (cf. ``dedup.embedding_neardup``) — for the inherently O(n·m) scoring
-    work, and no single node ever holds a full side.
-
-    Tile counts come from ``n_hint`` / ``m_hint`` when given (approximate
-    is fine — they only set granularity); otherwise one sizing ``count()``
-    per un-hinted side.
-    """
-    import math
-
+    """Fully-distributed exact k-NN join (no driver collect of either side):
+    ``tile_join`` over ``flat_blocks``, every tile scored with BLAS and cut
+    to its per-query local top-k; a global window merges the c_blocks×k
+    candidates per query."""
     from jvector_spark.functions.registry import resolve_kernel
 
-    kernel = resolve_kernel(metric)  # driver-side: X1 registry lives here
-    n = n_hint if n_hint is not None else corpus.count()
-    m = m_hint if m_hint is not None else queries.count()
-    c_blocks = max(1, math.ceil(n / _C_TILE))
-    q_blocks = max(1, math.ceil(m / _Q_TILE))
+    # driver-side: the X1 registry lives here, and `kernel` rides the
+    # scorer's closure (registry functions do not pickle through a broadcast)
+    kernel = resolve_kernel(metric)
 
-    cb_of = F.pmod(F.xxhash64(F.col("id")), F.lit(c_blocks)).cast("int")
-    qb_of = F.pmod(F.xxhash64(F.col("qid")), F.lit(q_blocks)).cast("int")
-    c_side = (
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .withColumn("cb", cb_of)
-        .withColumn("qb", F.explode(F.array(*[F.lit(i) for i in range(q_blocks)])))
-        .select("qb", "cb", F.col("id").alias("rid"), "v", F.lit(0).alias("is_q"))
-    )
-    q_side = (
-        queries.select(F.col(query_id_col).alias("qid"), F.col(query_vec_col).alias("v"))
-        .withColumn("qb", qb_of)
-        .withColumn("cb", F.explode(F.array(*[F.lit(i) for i in range(c_blocks)])))
-        .select("qb", "cb", F.col("qid").alias("rid"), "v", F.lit(1).alias("is_q"))
-    )
-
-    def score_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qs = pdf[pdf["is_q"] == 1]
-        cs = pdf[pdf["is_q"] == 0]
-        if len(qs) == 0 or len(cs) == 0:
-            return empty_hits()
+    def score_tile(key, qs: pd.DataFrame, cs: pd.DataFrame) -> pd.DataFrame:
         cids = cs["rid"].to_numpy(dtype=np.int64)
         qids = qs["rid"].to_numpy(dtype=np.int64)
         cmat = kernels.as_matrix(cs["v"])
@@ -461,7 +512,15 @@ def _knn_join_blocked(
             )
         return pd.concat(out, ignore_index=True)
 
-    candidates = c_side.unionByName(q_side).groupBy("qb", "cb").applyInPandas(
-        score_tile, schema="qid long, id long, score double"
+    def side(df: DataFrame, rid: str, vec: str) -> DataFrame:
+        return df.select(
+            F.lit(0).alias("part_id"), F.col(rid).alias("rid"), F.col(vec).alias("v")
+        )
+
+    candidates = tile_join(
+        side(corpus, id_col, vec_col),
+        side(queries, query_id_col, query_vec_col),
+        flat_blocks(corpus, queries, n_hint, m_hint),
+        score_tile,
     )
     return _rank_topk(candidates, k)

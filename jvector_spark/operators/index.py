@@ -65,6 +65,7 @@ from jvector_spark.operators.exact import (
     empty_hits,
     empty_ranked,
     route_query_batch,
+    tile_join,
 )
 from jvector_spark.operators.quantize.pq import ProductQuantizer
 from jvector_spark.types import MANIFEST_VERSION, IndexManifest, SegmentInfo
@@ -428,10 +429,10 @@ def _fused_block_topk(
     graph.py refill note). The IVF fine-cell route keeps refill — its
     cells are a recall lever, not a visited-set contract.
 
-    Four routes score through this kernel, so they score identically:
-    the IVF broadcast scan (``IVFIndex._segment_fused_scan``), the IVF
-    tile join and the index-less two-phase tile (both via
-    ``_tile_topk``), and graph-traversal rerank
+    Three scorers run this kernel, so every route scores identically:
+    the IVF broadcast scan (``IVFIndex._segment_fused_scan``), the tile
+    scorer ``_tile_topk`` (the IVF tile scan and the blocked two-phase
+    join, both on ``exact.tile_join``), and graph-traversal rerank
     (``graph._traverse_rerank``). Returns (qid, id, score) arrays.
 
     ``counters``: (visited_acc, reranked_acc) or (visited_acc,
@@ -580,8 +581,9 @@ def _tile_topk(
 ) -> pd.DataFrame:
     """Fused two-phase top-k of one tile-join tile: query rows ``qs``
     (rid, vec[, subs]) against corpus rows ``cs`` (rid, codes, then vec
-    or nvq/nvq_params[, rsq][, sub_id]), both non-empty. The IVF tile join
-    and the index-less two-phase tile both score through here.
+    or nvq/nvq_params[, rsq][, sub_id]), both non-empty: the top-k scorer
+    of every ``exact.tile_join`` caller that reads codes — the IVF tile
+    scan and the blocked two-phase join.
 
     ``res_cent``: residual-PQ mode's coarse centroid for this tile (one
     coarse cell per IVF tile — part_id is the leading group key — so the
@@ -2201,9 +2203,9 @@ class IVFIndex:
         - ``distributed``: NO driver collect of either side. Probe
           assignment runs as a map-only pass over the query DataFrame
           (centroids broadcast), queries shuffle to their probed
-          ``part_id``s, and a 2-D blocked tile join (the
-          ``exact._knn_join_blocked`` shape keyed by (part_id, qb, cb))
-          runs the same fused ADC→rerank scoring per tile. The
+          ``part_id``s, and the shared blocked tile join
+          (``exact.tile_join``, keyed by (part_id, qb, cb)) runs the same
+          fused ADC→rerank scoring per tile. The
           corpus-as-queries path: bulk embedding joins, semantic dedup.
         - ``auto``: ``broadcast`` at or below ``BROADCAST_QUERY_CAP`` query
           rows, else ``distributed`` — decided by ``m_hint``, or by the
@@ -2596,14 +2598,24 @@ class IVFIndex:
         telemetry=None,
         probe_ratio: float | None = None,
         npf_per_probe: bool = False,
+        threshold: float | None = None,
     ) -> DataFrame:
-        """Uncapped k-NN search: neither side is ever driver-collected.
+        """Uncapped k-NN or threshold search: neither side is ever
+        driver-collected.
 
         Per segment: distributed probe assignment, then a (part_id, qb, cb)
         tile join running the same fused two-phase scoring as the broadcast
         scan. Per-tile rerank_k can only ADD candidates relative to a
         global rerank_k, so recall at a given overquery is >= the
         broadcast path's (same argument as the Arrow-batch-local rerank).
+
+        ``threshold`` set: threshold mode. Assignment is bound-pruned
+        (``_threshold_probes``), survivors are scored exactly at fp32
+        (``_threshold_hits``), so results remain EXACT — pruning only ever
+        saves IO — and segments merge with ``_merge_threshold``. The
+        assignment distribution is bound-dependent (not knowable a
+        priori), so the caller passes no ``m_hint`` or ``n_probe_fine``:
+        the assignment is always persisted and counted.
 
         Tile sizing never re-runs the query lineage: the assignment output
         is persisted (columnar compressed, disk-spilling — see
@@ -2642,8 +2654,9 @@ class IVFIndex:
                 or int(m_hint) * int(fine_npf) < 4 * len(info["fine"])
             )
             assigned = self._assign_probes(
-                queries_df, info, n_probe, qid_col, qvec_col, fine_npf=fine_npf,
-                probe_ratio=probe_ratio, npf_per_probe=npf_per_probe,
+                queries_df, info, n_probe, qid_col, qvec_col, metric=metric,
+                threshold=threshold, fine_npf=fine_npf, probe_ratio=probe_ratio,
+                npf_per_probe=npf_per_probe,
             )
             if m_hint is None or derive_subfilter:
                 assigned = _persist_assignment(assigned)
@@ -2688,11 +2701,13 @@ class IVFIndex:
             parts.append(
                 self._segment_tile_scan(
                     info, assigned, metric, k, rerank_k, rows_p, assign_p,
-                    predicate, accept_df, use_nvq, None, sub_filter=sub_filter,
+                    predicate, accept_df, use_nvq, threshold, sub_filter=sub_filter,
                     n_fine=(len(info["fine"]) if fine_npf else None),
                     telemetry=telemetry,
                 )
             )
+        if threshold is not None:
+            return _merge_threshold(parts, self.manifest.spill)
         return _merge_topk(parts, k, self.manifest.spill)
 
     def _segment_tile_scan(
@@ -2712,20 +2727,15 @@ class IVFIndex:
         n_fine: int | None = None,
         telemetry=None,
     ) -> DataFrame:
-        """2-D blocked tile join between probe assignments and the probed
-        scan — ``exact._knn_join_blocked``'s shape with ``part_id`` as an
-        extra key. Block counts are PER PARTITION, sized from the observed
-        per-partition stored rows (``rows_p``) and assignment counts
-        (``assign_p``: part_id -> count): corpus rows hash into
-        their partition's ``cbn`` blocks and replicate across its ``qbn``;
-        assignments do the transpose; each (part_id, qb, cb) tile scores
-        its pair with the fused ADC->rerank kernel (threshold mode: exact
-        fp32 scores + filter). Shuffle volume is O(stored·qbn +
-        assignments·cbn) per partition; no task holds more than ~one
-        bounded tile — including on zipf-skewed corpora, where
-        uniform-average sizing handed the hot partition tiles proportional
-        to its skew (r6 straggler fix). The per-partition counts ride a
-        broadcast join of a <= n_partitions-row driver table.
+        """``exact.tile_join`` between probe assignments and the probed
+        scan, keyed by the coarse ``part_id``. Block counts are PER
+        PARTITION, sized from the observed per-partition stored rows
+        (``rows_p``) and assignment counts (``assign_p``: part_id ->
+        count); each (part_id, qb, cb) tile scores its pair with the fused
+        ADC->rerank kernel (threshold mode: exact fp32 scores + filter).
+        No task holds more than ~one bounded tile — including on
+        zipf-skewed corpora, where uniform-average sizing handed the hot
+        partition tiles proportional to its skew (r6 straggler fix).
 
         ``sub_filter`` (two-level index): the probed fine-sub union as a
         STATIC pushed ``sub_id IN (...)`` filter — parquet row-group
@@ -2766,57 +2776,24 @@ class IVFIndex:
             data = data.join(accept_df, "id", "semi")  # F1 accept list
 
         res_mode = bool(info.get("residual"))
-        extra = []
         if threshold is None:
-            extra.append("codes")
-            if use_nvq:
-                extra += ["nvq", "nvq_params"]
-            if res_mode:
-                extra.append("rsq")  # reconstructed ‖c+r̂‖² for residual ADC
-        if n_fine:
-            extra.append("sub_id")  # rows' fine cell, for per-query masking
-        null_of = {
-            "codes": "binary", "nvq": "binary", "nvq_params": "array<double>",
-            "sub_id": "int", "rsq": "float",
-        }
-        vec_type = (
-            "binary" if self.manifest.vec_format == "packed_f32" else "array<float>"
-        )
-        c_base = data.select(
-            "part_id",
-            F.col("id").alias("rid"),
             # NVQ rerank never reads the fp32 column (parquet prunes it)
-            (F.lit(None).cast(vec_type) if use_nvq and threshold is None else F.col("vec")).alias("vec"),
-            *[F.col(c) for c in extra],
-            # query-side-only column: the query's probed fine-sub set
-            *([F.lit(None).cast("array<int>").alias("subs")] if n_fine else []),
+            cols = ["codes", *_rerank_cols(use_nvq)]
+            if res_mode:
+                cols.append("rsq")  # reconstructed ‖c+r̂‖² for residual ADC
+        else:
+            cols = ["vec"]
+        if n_fine:
+            cols.append("sub_id")  # rows' fine cell, for per-query masking
+        c_side = data.select("part_id", F.col("id").alias("rid"), *cols)
+        # query side: the query's vec and, on a two-level index, its probed
+        # fine-sub set
+        q_side = assigned.select(
+            "part_id", F.col("qid").alias("rid"), "vec", *(["subs"] if n_fine else [])
         )
-        all_parts = sorted(set(cb_of) | set(qb_of))
-        blocks_df = self.spark.createDataFrame(
-            [(int(p), int(qb_of.get(p, 1)), int(cb_of.get(p, 1))) for p in all_parts],
-            "part_id int, qbn int, cbn int",
-        )
-        c_side = (
-            c_base.join(F.broadcast(blocks_df), "part_id")
-            .withColumn("cb", F.pmod(F.xxhash64("rid"), F.col("cbn")).cast("int"))
-            .withColumn("qb", F.explode(F.sequence(F.lit(0), F.col("qbn") - 1)))
-            .drop("qbn", "cbn")
-            .withColumn("is_q", F.lit(0))
-        )
-        q_base = assigned.select(
-            "part_id",
-            F.col("qid").alias("rid"),
-            "vec",
-            *[F.lit(None).cast(null_of[c]).alias(c) for c in extra],
-            *(["subs"] if n_fine else []),
-        )
-        q_side = (
-            q_base.join(F.broadcast(blocks_df), "part_id")
-            .withColumn("qb", F.pmod(F.xxhash64("rid"), F.col("qbn")).cast("int"))
-            .withColumn("cb", F.explode(F.sequence(F.lit(0), F.col("cbn") - 1)))
-            .drop("qbn", "cbn")
-            .withColumn("is_q", F.lit(1))
-        )
+        blocks = {
+            p: (qb_of.get(p, 1), cb_of.get(p, 1)) for p in set(cb_of) | set(qb_of)
+        }
 
         bt = self.spark.sparkContext.broadcast(
             (info["pq"], metric, k, rerank_k, threshold,
@@ -2825,12 +2802,8 @@ class IVFIndex:
         )
         tel_acc = telemetry.counters() if telemetry is not None else None
 
-        def tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def score_tile(key, qs: pd.DataFrame, cs: pd.DataFrame) -> pd.DataFrame:
             codec, met, kk, keep, thr, nvq_c, n_fine_, res_cents = bt.value
-            qs = pdf[pdf["is_q"] == 1]
-            cs = pdf[pdf["is_q"] == 0]
-            if len(qs) == 0 or len(cs) == 0:
-                return empty_hits()
             if thr is None:
                 return _tile_topk(
                     qs, cs, codec, met, kk, keep, nvq_c,
@@ -2845,59 +2818,7 @@ class IVFIndex:
                 cs["rid"].to_numpy(dtype=np.int64), kernels.as_matrix(cs["vec"]),
             )
 
-        # One tile ≈ one task: the session default (shuffle.partitions =
-        # n_cores) hashes ~10^3 tiles into ~32 shuffle partitions, and the
-        # unlucky partition that draws several hot-cluster tiles becomes a
-        # straggler AQE cannot split (skew handling only covers joins, not
-        # applyInPandas exchanges). The tile count is known on the driver
-        # (per-partition block tables), so repartition by the group key to
-        # ~that many partitions; groupBy reuses the hash partitioning —
-        # one exchange either way, same shuffle volume, shorter tail.
-        n_tiles = sum(
-            qb_of.get(p, 1) * cb_of.get(p, 1) for p in all_parts
-        )
-        n_shuffle = int(min(4096, max(self.spark.sparkContext.defaultParallelism, n_tiles)))
-        return (
-            c_side.unionByName(q_side)
-            .repartition(n_shuffle, "part_id", "qb", "cb")
-            .groupBy("part_id", "qb", "cb")
-            .applyInPandas(tile, schema="qid long, id long, score double")
-        )
-
-    def _threshold_distributed(
-        self,
-        queries_df: DataFrame,
-        metric: str,
-        threshold: float,
-        qid_col: str,
-        qvec_col: str,
-    ) -> DataFrame:
-        """Uncapped threshold search: bound-pruned probe assignment runs
-        distributed; survivors are scored exactly at fp32 in the tile join,
-        so results remain EXACT (pruning only ever saves IO)."""
-        parts = []
-        for seg in self.manifest.segments:
-            info = self._segments[seg.name]
-            assigned = self._assign_probes(
-                queries_df, info, 0, qid_col, qvec_col,
-                metric=metric, threshold=threshold,
-            )
-            assigned = _persist_assignment(assigned)
-            # The assignment distribution is bound-dependent (not knowable
-            # a priori), so ONE pass materializes the checkpoint and sizes
-            # the tiles per partition; the tile join reads the checkpoint —
-            # the query lineage is never evaluated twice.
-            assign_p = {
-                int(r["part_id"]): int(r["count"])
-                for r in assigned.groupBy("part_id").count().collect()
-            }
-            parts.append(
-                self._segment_tile_scan(
-                    info, assigned, metric, 0, 0, self._part_counts(seg.name),
-                    assign_p, None, None, False, threshold,
-                )
-            )
-        return _merge_threshold(parts, self.manifest.spill)
+        return tile_join(c_side, q_side, blocks, score_tile)
 
     def threshold_search(
         self,
@@ -2943,8 +2864,10 @@ class IVFIndex:
             strategy, m_hint=m_hint,
         )
         if batch is None:
-            return self._threshold_distributed(
-                queries_df, metric, threshold, query_id_col, query_vec_col
+            return self._search_distributed(
+                queries_df, metric, 0, 0, 0, query_id_col, query_vec_col,
+                predicate=None, accept_df=None, rerank="fp32", m_hint=None,
+                threshold=threshold,
             )
         qids, qmat = batch
         if not len(qids):
@@ -3241,14 +3164,19 @@ class IVFIndex:
         stored = 0
         for seg in self.manifest.segments:
             info = self._segments[seg.name]
+            fine = bool(n_probe_fine) and info.get("fine") is not None
+            if fine:
+                cellmap = self._cell_counts(seg.name)
+                stored += sum(int(c.sum()) for _, c in cellmap.values())
+            else:
+                rows = self._part_counts(seg.name)
+                stored += int(rows.sum())
+            if not nq:
+                continue  # empty query side: no probes to model
             probe, keep = _select_probes(info, qmat, n_probe, probe_ratio)
-            if n_probe_fine and info.get("fine") is not None:
+            if fine:
                 fine_c = info["fine"]
                 npf = min(int(n_probe_fine), len(fine_c))
-                cellmap = self._cell_counts(seg.name)
-                stored += sum(
-                    int(c.sum()) for _, c in cellmap.values()
-                )
                 # same hierarchical selection as the search routes, so the
                 # IO model predicts what the search actually scans
                 subs_list = _hier_fine_subs(
@@ -3268,14 +3196,13 @@ class IVFIndex:
                         v += int(cnts_p[np.isin(subs_p, subs_q)].sum())
                     visited[q] += v
             else:
-                rows = self._part_counts(seg.name)
-                stored += int(rows.sum())
                 visited += np.where(keep, rows[probe], 0).sum(axis=1)
+        mean_visited = float(visited.mean()) if nq else 0.0
         return {
             "n_queries": nq,
             "stored_rows": stored,
-            "mean_visited_rows": float(visited.mean()),
-            "visited_fraction": float(visited.mean() / max(stored, 1)),
+            "mean_visited_rows": mean_visited,
+            "visited_fraction": mean_visited / max(stored, 1),
         }
 
     def build_graph(self, **kw) -> None:

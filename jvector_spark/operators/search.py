@@ -277,13 +277,14 @@ def two_phase_knn_join(
     NVQScorer.java): ~4x fewer bytes read in stage 2 for near-fp32 scores.
 
     ``strategy``: ``broadcast`` collects + broadcasts the query side
-    (point-query-batch path, capped); ``blocked`` runs the 2-D tile join —
-    no driver collect of either side, ADC stage 1 and rerank fused per
-    tile (the un-indexed sibling of ``IVFIndex.search(strategy=
-    "distributed")`` — every tile scans every corpus block, since there is
-    no partitioning to prune); ``auto`` routes on query-side size
-    (``m_hint``, or the same ``take(cap + 1)`` that collects the
-    broadcast side). ``m_hint``/``n_hint`` skip the sizing jobs.
+    (point-query-batch path, capped); ``blocked`` runs
+    ``exact.tile_join`` — no driver collect of either side, ADC stage 1
+    and rerank fused per tile by the IVF tile scorer (the un-indexed
+    sibling of ``IVFIndex.search(strategy="distributed")``: one partition,
+    so every tile scans every corpus block); ``auto`` routes on
+    query-side size (``m_hint``, or the same ``take(cap + 1)`` that
+    collects the broadcast side). ``m_hint``/``n_hint`` skip the sizing
+    jobs.
     """
     from jvector_spark.operators.exact import _rank_topk, empty_ranked, route_query_batch
 
@@ -379,97 +380,40 @@ def _two_phase_blocked(
     n_hint: int | None,
 ) -> DataFrame:
     """Uncapped two-phase join: codes + rerank payload co-locate on id
-    (one equi-join shuffle), then the 2-D (qb, cb) tile join runs the same
-    fused ADC->rerank kernel as the IVF scan — per-tile rerank_k can only
-    ADD candidates vs a global cut, so recall at a given overquery is >=
-    the broadcast route's."""
-    import math
-
-    from jvector_spark.operators.exact import _C_TILE, _Q_TILE, _rank_topk, empty_hits
+    (one equi-join shuffle), then ``exact.tile_join`` scores every tile
+    with the IVF tile scan's fused ADC->rerank kernel (``_tile_topk``) —
+    per-tile rerank_k can only ADD candidates vs a global cut, so recall
+    at a given overquery is >= the broadcast route's."""
+    from jvector_spark.operators.exact import _rank_topk, flat_blocks, tile_join
     from jvector_spark.operators.index import _tile_topk
 
-    spark = codes_df.sparkSession
-    n = n_hint if n_hint is not None else codes_df.count()
-    m = m_hint if m_hint is not None else queries_df.count()
-    c_blocks = max(1, math.ceil(n / _C_TILE))
-    q_blocks = max(1, math.ceil(m / _Q_TILE))
-
-    use_nvq = nvq is not None
-    if use_nvq:
+    if nvq is None:
+        nvq_codec = None
+        payload = vectors_df.select(F.col(id_col).alias("rid"), F.col(vec_col).alias("vec"))
+    else:
         nvq_df, nvq_codec = nvq
         payload = nvq_df.select(
-            F.col(id_col).alias("rid"), F.col("nvq_bytes").alias("nvq"),
-            "nvq_params",
+            F.col(id_col).alias("rid"), F.col("nvq_bytes").alias("nvq"), "nvq_params"
         )
-        extra = ["nvq", "nvq_params"]
-        null_of = {"nvq": "binary", "nvq_params": "array<double>"}
-        vec_expr = F.lit(None).cast("array<float>").alias("vec")
-    else:
-        nvq_codec = None
-        payload = vectors_df.select(
-            F.col(id_col).alias("rid"), F.col(vec_col).alias("_v")
-        )
-        extra = []
-        null_of = {}
-        vec_expr = F.col("_v").alias("vec")
-    c_base = (
+    c_side = (
         codes_df.select(F.col(id_col).alias("rid"), F.col(codes_col).alias("codes"))
         .join(payload, "rid")
-        .select("rid", vec_expr, "codes", *[F.col(c) for c in extra])
+        .withColumn("part_id", F.lit(0))
     )
-    c_side = (
-        c_base.withColumn("cb", F.pmod(F.xxhash64("rid"), F.lit(c_blocks)).cast("int"))
-        .withColumn("qb", F.explode(F.array(*[F.lit(i) for i in range(q_blocks)])))
-        .withColumn("is_q", F.lit(0))
+    q_side = queries_df.select(
+        F.lit(0).alias("part_id"),
+        F.col(query_id_col).alias("rid"),
+        F.col(query_vec_col).cast("array<float>").alias("vec"),
     )
-    q_side = (
-        queries_df.select(
-            F.col(query_id_col).alias("rid"),
-            F.col(query_vec_col).cast("array<float>").alias("vec"),
-            F.lit(None).cast("binary").alias("codes"),
-            *[F.lit(None).cast(null_of[c]).alias(c) for c in extra],
-        )
-        .withColumn("qb", F.pmod(F.xxhash64("rid"), F.lit(q_blocks)).cast("int"))
-        .withColumn("cb", F.explode(F.array(*[F.lit(i) for i in range(c_blocks)])))
-        .withColumn("is_q", F.lit(1))
-    )
+    bt = codes_df.sparkSession.sparkContext.broadcast((pq, metric, k, rerank_k, nvq_codec))
 
-    bt = spark.sparkContext.broadcast((pq, metric, k, rerank_k, nvq_codec))
+    def score_tile(key, qs: pd.DataFrame, cs: pd.DataFrame) -> pd.DataFrame:
+        return _tile_topk(qs, cs, *bt.value)
 
-    def tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pq_o, met, kk, keep, nvq_c = bt.value
-        qs = pdf[pdf["is_q"] == 1]
-        cs = pdf[pdf["is_q"] == 0]
-        if len(qs) == 0 or len(cs) == 0:
-            return empty_hits()
-        return _tile_topk(qs, cs, pq_o, met, kk, keep, nvq_c)
-
-    tiled = (
-        c_side.unionByName(q_side)
-        .groupBy("qb", "cb")
-        .applyInPandas(tile, schema="qid long, id long, score double")
+    tiled = tile_join(
+        c_side, q_side, flat_blocks(codes_df, queries_df, n_hint, m_hint), score_tile
     )
     return _rank_topk(tiled, k)
-
-
-def two_phase_topk(
-    codes_df: DataFrame,
-    vectors_df: DataFrame,
-    pq: ProductQuantizer,
-    query_vec,
-    k: int,
-    metric: str = "COSINE",
-    overquery: float = 4.0,
-    **kw,
-) -> DataFrame:
-    """Point-query variant of :func:`two_phase_knn_join` (single query)."""
-    spark = codes_df.sparkSession
-    qdf = spark.createDataFrame(
-        [(0, [float(x) for x in query_vec])], "qid long, vec array<float>"
-    )
-    return two_phase_knn_join(
-        codes_df, vectors_df, pq, qdf, k, metric, overquery, **kw
-    ).drop("qid")
 
 
 def underfilled_queries(result: DataFrame, k: int, qid_col: str = "qid") -> DataFrame:

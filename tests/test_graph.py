@@ -501,7 +501,8 @@ def test_graph_bulk_auto_routes_to_tile_on_small_partitions(spark, graph_index):
     assert not _bulk_traversal_pays(idx, ef=40)
     queries = corpus.filter(F.col("id") < 24).selectExpr("id as qid", "vec")
     res = idx.search_graph(
-        queries, k=5, n_probe=8, ef_search=40, m_hint=10_000_000
+        queries, k=5, n_probe=8, ef_search=40,
+        m_hint=exact.BROADCAST_QUERY_CAP + 1,
     )
     rows = res.collect()
     assert {r["qid"] for r in rows} == set(range(24))

@@ -107,6 +107,19 @@ def test_empty_query_side_returns_empty_result(spark, setup, op):
         assert got.collect() == [], kw
 
 
+def test_probe_io_stats_empty_query_side(spark, setup):
+    """The IO model of zero queries is zero visited rows over the usual
+    stored-row count (the probe math used to fail on the (0, 0) batch)."""
+    corpus, idx, pq, codes, queries = setup
+    stored = idx.probe_io_stats(queries, n_probe=4)["stored_rows"]
+    assert idx.probe_io_stats(queries.limit(0), n_probe=4) == {
+        "n_queries": 0,
+        "stored_rows": stored,
+        "mean_visited_rows": 0.0,
+        "visited_fraction": 0.0,
+    }
+
+
 @pytest.mark.parametrize("op", ["ivf_search", "threshold_search", "search_graph", "rp_lsh"])
 def test_auto_over_cap_matches_distributed(spark, setup, monkeypatch, op):
     """Above a (patched) cap and without ``m_hint``, auto takes the
@@ -147,9 +160,10 @@ def test_auto_route_costs_no_extra_jobs(spark, setup, op):
 
 
 def test_job_budgets(spark, setup):
-    """Absolute Spark-job budgets for a small build, a point IVF search
-    and a threshold search (the per-call fixed cost the engine pays
-    whatever the data size)."""
+    """Absolute Spark-job budgets for a small build, a point IVF search,
+    a threshold search and the three blocked routes (the per-call fixed
+    cost the engine pays whatever the data size). The blocked budgets
+    catch a plan that broadcast-joins a local table: that costs a job."""
     corpus, idx, pq, codes, queries = setup
     jobs = {
         "build": count_jobs(
@@ -164,5 +178,23 @@ def test_job_budgets(spark, setup):
         "threshold": count_jobs(
             spark, lambda: idx.threshold_search(queries, T).collect()
         ),
+        "knn_join_blocked": count_jobs(
+            spark,
+            lambda: exact.knn_join(
+                corpus, queries, K, strategy="blocked", n_hint=N, m_hint=M
+            ).collect(),
+        ),
+        "search_distributed": count_jobs(
+            spark,
+            lambda: idx.search(queries, K, n_probe=4, strategy="distributed").collect(),
+        ),
+        "threshold_distributed": count_jobs(
+            spark,
+            lambda: idx.threshold_search(queries, T, strategy="distributed").collect(),
+        ),
     }
-    assert jobs["build"] <= 7 and jobs["search"] <= 5 and jobs["threshold"] <= 3, jobs
+    budget = {
+        "build": 7, "search": 5, "threshold": 3, "knn_join_blocked": 5,
+        "search_distributed": 9, "threshold_distributed": 7,
+    }
+    assert all(jobs[op] <= budget[op] for op in budget), jobs
