@@ -449,7 +449,7 @@ def tile_join(
         F.lit(True).alias("is_q"),
     )
 
-    def tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         qs = pdf[pdf["is_q"]]
         cs = pdf[~pdf["is_q"]]
         if len(qs) == 0 or len(cs) == 0:

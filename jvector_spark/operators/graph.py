@@ -45,9 +45,11 @@ rebuilds its graph at compaction the same way
 Search (``GraphSearcher.java:222-507`` beam semantics, batched): queries
 probe their ``n_probe`` nearest centroids exactly like IVF search (the
 hierarchical-descent analog), then a ZERO-CORPUS-SHUFFLE pass over the
-probed partitions (each task direct-reads its partition's data/edges
-dirs) runs a vectorized multi-query best-first beam search per partition — ADC/hamming approximate scores steer the traversal (the
-reference's compressed-first-pass search), and the surviving beam reranks
+probed partitions (query replicas are grouped by partition; each group
+task direct-reads its partition's data/edges dirs) runs a vectorized
+multi-query best-first beam search per partition — ADC/hamming
+approximate scores steer the traversal (the reference's
+compressed-first-pass search), and the surviving beam reranks
 through the same fused exact-scoring kernel every other route uses, so
 reported scores carry identical semantics (fp32-exact or dequantized-NVQ).
 Tombstoned rows are traversed but filtered from RESULTS (the reference's
@@ -392,10 +394,11 @@ def _exact_sims_block(
     Deliberately ``einsum`` and NOT a BLAS ``q @ c.T``: einsum's default
     (non-optimized) path reduces each (b, p) pair over d in a fixed
     order, BIT-IDENTICAL to the gathered hop kernel — so a row scored at
-    seed time equals the same row scored at hop time, and the broadcast /
-    distributed routes (which chunk queries differently) stay
-    bit-for-bit equal. A BLAS GEMM's reduction order depends on the
-    batch shape (measured: last-ULP drift -> route-parity test failure)."""
+    seed time equals the same row scored at hop time, and a query's rows
+    do not depend on which queries share its group or chunk (the
+    broadcast and distributed strategies group the same queries
+    differently). A BLAS GEMM's reduction order depends on the batch
+    shape (measured: last-ULP drift -> route-parity test failure)."""
     dots = np.einsum("bd,pd->bp", q, c)
     if met == "DOT_PRODUCT":
         return ((1.0 + dots) / 2.0).astype(np.float32)
@@ -1159,8 +1162,8 @@ def _traverse_rerank(
     the GIVEN (already selected) queries. ``s1_sel`` is the codec's
     ``query_stage1`` payload for exactly these queries (aligned with
     ``q_ids``), or None for exact steering; ``qc_vec`` is the per-query
-    q.centroid dot for residual decomposition. Shared by the broadcast
-    and distributed routes — identical scoring on both."""
+    q.centroid dot for residual decomposition. The per-group core of the
+    one search plan (``_traverse_probed_partitions``)."""
     from jvector_spark.operators.index import (
         _fused_block_topk,
         _rerank_rows,
@@ -1291,45 +1294,39 @@ def graph_search(
 ) -> DataFrame:
     """Graph-traversal ANN over the index's per-partition Vamana graphs.
 
-    Two physical strategies, same scoring (the shared traversal/rerank
-    core runs on both — fp32-exact or dequantized-NVQ reported scores):
+    One physical plan serves every traversal, whatever the batch
+    (``_traverse_probed_partitions``; jvector's one ``GraphSearcher``):
+    probe assignment runs as a map-only pass over the query rows (the
+    same ``_assign_probes`` the fused tile route uses), query replicas
+    shuffle to their probed part_ids (Q x n_probe rows — the ONLY
+    exchange; salted by qid hash on coarse layouts so a few partitions
+    still fill the cores), and each group task pyarrow-reads ITS
+    partition's data/edges dirs and runs the shared traversal/rerank
+    core (fp32-exact or dequantized-NVQ reported scores). Corpus bytes
+    never move, so the exchange is sized by the query side alone.
+
+    ``strategy`` only decides where the plan's query rows come from:
 
     - ``broadcast`` (point-query batches, <= BROADCAST_QUERY_CAP rows):
-      queries are collected + broadcast with driver-precomputed stage-1
-      payloads; the task list is the probed part_ids and each task
-      pyarrow-reads ITS partition's data/edges dirs directly — ZERO
-      corpus shuffle.
-    - ``distributed`` (bulk / corpus-as-queries): NO driver collect —
-      probe assignment runs as a map-only pass over the query DataFrame
-      (the same ``_assign_probes`` the fused tile route uses), query
-      replicas shuffle to their probed part_ids (Q x n_probe rows — the
-      ONLY exchange), and each (partition, query-group) task direct-reads
-      its partition and runs the same traversal core, building per-chunk
-      ADC LUTs in-task. Compare the fused TILE route, which re-shuffles
-      corpus code blocks once per query block: the graph bulk route moves
-      no corpus bytes at all, so its exchange cost is independent of
-      corpus size. Measured honestly (1M x 64-d, 2000-row partitions,
-      local[32] loopback): the tile route's pure GEMMs win THIS shape
-      (~110-390 s vs 1153 s) — per-query traversal only pays off in bulk
-      when partitions are large and/or corpus blocks would cross a real
-      network; point-query batches and recall-per-IO are where the graph
-      route wins today (see the 1M probe numbers). The 4M-replica
-      exchange also wants a driver heap sized to the query side
-      (JVS_DRIVER_MEMORY=48g ran 1M clean; 16g crashed workers —
-      mitigated r8: only top-k rows per partition are emitted when no
-      tombstones exist, 4x fewer rows through the final window at
-      default overquery, provably identical results).
+      ``route_query_batch``'s one ``take(cap + 1)`` collects the batch,
+      which feeds the plan as a local frame — the caller's query lineage
+      is evaluated once. More rows than the cap raise.
+    - ``distributed`` (bulk / corpus-as-queries): the caller's DataFrame
+      feeds the plan directly, with no driver collect.
     - ``auto``: broadcast at or below the cap (``m_hint``, or the same
-      ``take(cap + 1)`` that collects the broadcast side); above it,
-      route on partition-size vs beam-visit arithmetic
-      (``_bulk_traversal_pays``):
-      distributed traversal when partitions dwarf the beam's visit
-      estimate, else the FUSED TILE SCAN (``IVFIndex.search`` with a
-      matched rerank pool, overquery = ef/k) — same exact/NVQ rerank
-      kernels and score space, recall >= the beam's (it scans whole
-      probed partitions instead of approximating within them), and
-      3-10x faster at the small-partition bulk shape (r7 measurement).
-      Pass an explicit strategy to force the traversal mechanism.
+      take); above it, route on partition-size vs beam-visit arithmetic
+      (``_bulk_traversal_pays``): the traversal plan when partitions
+      dwarf the beam's visit estimate, else the FUSED TILE SCAN
+      (``IVFIndex.search`` with a matched rerank pool, overquery = ef/k)
+      — same exact/NVQ rerank kernels and score space, recall >= the
+      beam's (it scans whole probed partitions instead of approximating
+      within them), and 3-10x faster at the small-partition bulk shape
+      (r7, 1M x 64-d, 2000-row partitions, local[32]: tile ~110-390 s vs
+      traversal 1153 s). Pass an explicit strategy to force traversal.
+
+    Query vectors ride the plan in the index's f32 layout (the
+    ``_assign_probes`` schema), so ``array<double>`` queries are scored
+    as their f32 roundings on every route.
 
     Tombstoned rows are traversed but filtered from results (two-phase
     delete semantics); ``compact()`` removes them AND rebuilds the merged
@@ -1354,7 +1351,7 @@ def graph_search(
     sequential hop count W-fold for a small recall give-back (measured
     d=1024/ef640: wall 17.9 -> 9.9 s, recall 0.789 -> 0.754 at W=20).
     Default ``max(1, ef_search // 64)``."""
-    from jvector_spark.operators.index import _merge_topk, _rerank_cols
+    from jvector_spark.operators.index import _merge_topk
 
     manifest = index.manifest
     met = manifest.metric
@@ -1416,9 +1413,6 @@ def graph_search(
             telemetry=telemetry,
         )
     tel_acc = telemetry.counters() if telemetry is not None else None
-    # hive part_id lives in the dir name
-    data_cols = ["id", "codes", *_rerank_cols(use_nvq)]
-
     t = index.tombstones()
     # Per-partition EMITTED rows: the global top-k over the union of
     # per-partition results is provably contained in each partition's own
@@ -1431,19 +1425,22 @@ def graph_search(
     # on the 1M corpus-as-queries shape).
     emit_k = k_ret if t is not None else min(k, k_ret)
 
-    if batch is None:
-        parts = _graph_search_distributed(
-            index, queries_df, met, emit_k, ef, n_probe,
-            query_id_col, query_vec_col, probe_ratio, beam_width,
-            use_nvq, data_cols, tel_acc, steer_exact=steer == "exact",
+    if batch is not None:
+        qids, qmat = batch
+        if not len(qids):
+            return empty_ranked(index.spark)
+        # the collected batch feeds the plan as a local frame, so the
+        # caller's query lineage is evaluated once (by the routing take)
+        queries_df = index.spark.createDataFrame(
+            pd.DataFrame({"qid": qids, "vec": list(qmat.astype(np.float32))}),
+            "qid long, vec array<float>",
         )
-    else:
-        parts = _graph_search_broadcast(
-            index, *batch, met, emit_k, ef, n_probe, probe_ratio, beam_width,
-            use_nvq, data_cols, tel_acc, steer_exact=steer == "exact",
-        )
-    if not parts:
-        return empty_ranked(index.spark)
+        query_id_col, query_vec_col = "qid", "vec"
+    parts = _traverse_probed_partitions(
+        index, queries_df, query_id_col, query_vec_col, met, emit_k, ef,
+        n_probe, probe_ratio, beam_width, use_nvq, tel_acc,
+        steer_exact=steer == "exact",
+    )
     # tombstoned rows are traversed but filtered (two-phase delete, F2)
     return _merge_topk(parts, k, manifest.spill, tombstones=t)
 
@@ -1488,18 +1485,9 @@ def _bulk_traversal_pays(index, ef: int) -> bool:
     return part_rows > 16 * visited_est
 
 
-def _seg_dirs(index, seg_name: str, data_cols: list[str], res_mode: bool) -> tuple:
-    """(data dir, edges dir, data columns to read — plus the residual
-    ``rsq`` column in residual mode) for ``_read_partition``."""
-    info = index._segments[seg_name]
-    return (
-        os.path.join(info["dir"], "data.parquet"),
-        os.path.join(_graph_dir(index, seg_name), "edges.parquet"),
-        tuple(data_cols) + (("rsq",) if res_mode else ()),
-    )
-
-
 def _read_partition(dirs: tuple, part: int):
+    """One partition's data and edge tables, read straight from the hive
+    dirs; ``dirs`` is (data dir, edges dir, data columns)."""
     import pyarrow.parquet as papq
 
     data_dir, graph_dir, dcols = dirs
@@ -1513,106 +1501,24 @@ def _read_partition(dirs: tuple, part: int):
     )
 
 
-def _graph_search_broadcast(
-    index, qids, qmat, met, k_ret, ef, n_probe, probe_ratio, beam_width,
-    use_nvq, data_cols, tel_acc, steer_exact=False,
+def _traverse_probed_partitions(
+    index, queries_df, query_id_col, query_vec_col, met, k_ret, ef, n_probe,
+    probe_ratio, beam_width, use_nvq, tel_acc, steer_exact=False,
 ) -> list[DataFrame]:
-    from jvector_spark.operators.index import _part_queries, _select_probes, _stage1_rows
-
-    manifest = index.manifest
-    if not len(qids):
-        return []
-    qnorms = np.linalg.norm(qmat, axis=1)
-    parts_out = []
-    for seg in manifest.segments:
-        info = index._segments[seg.name]
-        probe, keep = _select_probes(info, qmat, n_probe, probe_ratio)
-        p2q = _part_queries(np.nonzero(keep)[0], probe[keep])
-        probed = sorted(p2q)
-        if not probed:
-            continue
-        # exact steering never touches the stage-1 codes
-        codec = None if steer_exact else info["pq"]
-        res_mode = bool(info.get("residual")) and not steer_exact
-        stage1 = (
-            codec.query_stage1(qmat, met, residual=res_mode)
-            if codec is not None
-            else None
-        )
-        qc_all = qmat @ info["centroids"].T if res_mode else None
-        b = index.spark.sparkContext.broadcast(
-            (codec, stage1, qids, qmat, qnorms, met, k_ret, ef, p2q,
-             index._nvq_codec(use_nvq), qc_all, res_mode, beam_width)
-        )
-        dirs = _seg_dirs(index, seg.name, data_cols, res_mode)
-
-        # factory binds THIS segment's broadcast — the returned scan is
-        # consumed lazily, and a free `b` in a loop-shared scope would
-        # resolve to the LAST segment's broadcast for every segment.
-        # ZERO-SHUFFLE scan: the task list is the probed part_ids (a tiny
-        # driver-built table); each task pyarrow-reads ITS partition's
-        # data/edges dirs directly — cogrouping data with edges was
-        # measured 5x slower at 100k because groupBy(part_id) re-shuffles
-        # the probed corpus bytes per query batch, and at 100 TB that
-        # shuffle IS the query cost. Direct dir reads move index bytes
-        # exactly once (the DiskANN contract: task = partition).
-        def _make_scan(b, tel_acc, dirs):
-            def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                (cdc, s1, q_ids, q_mat, q_nrm, m_, kk, ef_, p2q_, nvq_c, qc_a,
-                 res_m, bw) = b.value
-                for pdf in batches:
-                    for p in pdf["part_id"].tolist():
-                        q_idx = p2q_.get(int(p))
-                        if not q_idx:
-                            continue
-                        data_pdf, edge_pdf = _read_partition(dirs, int(p))
-                        if data_pdf is None:
-                            continue
-                        pack = _decode_partition(
-                            data_pdf, edge_pdf, cdc,
-                            m_ == "COSINE" and not res_m, res_m,
-                        )
-                        if pack is None:
-                            continue
-                        qsel = np.asarray(q_idx)
-                        out = _traverse_rerank(
-                            pack, m_, kk, ef_, bw,
-                            q_ids[qsel], q_mat[qsel], q_nrm[qsel],
-                            _stage1_rows(s1, qsel) if s1 is not None else None,
-                            qc_a[qsel, int(p)] if qc_a is not None else None,
-                            nvq_c, tel_acc,
-                        )
-                        if len(out):
-                            yield out
-
-            return scan
-
-        parts_df = index.spark.createDataFrame(
-            [(int(p),) for p in probed], "part_id int"
-        ).repartition(min(len(probed), 4096))
-        parts_out.append(
-            parts_df.mapInPandas(
-                _make_scan(b, tel_acc, dirs),
-                schema="qid long, id long, score double",
-            )
-        )
-    return parts_out
-
-
-def _graph_search_distributed(
-    index, queries_df, met, k_ret, ef, n_probe,
-    query_id_col, query_vec_col, probe_ratio, beam_width,
-    use_nvq, data_cols, tel_acc, steer_exact=False,
-) -> list[DataFrame]:
-    """Bulk graph route: query replicas shuffle to their probed
-    partitions (the ONLY exchange — Q x n_probe rows); each (partition,
-    query-group) task direct-reads its partition and runs the shared
+    """The one graph search plan, per segment: ``_assign_probes`` maps each
+    query to its probed partitions (map-only, where the queries live),
+    the (part_id, qid, vec) replicas shuffle into one group per probed
+    partition (Q x n_probe rows — the ONLY exchange), and each group task
+    pyarrow-reads ITS partition's data/edges dirs and runs the shared
     traversal core, building stage-1 payloads per query chunk in-task.
-    Corpus bytes NEVER shuffle (vs the fused tile route's per-query-block
-    corpus replication)."""
-    manifest = index.manifest
+    Corpus bytes never shuffle: cogrouping data with edges on part_id was
+    measured 5x slower at 100k (it re-shuffles the probed corpus per
+    batch), and the fused tile route replicates corpus blocks per query
+    block."""
+    from jvector_spark.operators.index import _rerank_cols
+
     parts_out = []
-    for seg in manifest.segments:
+    for seg in index.manifest.segments:
         info = index._segments[seg.name]
         # exact steering: stage-1 codes unused — no LUTs, no residual math
         codec = None if steer_exact else info["pq"]
@@ -1628,11 +1534,11 @@ def _graph_search_distributed(
         # tasks to fill the cluster; each salted group re-reads its
         # partition (tens of MB, trivial next to the traversal) and the
         # union of per-group top-k sets still contains the global top-k
-        # per (query, partition), so results are identical.
+        # per (query, partition), so results are identical. Sized from
+        # the segment's own partition count (the manifest's is None
+        # under auto sizing).
         par = index.spark.sparkContext.defaultParallelism
-        group_salt = max(
-            1, int(math.ceil(2.0 * par / max(manifest.n_partitions, 1)))
-        )
+        group_salt = max(1, int(math.ceil(2.0 * par / len(info["centroids"]))))
         if group_salt > 1:
             assigned = assigned.withColumn(
                 "_gs", F.pmod(F.xxhash64(F.col("qid")), F.lit(group_salt))
@@ -1642,10 +1548,18 @@ def _graph_search_distributed(
             (codec, met, k_ret, ef, beam_width, index._nvq_codec(use_nvq),
              res_mode, cents)
         )
-        dirs = _seg_dirs(index, seg.name, data_cols, res_mode)
+        # hive part_id lives in the dir name, so it is not a data column
+        dirs = (
+            os.path.join(info["dir"], "data.parquet"),
+            os.path.join(_graph_dir(index, seg.name), "edges.parquet"),
+            ("id", "codes", *_rerank_cols(use_nvq)) + (("rsq",) if res_mode else ()),
+        )
 
-        def _make_bulk(b, tel_acc, dirs):
-            def bulk(key, qpdf: pd.DataFrame) -> pd.DataFrame:
+        # factory binds THIS segment's broadcast — the plan runs lazily,
+        # and a free `b` in a loop-shared scope would resolve to the LAST
+        # segment's broadcast for every segment
+        def _make_traverse(b, tel_acc, dirs):
+            def traverse(key: tuple, qpdf: pd.DataFrame) -> pd.DataFrame:
                 cdc, m_, kk, ef_, bw, nvq_c, res_m, cents_ = b.value
                 part = int(key[0])
                 data_pdf, edge_pdf = _read_partition(dirs, part)
@@ -1685,12 +1599,12 @@ def _graph_search_distributed(
                     pd.concat(out, ignore_index=True) if out else empty_hits()
                 )
 
-            return bulk
+            return traverse
 
         group_cols = ["part_id"] + (["_gs"] if group_salt > 1 else [])
         parts_out.append(
             assigned.groupby(*group_cols).applyInPandas(
-                _make_bulk(b, tel_acc, dirs),
+                _make_traverse(b, tel_acc, dirs),
                 schema="qid long, id long, score double",
             )
         )

@@ -1710,9 +1710,9 @@ def _select_probes(
     info: dict, qmat: np.ndarray, n_probe: int, probe_ratio: float | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
     """The top-k probe rule of every search route — the driver-side plan
-    of the broadcast scans, graph search, ``probe_io_stats`` and tuning,
-    and the map-side distributed assignment pass, so both routes probe
-    identically.
+    of the broadcast scans, ``probe_io_stats`` and tuning, and the
+    map-side assignment pass of distributed IVF search and every graph
+    search, so all routes probe identically.
 
     Each query probes its ``_probe_depth`` nearest non-empty centroids.
     (Bound-ranked probing was tried and measured WORSE for top-k recall:
@@ -1941,6 +1941,7 @@ class IVFIndex:
             for r in frows:
                 fine[r["sub_id"]] = np.asarray(r["centroid"])
         self._segments[seg_name] = {
+            "name": seg_name,
             "dir": seg_dir,
             "centroids": arr,
             "radius": radius,
@@ -1968,6 +1969,7 @@ class IVFIndex:
         return getattr(self.manifest, "store_fp32", "all") == "none"
 
     def _segment_data(self, seg_name: str) -> DataFrame:
+        """The one reader of a segment's data table."""
         return self.spark.read.parquet(
             os.path.join(self._segments[seg_name]["dir"], "data.parquet")
         )
@@ -2394,7 +2396,7 @@ class IVFIndex:
         if not probed_parts:
             return self.spark.createDataFrame([], "qid long, id long, score double")
 
-        data = self.spark.read.parquet(os.path.join(info["dir"], "data.parquet"))
+        data = self._segment_data(info["name"])
         # Catalyst partition-prunes the scan to the probed part_ids
         data = data.filter(F.col("part_id").isin(probed_parts))
         data = self._apply_liveness(data)  # F2 tombstones, in-plan anti-join
@@ -2751,7 +2753,7 @@ class IVFIndex:
             for p in np.flatnonzero(rows_p)
         }
         qb_of = {p: max(1, math.ceil(c / _Q_TILE_IVF)) for p, c in assign_p.items()}
-        data = self.spark.read.parquet(os.path.join(info["dir"], "data.parquet"))
+        data = self._segment_data(info["name"])
         # Probed-partition scan pruning as a STATIC partition filter on
         # qb_of's keys, already on the driver: the EXACT probed set when
         # the assignment was persisted (sizing mode, m_hint+fine batches),
@@ -2895,7 +2897,7 @@ class IVFIndex:
         if not probed_parts:
             return self.spark.createDataFrame([], "qid long, id long, score double")
 
-        data = self.spark.read.parquet(os.path.join(info["dir"], "data.parquet"))
+        data = self._segment_data(info["name"])
         data = data.filter(F.col("part_id").isin(probed_parts))
         data = self._apply_liveness(data)  # F2 tombstones, in-plan anti-join
         b = self.spark.sparkContext.broadcast(

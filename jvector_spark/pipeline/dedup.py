@@ -186,7 +186,7 @@ def ngram_jaccard_pairs(
         F.explode(F.array_distinct(pair_keys)).alias("tp"),
     ).select("doc_id", "_blk", "_sh", "_t", F.col("tp.t1").alias("t1"), F.col("tp.t2").alias("t2"))
 
-    def tile_pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def tile_pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         _blk, t1, t2 = key
         empty = pd.DataFrame({"doc_a": [], "doc_b": [], "jaccard": []}).astype(
             {"doc_a": "int64", "doc_b": "int64", "jaccard": "float64"}
@@ -561,7 +561,7 @@ def embedding_neardup(
         "id", "v", blk.alias("_blk"), F.explode(F.array_distinct(pair_keys)).alias("bp")
     ).select("id", "v", "_blk", F.col("bp.b1").alias("b1"), F.col("bp.b2").alias("b2"))
 
-    def score_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def score_block(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         b1, b2 = key
         left = pdf[pdf["_blk"] == b1]
         right = pdf[pdf["_blk"] == b2] if b1 != b2 else left

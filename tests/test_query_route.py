@@ -161,7 +161,7 @@ def test_auto_route_costs_no_extra_jobs(spark, setup, op):
 
 def test_job_budgets(spark, setup):
     """Absolute Spark-job budgets for a small build, a point IVF search,
-    a threshold search and the three blocked routes (the per-call fixed
+    a point graph search, a threshold search and the three blocked routes (the per-call fixed
     cost the engine pays whatever the data size). The blocked budgets
     catch a plan that broadcast-joins a local table: that costs a job."""
     corpus, idx, pq, codes, queries = setup
@@ -174,6 +174,10 @@ def test_job_budgets(spark, setup):
         ),
         "search": count_jobs(
             spark, lambda: idx.search(queries, K, n_probe=4).collect()
+        ),
+        "search_graph": count_jobs(
+            spark,
+            lambda: idx.search_graph(queries, K, n_probe=4, ef_search=16).collect(),
         ),
         "threshold": count_jobs(
             spark, lambda: idx.threshold_search(queries, T).collect()
@@ -194,7 +198,8 @@ def test_job_budgets(spark, setup):
         ),
     }
     budget = {
-        "build": 7, "search": 5, "threshold": 3, "knn_join_blocked": 5,
+        "build": 7, "search": 5, "search_graph": 5, "threshold": 3,
+        "knn_join_blocked": 5,
         "search_distributed": 9, "threshold_distributed": 7,
     }
     assert all(jobs[op] <= budget[op] for op in budget), jobs
