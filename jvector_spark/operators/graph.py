@@ -852,15 +852,11 @@ def build_graph(
         def build_dirs(
             batches: Iterator[pd.DataFrame],
         ) -> Iterator[pd.DataFrame]:
-            import time as _time
-
             import pyarrow.parquet as _papq
 
-            _prof = os.environ.get("JVS_GRAPH_TRACE") == "1"
             for pdf_dirs in batches:
                 for paths in pdf_dirs["paths"]:
                     for path in paths:
-                        t0 = _time.perf_counter()
                         tbl = _papq.read_table(
                             path, columns=[c for c in cols if c != "part_id"]
                         )
@@ -868,18 +864,7 @@ def build_graph(
                         gp["part_id"] = int(
                             os.path.basename(path.rstrip("/")).split("=", 1)[1]
                         )
-                        t1 = _time.perf_counter()
-                        out = build(gp)
-                        if _prof:
-                            import sys as _sys
-
-                            print(
-                                f"[graph-trace] part={gp['part_id'].iloc[0]}"
-                                f" rows={len(gp)} read={t1 - t0:.2f}s"
-                                f" build={_time.perf_counter() - t1:.2f}s",
-                                file=_sys.stderr,
-                            )
-                        yield out
+                        yield build(gp)
 
         rows = index.spark.createDataFrame(
             index.spark.sparkContext.parallelize(
@@ -975,18 +960,17 @@ def _batch_beam(
     n_local: int,
     ef: int,
     counters=None,
-    expand: int | None = None,
     return_scores: bool = False,
     seed_sc: np.ndarray | None = None,
 ) -> np.ndarray:
     """Vectorized multi-query best-first beam search (GraphSearcher.java
     beam semantics, batched over the query axis): every hop expands each
-    active query's ``expand`` best unexpanded nodes, scores their neighbor
-    lists, and keeps the top-``ef`` beam; a query stops when its best
-    unexpanded candidate scores under its full beam's worst (the standard
-    best-first termination). ``expand`` is DiskANN's beamwidth W — >1
+    active query's W = ``max(1, ef // 64)`` best unexpanded nodes, scores
+    their neighbor lists, and keeps the top-``ef`` beam; a query stops
+    when its best unexpanded candidate scores under its full beam's worst
+    (the standard best-first termination). W is DiskANN's beamwidth: >1
     trades a few percent extra visited rows for W-fold fewer sequential
-    hops (the Python-loop constant); defaults to ``max(1, ef // 64)``.
+    hops (the Python-loop constant).
 
     ``entries`` may exceed ``ef`` (pilot seeding, ``_pilot_entries``):
     each query keeps its own top-``ef`` of the seed scores. ``seed_sc``
@@ -996,7 +980,7 @@ def _batch_beam(
     Pilots that miss the kept beam stay marked visited: they scored
     under ef in-beam rows, so best-first would never expand them.
     Returns (n_q, ef) local ordinals, -1 padded."""
-    w = int(expand) if expand else max(1, ef // 64)
+    w = max(1, ef // 64)
     beam_id = np.full((n_q, ef), -1, dtype=np.int64)
     beam_sc = np.full((n_q, ef), -np.inf, dtype=np.float32)
     beam_ex = np.ones((n_q, ef), dtype=bool)  # padding counts as expanded
@@ -1149,7 +1133,6 @@ def _traverse_rerank(
     met: str,
     kk: int,
     ef: int,
-    bw: int | None,
     q_ids: np.ndarray,
     q_mat: np.ndarray,
     q_nrm: np.ndarray,
@@ -1209,7 +1192,7 @@ def _traverse_rerank(
             beams, bsc = _batch_beam(
                 lambda a, c: score_exact(sub[a], c),
                 nbr_mat, pil, hi - lo, n_local, ef,
-                counters=tel_acc, expand=bw, return_scores=True,
+                counters=tel_acc, return_scores=True,
                 seed_sc=psc,
             )
             tid = beams[:, :take]  # beam rows are score-desc
@@ -1246,7 +1229,7 @@ def _traverse_rerank(
         beams = _batch_beam(
             lambda a, c: score_fn(sub[a], c),
             nbr_mat, pil, hi - lo, n_local, ef,
-            counters=tel_acc, expand=bw,
+            counters=tel_acc,
         )
         r_chunk = max(64, int((1 << 25) // max(min(n_local, (hi - lo) * ef), 1)))
         for r0 in range(lo, hi, r_chunk):
@@ -1287,7 +1270,6 @@ def graph_search(
     query_vec_col: str = "vec",
     probe_ratio: float | None = None,
     telemetry=None,
-    beam_width: int | None = None,
     strategy: str = "auto",
     m_hint: int | None = None,
     steer: str = "pq",
@@ -1346,11 +1328,9 @@ def graph_search(
     LUT hop.
 
     ``ef_search`` defaults to ``max(2k, overquery*k)`` (the beam width /
-    per-partition candidate pool — GraphSearcher's rerankK analog).
-    ``beam_width`` is DiskANN's W: nodes expanded per hop; >1 cuts the
-    sequential hop count W-fold for a small recall give-back (measured
-    d=1024/ef640: wall 17.9 -> 9.9 s, recall 0.789 -> 0.754 at W=20).
-    Default ``max(1, ef_search // 64)``."""
+    per-partition candidate pool — GraphSearcher's rerankK analog); the
+    beam expands ``max(1, ef_search // 64)`` nodes per hop
+    (``_batch_beam``)."""
     from jvector_spark.operators.index import _merge_topk
 
     manifest = index.manifest
@@ -1438,7 +1418,7 @@ def graph_search(
         query_id_col, query_vec_col = "qid", "vec"
     parts = _traverse_probed_partitions(
         index, queries_df, query_id_col, query_vec_col, met, emit_k, ef,
-        n_probe, probe_ratio, beam_width, use_nvq, tel_acc,
+        n_probe, probe_ratio, use_nvq, tel_acc,
         steer_exact=steer == "exact",
     )
     # tombstoned rows are traversed but filtered (two-phase delete, F2)
@@ -1503,7 +1483,7 @@ def _read_partition(dirs: tuple, part: int):
 
 def _traverse_probed_partitions(
     index, queries_df, query_id_col, query_vec_col, met, k_ret, ef, n_probe,
-    probe_ratio, beam_width, use_nvq, tel_acc, steer_exact=False,
+    probe_ratio, use_nvq, tel_acc, steer_exact=False,
 ) -> list[DataFrame]:
     """The one graph search plan, per segment: ``_assign_probes`` maps each
     query to its probed partitions (map-only, where the queries live),
@@ -1545,7 +1525,7 @@ def _traverse_probed_partitions(
             )
         cents = info["centroids"] if res_mode else None
         b = index.spark.sparkContext.broadcast(
-            (codec, met, k_ret, ef, beam_width, index._nvq_codec(use_nvq),
+            (codec, met, k_ret, ef, index._nvq_codec(use_nvq),
              res_mode, cents)
         )
         # hive part_id lives in the dir name, so it is not a data column
@@ -1560,7 +1540,7 @@ def _traverse_probed_partitions(
         # segment's broadcast for every segment
         def _make_traverse(b, tel_acc, dirs):
             def traverse(key: tuple, qpdf: pd.DataFrame) -> pd.DataFrame:
-                cdc, m_, kk, ef_, bw, nvq_c, res_m, cents_ = b.value
+                cdc, m_, kk, ef_, nvq_c, res_m, cents_ = b.value
                 part = int(key[0])
                 data_pdf, edge_pdf = _read_partition(dirs, part)
                 if data_pdf is None or len(qpdf) == 0:
@@ -1583,7 +1563,7 @@ def _traverse_probed_partitions(
                     hi = min(lo + step, len(q_ids))
                     qm = qmat[lo:hi]
                     r = _traverse_rerank(
-                        pack, m_, kk, ef_, bw,
+                        pack, m_, kk, ef_,
                         q_ids[lo:hi], qm, qnrm[lo:hi],
                         (
                             cdc.query_stage1(qm, m_, residual=res_m)

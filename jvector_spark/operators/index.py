@@ -97,6 +97,12 @@ _PQM_AUTO_RELERR = 0.10
 # driver-side codec-training rows (PQ fit, residual/auto stats) — a uniform
 # prefix of the key-sorted sample; 256 codes/subspace saturate well below it
 _CODEC_TRAIN_CAP = 65536
+# how many nearest coarse cells contribute fine-centroid CANDIDATES when a
+# row's sub_id is assigned hierarchically (work ~ n_rows x cells x
+# fine-per-cell instead of n_rows x n_fine; see _assign_fine_hierarchical)
+_FINE_ASSIGN_CELLS = 4
+# maybe_compact's size-tier base: a tier spans a 4x range of segment rows
+_COMPACT_TIER_FACTOR = 4
 
 
 def _pqm_auto_start(dim: int) -> int:
@@ -844,7 +850,6 @@ class IVFIndexBuilder:
         first_pass: str = "pq",
         anisotropic_threshold: float | None = None,
         bsp=None,
-        fine_assign_cells: int = 4,
         pq_residual: bool | str = "auto",
         vec_format: str = "packed_f32",
         store_fp32: str = "all",
@@ -911,12 +916,6 @@ class IVFIndexBuilder:
         if anisotropic_threshold is not None and first_pass == "bq":
             raise ValueError("anisotropic_threshold applies to the PQ first pass only")
         self.anisotropic_threshold = anisotropic_threshold
-        # fine_assign_cells: how many nearest coarse cells contribute fine-
-        # centroid CANDIDATES when assigning a row's sub_id hierarchically
-        # (work ~ n_rows x cells x fine-per-cell instead of n_rows x
-        # n_fine). 0 = global argmin over every fine centroid (the exact
-        # pre-r6 semantics — the matmul that dominated 1M builds).
-        self.fine_assign_cells = int(fine_assign_cells)
         # fine_factor > 0 adds a second centroid level (IMI-style two-level
         # IVF): every row gets a global ``sub_id`` (nearest of
         # fine_factor * n_partitions fine centroids), data files are sorted
@@ -1032,8 +1031,8 @@ class IVFIndexBuilder:
         """A builder carrying an existing index's build settings, so an
         ``append`` segment or a ``compact`` rebuild is built exactly like
         the original (``auto`` knobs arrive already resolved). ``seed``,
-        ``sample_cap``, ``kmeans_iterations`` and ``fine_assign_cells``
-        are not recorded in the manifest and keep the defaults."""
+        ``sample_cap`` and ``kmeans_iterations`` are not recorded in the
+        manifest and keep the defaults."""
         return cls(
             metric=manifest.metric,
             n_partitions=manifest.n_partitions,
@@ -1056,6 +1055,14 @@ class IVFIndexBuilder:
         id_col: str = "id",
         vec_col: str = "vec",
     ) -> "IVFIndex":
+        # A rebuild overwrites only data, centroids and codebooks; the old
+        # index's tombstones, fine level and graphs would survive and
+        # corrupt the new one. An empty or missing dir is fine.
+        if os.path.exists(os.path.join(path, "meta.json")):
+            raise ValueError(
+                f"{path} already holds an index; fit into a new path, or "
+                f"load it and use append()/compact()"
+            )
         os.makedirs(path, exist_ok=True)
         spark = df.sparkSession
         manifest = self._build_segment(df, path, "seg-000000", id_col, vec_col)
@@ -1095,22 +1102,6 @@ class IVFIndexBuilder:
         pure overhead, measured r4).
         """
         from jvector_spark.operators.quantize.kmeans import kmeans_pp
-
-        # JVS_BUILD_TRACE=1: per-phase driver walls to stderr (measurement
-        # aid, guide §1 — zero overhead when off)
-        import sys as _sys
-
-        _trace_on = os.environ.get("JVS_BUILD_TRACE") == "1"
-        _t_mark = [time.perf_counter()]
-
-        def _tr(phase: str) -> None:
-            if _trace_on:
-                now = time.perf_counter()
-                print(
-                    f"[build-trace] {phase}: {now - _t_mark[0]:.2f}s",
-                    file=_sys.stderr,
-                )
-                _t_mark[0] = now
 
         spark = df.sparkSession
         df = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
@@ -1153,11 +1144,9 @@ class IVFIndexBuilder:
             ),
         )
         sample = bottom_k_sample(df, eff_cap, self.seed, n)
-        _tr("count + sample jobs")
         dim = sample.shape[1]
 
         centroids = kmeans_pp(sample, n_parts, self.kmeans_iterations, self.seed)
-        _tr("kmeans_pp (driver)")
         # Codec-training view of the sample: the sample is sorted by its
         # uniform bottom-k key (operators/sample.py), so a PREFIX is itself
         # an exact-uniform subsample — 64k rows bound the driver-side PQ
@@ -1270,7 +1259,6 @@ class IVFIndexBuilder:
                     train_mat, m=self.pq_m, **fit_kw
                 )
 
-        _tr("codec fit (driver)")
         seg_dir = os.path.join(path, "segments", seg_name)
         os.makedirs(seg_dir, exist_ok=True)
 
@@ -1306,12 +1294,9 @@ class IVFIndexBuilder:
             # per-coarse-cell fine-centroid index lists for hierarchical
             # assignment (ragged; cells unseen in the sample get an empty
             # list and their rows fall back to the global argmin).
-            # fine_assign_cells=0 keeps the global argmin for every row.
-            if self.fine_assign_cells > 0:
-                fine_of = [
-                    np.flatnonzero(fine_owner == c) for c in range(len(centroids))
-                ]
-        _tr("fine_level (driver)")
+            fine_of = [
+                np.flatnonzero(fine_owner == c) for c in range(len(centroids))
+            ]
         b = spark.sparkContext.broadcast((centroids, pq, nvq, fine, fine_of))
         # per-partition pruning stats (X4/ScoreTracker analog): Euclidean
         # radius, angular radius, max/min norm — rigorous score bounds let
@@ -1321,27 +1306,12 @@ class IVFIndexBuilder:
 
         spill_resolved = self._resolve_spill(dim, pq, nvq)
         spill = max(1, min(spill_resolved, len(centroids)))
-        fa_cells = max(spill, self.fine_assign_cells)
+        fa_cells = max(spill, _FINE_ASSIGN_CELLS)
         packed = self.vec_format == "packed_f32"
         slim = self.store_fp32 == "none"  # no fp32 column written at all
 
         def assign_encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from pyspark import TaskContext
-
-            ph: dict[str, float] | None = (
-                {} if os.environ.get("JVS_BUILD_TRACE") == "1" else None
-            )
-            ph_cpu: dict[str, float] = {}
-            cpu_mark = [time.process_time()]
-
-            def _ph(phase: str, t0: float) -> float:
-                now = time.perf_counter()
-                if ph is not None:
-                    ph[phase] = ph.get(phase, 0.0) + (now - t0)
-                    cnow = time.process_time()
-                    ph_cpu[phase] = ph_cpu.get(phase, 0.0) + (cnow - cpu_mark[0])
-                    cpu_mark[0] = cnow
-                return now
 
             cents, codec, nvq_codec, fine_cents, fine_of_ = b.value
             # candidate selection + codec encode run in f32 (the values
@@ -1357,10 +1327,7 @@ class IVFIndexBuilder:
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                t0 = time.perf_counter()
-                cpu_mark[0] = time.process_time()
                 x = kernels.as_matrix(pdf["vec"], dtype=np.float32)
-                t0 = _ph("as_matrix", t0)
                 d = -2.0 * x @ cents32.T + cc32[None, :]  # dist^2 - ||x||^2 (argmin-safe)
                 if spill == 1:
                     pm = np.argmin(d, axis=1)[:, None]
@@ -1368,7 +1335,6 @@ class IVFIndexBuilder:
                     pm = np.argpartition(d, spill - 1, axis=1)[:, :spill]
                 rep = np.repeat(np.arange(len(x)), spill)
                 p = pm.ravel()  # partition of each stored copy
-                t0 = _ph("assign_gemm", t0)
                 # stats on the float32 values that will actually be stored,
                 # so the bounds hold exactly for what search later reads.
                 # PRIMARY copies only (r5): a spilled second-choice copy can
@@ -1445,7 +1411,6 @@ class IVFIndexBuilder:
                 acc.add(stats)
                 for part, cnt in zip(uniq_p, cnts_p):
                     task_counts[int(part)] = task_counts.get(int(part), 0) + int(cnt)
-                t0 = _ph("stats", t0)
                 rsq = None
                 if residual:
                     # per-COPY residual codes: a spilled copy's residual is
@@ -1462,7 +1427,6 @@ class IVFIndexBuilder:
                     codes = codec.encode_numpy(x)
                     code_bytes = [c.tobytes() for c in codes]
                     codes_rows = [code_bytes[i] for i in rep]
-                t0 = _ph("pq_encode", t0)
                 # dict order MUST mirror the output schema (mapInPandas
                 # matches columns positionally)
                 out = {"id": pdf["id"].to_numpy(dtype=np.int64)[rep]}
@@ -1475,37 +1439,26 @@ class IVFIndexBuilder:
                         out["vec"] = pdf["vec"].iloc[rep].reset_index(drop=True)
                 out["codes"] = codes_rows
                 out["part_id"] = p.astype(np.int32)
-                t0 = _ph("emit_vec", t0)
                 if nvq_codec is not None:
                     nvq_codes, nvq_params = nvq_codec.encode_numpy(x)
                     nvq_bytes = [c.tobytes() for c in nvq_codes]
                     out["nvq"] = [nvq_bytes[i] for i in rep]
                     out["nvq_params"] = [nvq_params[i] for i in rep]
-                t0 = _ph("nvq_encode", t0)
                 if fine_cents is not None:
-                    if fine_of_ is not None:
-                        # candidate fine cells come from the row's
-                        # fa_cells nearest coarse cells (>= its spill
-                        # set), not just the stored copies' cells — wider
-                        # candidates close the gap to the global argmin
-                        # at ~cells/n_parts of the global cost
-                        cc_n = cents.shape[0]
-                        if fa_cells >= cc_n:
-                            cand = np.tile(np.arange(cc_n), (len(x), 1))
-                        else:
-                            cand = np.argpartition(d, fa_cells - 1, axis=1)[
-                                :, :fa_cells
-                            ]
-                        sub = _assign_fine_hierarchical(
-                            x, cand, fine_cents, fine_of_
-                        )
-                    else:  # fine_assign_cells=0: global argmin
-                        f32c = fine_cents.astype(x.dtype)
-                        fc = np.einsum("ij,ij->i", f32c, f32c)
-                        fd = -2.0 * x @ f32c.T + fc[None, :]
-                        sub = np.argmin(fd, axis=1)
+                    # candidate fine cells come from the row's fa_cells
+                    # nearest coarse cells (>= its spill set), not just the
+                    # stored copies' cells — wider candidates close the gap
+                    # to the global argmin at ~cells/n_parts of the global
+                    # cost
+                    cc_n = cents.shape[0]
+                    if fa_cells >= cc_n:
+                        cand = np.tile(np.arange(cc_n), (len(x), 1))
+                    else:
+                        cand = np.argpartition(d, fa_cells - 1, axis=1)[
+                            :, :fa_cells
+                        ]
+                    sub = _assign_fine_hierarchical(x, cand, fine_cents, fine_of_)
                     out["sub_id"] = sub.astype(np.int32)[rep]
-                t0 = _ph("fine_assign", t0)
                 if rsq is not None:  # keep column order aligned with schema
                     out["rsq"] = rsq
                 if spill > 1:
@@ -1516,23 +1469,10 @@ class IVFIndexBuilder:
                     # shuffle (guide §2.4).
                     out["is_primary"] = primary
                 yield pd.DataFrame(out)
-                _ph("emit_df", t0)
             # ONE add per task, after the batch loop (pid-keyed overwrite
             # merge -> retry-idempotent; see _TaskPartCountParam)
             ctx = TaskContext.get()
             cnt_acc.add({(ctx.partitionId() if ctx else 0): task_counts})
-            if ph is not None:
-                import sys as _s
-
-                ctx_id = ctx.partitionId() if ctx else -1
-                print(
-                    f"[encode-trace] task {ctx_id}: "
-                    + " ".join(
-                        f"{k}={v:.2f}s/cpu{ph_cpu.get(k, 0.0):.2f}s"
-                        for k, v in ph.items()
-                    ),
-                    file=_s.stderr,
-                )
 
         schema = _DATA_SCHEMA
         if packed:
@@ -1579,7 +1519,6 @@ class IVFIndexBuilder:
             .partitionBy("part_id")
             .parquet(os.path.join(seg_dir, "data.parquet"))
         )
-        _tr("encode+write job")
 
         stat_rows = acc.value
         part_counts = np.zeros(len(centroids), dtype=np.int64)
@@ -2766,8 +2705,8 @@ class IVFIndex:
         # persisted (m_hint mode): at the 1M corpus-as-queries shape that
         # broadcast alone re-ran the full 1M-query mapInPandas pass — 725
         # of 5,639 executor core-seconds — to produce ~1000 part_ids the
-        # driver already had (guide §2.4; stage-attributed by
-        # tools/bulk_stage_probe.py).
+        # driver already had (guide §2.4; stage-attributed from the Spark
+        # UI's per-stage executor times).
         data = data.filter(F.col("part_id").isin([int(p) for p in sorted(qb_of)]))
         if sub_filter is not None:
             data = data.filter(F.col("sub_id").isin(sub_filter))
@@ -3050,21 +2989,10 @@ class IVFIndex:
             (s for s in self.manifest.segments if s.name in set(sel)),
             key=lambda s: s.n_rows,
         )
-        _trace_on = os.environ.get("JVS_BUILD_TRACE") == "1"
-        _t_c = time.perf_counter()
         fresh = builder._build_segment(
             live, self.path, seg_name, "id", "vec", manifest=fresh,
             warm_pq=self._segments[largest.name]["pq"],
         )
-        if _trace_on:
-            import sys as _sys
-
-            print(
-                f"[build-trace] compact:segment_rebuild: "
-                f"{time.perf_counter() - _t_c:.2f}s",
-                file=_sys.stderr,
-            )
-            _t_c = time.perf_counter()
         import shutil
 
         t = os.path.join(self.path, "tombstones.parquet")
@@ -3089,14 +3017,6 @@ class IVFIndex:
                 ef_construction=rebuild_graph["ef_construction"],
                 segments=[seg_name],
             )
-            if _trace_on:
-                import sys as _sys
-
-                print(
-                    f"[build-trace] compact:graph_rebuild: "
-                    f"{time.perf_counter() - _t_c:.2f}s",
-                    file=_sys.stderr,
-                )
         # refresh SELF too: callers holding this object (streaming ingest's
         # foreachBatch closure, the IPC API) would otherwise keep a manifest
         # pointing at the GC'd segment dirs — an append after a dropped
@@ -3105,13 +3025,12 @@ class IVFIndex:
         self._segments = out._segments
         return out
 
-    def maybe_compact(
-        self, min_segments: int = 4, tier_factor: int = 4
-    ) -> "IVFIndex":
+    def maybe_compact(self, min_segments: int = 4) -> "IVFIndex":
         """Size-tiered compaction policy (the LSM rule, applied to index
         segments; ref docs/compaction.md:3-9 — small segments accumulate
         from streaming ingest and get periodically merged): segments are
-        grouped into size tiers (``floor(log_{tier_factor}(n_rows))``),
+        grouped into size tiers (``floor(log_4(n_rows))``, base
+        ``_COMPACT_TIER_FACTOR``),
         and whenever a tier holds ``min_segments`` members, that tier is
         merged into ONE segment via :meth:`compact` (smallest tier first;
         the merged segment may cascade into the next tier, so the check
@@ -3123,7 +3042,7 @@ class IVFIndex:
             tiers: dict[int, list] = {}
             for s in self.manifest.segments:
                 tiers.setdefault(
-                    int(math.log(max(s.n_rows, 1), tier_factor)), []
+                    int(math.log(max(s.n_rows, 1), _COMPACT_TIER_FACTOR)), []
                 ).append(s.name)
             ripe = sorted(t for t, names in tiers.items() if len(names) >= min_segments)
             if not ripe:

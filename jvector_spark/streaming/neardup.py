@@ -414,15 +414,6 @@ def stream_neardup_foreachbatch(
         return out
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        import time as _time
-
-        _prof = _os.environ.get("JVS_NEARDUP_PROF") == "1"
-        _marks = [("start", _time.perf_counter())]
-
-        def _mark(label: str) -> None:
-            if _prof:
-                _marks.append((label, _time.perf_counter()))
-
         spark = batch_df.sparkSession
         # The micro-batch inherits the SOURCE's partitioning — a file-per-
         # trigger stream hands one task the whole batch, and every
@@ -466,7 +457,6 @@ def stream_neardup_foreachbatch(
         # ONE materialization of the signature expressions: write the
         # delta, read it back columnar for everything downstream
         new.write.mode("overwrite").parquet(f"{state_dir}/delta={epoch_id}")
-        _mark("delta_write")
         new = spark.read.schema(state_schema).parquet(
             f"{state_dir}/delta={epoch_id}"
         )
@@ -543,7 +533,6 @@ def stream_neardup_foreachbatch(
                 .distinct()
                 .collect()
             ]
-            _mark("cand_ids")
             if len(cand_ids) <= _CAND_ID_CAP:
                 both = both.filter(F.col("doc_id").isin(cand_ids))
             else:
@@ -577,7 +566,6 @@ def stream_neardup_foreachbatch(
         )
         if do_prune:
             cand.unpersist()
-        _mark("pairs_write")
         # size-tiered-ish state compaction: fold accumulated deltas
         # (epochs < e only — replay safety) into one compact table
         deltas = [
@@ -598,22 +586,11 @@ def stream_neardup_foreachbatch(
 
             for p in deltas + compacts:
                 _shutil.rmtree(p, ignore_errors=True)
-        _mark("compact")
         if on_batch is not None:
             # count from the durable output (one tiny file), not a second
             # evaluation of the candidate join
             n_pairs = spark.read.parquet(f"{pairs_dir}/batch={epoch_id}").count()
             on_batch(int(epoch_id), int(n_pairs))
-        if _prof:
-            _mark("end")
-            import sys as _sys
-
-            steps = ", ".join(
-                f"{lbl}={_marks[i + 1][1] - _marks[i][1]:.2f}s"
-                for i, (lbl, _) in enumerate(_marks[:-1])
-                for lbl in [_marks[i + 1][0]]
-            )
-            print(f"neardup_prof epoch={epoch_id}: {steps}", file=_sys.stderr)
 
     writer = stream_docs.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir

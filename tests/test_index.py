@@ -86,6 +86,25 @@ def test_delete_excludes_tombstoned(spark, corpus_df, queries_df, tmp_path_facto
     assert all(c == K for c in counts.values())
 
 
+def test_fit_into_existing_index_path_raises(spark, corpus_df, queries_df, tmp_path_factory):
+    """A second fit into a live index's dir would keep the first index's
+    tombstones and fine level next to the new segment: fit refuses, and
+    the first index still loads and searches as before."""
+    df, _ = corpus_df
+    path = str(tmp_path_factory.mktemp("ivf_refit") / "index")
+    idx = IVFIndexBuilder(
+        metric="COSINE", n_partitions=8, pq_m=8, fine_factor=4
+    ).fit(df, path)
+    idx.delete([0, 1, 2, 3])
+    before = sorted(tuple(r) for r in idx.search(queries_df, K, n_probe=8).collect())
+    with pytest.raises(ValueError, match="already holds an index"):
+        IVFIndexBuilder(metric="COSINE", n_partitions=4, pq_m=8).fit(df, path)
+    again = IVFIndex.load(spark, path)
+    assert again.manifest == idx.manifest
+    after = sorted(tuple(r) for r in again.search(queries_df, K, n_probe=8).collect())
+    assert after == before
+
+
 def test_append_segment_union_search(spark, corpus_df, queries_df, tmp_path_factory):
     """Index built on half the data + appended other half == single search
     over everything (multi-segment merge J6)."""
