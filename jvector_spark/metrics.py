@@ -28,7 +28,12 @@ def recall_at_k(
     hits = r.join(g, [query_col, id_col]).groupBy(query_col).count()
     per_query = g.groupBy(query_col).count().withColumnRenamed("count", "gt_n")
     joined = per_query.join(hits, query_col, "left").fillna(0, subset=["count"])
-    row = joined.select(F.avg(F.col("count") / F.col("gt_n")).alias("recall")).collect()[0]
+    # per-query fractions as decimals, so the sum is exact and the result
+    # does not depend on how the plan partitions the rows: a double sum of
+    # 16 fractions c/10 totalling 128/160 read 0.8 or 0.7999999999999999
+    # depending on the input's partitioning
+    frac = F.col("count").cast("decimal(20,0)") / F.col("gt_n")
+    row = joined.select(F.avg(frac).alias("recall")).collect()[0]
     return float(row["recall"])
 
 

@@ -64,6 +64,7 @@ from jvector_spark.operators.exact import (
     _rank_topk,
     empty_hits,
     empty_ranked,
+    in_list,
     route_query_batch,
     tile_join,
 )
@@ -1069,17 +1070,6 @@ class IVFIndexBuilder:
         manifest.save(path)
         return IVFIndex.load(spark, path)
 
-    def _sample_and_count(self, df: DataFrame) -> tuple[int, np.ndarray]:
-        """Row count + uniform training sample in ONE job (two on provably
-        skewed layouts) — the shared fused bottom-k pass; see
-        :func:`jvector_spark.operators.sample.sample_and_count`."""
-        from jvector_spark.operators.sample import sample_and_count
-
-        try:
-            return sample_and_count(df, self.sample_cap, self.seed)
-        except ValueError:
-            raise ValueError("cannot build an index over an empty DataFrame")
-
     def _build_segment(
         self,
         df: DataFrame,
@@ -1908,10 +1898,17 @@ class IVFIndex:
         return getattr(self.manifest, "store_fp32", "all") == "none"
 
     def _segment_data(self, seg_name: str) -> DataFrame:
-        """The one reader of a segment's data table."""
-        return self.spark.read.parquet(
-            os.path.join(self._segments[seg_name]["dir"], "data.parquet")
-        )
+        """The one reader of a segment's data table. A segment is
+        immutable once written, so its DataFrame is built once per loaded
+        segment and cached in the segment's meta dict: a fresh
+        ``spark.read.parquet`` costs a schema-inference job and a listing
+        of every ``part_id=`` directory."""
+        info = self._segments[seg_name]
+        if "data" not in info:
+            info["data"] = self.spark.read.parquet(
+                os.path.join(info["dir"], "data.parquet")
+            )
+        return info["data"]
 
     def _part_counts(self, seg_name: str) -> np.ndarray:
         """Per-partition STORED row counts (spilled copies included) — the
@@ -2054,9 +2051,12 @@ class IVFIndex:
         return out
 
     def tombstones(self) -> DataFrame | None:
+        """The tombstone table, read with its fixed ``id long`` schema
+        (what :meth:`delete` writes), so a read infers nothing and starts
+        no job. Not cached: ``delete`` rewrites the file."""
         p = os.path.join(self.path, "tombstones.parquet")
         if os.path.exists(p):
-            return self.spark.read.parquet(p)
+            return self.spark.read.schema("id long").parquet(p)
         return None
 
     def _apply_liveness(self, data: DataFrame) -> DataFrame:
@@ -2100,6 +2100,9 @@ class IVFIndex:
         npf_per_probe: bool = False,
     ) -> DataFrame:
         """Fused two-phase partition-pruned k-NN join over live segments.
+        Returns ``(qid, id, score, rank)`` rows, ranked per query under
+        score desc / id asc, not ordered: sort by ``(qid, rank)`` where
+        row order matters.
 
         ``probe_ratio`` (optional, >= 1) turns on ADAPTIVE probe depth:
         a partition is probed only while its centroid distance is within
@@ -2236,7 +2239,7 @@ class IVFIndex:
             if len(ids) <= self.FILTER_PIVOT_ROWS and predicate is None:
                 from jvector_spark.operators import exact
 
-                corpus = self.live_vectors().filter(F.col("id").isin(ids))
+                corpus = self.live_vectors().filter(in_list("id", ids))
                 return exact.knn_join(
                     corpus, queries_df, k, metric=metric,
                     query_id_col=query_id_col, query_vec_col=query_vec_col,
@@ -2337,7 +2340,7 @@ class IVFIndex:
 
         data = self._segment_data(info["name"])
         # Catalyst partition-prunes the scan to the probed part_ids
-        data = data.filter(F.col("part_id").isin(probed_parts))
+        data = data.filter(in_list("part_id", probed_parts))
         data = self._apply_liveness(data)  # F2 tombstones, in-plan anti-join
         # two-level probe: pushed sub_id filter -> parquet row-group skip
         # (files are sorted by sub_id within each partition at write time),
@@ -2357,8 +2360,7 @@ class IVFIndex:
                 qmat, probe, fine_c, self._fine_own_pad(info), npf,
                 keep, per_probe=npf_per_probe,
             )
-            probed_subs = sorted({int(s) for a in subs_list for s in a})
-            data = data.filter(F.col("sub_id").isin(probed_subs))
+            data = data.filter(in_list("sub_id", (s for a in subs_list for s in a)))
             # (m, n_fine) membership bitmap; guarded so a huge query batch
             # over a huge fine level degrades to the union filter alone
             if len(qids) * len(fine_c) <= 1 << 28:
@@ -2707,9 +2709,9 @@ class IVFIndex:
         # of 5,639 executor core-seconds — to produce ~1000 part_ids the
         # driver already had (guide §2.4; stage-attributed from the Spark
         # UI's per-stage executor times).
-        data = data.filter(F.col("part_id").isin([int(p) for p in sorted(qb_of)]))
+        data = data.filter(in_list("part_id", qb_of))
         if sub_filter is not None:
-            data = data.filter(F.col("sub_id").isin(sub_filter))
+            data = data.filter(in_list("sub_id", sub_filter))
         data = self._apply_liveness(data)  # F2 tombstones
         if predicate is not None:
             data = data.filter(predicate)
@@ -2837,7 +2839,7 @@ class IVFIndex:
             return self.spark.createDataFrame([], "qid long, id long, score double")
 
         data = self._segment_data(info["name"])
-        data = data.filter(F.col("part_id").isin(probed_parts))
+        data = data.filter(in_list("part_id", probed_parts))
         data = self._apply_liveness(data)  # F2 tombstones, in-plan anti-join
         b = self.spark.sparkContext.broadcast(
             (qids, qmat, metric, threshold, part_to_queries)

@@ -27,7 +27,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from jvector_spark.functions import kernels
-from jvector_spark.operators.exact import _rank_topk, empty_ranked, route_query_batch
+from jvector_spark.operators.exact import (
+    _rank_topk,
+    empty_ranked,
+    in_list,
+    route_query_batch,
+)
 
 
 def _bucket_of(x: np.ndarray, planes: np.ndarray) -> np.ndarray:
@@ -111,7 +116,7 @@ def rp_lsh_knn_join(
         if isinstance(accept_ids, _DF):
             corpus = corpus.join(accept_ids.select(F.col("id").alias(id_col)), id_col, "semi")
         else:
-            corpus = corpus.filter(F.col(id_col).isin([int(i) for i in accept_ids]))
+            corpus = corpus.filter(in_list(id_col, accept_ids))
     if n_planes is None:
         n = n_hint if n_hint is not None else corpus.count()
         n_planes = max(3, min(24, int(math.ceil(math.log2(max(n / 64.0, 2.0))))))

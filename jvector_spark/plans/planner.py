@@ -102,9 +102,7 @@ def plan_knn(
         if isinstance(accept_ids, DataFrame):
             c = c.join(accept_ids.select("id"), "id", "semi")
         else:
-            from pyspark.sql import functions as F
-
-            c = c.filter(F.col("id").isin(accept_ids))
+            c = c.filter(exact.in_list("id", accept_ids))
     strategy = "blocked" if big else "numpy"
     df = exact.knn_join(c, queries, k, metric=metric, strategy=strategy)
     return SearchPlan(

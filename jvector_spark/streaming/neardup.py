@@ -73,6 +73,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from jvector_spark.operators.exact import in_list
 from jvector_spark.pipeline.dedup import (
     _band_keys,
     base_hashes,
@@ -534,7 +535,7 @@ def stream_neardup_foreachbatch(
                 .collect()
             ]
             if len(cand_ids) <= _CAND_ID_CAP:
-                both = both.filter(F.col("doc_id").isin(cand_ids))
+                both = both.filter(in_list("doc_id", cand_ids))
             else:
                 both = both.join(
                     cand.select(F.col("doc_a").alias("doc_id"))

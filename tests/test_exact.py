@@ -148,3 +148,33 @@ def test_hard_negative_join_masks_same_label_and_self(spark):
     for r in got_all:
         counts[r.qid] = counts.get(r.qid, 0) + 1
     assert counts == {0: 3, 3: 3}  # exactly the 3 foreign-label rows each
+
+
+def test_in_list_matches_isin_and_prunes_partitions(spark, tmp_path):
+    """``exact.in_list`` is ``Column.isin`` in one JVM call: the same rows
+    for Python ints, numpy ints and an empty list, and the same pushed
+    partition filter (an ``INSET`` over the ``part_id`` directories)."""
+    import contextlib
+    import io
+
+    path = str(tmp_path / "parts")
+    spark.range(320).selectExpr("id", "cast(id % 16 as int) as part_id").write.partitionBy(
+        "part_id"
+    ).parquet(path)
+    df = spark.read.parquet(path)
+    want_parts = [1, 2, 3, 5, 7, 8, 9, 11, 12, 13, 14, 15]  # > the INSET threshold
+
+    def rows(col):
+        return sorted(map(tuple, df.filter(col).collect()))
+
+    for values in (want_parts, np.asarray(want_parts, dtype=np.int64)):
+        assert rows(exact.in_list("part_id", values)) == rows(F.col("part_id").isin(want_parts))
+    ids = np.arange(0, 320, 7, dtype=np.int32)
+    assert rows(exact.in_list("id", ids)) == rows(F.col("id").isin(ids.tolist()))
+    assert rows(exact.in_list("id", [])) == rows(F.col("id").isin([])) == []
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.filter(exact.in_list("part_id", want_parts)).explain("formatted")
+    pf = next(ln for ln in buf.getvalue().splitlines() if "PartitionFilters" in ln)
+    assert "part_id" in pf and "INSET" in pf, pf

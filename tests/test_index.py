@@ -335,8 +335,9 @@ def test_skewed_partition_sampling_unbiased(spark):
         [(10_000 + i, [-20.0, 1.0]) for i in range(200)], "id long, vec array<float>"
     ).repartition(15)
     df = big.unionByName(small)
-    builder = IVFIndexBuilder(sample_cap=200)
-    n, sample = builder._sample_and_count(df)
+    from jvector_spark.operators.sample import sample_and_count
+
+    n, sample = sample_and_count(df, 200, IVFIndexBuilder().seed)
     assert n == 2000
     share = float((sample[:, 0] > 0).mean())
     assert 0.8 <= share <= 0.98, f"big-partition sample share {share}, want ~0.9"

@@ -10,7 +10,7 @@ import pytest
 
 from conftest import count_jobs
 from jvector_spark.operators import exact
-from jvector_spark.operators.index import IVFIndexBuilder
+from jvector_spark.operators.index import IVFIndex, IVFIndexBuilder
 from jvector_spark.operators.lsh import rp_lsh_knn_join
 from jvector_spark.operators.quantize.pq import ProductQuantizer
 from jvector_spark.operators.search import two_phase_knn_join
@@ -165,6 +165,10 @@ def test_job_budgets(spark, setup):
     cost the engine pays whatever the data size). The blocked budgets
     catch a plan that broadcast-joins a local table: that costs a job."""
     corpus, idx, pq, codes, queries = setup
+    # a segment's DataFrame is read once per loaded index (schema
+    # inference + directory listing); the budgets are per search call
+    for seg in idx.manifest.segments:
+        idx._segment_data(seg.name)
     jobs = {
         "build": count_jobs(
             spark,
@@ -198,8 +202,18 @@ def test_job_budgets(spark, setup):
         ),
     }
     budget = {
-        "build": 7, "search": 5, "search_graph": 5, "threshold": 3,
-        "knn_join_blocked": 5,
-        "search_distributed": 9, "threshold_distributed": 7,
+        "build": 7, "search": 2, "search_graph": 3, "threshold": 2,
+        "knn_join_blocked": 3,
+        "search_distributed": 6, "threshold_distributed": 6,
     }
     assert all(jobs[op] <= budget[op] for op in budget), jobs
+
+
+def test_segment_data_read_once(spark, setup):
+    """A segment's DataFrame is built once per loaded index: a second
+    ``_segment_data`` call (every search's scan) starts no Spark job."""
+    idx = IVFIndex.load(spark, setup[1].path)
+    name = idx.manifest.segments[0].name
+    first = idx._segment_data(name)
+    assert count_jobs(spark, lambda: idx._segment_data(name)) == 0
+    assert idx._segment_data(name) is first

@@ -370,3 +370,23 @@ def test_blockwise_adc_topk_k_exceeds_n():
     )
     assert got.shape == (q, n)
     assert np.array_equal(ref, got)
+
+
+
+def test_recall_at_k_exact_across_partitionings(spark):
+    """Recall is a ratio of counts: 1 hit of 10 on each of 10 queries
+    reads exactly 0.1, and 128 hits of 160 exactly 0.8, whatever the
+    result frame's partitioning. A double sum of the per-query fractions
+    reads 0.09999999999999999, and 0.8 or 0.7999999999999999 depending
+    on the plan."""
+    for hits, want in (([1] * 10, 0.1), ([7, 7, 7, 7, 8, 5, 8, 7, 8, 9, 10, 8, 8, 9, 10, 10], 0.8)):
+        nq = len(hits)
+        gt = spark.createDataFrame(
+            [(q, q * 100 + i, i + 1) for q in range(nq) for i in range(10)],
+            "qid long, id long, rank int",
+        )
+        rows = [(q, q * 100 + i, i + 1) for q in range(nq) for i in range(hits[q])]
+        rows += [(q, 10_000 + q * 100 + i, 10) for q in range(nq) for i in range(10 - hits[q])]
+        res = spark.createDataFrame(rows, "qid long, id long, rank int")
+        for parts in (1, 7):
+            assert recall_at_k(res.repartition(parts), gt, 10) == want
