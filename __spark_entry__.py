@@ -606,7 +606,7 @@ def _ann_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase PQ search (J3): ADC first pass keeps overquery*k
     candidates, fp32 rerank returns exact scores for the reported rows.
     Gated: per-query recall@10 vs the exact oracle must be >= 0.5
-    (observed floors: 9/10 hits at sf0.01, 6/10 at sf0.1 at overquery=4 —
+    (observed floors: 9/10 hits at sf0.01, 7/10 at sf0.1 at overquery=4 —
     >=1-hit margin at every scale)."""
     from jvector_spark.operators import exact
     from jvector_spark.operators.quantize.pq import ProductQuantizer
@@ -1637,8 +1637,8 @@ def _ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the two-phase PQ path vs the exact oracle (A9) at
     overquery {1,2,4}: the reference's headline quality metric as a query
     (671.testing.md:37-50). Gated per overquery level with bounds that
-    hold across scale factors: observed recalls 0.74/0.94/0.99 at sf0.01
-    and 0.49/0.66/0.79 at sf0.1 vs bounds 0.4/0.55/0.65 (margins >=0.09;
+    hold across scale factors: observed recalls 0.68/0.91/0.99 at sf0.01
+    and 0.49/0.68/0.81 at sf0.1 vs bounds 0.4/0.55/0.65 (margins >=0.09;
     deterministic because PQ training is seeded)."""
     from jvector_spark.metrics import recall_at_k
     from jvector_spark.operators import exact

@@ -7,7 +7,7 @@ Computed as DataFrame joins against exact ground truth (SURVEY.md §2.5 A9).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -45,21 +45,21 @@ def mean_average_precision_at_k(
     id_col: str = "id",
 ) -> float:
     """MAP@k (ref AccuracyMetrics.java:100-146): mean over queries of
-    average precision over ranks 1..k."""
+    average precision over ranks 1..k. Averaged as decimals, as
+    ``recall_at_k`` does, so the result does not depend on how the plan
+    partitions the rows."""
     r = results.filter(F.col("rank") <= k).select(query_col, id_col, "rank")
     g = ground_truth.filter(F.col("rank") <= k).select(query_col, id_col)
     marked = r.join(
         g.withColumn("_hit", F.lit(1)), [query_col, id_col], "left"
     ).fillna(0, subset=["_hit"])
-    from pyspark.sql import Window
-
     w = Window.partitionBy(query_col).orderBy("rank").rowsBetween(Window.unboundedPreceding, 0)
     prec = marked.withColumn("cum_hits", F.sum("_hit").over(w)).withColumn(
-        "prec_at_i", F.col("cum_hits") / F.col("rank")
+        "prec_at_i", F.col("cum_hits").cast("decimal(20,0)") / F.col("rank")
     )
     ap = prec.filter(F.col("_hit") == 1).groupBy(query_col).agg(
-        (F.sum("prec_at_i") / F.lit(float(k))).alias("ap")
+        (F.sum("prec_at_i") / F.lit(int(k))).alias("ap")
     )
     all_q = g.select(query_col).distinct()
-    joined = all_q.join(ap, query_col, "left").fillna(0.0, subset=["ap"])
-    return float(joined.select(F.avg("ap")).collect()[0][0])
+    joined = all_q.join(ap, query_col, "left")
+    return float(joined.select(F.avg(F.coalesce("ap", F.lit(0)))).collect()[0][0])

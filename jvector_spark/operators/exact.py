@@ -225,7 +225,10 @@ def knn_join(
     strategy:
       - ``expr``: broadcast-crossJoin + JVM score expression + per-query
         window rank. Oracle-exact double math; shuffles |corpus|×|queries|
-        scored rows — fine for small query sets / correctness checks.
+        scored rows — fine for small query sets. It is the tests'
+        reference oracle (``tests/test_exact.py``, ``tests/test_index.py``):
+        it shares no Python scoring code with the other strategies, so
+        they are checked against an independent implementation.
       - ``numpy``: Arrow-batched BLAS scoring with per-partition partial
         top-k (map-side combine), then a final per-query merge over the
         reduced candidate set. Collects + broadcasts the query side, so

@@ -68,6 +68,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import tempfile
 from typing import Iterator
 
 import numpy as np
@@ -728,6 +729,21 @@ def graph_meta(index, seg_name: str) -> dict | None:
         return json.load(f)
 
 
+def _write_meta(gdir: str, meta: dict) -> None:
+    """Replace ``gdir/meta.json`` atomically: the dict goes to a temp file
+    in the same directory, then ``os.replace`` swaps it in, so
+    ``graph_meta`` reads the old meta or the new one, never a torn
+    write."""
+    fd, tmp = tempfile.mkstemp(dir=gdir, prefix="meta.", suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(meta, f)
+        os.replace(tmp, os.path.join(gdir, "meta.json"))
+    except BaseException:
+        os.unlink(tmp)
+        raise
+
+
 def build_graph(
     index,
     degree: int = 32,
@@ -881,18 +897,17 @@ def build_graph(
             .partitionBy("part_id")
             .parquet(os.path.join(gdir, "edges.parquet"))
         )
-        with open(os.path.join(gdir, "meta.json"), "w") as f:
-            json.dump(
-                {
-                    "degree": degree,
-                    "alpha": alpha,
-                    "overflow": overflow,
-                    "ef_construction": ef_c,
-                    "metric": met,
-                    "method": method,
-                },
-                f,
-            )
+        _write_meta(
+            gdir,
+            {
+                "degree": degree,
+                "alpha": alpha,
+                "overflow": overflow,
+                "ef_construction": ef_c,
+                "metric": met,
+                "method": method,
+            },
+        )
 
 
 # ---------------------------------------------------------- search (Spark)

@@ -29,9 +29,12 @@ pruning:
 - **IO shape at scale**: the fused scan reads (codes + vec) of
   n_probe/n_partitions of the corpus — the same bytes the classic
   two-stage plan reads in total (codes scan + fp32 rerank join), with one
-  scan, one shuffle, and one Python stage fewer. For survivor-only fp32
-  IO (id-bucketed corpus, point lookups) use
-  operators/search.two_phase_knn_join instead.
+  scan, one shuffle, and one Python stage fewer. A survivor-only fp32
+  read buys nothing in Spark: the classic plan's survivor join (a 20k x
+  64 parquet corpus, broadcast survivors) pushed only ``IsNotNull(id)``
+  into the fp32 scan and held no runtime filter, so it read every vector
+  row anyway. ``operators/search.two_phase_knn_join`` (no index) runs
+  this same fused kernel over codes joined to vectors.
 - **segments + compaction**: streaming appends accumulate segment dirs;
   search unions segments (J6 multi-index merge, free in a batch engine);
   ``compact()`` rewrites N segments as one with retrained PQ (ref
@@ -371,14 +374,15 @@ def _rerank_rows(frame: pd.DataFrame, nvq_c, block: bool):
     default rerank feature, NVQScorer.java; parquet column pruning means
     the 4-bytes/dim fp32 column is never read in that mode).
 
-    ``block=True`` decodes the WHOLE frame once, for tiles whose expected
-    candidate coverage reaches the row count (r9: bulk corpus-as-queries
-    tiles re-gathered the same rows in every 512-query chunk — the
-    per-chunk pandas iloc + bytes-join was 3,238 of 14,540 kernel
-    core-seconds at the 1M bulk shape). Otherwise returns a gather
-    ``idx -> (len(idx), d)`` that decodes only the candidate rows. fp32
-    blocks stay f32 (lossless storage values) and the kernel casts each
-    gathered chunk to f64, so both forms give bit-identical scores."""
+    ``block=True`` decodes the WHOLE frame once, for tiles (and
+    two-phase join batches) whose expected candidate coverage reaches the
+    row count (r9: bulk corpus-as-queries tiles re-gathered the same rows
+    in every 512-query chunk — the per-chunk pandas iloc + bytes-join was
+    3,238 of 14,540 kernel core-seconds at the 1M bulk shape). Otherwise
+    returns a gather ``idx -> (len(idx), d)`` that decodes only the
+    candidate rows. fp32 blocks stay f32 (lossless storage values) and
+    the kernel casts each gathered chunk to f64, so both forms give
+    bit-identical scores."""
     if nvq_c is not None:
         nvq, params = frame["nvq"], frame["nvq_params"]
         if block:
@@ -436,11 +440,13 @@ def _fused_block_topk(
     graph.py refill note). The IVF fine-cell route keeps refill — its
     cells are a recall lever, not a visited-set contract.
 
-    Three scorers run this kernel, so every route scores identically:
-    the IVF broadcast scan (``IVFIndex._segment_fused_scan``), the tile
-    scorer ``_tile_topk`` (the IVF tile scan and the blocked two-phase
-    join, both on ``exact.tile_join``), and graph-traversal rerank
-    (``graph._traverse_rerank``). Returns (qid, id, score) arrays.
+    Every two-phase route runs this kernel, so they all score
+    identically: the IVF broadcast scan (``IVFIndex._segment_fused_scan``),
+    the broadcast two-phase join (``search.two_phase_knn_join``, one call
+    per Arrow batch), the tile scorer ``_tile_topk`` (the IVF tile scan
+    and the blocked two-phase join, both on ``exact.tile_join``), and
+    graph-traversal rerank (``graph._traverse_rerank``). Returns (qid,
+    id, score) arrays.
 
     ``counters``: (visited_acc, reranked_acc) or (visited_acc,
     reranked_acc, stage_accs) — stage_accs is SearchTelemetry's

@@ -222,21 +222,6 @@ class NVQuantizer(VectorCompressor):
             codes, np.stack([np.asarray(p, dtype=np.float64) for p in params])
         )
 
-    def score_numpy(
-        self, metric: str, query: np.ndarray, codes: np.ndarray, params: np.ndarray
-    ) -> np.ndarray:
-        """Normalized similarity of one fp32 query vs NVQ-encoded rows —
-        the E11 scoring family (``nvqDotProduct8bit`` /
-        ``nvqSquareL2Distance8bit`` / ``nvqCosine8bit``,
-        VectorUtil.java:215-239, NVQScorer.java). The reference's kernels
-        fuse dequantize+score; dequantize-then-score is numerically
-        identical, and numpy batches amortize it the same way."""
-        from jvector_spark.functions import kernels
-
-        q = np.asarray(query, dtype=np.float64)[None, :]
-        rec = self._dequantize_rows(codes, params)
-        return kernels.similarity(metric, q, rec)[0]
-
     def reconstruction_error(self, mat: np.ndarray) -> float:
         codes, params = self.encode_numpy(mat)
         rec = self.decode_numpy(codes, params)

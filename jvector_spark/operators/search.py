@@ -2,21 +2,27 @@
 
 Reference: the read path of ``GraphSearcher.java:471-507`` — phase 1 scores
 with a lossy codec (PQ/BQ/NVQ), keeps ``rerankK = overquery × topK``
-candidates, phase 2 re-scores the survivors at full fp32 resolution and
+candidates, phase 2 re-scores the survivors at full resolution and
 returns the best ``topK`` (SURVEY.md §2.4 J3, §2.6 T2).
 
-Spark mapping and scale shape:
+Spark mapping: ``two_phase_knn_join`` is an IVF scan without an index (one
+partition) and runs the same fused kernel as every indexed route
+(``index._fused_block_topk``):
 
-- **stage 1** scans only the codes table (``m`` bytes per row, not ``4d``),
-  computes ADC scores numpy-vectorized per Arrow batch, and emits at most
-  ``rerankK`` candidates per query per batch (map-side combine). The
-  shuffle that follows carries ``O(rerankK × batches × queries)`` rows —
-  independent of corpus size.
-- **stage 2** joins the (tiny) survivor set back to the fp32 table. The
-  survivor side is broadcast, so the corpus never shuffles; with an
-  id-sorted / bucketed corpus the join prunes to the survivors' row groups.
-- ``overquery`` is the recall/cost knob, exactly the reference's
-  ``rerankK`` protocol (GraphSearcher.java:204-214).
+- the corpus side is built once as ``codes`` joined on id to the rerank
+  payload (fp32 ``vec``, or NVQ bytes + params), so both phases read one
+  row and no survivor set is ever joined back;
+- each corpus block (an Arrow batch on the broadcast route, a tile on the
+  blocked route) ADC-scores its codes, keeps a block-local
+  ``rerankK = overquery × k`` pool per query, reranks that pool at full
+  resolution and emits its block-local exact top-k; one per-query window
+  (``exact._rank_topk``) merges. The shuffle carries
+  ``O(k × blocks × queries)`` rows, independent of corpus size;
+- ``overquery`` is the recall/cost knob (the reference's ``rerankK``,
+  GraphSearcher.java:204-214), applied per block as on every IVF route:
+  each block's pool holds that block's share of a global ``rerankK`` cut,
+  so recall at a given overquery is at least the global protocol's (up to
+  near-ties of the f32 ADC accumulator).
 """
 
 from __future__ import annotations
@@ -26,10 +32,9 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jvector_spark.functions import kernels
 from jvector_spark.operators.quantize.pq import ProductQuantizer
 
 
@@ -194,62 +199,6 @@ class SearchCursor:
         self.close()
 
 
-def pq_score_scan(
-    codes_df: DataFrame,
-    pq: ProductQuantizer,
-    queries: list[tuple[int, np.ndarray]],
-    metric: str,
-    keep_per_batch: int,
-    id_col: str = "id",
-    codes_col: str = "codes",
-) -> DataFrame:
-    """Stage 1: ADC-score every (query, code) pair, keep top candidates per
-    Arrow batch per query. Returns (qid, id, score_approx)."""
-    qids = np.array([q[0] for q in queries], dtype=np.int64)
-    qmat = np.stack([np.asarray(q[1], dtype=np.float64) for q in queries])
-    sc = codes_df.sparkSession.sparkContext
-    luts = pq.adc_lut_batch(qmat, metric)
-    mag = pq.magnitude_lut() if metric == "COSINE" else None
-    qnorms = np.linalg.norm(qmat, axis=1)
-    b = sc.broadcast((pq.m, qids, luts, mag, qnorms, metric, keep_per_batch))
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m, q_ids, q_luts, mag_lut, q_norms, met, keep = b.value
-        cols = np.arange(m)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            codes = np.frombuffer(b"".join(pdf[codes_col]), dtype=np.uint8).reshape(len(pdf), m)
-            code_idx = codes.astype(np.int64)
-            if met == "COSINE":
-                mags = mag_lut[cols, code_idx].sum(axis=1)
-                mags = np.sqrt(np.maximum(mags, 1e-30))
-            out_scores = np.empty((len(q_ids), len(pdf)), dtype=np.float64)
-            for qi in range(len(q_ids)):
-                partial = q_luts[qi][cols, code_idx].sum(axis=1)
-                if met == "EUCLIDEAN":
-                    out_scores[qi] = 1.0 / (1.0 + partial)
-                elif met == "DOT_PRODUCT":
-                    out_scores[qi] = (1.0 + partial) / 2.0
-                else:
-                    denom = mags * max(q_norms[qi], 1e-30)
-                    out_scores[qi] = (1.0 + partial / denom) / 2.0
-            idx, vals = kernels.topk_per_row(out_scores, keep, ids=ids)
-            kk = idx.shape[1]
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(q_ids, kk),
-                    "id": ids[idx.ravel()],
-                    "score_approx": vals.ravel(),
-                }
-            )
-
-    return codes_df.select(id_col, codes_col).mapInPandas(
-        scan, schema="qid long, id long, score_approx double"
-    )
-
-
 def two_phase_knn_join(
     codes_df: DataFrame,
     vectors_df: DataFrame,
@@ -272,121 +221,39 @@ def two_phase_knn_join(
 
     Default rerank reads the fp32 table — exact reported scores (the
     reference's `InlineVectors` rerank). Passing ``nvq=(nvq_df, codec)``
-    reranks from an NVQ-encoded table instead, the reference's *default*
-    bench config (yaml-configs/index-parameters/default.yml `NVQ rerank`;
-    NVQScorer.java): ~4x fewer bytes read in stage 2 for near-fp32 scores.
+    reranks from an NVQ-encoded table instead (``nvq_df`` as
+    ``NVQuantizer.encode`` writes it), the reference's *default* bench
+    config (yaml-configs/index-parameters/default.yml `NVQ rerank`;
+    NVQScorer.java): ~4x fewer payload bytes for near-fp32 scores.
+
+    The corpus side is ``codes`` joined on id to the rerank payload, once
+    per call: a broadcast hash join while the codes side fits under
+    ``spark.sql.autoBroadcastJoinThreshold``, a shuffled join of both
+    sides above it. An ``IVFIndex`` stores codes and payload in one row
+    and needs no join.
 
     ``strategy``: ``broadcast`` collects + broadcasts the query side
-    (point-query-batch path, capped); ``blocked`` runs
-    ``exact.tile_join`` — no driver collect of either side, ADC stage 1
-    and rerank fused per tile by the IVF tile scorer (the un-indexed
-    sibling of ``IVFIndex.search(strategy="distributed")``: one partition,
-    so every tile scans every corpus block); ``auto`` routes on
-    query-side size (``m_hint``, or the same ``take(cap + 1)`` that
-    collects the broadcast side). ``m_hint``/``n_hint`` skip the sizing
-    jobs.
+    (point-query-batch path, capped) and scores every Arrow batch of the
+    corpus side in one ``mapInPandas``; ``blocked`` runs
+    ``exact.tile_join`` — no driver collect of either side (the
+    un-indexed sibling of ``IVFIndex.search(strategy="distributed")``:
+    one partition, so every tile scans every corpus block); ``auto``
+    routes on query-side size (``m_hint``, or the same ``take(cap + 1)``
+    that collects the broadcast side). ``m_hint``/``n_hint`` skip the
+    sizing jobs.
     """
-    from jvector_spark.operators.exact import _rank_topk, empty_ranked, route_query_batch
+    from jvector_spark.operators.exact import (
+        _rank_topk, empty_ranked, flat_blocks, route_query_batch, tile_join,
+    )
+    from jvector_spark.operators.index import _fused_block_topk, _rerank_rows, _tile_topk
 
     rerank_k = max(k, int(round(overquery * k)))
     batch = route_query_batch(
         queries_df, query_id_col, query_vec_col, "two_phase_knn_join", strategy,
         ("broadcast", "blocked"), m_hint,
     )
-    if batch is None:
-        return _two_phase_blocked(
-            codes_df, vectors_df, pq, queries_df, k, rerank_k, metric,
-            id_col, vec_col, codes_col, query_id_col, query_vec_col,
-            nvq, m_hint, n_hint,
-        )
-    qids, qmat = batch
-    if not len(qids):
-        return empty_ranked(vectors_df.sparkSession)
-    queries = list(zip(qids.tolist(), qmat))
-
-    stage1 = pq_score_scan(codes_df, pq, queries, metric, rerank_k, id_col, codes_col)
-    w = Window.partitionBy("qid").orderBy(F.desc("score_approx"), F.asc("id"))
-    survivors = (
-        stage1.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= rerank_k)
-        .select("qid", "id")
-    )
-
-    # stage 2: broadcast the survivor set against the rerank table; the join
-    # output is tiny (rerank_k per query), so the rerank itself is cheap.
-    sc = vectors_df.sparkSession.sparkContext
-    bq = sc.broadcast({qid: vec for qid, vec in queries})
-
-    if nvq is not None:
-        nvq_df, codec = nvq
-        joined = nvq_df.select(
-            F.col(id_col).alias("id"), "nvq_bytes", "nvq_params"
-        ).join(F.broadcast(survivors), "id")
-        bc = sc.broadcast(codec)
-
-        def rerank(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qmap, cdc = bq.value, bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                codes = np.frombuffer(b"".join(pdf["nvq_bytes"]), dtype=np.uint8).reshape(
-                    len(pdf), cdc.dim
-                )
-                params = np.stack([np.asarray(p, dtype=np.float64) for p in pdf["nvq_params"]])
-                scores = np.empty(len(pdf), dtype=np.float64)
-                for qid, grp in pdf.groupby("qid"):
-                    pos = pdf.index.get_indexer(grp.index.to_numpy())
-                    scores[pos] = cdc.score_numpy(metric, qmap[qid], codes[pos], params[pos])
-                yield pd.DataFrame({"qid": pdf["qid"], "id": pdf["id"], "score": scores})
-
-    else:
-        joined = vectors_df.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("_v")
-        ).join(F.broadcast(survivors), "id")
-
-        def rerank(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qmap = bq.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                x = kernels.as_matrix(pdf["_v"])
-                scores = np.empty(len(pdf), dtype=np.float64)
-                for qid, grp in pdf.groupby("qid"):
-                    q = qmap[qid][None, :]
-                    rows = grp.index.to_numpy()
-                    pos = pdf.index.get_indexer(rows)
-                    scores[pos] = kernels.similarity(metric, q, x[pos])[0]
-                yield pd.DataFrame({"qid": pdf["qid"], "id": pdf["id"], "score": scores})
-
-    reranked = joined.mapInPandas(rerank, schema="qid long, id long, score double")
-    return _rank_topk(reranked, k)
-
-
-def _two_phase_blocked(
-    codes_df: DataFrame,
-    vectors_df: DataFrame,
-    pq: ProductQuantizer,
-    queries_df: DataFrame,
-    k: int,
-    rerank_k: int,
-    metric: str,
-    id_col: str,
-    vec_col: str,
-    codes_col: str,
-    query_id_col: str,
-    query_vec_col: str,
-    nvq,
-    m_hint: int | None,
-    n_hint: int | None,
-) -> DataFrame:
-    """Uncapped two-phase join: codes + rerank payload co-locate on id
-    (one equi-join shuffle), then ``exact.tile_join`` scores every tile
-    with the IVF tile scan's fused ADC->rerank kernel (``_tile_topk``) —
-    per-tile rerank_k can only ADD candidates vs a global cut, so recall
-    at a given overquery is >= the broadcast route's."""
-    from jvector_spark.operators.exact import _rank_topk, flat_blocks, tile_join
-    from jvector_spark.operators.index import _tile_topk
-
+    if batch is not None and not len(batch[0]):
+        return empty_ranked(codes_df.sparkSession)
     if nvq is None:
         nvq_codec = None
         payload = vectors_df.select(F.col(id_col).alias("rid"), F.col(vec_col).alias("vec"))
@@ -395,25 +262,51 @@ def _two_phase_blocked(
         payload = nvq_df.select(
             F.col(id_col).alias("rid"), F.col("nvq_bytes").alias("nvq"), "nvq_params"
         )
-    c_side = (
-        codes_df.select(F.col(id_col).alias("rid"), F.col(codes_col).alias("codes"))
-        .join(payload, "rid")
-        .withColumn("part_id", F.lit(0))
-    )
-    q_side = queries_df.select(
-        F.lit(0).alias("part_id"),
-        F.col(query_id_col).alias("rid"),
-        F.col(query_vec_col).cast("array<float>").alias("vec"),
-    )
-    bt = codes_df.sparkSession.sparkContext.broadcast((pq, metric, k, rerank_k, nvq_codec))
+    # codes and rerank payload co-locate on id once; both routes score it
+    c_side = codes_df.select(
+        F.col(id_col).alias("rid"), F.col(codes_col).alias("codes")
+    ).join(payload, "rid")
+    sc = codes_df.sparkSession.sparkContext
 
-    def score_tile(key, qs: pd.DataFrame, cs: pd.DataFrame) -> pd.DataFrame:
-        return _tile_topk(qs, cs, *bt.value)
+    if batch is None:
+        q_side = queries_df.select(
+            F.lit(0).alias("part_id"),
+            F.col(query_id_col).alias("rid"),
+            F.col(query_vec_col).cast("array<float>").alias("vec"),
+        )
+        bt = sc.broadcast((pq, metric, k, rerank_k, nvq_codec))
 
-    tiled = tile_join(
-        c_side, q_side, flat_blocks(codes_df, queries_df, n_hint, m_hint), score_tile
-    )
-    return _rank_topk(tiled, k)
+        def score_tile(key, qs: pd.DataFrame, cs: pd.DataFrame) -> pd.DataFrame:
+            return _tile_topk(qs, cs, *bt.value)
+
+        scored = tile_join(
+            c_side.withColumn("part_id", F.lit(0)), q_side,
+            flat_blocks(codes_df, queries_df, n_hint, m_hint), score_tile,
+        )
+    else:
+        qids, qmat = batch
+        b = sc.broadcast(
+            (pq, pq.query_stage1(qmat, metric), qids, qmat,
+             np.linalg.norm(qmat, axis=1), metric, k, rerank_k, nvq_codec)
+        )
+
+        def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            cdc, s1, q_ids, q_mat, q_norms, met, kk, keep, nvq_c = b.value
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                # same decode rule as _tile_topk: the whole batch once when
+                # the candidate pools could cover it, else a gather
+                oq, oi, osc = _fused_block_topk(
+                    met, kk, keep, q_ids, q_mat, s1, q_norms,
+                    pdf["rid"].to_numpy(dtype=np.int64),
+                    cdc.decode_codes(pdf["codes"]),
+                    _rerank_rows(pdf, nvq_c, block=len(q_ids) * keep >= len(pdf)),
+                )
+                yield pd.DataFrame({"qid": oq, "id": oi, "score": osc})
+
+        scored = c_side.mapInPandas(scan, schema="qid long, id long, score double")
+    return _rank_topk(scored, k)
 
 
 def underfilled_queries(result: DataFrame, k: int, qid_col: str = "qid") -> DataFrame:

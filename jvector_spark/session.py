@@ -13,6 +13,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_MB = 16 << 10
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when ``JVS_DRIVER_MEMORY`` is unset:
+    ``min(16g, 40% of MemTotal)``. The local-mode driver JVM hosts every
+    executor, grows into its heap and shares the host with the Python
+    workers, so a fixed 16g heap on a 15 GB host gets the JVM OOM-killed.
+    Hosts without ``/proc/meminfo`` keep 16g."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) >> 10  # reported in kB
+                    return f"{min(_MAX_DRIVER_MB, total_mb * 2 // 5)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{_MAX_DRIVER_MB}m"
+
 
 def get_spark(
     app_name: str = "jvector_spark",
@@ -46,7 +65,10 @@ def get_spark(
         # local disk and single-digit seconds on object stores; the
         # distributed job only pays off at far higher dir counts.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
-        .config("spark.driver.memory", os.environ.get("JVS_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("JVS_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.awt.headless=true")
     )

@@ -680,3 +680,30 @@ def test_batch_beam_pilot_seeding_topef():
     assert np.array_equal(seeded[:, 0], np.arange(8))
     # pilot seeding never lands a WORSE beam: per-query best-5 mean score
     assert float(seeded_sc[:, :5].mean()) >= float(base_sc[:, :5].mean()) - 1e-6
+
+
+def test_graph_meta_write_is_atomic(tmp_path, monkeypatch):
+    """A meta write that dies mid-way leaves the previous ``meta.json``
+    readable and no temp file behind."""
+    import json
+    import types
+
+    from jvector_spark.operators import graph
+
+    index = types.SimpleNamespace(_segments={"seg": {"dir": str(tmp_path)}})
+    gdir = tmp_path / "graph"
+    gdir.mkdir()
+    old = {"degree": 16, "metric": "COSINE"}
+    graph._write_meta(str(gdir), old)
+    assert graph_meta(index, "seg") == old
+
+    def torn(obj, f):
+        f.write('{"degree": ')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn)
+    with pytest.raises(OSError, match="disk full"):
+        graph._write_meta(str(gdir), {"degree": 32, "metric": "COSINE"})
+    monkeypatch.undo()
+    assert graph_meta(index, "seg") == old
+    assert sorted(p.name for p in gdir.iterdir()) == ["meta.json"]

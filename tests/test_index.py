@@ -159,28 +159,50 @@ def test_spill_recall_low_nprobe(spark, corpus_df, queries_df, tmp_path_factory)
     assert r >= 0.9, f"spill=4 recall@{K} at n_probe=4 = {r}"
 
 
-def test_two_level_fine_pruning(spark, corpus_df, queries_df, tmp_path_factory):
+def _own_corpus(spark, seed: int):
+    """A uniform corpus and 16 queries like ``corpus_df``/``queries_df``,
+    from a private generator: the session ``rng`` stream would make the
+    data depend on which tests ran first."""
+    mat = np.random.default_rng(seed).uniform(-1.0, 1.0, size=(N, DIM)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, mat[i].tolist()) for i in range(N)], "id long, vec array<float>"
+    ).cache()
+    queries = spark.createDataFrame(
+        [(i, mat[(i * 53) % N].tolist()) for i in range(16)],
+        "qid long, vec array<float>",
+    ).cache()
+    return df, queries
+
+
+def test_two_level_fine_pruning(spark, tmp_path_factory):
     """IMI-style two-level index: sub_id IN (...) is pushed into the
     sorted parquet scan, recall stays above the bound at a fraction of the
-    rows scanned, and omitting n_probe_fine degrades to plain IVF."""
-    df, _ = corpus_df
-    path = str(tmp_path_factory.mktemp("ivf_fine") / "index")
-    idx = IVFIndexBuilder(
-        metric="COSINE", n_partitions=16, pq_m=8, fine_factor=8
-    ).fit(df, path)
-    assert idx.manifest.fine_factor == 8
-    gt = exact.knn_join(df, queries_df, K, metric="COSINE", strategy="numpy").cache()
+    rows scanned, and omitting n_probe_fine degrades to plain IVF. The
+    bound holds for the mean over three own-seeded corpora, so one
+    neighbour more or less on one corpus does not decide the test."""
+    r_fines = []
+    for seed in (1, 2, 3):
+        df, queries_df = _own_corpus(spark, seed)
+        path = str(tmp_path_factory.mktemp(f"ivf_fine_{seed}") / "index")
+        idx = IVFIndexBuilder(
+            metric="COSINE", n_partitions=16, pq_m=8, fine_factor=8
+        ).fit(df, path)
+        assert idx.manifest.fine_factor == 8
+        gt = exact.knn_join(df, queries_df, K, metric="COSINE", strategy="numpy").cache()
 
-    fine = idx.search(queries_df, K, n_probe=16, overquery=8.0, n_probe_fine=24)
-    plan = fine._jdf.queryExecution().executedPlan().toString()
-    assert "sub_id" in plan  # pushed probe filter reached the scan
-    r_fine = recall_at_k(fine, gt, K)
-    assert r_fine >= 0.8, f"two-level recall@{K}={r_fine}"
+        fine = idx.search(queries_df, K, n_probe=16, overquery=8.0, n_probe_fine=24)
+        plan = fine._jdf.queryExecution().executedPlan().toString()
+        assert "sub_id" in plan  # pushed probe filter reached the scan
+        r_fine = recall_at_k(fine, gt, K)
+        r_fines.append(r_fine)
 
-    # without fine probing the same index behaves as plain IVF (>= recall)
-    plain = idx.search(queries_df, K, n_probe=16, overquery=8.0)
-    r_plain = recall_at_k(plain, gt, K)
-    assert r_plain >= r_fine - 1e-9
+        # without fine probing the same index behaves as plain IVF (>= recall)
+        plain = idx.search(queries_df, K, n_probe=16, overquery=8.0)
+        r_plain = recall_at_k(plain, gt, K)
+        assert r_plain >= r_fine - 1e-9, (seed, r_plain, r_fine)
+        for frame in (gt, df, queries_df):
+            frame.unpersist()
+    assert np.mean(r_fines) >= 0.8, f"two-level recall@{K} per seed {r_fines}"
 
 
 def test_two_level_survives_append_and_compact(spark, corpus_df, queries_df, tmp_path_factory):
@@ -624,15 +646,14 @@ def test_recall_floor_low_overquery(spark, rng, tmp_path_factory):
 
 
 # --------------------------------------------------------------- residual PQ
-@pytest.fixture(scope="module")
-def twin_corpus(spark):
+def _twin_data(spark, seed: int):
     """Clustered corpus with near-twin rows — the regime where GLOBAL PQ
     saturates (all of a cluster's rows share codes) and residual PQ keeps
     resolving (codebooks see only the within-cell spread). Own-seeded
     generator: the shared session `rng` fixture is STATEFUL, so drawing
     from it here would make this corpus depend on which tests ran first —
     and the residual-vs-global A/B margin with it."""
-    rng = np.random.default_rng(1234)
+    rng = np.random.default_rng(seed)
     centers = rng.normal(size=(40, 32)) * 5.0
     asg = rng.integers(0, 40, size=6000)
     mat = (centers[asg] + 0.3 * rng.normal(size=(6000, 32))).astype(np.float32)
@@ -645,6 +666,11 @@ def twin_corpus(spark):
         [(int(i), mat[i].tolist()) for i in qsel], "qid long, vec array<float>"
     ).cache()
     return df, qdf
+
+
+@pytest.fixture(scope="module")
+def twin_corpus(spark):
+    return _twin_data(spark, 1234)
 
 
 @pytest.mark.parametrize("metric", ["COSINE", "EUCLIDEAN", "DOT_PRODUCT"])
@@ -668,23 +694,29 @@ def test_residual_exhaustive_exact(spark, twin_corpus, tmp_path_factory, metric)
 def test_residual_beats_global_pq_low_overquery(spark, twin_corpus, tmp_path_factory):
     """The point of residual encoding: at a starved rerank budget
     (overquery=1 — stage-1 ADC ranking IS the result) residual codes must
-    out-recall global codes on a twin-dense corpus."""
-    df, qdf = twin_corpus
-    gt = exact.knn_join(df, qdf, K, metric="COSINE", strategy="numpy").cache()
-    rec = {}
-    for res in (False, True):
-        path = str(tmp_path_factory.mktemp(f"resab_{res}") / "index")
-        idx = IVFIndexBuilder(
-            metric="COSINE", n_partitions=16, pq_m=8, spill=2,
-            pq_residual=res, seed=3,
-        ).fit(df, path)
-        rec[res] = recall_at_k(idx.search(qdf, K, n_probe=16, overquery=1.0), gt, K)
-    assert rec[True] > rec[False], f"residual {rec[True]} vs global {rec[False]}"
-    # sanity floor only (the assertion under test is the A/B above): the
-    # r10 content-keyed sampler redrew this tiny corpus's kmeans layout
-    # and the deterministic draw reads 0.4833 at overquery=1 — the old
-    # 0.5 floor was calibrated on the partition-seeded rand draw
-    assert rec[True] >= 0.45
+    out-recall global codes on a twin-dense corpus. Both the A/B and the
+    sanity floor are read as means over three own-seeded corpora."""
+    rec = {False: [], True: []}
+    for seed in (1234, 1235, 1236):
+        df, qdf = twin_corpus if seed == 1234 else _twin_data(spark, seed)
+        gt = exact.knn_join(df, qdf, K, metric="COSINE", strategy="numpy").cache()
+        for res in (False, True):
+            path = str(tmp_path_factory.mktemp(f"resab_{seed}_{res}") / "index")
+            idx = IVFIndexBuilder(
+                metric="COSINE", n_partitions=16, pq_m=8, spill=2,
+                pq_residual=res, seed=3,
+            ).fit(df, path)
+            rec[res].append(
+                recall_at_k(idx.search(qdf, K, n_probe=16, overquery=1.0), gt, K)
+            )
+        gt.unpersist()
+        if seed != 1234:  # the module fixture stays cached for later tests
+            df.unpersist()
+            qdf.unpersist()
+    mean = {res: float(np.mean(r)) for res, r in rec.items()}
+    assert mean[True] > mean[False], f"residual {rec[True]} vs global {rec[False]}"
+    # sanity floor only (the assertion under test is the A/B above)
+    assert mean[True] >= 0.45, rec
 
 
 def test_residual_route_parity(spark, twin_corpus, tmp_path_factory):

@@ -161,9 +161,10 @@ def test_auto_route_costs_no_extra_jobs(spark, setup, op):
 
 def test_job_budgets(spark, setup):
     """Absolute Spark-job budgets for a small build, a point IVF search,
-    a point graph search, a threshold search and the three blocked routes (the per-call fixed
-    cost the engine pays whatever the data size). The blocked budgets
-    catch a plan that broadcast-joins a local table: that costs a job."""
+    a point graph search, a threshold search, both two-phase routes and
+    the three other blocked routes (the per-call fixed cost the engine
+    pays whatever the data size). The blocked budgets catch a plan that
+    broadcast-joins a local table: that costs a job."""
     corpus, idx, pq, codes, queries = setup
     # a segment's DataFrame is read once per loaded index (schema
     # inference + directory listing); the budgets are per search call
@@ -200,11 +201,24 @@ def test_job_budgets(spark, setup):
             spark,
             lambda: idx.threshold_search(queries, T, strategy="distributed").collect(),
         ),
+        "two_phase": count_jobs(
+            spark,
+            lambda: two_phase_knn_join(
+                codes, corpus, pq, queries, K, strategy="broadcast"
+            ).collect(),
+        ),
+        "two_phase_blocked": count_jobs(
+            spark,
+            lambda: two_phase_knn_join(
+                codes, corpus, pq, queries, K, strategy="blocked", n_hint=N, m_hint=M
+            ).collect(),
+        ),
     }
     budget = {
         "build": 7, "search": 2, "search_graph": 3, "threshold": 2,
         "knn_join_blocked": 3,
         "search_distributed": 6, "threshold_distributed": 6,
+        "two_phase": 3, "two_phase_blocked": 4,
     }
     assert all(jobs[op] <= budget[op] for op in budget), jobs
 

@@ -390,3 +390,33 @@ def test_recall_at_k_exact_across_partitionings(spark):
         res = spark.createDataFrame(rows, "qid long, id long, rank int")
         for parts in (1, 7):
             assert recall_at_k(res.repartition(parts), gt, 10) == want
+
+
+def test_map_at_k_exact_across_partitionings(spark):
+    """MAP is averaged as decimals too: one hit at rank 1 on each of 10
+    queries reads exactly 0.1 (a double average of ten 0.1 APs reads
+    0.09999999999999999), 128 rank-ordered hits of 160 exactly 0.8, and
+    APs with thirds in them read the same at every partitioning."""
+    from jvector_spark.metrics import mean_average_precision_at_k
+
+    res = spark.createDataFrame(
+        [(q, q * 100 + i, i + 1) for q in range(16) for i in range(10)],
+        "qid long, id long, rank int",
+    )
+    cases = (
+        ([[0]] * 10, 0.1),
+        ([list(range(h)) for h in (7, 7, 7, 7, 8, 5, 8, 7, 8, 9, 10, 8, 8, 9, 10, 10)], 0.8),
+        ([[0, 2], [1, 2, 5], [0, 3, 8]] * 3, None),
+    )
+    for hit_ranks, want in cases:
+        gt = spark.createDataFrame(
+            [(q, q * 100 + i, i + 1) for q, ranks in enumerate(hit_ranks) for i in ranks],
+            "qid long, id long, rank int",
+        )
+        got = {
+            parts: mean_average_precision_at_k(res.repartition(parts), gt.repartition(parts), 10)
+            for parts in (1, 7)
+        }
+        assert got[1] == got[7], got
+        if want is not None:
+            assert got[1] == want, got
