@@ -1457,11 +1457,11 @@ def _knn_topk_ivf_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DISTRIBUTED top-k route under the full hash oracle: exhaustive
     probes + rerank_k = |corpus| make the tile-join search provably exact
     (stage 1 keeps every probed row), so the uncapped plan — probe
-    assignment as a map-only pass, (part_id, qb, cb) tile join, no driver
-    collect of either side — must hash-match DuckDB's exact top-10. The
-    same route's threshold mode is oracle'd by dedup_embedding_ivf; this
-    row pins the top-k mode (ref GraphSearcher.java:222 — searches are
-    uncapped streams)."""
+    assignment as a map-only pass, a tile join with one tile per probed
+    partition, no driver collect of either side — must hash-match
+    DuckDB's exact top-10. The same route's threshold mode is oracle'd
+    by dedup_embedding_ivf; this row pins the top-k mode (ref
+    GraphSearcher.java:222 — searches are uncapped streams)."""
     import tempfile
 
     from jvector_spark.operators.index import IVFIndexBuilder

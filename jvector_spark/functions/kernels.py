@@ -35,7 +35,7 @@ METRICS = (EUCLIDEAN, DOT_PRODUCT, COSINE)
 # their idle-host cost from exactly this; a fresh 64 MB buffer costs
 # 1.5-2.7 s on this host's page-fault path vs 0.04 s for the GEMM that
 # fills it). Buffers grow geometrically and live for the process; the
-# role set and the thread set (the graph block pool) are both bounded.
+# role set and the thread set are both bounded.
 _SCRATCH: dict = {}
 
 

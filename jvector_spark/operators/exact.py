@@ -399,7 +399,7 @@ _Q_TILE = 2048
 
 def flat_blocks(
     corpus: DataFrame, queries: DataFrame, n_hint: int | None, m_hint: int | None
-) -> dict[int, tuple[int, int]]:
+) -> tuple[int, int]:
     """``tile_join`` block counts of an un-indexed blocked join (one
     partition, ``part_id`` 0): ``ceil(m / _Q_TILE)`` query blocks ×
     ``ceil(n / _C_TILE)`` corpus blocks. ``n_hint`` / ``m_hint`` replace
@@ -407,14 +407,15 @@ def flat_blocks(
     set granularity)."""
     n = n_hint if n_hint is not None else corpus.count()
     m = m_hint if m_hint is not None else queries.count()
-    return {0: (max(1, math.ceil(m / _Q_TILE)), max(1, math.ceil(n / _C_TILE)))}
+    return max(1, math.ceil(m / _Q_TILE)), max(1, math.ceil(n / _C_TILE))
 
 
 def tile_join(
     c_side: DataFrame,
     q_side: DataFrame,
-    blocks: dict[int, tuple[int, int]],
+    blocks: tuple[int, int],
     score_tile: Callable[[tuple, pd.DataFrame, pd.DataFrame], pd.DataFrame],
+    n_parts: int = 1,
 ) -> DataFrame:
     """The 2-D blocked tile join behind every uncapped route: the exact
     blocked k-NN join, the blocked two-phase join and the IVF tile scan
@@ -422,45 +423,37 @@ def tile_join(
 
     ``c_side`` / ``q_side``: corpus rows and query rows, each with
     ``part_id``, ``rid`` and its own payload columns (a column only one
-    side carries is null on the other). ``blocks``: part_id ->
-    (q_blocks, c_blocks). Corpus rows hash into their partition's
-    c-blocks by ``pmod(xxhash64(rid), c_blocks)`` and replicate to each of
-    its q-blocks; query rows do the transpose. Rows of a partition absent
-    from ``blocks`` are dropped. Every (part_id, qb, cb) tile holding rows
+    side carries is null on the other). ``blocks``: (q_blocks, c_blocks),
+    the same for every partition. Corpus rows hash into c-blocks by
+    ``pmod(xxhash64(rid), c_blocks)`` and replicate to each q-block;
+    query rows do the transpose. Every (part_id, qb, cb) tile holding rows
     of both sides is scored by ``score_tile(key, qs, cs)``, which returns
     (qid, id, score) rows. Shuffle volume is O(corpus·q_blocks +
-    queries·c_blocks) per partition — the standard all-pairs shape (cf.
+    queries·c_blocks) — the standard all-pairs shape (cf.
     ``dedup.embedding_neardup``) — and no task holds more than ~one tile.
-
-    The block counts ride the plan as constant arrays indexed by
-    ``part_id``, not as a broadcast-joined table: every broadcast join of
-    a local table costs one more Spark job per call.
+    The un-indexed joins pass ``flat_blocks`` over one partition; the IVF
+    scan passes (1, 1) over its ``n_parts`` probed partitions, one tile
+    each.
 
     One tile ≈ one task: the session default (shuffle.partitions =
-    n_cores) hashes ~10^3 tiles into ~32 shuffle partitions, and the
+    n_cores) hashes many tiles into few shuffle partitions, and the
     unlucky partition that draws several hot-cluster tiles becomes a
     straggler AQE cannot split (skew handling only covers joins, not
     applyInPandas exchanges). The tile count is known on the driver, so
     the union repartitions by the group key to ~that many partitions;
     groupBy reuses the hash partitioning — one exchange either way, same
     shuffle volume, shorter tail."""
-    width = max(blocks, default=-1) + 1
-
-    def n_blocks(side: int) -> Column:
-        counts = [blocks[p][side] if p in blocks else None for p in range(width)]
-        return F.get(F.array(*map(F.lit, counts)).cast("array<int>"), F.col("part_id"))
-
-    qbn, cbn = n_blocks(0), n_blocks(1)
+    qbn, cbn = blocks
     c = c_side.select(
         "*",
-        F.pmod(F.xxhash64("rid"), cbn).cast("int").alias("cb"),
-        F.explode(F.sequence(F.lit(0), qbn - 1)).alias("qb"),
+        F.pmod(F.xxhash64("rid"), F.lit(cbn)).cast("int").alias("cb"),
+        F.explode(F.sequence(F.lit(0), F.lit(qbn - 1))).alias("qb"),
         F.lit(False).alias("is_q"),
     )
     q = q_side.select(
         "*",
-        F.pmod(F.xxhash64("rid"), qbn).cast("int").alias("qb"),
-        F.explode(F.sequence(F.lit(0), cbn - 1)).alias("cb"),
+        F.pmod(F.xxhash64("rid"), F.lit(qbn)).cast("int").alias("qb"),
+        F.explode(F.sequence(F.lit(0), F.lit(cbn - 1))).alias("cb"),
         F.lit(True).alias("is_q"),
     )
 
@@ -471,7 +464,7 @@ def tile_join(
             return empty_hits()
         return score_tile(key, qs, cs)
 
-    n_tiles = sum(qb * cb for qb, cb in blocks.values())
+    n_tiles = n_parts * qbn * cbn
     spark = c_side.sparkSession
     n_shuffle = int(min(4096, max(spark.sparkContext.defaultParallelism, n_tiles)))
     return (

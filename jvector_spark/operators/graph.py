@@ -85,39 +85,8 @@ _ALPHA_STEP = 0.2  # VamanaDiversityProvider.java:78 (currentAlpha += 0.2f)
 
 # Per-(role, dtype, thread) reused scratch for the numpy hot loops —
 # shared with kernels.scratch (see its docstring for the r9 allocator
-# measurements). Thread-keyed, so the block pool below is race-free.
+# measurements).
 _scratch = kernels.scratch
-
-
-# In-task block threading for SKEWED graph-build stages (guide §2.5): a
-# hot kmeans cell (the 1M bench layout holds a 52k-row partition, 67x
-# the median) builds O(n_p^2) in ONE task that runs alone long after the
-# rest of the stage drained. Above _PAR_ROWS_MIN rows the blocked
-# candidate/prune loops fan their blocks across this pool — numpy
-# releases the GIL inside the GEMM/partition/compare kernels, per-block
-# work is independent, and writes land in disjoint output slices, so the
-# result is bit-identical to the sequential loop. Small partitions (the
-# balanced bulk of every stage) never touch the pool.
-_PAR_ROWS_MIN = 16_384
-_POOL = None
-
-
-def _block_pool():
-    global _POOL
-    if _POOL is None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        # default: a quarter of the host's cores, 2..8 — big-partition
-        # tasks are rare within a stage, so a few threads fill the tail
-        # without oversubscribing hosts where many tasks run concurrently
-        # (the straggler regime this pool exists for has idle cores).
-        dflt = max(2, min(8, (os.cpu_count() or 8) // 4))
-        try:
-            w = max(1, int(os.environ.get("JVS_TASK_THREADS", str(dflt))))
-        except ValueError:
-            w = dflt
-        _POOL = ThreadPoolExecutor(max_workers=w, thread_name_prefix="jvs-blk")
-    return _POOL
 
 
 def _take_rows(role: str, x: np.ndarray, idx: np.ndarray) -> np.ndarray:
@@ -226,7 +195,7 @@ def _knn_candidates(
         else None
     )
 
-    def _one_block(lo: int) -> None:
+    for lo in range(0, n, block):
         # dots + the score epilogue run in reused scratch with in-place
         # ops (see kernels.scratch: per-block fresh allocs of this size
         # serialize 32 workers on the kernel's mmap/page-zero path).
@@ -257,15 +226,6 @@ def _knn_candidates(
         ii, vv = kernels.topk_per_row(s, ef)
         idx[lo:hi] = ii
         sc[lo:hi] = vv
-
-    los = list(range(0, n, block))
-    if n >= _PAR_ROWS_MIN and len(los) > 1:
-        # straggler partition: per-block rows are independent and write
-        # disjoint slices — bit-identical to the sequential loop
-        list(_block_pool().map(_one_block, los))
-    else:
-        for lo in los:
-            _one_block(lo)
     return idx, sc
 
 
@@ -288,20 +248,12 @@ def _build_partition_graph(
     def prune(idx: np.ndarray, sc: np.ndarray, valid: np.ndarray) -> np.ndarray:
         sel = np.zeros_like(valid)
 
-        def _one(lo: int) -> None:
+        for lo in range(0, len(idx), diversity_block):
             hi = min(lo + diversity_block, len(idx))
             v = _take_rows("prune_v", x, idx[lo:hi])
             sel[lo:hi] = _retain_diverse_batch(
                 _pair_sims(met, v), sc[lo:hi], valid[lo:hi], degree, alpha
             )
-
-        los = list(range(0, len(idx), diversity_block))
-        if n >= _PAR_ROWS_MIN and len(los) > 1:
-            # scratch is thread-keyed; blocks write disjoint slices
-            list(_block_pool().map(_one, los))
-        else:
-            for lo in los:
-                _one(lo)
         return sel
 
     # pass 1 (M3): diverse forward edges from the candidate lists
@@ -440,7 +392,7 @@ def _pilot_entries(entries: np.ndarray, n_local: int, ef: int) -> np.ndarray:
 # Above this many rows a partition's graph builds incrementally: the
 # exact candidate pass is O(n_p^2) GEMM, the beam-insert path is
 # ~linear. Measured r9 at degree=16/ef_c=32/d=64: 52k rows exact 63.5 s
-# (42.2 s block-threaded) vs incremental 23.8 s — the true crossover
+# vs incremental 23.8 s — the true crossover
 # sits near ~20-30k, not the ~64k first estimated; 32k keeps every
 # recall-gated bench shape (<=12.5k-row partitions) on the exact
 # builder while skew-tail cells (the 1M layout's 52k hot cell) take the

@@ -63,7 +63,6 @@ from pyspark.accumulators import AccumulatorParam
 
 from jvector_spark.functions import kernels
 from jvector_spark.operators.exact import (
-    _C_TILE,
     _rank_topk,
     empty_hits,
     empty_ranked,
@@ -75,16 +74,6 @@ from jvector_spark.operators.quantize.pq import ProductQuantizer
 from jvector_spark.types import MANIFEST_VERSION, IndexManifest, SegmentInfo
 
 MAX_CENTROIDS = 4096  # keep the broadcast "upper layer" small
-
-# Query-tile height for the IVF tile join. Corpus rows replicate ONCE PER
-# QUERY BLOCK, so this directly divides the dominant shuffle term
-# (stored_rows x qbn x ~4 bytes/dim); 4x exact.py's _Q_TILE because the
-# in-tile kernel chunks the query axis at 512 anyway (LUTs, score matrix
-# AND the fine-cell mask are all per-chunk), leaving per-task memory
-# bounded while the shuffle shrinks. 16384 measured best at the 1M
-# probe (131 s vs 142 s @ 8192 and 155 s @ 32768 — wider tiles cut
-# replication but cost task balance on zipf-hot partitions).
-_Q_TILE_IVF = 16384
 
 # pq_residual="auto": enable residual encoding when the coarse clustering
 # explains at least half the sample variance (residual energy <= ratio x
@@ -162,7 +151,7 @@ def _unpack_f32(col):
 
 def _write_small_parquet(dir_path: str, table) -> None:
     """Overwrite-write a DRIVER-RESIDENT tiny table (centroids, fine
-    centroids, tombstones) as a single-file parquet dir via pyarrow.
+    centroids) as a single-file parquet dir via pyarrow.
 
     These tables are kilobytes-to-megabytes of driver state; routing them
     through ``spark.createDataFrame(...).coalesce(1).write`` costs ~4.5 s
@@ -602,9 +591,9 @@ def _tile_topk(
     coarse cell per IVF tile — part_id is the leading group key — so the
     per-(query, cell) dot is a vector); None otherwise. ``n_fine``: the
     fine-level size on a two-level index, for per-query cell masks.
-    ``counters`` as in ``_fused_block_topk``; on the tile route each
-    corpus row is visited once PER TILE REPLICA it lands in — the counter
-    measures scan work done, which includes the q_blocks replication."""
+    ``counters`` as in ``_fused_block_topk``; on the IVF tile route each
+    corpus row of a probed partition is visited once (one tile per
+    partition)."""
     stages = counters[2] if counters is not None else None
     t_mark = time.perf_counter() if stages is not None else 0.0
     if counters is not None:
@@ -1548,8 +1537,9 @@ class IVFIndexBuilder:
                         [stat_rows.get(i, (0,) * 5)[4] > 0 for i in range(k_c)]
                     ),
                     # stored copies per partition (spill included), summed
-                    # from the write job's map stage — per-partition tile
-                    # sizing reads these instead of re-scanning the index
+                    # from the write job's map stage — graph-build bins and
+                    # the distributed scan's partition filter read these
+                    # instead of re-scanning the index
                     "n_stored": pa.array(part_counts, pa.int64()),
                 }
             ),
@@ -1603,7 +1593,9 @@ class IVFIndexBuilder:
 
 
 def _persist_assignment(assigned: DataFrame) -> DataFrame:
-    """Materialize-once storage for a distributed probe-assignment pass.
+    """Materialize-once storage for a distributed probe-assignment pass
+    that is read twice: the two-level fine-sub union job, then the tile
+    join. No other call persists its assignment.
 
     Replaces ``localCheckpoint(eager=False)`` (r7, the 10M driver-heap
     lever): localCheckpoint stores the RDD's deserialized Java row
@@ -1612,11 +1604,11 @@ def _persist_assignment(assigned: DataFrame) -> DataFrame:
     (r6 measurement; needed 64 GB). DataFrame ``persist`` instead caches
     Tungsten COLUMNAR COMPRESSED batches with disk spill
     (MEMORY_AND_DISK), built incrementally per partition — the same
-    evaluate-once guarantee for the downstream sizing count / sub-union
-    / tile join, at a fraction of the heap, and lineage is retained so
-    an evicted block recomputes instead of failing the query (on a real
-    cluster, executor loss no longer kills the search). Blocks are
-    freed with the usual cache lifecycle (unpersist / session end)."""
+    evaluate-once guarantee at a fraction of the heap, and lineage is
+    retained so an evicted block recomputes instead of failing the query
+    (on a real cluster, executor loss no longer kills the search). Nothing
+    unpersists it: blocks stay cached until the session ends or the
+    cache evicts them."""
     from pyspark.storagelevel import StorageLevel
 
     return assigned.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1918,7 +1910,8 @@ class IVFIndex:
 
     def _part_counts(self, seg_name: str) -> np.ndarray:
         """Per-partition STORED row counts (spilled copies included) — the
-        observed-distribution input for per-partition tile sizing. Free
+        input of graph-build bin packing, ``tune_graph_search``'s IO bound
+        and the distributed scan's non-empty partition filter. Free
         for r6+ segments (persisted as the centroid table's ``n_stored``
         column, summed from the write job's own map stage); legacy
         segments fall back to ONE cached partition-key agg (column-pruned
@@ -2153,17 +2146,18 @@ class IVFIndex:
         - ``distributed``: NO driver collect of either side. Probe
           assignment runs as a map-only pass over the query DataFrame
           (centroids broadcast), queries shuffle to their probed
-          ``part_id``s, and the shared blocked tile join
-          (``exact.tile_join``, keyed by (part_id, qb, cb)) runs the same
-          fused ADC→rerank scoring per tile. The
-          corpus-as-queries path: bulk embedding joins, semantic dedup.
+          ``part_id``s, and the shared tile join (``exact.tile_join``,
+          one tile per probed partition) runs the same fused ADC→rerank
+          scoring per tile. The corpus-as-queries path: bulk embedding
+          joins, semantic dedup.
         - ``auto``: ``broadcast`` at or below ``BROADCAST_QUERY_CAP`` query
           rows, else ``distributed`` — decided by ``m_hint``, or by the
           same ``take(cap + 1)`` that collects the broadcast side.
 
         ``m_hint``: approximate query-side row count; routes without
-        reading the query side and skips the distributed sizing count
-        (affects only routing + tile granularity, never correctness).
+        reading the query side and, on the distributed route, skips the
+        fine-sub union when ``m_hint`` x ``n_probe_fine`` saturates the
+        fine level (affects only routing + IO, never correctness).
         ``n_probe_fine`` works on BOTH routes: the
         distributed route computes the probed fine-sub union with a
         map-only pass (no query collect) and pushes the same
@@ -2552,39 +2546,39 @@ class IVFIndex:
         """Uncapped k-NN or threshold search: neither side is ever
         driver-collected.
 
-        Per segment: distributed probe assignment, then a (part_id, qb, cb)
-        tile join running the same fused two-phase scoring as the broadcast
-        scan. Per-tile rerank_k can only ADD candidates relative to a
-        global rerank_k, so recall at a given overquery is >= the
-        broadcast path's (same argument as the Arrow-batch-local rerank).
+        Per segment: distributed probe assignment, then an
+        ``exact.tile_join`` with ONE tile per probed partition, running
+        the same fused two-phase scoring as the broadcast scan. Per-tile
+        rerank_k can only ADD candidates relative to a global rerank_k, so
+        recall at a given overquery is >= the broadcast path's (same
+        argument as the Arrow-batch-local rerank).
 
         ``threshold`` set: threshold mode. Assignment is bound-pruned
         (``_threshold_probes``), survivors are scored exactly at fp32
         (``_threshold_hits``), so results remain EXACT — pruning only ever
         saves IO — and segments merge with ``_merge_threshold``. The
-        assignment distribution is bound-dependent (not knowable a
-        priori), so the caller passes no ``m_hint`` or ``n_probe_fine``:
-        the assignment is always persisted and counted.
+        caller passes no ``m_hint`` or ``n_probe_fine``.
 
-        Tile sizing never re-runs the query lineage: the assignment output
-        is persisted (columnar compressed, disk-spilling — see
-        ``_persist_assignment``) whenever anything downstream would
-        evaluate it more than once (no ``m_hint`` -> the sizing count;
-        fine pruning -> the sub-union distinct) — the map pass runs
-        exactly ONCE either way. With ``m_hint`` and no fine pruning,
-        nothing re-reads the assignment before the tile join, so no
-        materialization is needed.
+        The query lineage runs exactly once: the tile join reads the
+        assignment once, and only a call that derives the fine-sub union
+        (below) reads it twice, so only that call persists it (columnar
+        compressed, disk-spilling — see ``_persist_assignment``). Every
+        other call persists nothing and scans every non-empty partition
+        through its static ``part_id`` filter (a safe superset of the
+        probed set; a partition no query probed meets no query rows).
 
         On a two-level index the probed fine-sub union (the pushed
         ``sub_id IN (...)`` scan filter) is derived from the ``subs``
-        column the assignment pass already computed — explode + distinct
-        over the checkpoint, never a second pass over the query side (r6
-        ADVICE). The collected union is INDEX-METADATA sized (<= n_fine
-        ids, <= 65536), the same driver-residency class as the centroids.
-        When ``m_hint`` predicts the union saturates the fine level
-        (corpus-as-queries bulk), the filter is skipped outright: it
-        would prune ~nothing while costing the checkpoint job + distinct
-        — the per-query mask alone carries the fine semantics there."""
+        column the assignment pass already computed — never a second pass
+        over the query side (r6 ADVICE). ONE job over the persisted
+        assignment returns both the union and the EXACT probed ``part_id``
+        set, which then replaces the all-non-empty ``part_id`` filter
+        (r9 ADVICE). Both are INDEX-METADATA sized (<= n_fine ids, <=
+        65536), the same driver-residency class as the centroids. When
+        ``m_hint`` predicts the union saturates the fine level
+        (corpus-as-queries bulk), the union is skipped outright: it would
+        prune ~nothing while costing the persist + that job — the
+        per-query mask alone carries the fine semantics there."""
         use_nvq = rerank == "nvq"
         parts = []
         for seg in self.manifest.segments:
@@ -2595,7 +2589,7 @@ class IVFIndex:
             # corpus-as-queries scale the union saturates the fine level
             # (measured 7,879/8,000 cells at 200k queries), so the
             # row-group skip prunes ~nothing while deriving it costs a
-            # full checkpoint materialization + explode-distinct-collect.
+            # full persist + explode-collect.
             # Skip it when the EXPECTED coverage saturates (m_hint x npf
             # >= 4x the fine level); small m_hint batches keep the filter.
             derive_subfilter = bool(fine_npf) and (
@@ -2607,49 +2601,17 @@ class IVFIndex:
                 threshold=threshold, fine_npf=fine_npf, probe_ratio=probe_ratio,
                 npf_per_probe=npf_per_probe,
             )
-            if m_hint is None or derive_subfilter:
-                assigned = _persist_assignment(assigned)
-            rows_p = self._part_counts(seg.name)
-            if m_hint is not None and not derive_subfilter:
-                # no sizing job (bulk corpus-as-queries): per-partition
-                # query load approximated as proportional to stored rows.
-                # The keys are ALL non-empty partitions — a safe SUPERSET
-                # of the true probed set (downstream pruning on a superset
-                # never drops needed rows; at bulk scale the probed set
-                # saturates the partitions anyway). Held-out batches are
-                # small enough that misestimation only shifts tile
-                # granularity, never correctness.
-                n_assign = int(m_hint) * _probe_depth(info, n_probe)
-                tot = max(int(rows_p.sum()), 1)
-                assign_p = {
-                    int(p): max(1, int(n_assign * rows_p[p] / tot))
-                    for p in np.flatnonzero(rows_p)
-                }
-            else:
-                # The assignment is persisted (sizing mode, or an m_hint
-                # batch that derives the fine-sub filter): ONE job over
-                # the checkpoint yields the EXACT per-partition counts —
-                # tiles are sized from the observed load and, for sparse
-                # probing (clustered queries, small n_probe), the static
-                # part_id pruning below drops every unprobed partition
-                # instead of the m_hint superset (r9 ADVICE: the superset
-                # let unprobed partitions' rows enter the tile shuffle
-                # replicated qbn times on m_hint+fine batches).
-                assign_p = {
-                    int(r["part_id"]): int(r["count"])
-                    for r in assigned.groupBy("part_id").count().collect()
-                }
+            part_ids = np.flatnonzero(self._part_counts(seg.name)).tolist()
             sub_filter = None
             if derive_subfilter:
-                sub_filter = sorted(
-                    int(r["sub_id"])
-                    for r in assigned.select(
-                        F.explode("subs").alias("sub_id")
-                    ).distinct().collect()
-                )
+                assigned = _persist_assignment(assigned)
+                probed = assigned.select(
+                    "part_id", F.explode_outer("subs").alias("sub_id")
+                ).agg(F.collect_set("part_id"), F.collect_set("sub_id")).first()
+                part_ids, sub_filter = sorted(probed[0]), sorted(probed[1])
             parts.append(
                 self._segment_tile_scan(
-                    info, assigned, metric, k, rerank_k, rows_p, assign_p,
+                    info, assigned, metric, k, rerank_k, part_ids,
                     predicate, accept_df, use_nvq, threshold, sub_filter=sub_filter,
                     n_fine=(len(info["fine"]) if fine_npf else None),
                     telemetry=telemetry,
@@ -2666,8 +2628,7 @@ class IVFIndex:
         metric: str,
         k: int,
         rerank_k: int,
-        rows_p: np.ndarray,
-        assign_p: dict,
+        part_ids: list[int],
         predicate,
         accept_df: DataFrame | None,
         use_nvq: bool,
@@ -2676,46 +2637,25 @@ class IVFIndex:
         n_fine: int | None = None,
         telemetry=None,
     ) -> DataFrame:
-        """``exact.tile_join`` between probe assignments and the probed
-        scan, keyed by the coarse ``part_id``. Block counts are PER
-        PARTITION, sized from the observed per-partition stored rows
-        (``rows_p``) and assignment counts (``assign_p``: part_id ->
-        count); each (part_id, qb, cb) tile scores its pair with the fused
+        """``exact.tile_join`` between probe assignments and the scan of
+        ``part_ids``, ONE tile per partition: each ``part_id`` group scores
+        all its assignments against all its rows with the fused
         ADC->rerank kernel (threshold mode: exact fp32 scores + filter).
-        No task holds more than ~one bounded tile — including on
-        zipf-skewed corpora, where uniform-average sizing handed the hot
-        partition tiles proportional to its skew (r6 straggler fix).
+
+        ``part_ids`` is a STATIC partition filter, already on the driver:
+        planner-time pruning on the ``part_id`` directory column, so no
+        broadcast semi-join re-evaluates the assignment lineage (at the 1M
+        corpus-as-queries shape that semi-join re-ran the full query
+        pass, 725 of 5,639 executor core-seconds, to produce part_ids the
+        driver already had).
 
         ``sub_filter`` (two-level index): the probed fine-sub union as a
         STATIC pushed ``sub_id IN (...)`` filter — parquet row-group
         min/max stats skip unprobed sub-clusters (files are sorted by
         (part_id, sub_id) at write time), and pruned rows never enter the
         tile shuffle."""
-        # PER-PARTITION tile sizing (r6: uniform-average sizing gave
-        # zipf-hot partitions one oversized tile per block pair —
-        # straggler tasks; now every tile holds <= ~_C_TILE rows x
-        # _Q_TILE_IVF assignments no matter how skewed the partition)
-        cb_of = {
-            int(p): max(1, math.ceil(rows_p[p] / _C_TILE))
-            for p in np.flatnonzero(rows_p)
-        }
-        qb_of = {p: max(1, math.ceil(c / _Q_TILE_IVF)) for p, c in assign_p.items()}
         data = self._segment_data(info["name"])
-        # Probed-partition scan pruning as a STATIC partition filter on
-        # qb_of's keys, already on the driver: the EXACT probed set when
-        # the assignment was persisted (sizing mode, m_hint+fine batches),
-        # and ALL non-empty partitions — a safe superset — in plain
-        # m_hint mode, where pruning exactly would re-evaluate the query
-        # lineage. <= MAX_CENTROIDS ints, planner-time partition pruning
-        # on the part_id directory column. The old broadcast semi-join on
-        # assigned.select("part_id").distinct() re-evaluated the
-        # probe-assignment lineage whenever the assignment was not
-        # persisted (m_hint mode): at the 1M corpus-as-queries shape that
-        # broadcast alone re-ran the full 1M-query mapInPandas pass — 725
-        # of 5,639 executor core-seconds — to produce ~1000 part_ids the
-        # driver already had (guide §2.4; stage-attributed from the Spark
-        # UI's per-stage executor times).
-        data = data.filter(in_list("part_id", qb_of))
+        data = data.filter(in_list("part_id", part_ids))
         if sub_filter is not None:
             data = data.filter(in_list("sub_id", sub_filter))
         data = self._apply_liveness(data)  # F2 tombstones
@@ -2740,10 +2680,6 @@ class IVFIndex:
         q_side = assigned.select(
             "part_id", F.col("qid").alias("rid"), "vec", *(["subs"] if n_fine else [])
         )
-        blocks = {
-            p: (qb_of.get(p, 1), cb_of.get(p, 1)) for p in set(cb_of) | set(qb_of)
-        }
-
         bt = self.spark.sparkContext.broadcast(
             (info["pq"], metric, k, rerank_k, threshold,
              self._nvq_codec(use_nvq and threshold is None), n_fine,
@@ -2767,7 +2703,7 @@ class IVFIndex:
                 cs["rid"].to_numpy(dtype=np.int64), kernels.as_matrix(cs["vec"]),
             )
 
-        return tile_join(c_side, q_side, blocks, score_tile)
+        return tile_join(c_side, q_side, (1, 1), score_tile, n_parts=len(part_ids))
 
     def threshold_search(
         self,
@@ -2872,7 +2808,14 @@ class IVFIndex:
         (the ``ids`` argument is a driver list by signature, and the merge
         is a set union of longs — megabytes at hundreds of millions of
         tombstones). The SCAN-side liveness anti-join stays fully
-        distributed (``_apply_liveness``), which is where scale matters."""
+        distributed (``_apply_liveness``), which is where scale matters.
+
+        The merged table is written as ONE parquet file next to the old
+        one and swapped in with ``os.replace``, so a reader or a crash
+        sees either the old tombstones or the new ones, never none. A
+        legacy tombstone DIRECTORY (older indexes) cannot be replaced by a
+        file atomically: it is removed once, on its first rewrite, just
+        before the swap."""
         import pyarrow as pa
         import pyarrow.parquet as papq
 
@@ -2887,13 +2830,17 @@ class IVFIndex:
                 .astype(np.int64)
             )
             new_ids = np.union1d(existing, new_ids)
-        tmp = os.path.join(self.path, "tombstones.parquet.tmp")
-        _write_small_parquet(tmp, pa.table({"id": pa.array(new_ids, pa.int64())}))
-        import shutil
+        tmp = final + ".tmp"
+        papq.write_table(pa.table({"id": pa.array(new_ids, pa.int64())}), tmp)
+        try:
+            if os.path.isdir(final):
+                import shutil
 
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.replace(tmp, final)
+                shutil.rmtree(final)
+            os.replace(tmp, final)
+        except BaseException:
+            os.unlink(tmp)
+            raise
         self.manifest.save(self.path)
 
     def append(
@@ -3003,11 +2950,16 @@ class IVFIndex:
         )
         import shutil
 
+        fresh.save(self.path)
         t = os.path.join(self.path, "tombstones.parquet")
         if full and os.path.exists(t):
-            # full compact: tombstoned rows are physically gone everywhere
-            shutil.rmtree(t)
-        fresh.save(self.path)
+            # full compact: tombstoned rows are physically gone everywhere.
+            # Removed only once the manifest that drops them is saved, so a
+            # failed save leaves every deleted id deleted.
+            if os.path.isdir(t):
+                shutil.rmtree(t)  # legacy tombstone directory
+            else:
+                os.remove(t)
         # GC superseded segment dirs AFTER the manifest swap (atomic-manifest-
         # first ordering: readers on the old manifest break only once the new
         # one is durable — ref compactor physically replaces the index file).

@@ -102,10 +102,9 @@ class SearchTelemetry:
 
     Route-dependent ``visited_rows`` semantics: the broadcast scan counts
     each stored row once per scanned partition group, while the
-    distributed TILE route counts each row once per tile replica — i.e.
-    inflated by that segment's ``q_blocks`` replication factor, because
-    the counter measures scan work actually done and the tile join really
-    does re-read each corpus block per query block. Do not compare the
+    distributed TILE route counts each row once per probed partition
+    (one tile each, holding every query that probed it), because the
+    counter measures scan work actually done. Do not compare the
     raw counter across routes; for the point-query IO model use
     ``IVFIndex.probe_io_stats`` instead."""
 

@@ -911,35 +911,36 @@ def span_dedup_sql(
     text_col: str = "text", span_len: int = 50, src: str = "documents"
 ) -> str:
     """DuckDB twin of :func:`span_dedup` (raw-window mode). Parallel
-    ``unnest`` calls zip, replicating posexplode; the named-struct MIN
-    picks the same lexicographic (doc_id, wpos) winner."""
+    ``unnest`` calls zip, replicating posexplode; each window is one
+    ``string_agg`` over the next ``span_len`` token rows, and every
+    occurrence of a window after its lexicographic (doc_id, wpos) first
+    is marked by ``row_number`` — no window list per document and no
+    self-join, so memory follows the window count."""
     n = span_len
     return f"""
-WITH docs AS (SELECT doc_id, string_split({text_col}, ' ') AS toks FROM {src}),
-wins AS (
-  SELECT doc_id,
-         unnest(range(0, greatest(len(toks) - {n - 1}, 0))) AS wpos,
-         unnest(list_transform(range(1, greatest(len(toks) - {n - 1}, 0) + 1),
-                               i -> array_to_string(toks[i:i+{n - 1}], ' '))) AS win
-  FROM docs
+WITH toks_e AS (
+  SELECT doc_id, unnest(string_split({text_col}, ' ')) AS token,
+         unnest(range(0, len(string_split({text_col}, ' ')))) AS tpos
+  FROM {src}
 ),
-firsts AS (
-  SELECT win AS wkey, MIN(struct_pack(doc_id := doc_id, wpos := wpos)) AS first
-  FROM wins GROUP BY win
+framed AS (
+  SELECT doc_id, tpos AS wpos, string_agg(token, ' ') OVER w AS win,
+         count(*) OVER w AS width
+  FROM toks_e
+  WINDOW w AS (PARTITION BY doc_id ORDER BY tpos
+               ROWS BETWEEN CURRENT ROW AND {n - 1} FOLLOWING)
 ),
 marked AS (
-  SELECT w.doc_id, w.wpos FROM wins w JOIN firsts f ON w.win = f.wkey
-  WHERE NOT (f.first.doc_id = w.doc_id AND f.first.wpos = w.wpos)
+  SELECT doc_id, wpos FROM (
+    SELECT doc_id, wpos,
+           row_number() OVER (PARTITION BY win ORDER BY doc_id, wpos) AS occ
+    FROM framed WHERE width = {n}
+  ) WHERE occ > 1
 ),
 cover AS (
   SELECT DISTINCT doc_id, tpos FROM (
     SELECT doc_id, unnest(range(wpos, wpos + {n})) AS tpos FROM marked
   )
-),
-toks_e AS (
-  SELECT doc_id, unnest(string_split({text_col}, ' ')) AS token,
-         unnest(range(0, len(string_split({text_col}, ' ')))) AS tpos
-  FROM {src}
 ),
 kept AS (
   SELECT t.doc_id, t.tpos, t.token FROM toks_e t

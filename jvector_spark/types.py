@@ -8,7 +8,8 @@ directory of Parquet component tables plus a JSON manifest:
 
     <index>/
       meta.json                      # manifest (below)
-      tombstones.parquet             # deleted ids (F2/M5), optional
+      tombstones.parquet             # deleted ids (F2/M5), optional; one
+                                     # file (a directory in older indexes)
       segments/<seg>/
         centroids.parquet            # coarse centroids (the "upper layers")
         vectors.parquet/             # (id, vec) partitioned by part_id

@@ -129,6 +129,41 @@ def test_threshold_distributed_matches_broadcast(spark, big_setup):
     assert ga == gb
 
 
+def test_single_large_partition_matches_broadcast(spark, tmp_path_factory):
+    """A 20,000-row partition is scored as ONE tile (the tile route gives
+    every probed partition one tile, whatever its size): with a rerank
+    pool covering every row, distributed top-k and distributed threshold
+    search return the broadcast route's rows."""
+    n, k = 20_000, 10
+    corpus = _mk_corpus(spark, np.random.default_rng(20_000), n).cache()
+    path = str(tmp_path_factory.mktemp("ivf_one_part") / "index")
+    idx = IVFIndexBuilder(
+        metric="COSINE", n_partitions=1, spill=1, pq_m=4
+    ).fit(corpus, path)
+    queries = corpus.filter("id < 16").selectExpr("id as qid", "vec").cache()
+
+    def topk(strategy):
+        res = idx.search(
+            queries, k, n_probe=1, overquery=float(n) / k, strategy=strategy
+        )
+        return sorted(
+            (r["qid"], r["rank"], r["id"], round(r["score"], 9)) for r in res.collect()
+        )
+
+    def threshold(strategy):
+        res = idx.threshold_search(queries, 0.97, strategy=strategy)
+        return sorted((r["qid"], r["id"], round(r["score"], 9)) for r in res.collect())
+
+    got = topk("distributed")
+    assert len(got) == 16 * k
+    assert got == topk("broadcast")
+    got = threshold("distributed")
+    assert len(got) > 16
+    assert got == threshold("broadcast")
+    queries.unpersist()
+    corpus.unpersist()
+
+
 def test_threshold_auto_routes_over_cap(spark, big_setup):
     """Corpus-as-queries threshold search (the semantic-dedup shape) runs
     uncapped and matches the exact brute-force pair set."""
@@ -231,11 +266,12 @@ def test_two_phase_blocked_matches_broadcast(spark, big_setup):
 
 
 def test_distributed_sizing_reads_query_lineage_once(spark, big_setup):
-    """Tile sizing must not re-run the query lineage (r4 verdict: the
-    distributed route full-counted the query side a second time). Without
-    ``m_hint`` the assignment output is localCheckpoint-ed and the count
-    materializes it — an accumulator on the query lineage proves exactly
-    ONE evaluation end to end, for both top-k and threshold routes."""
+    """The distributed route must not re-run the query lineage (r4
+    verdict: it full-counted the query side a second time). Without
+    ``m_hint`` and without a fine level the tile join is the one reader
+    of the probe assignment — an accumulator on the query lineage proves
+    exactly ONE evaluation end to end, for both top-k and threshold
+    routes."""
     corpus, idx, _ = big_setup
     for route in ("search", "threshold"):
         acc = spark.sparkContext.accumulator(0)

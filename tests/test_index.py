@@ -143,6 +143,63 @@ def test_compact_preserves_results(spark, corpus_df, queries_df, tmp_path_factor
     assert not ({row["id"] for row in after.collect()} & set(range(100)))
 
 
+def test_delete_failed_swap_keeps_old_tombstones(
+    spark, corpus_df, tmp_path_factory, monkeypatch
+):
+    """A delete whose tombstone swap fails leaves the previous tombstones
+    readable: the merged table is written beside the old one and only
+    ``os.replace`` puts it in place."""
+    import os
+
+    df, _ = corpus_df
+    path = str(tmp_path_factory.mktemp("ivf_del_fault") / "index")
+    idx = IVFIndexBuilder(metric="COSINE", n_partitions=8, pq_m=8).fit(
+        df.filter("id < 1000"), path
+    )
+    idx.delete([1, 2, 3])
+
+    def crash(src, dst):
+        raise OSError("crash before swap")
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError, match="crash before swap"):
+        idx.delete([4, 5])
+    monkeypatch.undo()
+    t = IVFIndex.load(spark, path).tombstones()
+    assert t is not None, "the old tombstones are gone"
+    assert {r["id"] for r in t.collect()} == {1, 2, 3}
+
+
+def test_compact_failed_manifest_save_keeps_deletes(
+    spark, corpus_df, tmp_path_factory, monkeypatch
+):
+    """A full compaction removes the tombstones only after the manifest
+    that drops the deleted rows is saved: when the save fails, a reload
+    still hides every deleted id."""
+    from jvector_spark.types import IndexManifest
+
+    df, _ = corpus_df
+    path = str(tmp_path_factory.mktemp("ivf_cmp_fault") / "index")
+    idx = IVFIndexBuilder(metric="COSINE", n_partitions=8, pq_m=8).fit(
+        df.filter("id < 1000"), path
+    )
+    deleted = set(range(0, 1000, 10))
+    idx.delete(sorted(deleted))
+
+    def crash(self, index_path):
+        raise OSError("crash before manifest save")
+
+    monkeypatch.setattr(IndexManifest, "save", crash)
+    with pytest.raises(OSError, match="crash before manifest save"):
+        idx.compact()
+    monkeypatch.undo()
+    live = {
+        r["id"] for r in IVFIndex.load(spark, path).live_vectors().select("id").collect()
+    }
+    assert not live & deleted
+    assert len(live) == 1000 - len(deleted)
+
+
 def test_spill_recall_low_nprobe(spark, corpus_df, queries_df, tmp_path_factory):
     """Multi-assignment (spill) is the recall/visited-fraction lever that
     stands in for the reference graph's traversal reach: at n_probe=4 (an

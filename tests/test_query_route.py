@@ -217,7 +217,7 @@ def test_job_budgets(spark, setup):
     budget = {
         "build": 7, "search": 2, "search_graph": 3, "threshold": 2,
         "knn_join_blocked": 3,
-        "search_distributed": 6, "threshold_distributed": 6,
+        "search_distributed": 3, "threshold_distributed": 3,
         "two_phase": 3, "two_phase_blocked": 4,
     }
     assert all(jobs[op] <= budget[op] for op in budget), jobs
