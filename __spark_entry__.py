@@ -13,13 +13,14 @@ summation-order differences between Spark and DuckDB cannot flip the hash.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from jvector_spark.functions.similarity import (  # noqa: E402
     similarity,
@@ -918,7 +919,6 @@ def _stream_ingest_search_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-10 — so segmentation and compaction are both proven
     result-invariant under the oracle at any scale factor."""
     import glob
-    import os
     import shutil
     import tempfile
 
@@ -1082,7 +1082,6 @@ def _stream_search_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact), so the streamed answers must hash-match DuckDB's exact
     top-10 AND equal the batch search bit-for-bit."""
     import glob
-    import os
     import shutil
     import tempfile
 
@@ -1511,7 +1510,6 @@ def _fvecs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     WRITE is deliberately driver-side (fvecs is a single-file benchmark
     artifact, as in the reference's loaders); the READ under test is the
     distributed binaryFile + mapInPandas decode."""
-    import os
     import tempfile
 
     import numpy as np
@@ -1553,7 +1551,6 @@ def _hdf5_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     leading elements hash-match the embeddings table. Driver-side staging
     is the format's role (single-file benchmark artifact); everything
     downstream is a regular distributed DataFrame."""
-    import os
     import tempfile
 
     import numpy as np

@@ -42,16 +42,18 @@ segment's graph when every merged segment had one — the reference
 rebuilds its graph at compaction the same way
 (OnDiskGraphIndexCompactor.java:296).
 
-Search (``GraphSearcher.java:222-507`` beam semantics, batched): queries
-probe their ``n_probe`` nearest centroids exactly like IVF search (the
-hierarchical-descent analog), then a ZERO-CORPUS-SHUFFLE pass over the
-probed partitions (query replicas are grouped by partition; each group
+Search (``GraphSearcher.java:222-507`` beam semantics, batched) has ONE
+path, like the reference's one ``GraphSearcher``: the caller's query
+DataFrame probes its ``n_probe`` nearest centroids exactly like IVF search
+(the hierarchical-descent analog), then a ZERO-CORPUS-SHUFFLE pass over
+the probed partitions (query replicas are grouped by partition; each group
 task direct-reads its partition's data/edges dirs) runs a vectorized
 multi-query best-first beam search per partition — ADC/hamming
 approximate scores steer the traversal (the reference's
 compressed-first-pass search), and the surviving beam reranks
 through the same fused exact-scoring kernel every other route uses, so
 reported scores carry identical semantics (fp32-exact or dequantized-NVQ).
+No route choice, collect or fallback depends on the batch size.
 Tombstoned rows are traversed but filtered from RESULTS (the reference's
 two-phase delete: deleted nodes keep routing until cleanup,
 GraphIndexBuilder.java markDeleted -> removeDeletedNodes).
@@ -77,7 +79,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jvector_spark.functions import kernels
-from jvector_spark.operators.exact import empty_hits, empty_ranked, route_query_batch
+from jvector_spark.operators.exact import empty_hits
 
 __all__ = ["build_graph", "graph_search"]
 
@@ -348,10 +350,10 @@ def _exact_sims_block(
     (non-optimized) path reduces each (b, p) pair over d in a fixed
     order, BIT-IDENTICAL to the gathered hop kernel — so a row scored at
     seed time equals the same row scored at hop time, and a query's rows
-    do not depend on which queries share its group or chunk (the
-    broadcast and distributed strategies group the same queries
-    differently). A BLAS GEMM's reduction order depends on the batch
-    shape (measured: last-ULP drift -> route-parity test failure)."""
+    do not depend on which queries share its group or chunk (that
+    follows the query frame's partitioning). A BLAS GEMM's reduction
+    order depends on the batch shape (measured: last-ULP drift ->
+    route-parity test failure)."""
     dots = np.einsum("bd,pd->bp", q, c)
     if met == "DOT_PRODUCT":
         return ((1.0 + dots) / 2.0).astype(np.float32)
@@ -927,7 +929,6 @@ def _batch_beam(
     n_local: int,
     ef: int,
     counters=None,
-    return_scores: bool = False,
     seed_sc: np.ndarray | None = None,
 ) -> np.ndarray:
     """Vectorized multi-query best-first beam search (GraphSearcher.java
@@ -1033,10 +1034,7 @@ def _batch_beam(
         beam_id[aq] = np.take_along_axis(all_id, order, axis=1)
         beam_sc[aq] = np.take_along_axis(all_sc, order, axis=1)
         beam_ex[aq] = np.take_along_axis(all_ex, order, axis=1)
-    masked = np.where(beam_sc > -np.inf, beam_id, -1)
-    if return_scores:
-        return masked, beam_sc
-    return masked
+    return np.where(beam_sc > -np.inf, beam_id, -1)
 
 
 def _decode_partition(
@@ -1050,8 +1048,7 @@ def _decode_partition(
     (data_pdf_sorted, ids, nbr_mat, entries, codes, mags, rsq) or None
     when either side is empty. Neighbors hold GLOBAL ids; local ordinals
     resolve via one flattened searchsorted (no per-row Python loop).
-    ``codec`` is the stage-1 codec, None under exact steering (stage-1
-    codes never touched)."""
+    ``codec`` is the stage-1 codec."""
     if len(data_pdf) == 0 or len(edge_pdf) == 0:
         return None
     data_pdf = data_pdf.sort_values("id", kind="stable").reset_index(drop=True)
@@ -1086,11 +1083,8 @@ def _decode_partition(
     entries = np.flatnonzero(edge_pdf["entry"].to_numpy())
     if len(entries) == 0:
         entries = np.array([0])
-    codes = mags = None
-    if codec is not None:
-        codes = codec.decode_codes(data_pdf["codes"])
-        if need_mags:
-            mags = codec.row_magnitudes(codes)
+    codes = codec.decode_codes(data_pdf["codes"])
+    mags = codec.row_magnitudes(codes) if need_mags else None
     rsq = data_pdf["rsq"].to_numpy(dtype=np.float32) if res_m else None
     return data_pdf, ids, nbr_mat, entries, codes, mags, rsq
 
@@ -1111,7 +1105,7 @@ def _traverse_rerank(
     """Batched beam traversal + fused exact rerank of ONE partition for
     the GIVEN (already selected) queries. ``s1_sel`` is the codec's
     ``query_stage1`` payload for exactly these queries (aligned with
-    ``q_ids``), or None for exact steering; ``qc_vec`` is the per-query
+    ``q_ids``); ``qc_vec`` is the per-query
     q.centroid dot for residual decomposition. The per-group core of the
     one search plan (``_traverse_probed_partitions``)."""
     from jvector_spark.operators.index import (
@@ -1123,55 +1117,6 @@ def _traverse_rerank(
     data_pdf, ids, nbr_mat, entries, codes, mags, rsq = part_pack
     n_local = len(ids)
     n_q = len(q_ids)
-
-    if s1_sel is None:
-        # EXACT steering (steer='exact'): the beam scores hops from the
-        # stored fp32 vectors, so beam scores ARE the final exact scores
-        # — no second-pass rerank, and within-partition beam recall is
-        # graph-limited instead of code-limited (measured d=64/m=8 on a
-        # 40k-row coarse partition: PQ-steered bulk recall 0.47 vs 0.92
-        # exact-steered at the same ef/wall — stage-1 codes are too
-        # coarse to steer LONG traversals across big mixed partitions).
-        # At d<=~128 the gathered-vector hop costs the same as the LUT
-        # hop (both allocator/bandwidth-bound, ~2.6 s per 2000 queries).
-        xm = kernels.as_matrix(data_pdf["vec"], dtype=np.float32)
-        xnn = np.einsum("ij,ij->i", xm, xm)
-        q32 = q_mat.astype(np.float32, copy=False)
-        qnn = np.einsum("ij,ij->i", q32, q32)
-
-        def score_exact(aq: np.ndarray, cand: np.ndarray) -> np.ndarray:
-            return _exact_sims_gathered(
-                met, q32[aq], _take_rows("trav_x", xm, cand),
-                qnn[aq], xnn[np.maximum(cand, 0)],
-            )
-
-        qc_chunk = max(1, int((128 << 20) // max(n_local, 1)))
-        out = []
-        take = min(kk, ef)
-        pil = _pilot_entries(entries, n_local, ef)
-        for lo in range(0, n_q, qc_chunk):
-            hi = min(lo + qc_chunk, n_q)
-            sub = np.arange(lo, hi)
-            psc = _exact_sims_block(
-                met, q32[sub], _take_rows("pil_x", xm, pil),
-                qnn[sub], xnn[pil],
-            )
-            beams, bsc = _batch_beam(
-                lambda a, c: score_exact(sub[a], c),
-                nbr_mat, pil, hi - lo, n_local, ef,
-                counters=tel_acc, return_scores=True,
-                seed_sc=psc,
-            )
-            tid = beams[:, :take]  # beam rows are score-desc
-            tsc = bsc[:, :take]
-            valid = tid >= 0
-            cnts = valid.sum(axis=1)
-            out.append(pd.DataFrame({
-                "qid": np.repeat(q_ids[sub], cnts),
-                "id": ids[tid[valid]],
-                "score": tsc[valid].astype(np.float64),
-            }))
-        return pd.concat(out, ignore_index=True) if out else empty_hits()
 
     def score_fn(aq: np.ndarray, cand: np.ndarray) -> np.ndarray:
         return _traverse_scores(
@@ -1237,45 +1182,31 @@ def graph_search(
     query_vec_col: str = "vec",
     probe_ratio: float | None = None,
     telemetry=None,
-    strategy: str = "auto",
-    m_hint: int | None = None,
-    steer: str = "pq",
 ) -> DataFrame:
     """Graph-traversal ANN over the index's per-partition Vamana graphs.
 
-    One physical plan serves every traversal, whatever the batch
-    (``_traverse_probed_partitions``; jvector's one ``GraphSearcher``):
-    probe assignment runs as a map-only pass over the query rows (the
-    same ``_assign_probes`` the fused tile route uses), query replicas
-    shuffle to their probed part_ids (Q x n_probe rows — the ONLY
-    exchange; salted by qid hash on coarse layouts so a few partitions
-    still fill the cores), and each group task pyarrow-reads ITS
-    partition's data/edges dirs and runs the shared traversal/rerank
-    core (fp32-exact or dequantized-NVQ reported scores). Corpus bytes
-    never move, so the exchange is sized by the query side alone.
+    One physical plan serves every batch (``_traverse_probed_partitions``;
+    jvector's one ``GraphSearcher``): the caller's query DataFrame feeds a
+    map-only probe assignment (the same ``_assign_probes`` the IVF tile
+    route uses), query replicas shuffle to their probed part_ids (Q x
+    n_probe rows — the ONLY exchange; salted by qid hash on coarse layouts
+    so a few partitions still fill the cores), and each group task
+    pyarrow-reads ITS partition's data/edges dirs and runs the shared
+    traversal/rerank core (fp32-exact or dequantized-NVQ reported scores).
+    Corpus bytes never move and the driver collects nothing, so the
+    exchange is sized by the query side alone, whatever the batch size.
+    The beam is steered by the index's stage-1 codes (PQ/BQ, the
+    reference's compressed-first-pass search).
 
-    ``strategy`` only decides where the plan's query rows come from:
-
-    - ``broadcast`` (point-query batches, <= BROADCAST_QUERY_CAP rows):
-      ``route_query_batch``'s one ``take(cap + 1)`` collects the batch,
-      which feeds the plan as a local frame — the caller's query lineage
-      is evaluated once. More rows than the cap raise.
-    - ``distributed`` (bulk / corpus-as-queries): the caller's DataFrame
-      feeds the plan directly, with no driver collect.
-    - ``auto``: broadcast at or below the cap (``m_hint``, or the same
-      take); above it, route on partition-size vs beam-visit arithmetic
-      (``_bulk_traversal_pays``): the traversal plan when partitions
-      dwarf the beam's visit estimate, else the FUSED TILE SCAN
-      (``IVFIndex.search`` with a matched rerank pool, overquery = ef/k)
-      — same exact/NVQ rerank kernels and score space, recall >= the
-      beam's (it scans whole probed partitions instead of approximating
-      within them), and 3-10x faster at the small-partition bulk shape
-      (r7, 1M x 64-d, 2000-row partitions, local[32]: tile ~110-390 s vs
-      traversal 1153 s). Pass an explicit strategy to force traversal.
+    For bulk batches over small partitions, ``IVFIndex.search(strategy=
+    "distributed")`` is the cheaper operator: its tile GEMMs scan whole
+    probed partitions where the beam approximates within them (r8 A/B,
+    1M x 64-d, 2000-row partitions, np4/ef40, 32 cores: 318 s vs 3,213 s
+    for traversal).
 
     Query vectors ride the plan in the index's f32 layout (the
     ``_assign_probes`` schema), so ``array<double>`` queries are scored
-    as their f32 roundings on every route.
+    as their f32 roundings.
 
     Tombstoned rows are traversed but filtered from results (two-phase
     delete semantics); ``compact()`` removes them AND rebuilds the merged
@@ -1284,16 +1215,6 @@ def graph_search(
     Predicates / accept lists are not supported on the traversal route —
     use ``IVFIndex.search(predicate=..., accept_ids=...)``.
 
-    ``steer`` picks the beam's stage-1 scorer: ``"pq"`` (default — the
-    reference's compressed-first-pass search) or ``"exact"`` (stored
-    fp32 vectors score the hops AND the results, no second pass;
-    requires a non-slim index). Exact steering is the COARSE-layout bulk
-    path: on large mixed partitions the m-byte codes are too coarse to
-    steer long traversals (measured zipf-1.5, 8x~12k partitions:
-    PQ-steered bulk recall 0.47 vs 0.92 within-partition exact-steered
-    at the same ef), and at d<=~128 the exact hop costs the same as the
-    LUT hop.
-
     ``ef_search`` defaults to ``max(2k, overquery*k)`` (the beam width /
     per-partition candidate pool — GraphSearcher's rerankK analog); the
     beam expands ``max(1, ef_search // 64)`` nodes per hop
@@ -1301,7 +1222,6 @@ def graph_search(
     from jvector_spark.operators.index import _merge_topk
 
     manifest = index.manifest
-    met = manifest.metric
     missing = [
         s.name for s in manifest.segments if graph_meta(index, s.name) is None
     ]
@@ -1321,44 +1241,6 @@ def graph_search(
     rerank_k = max(k, int(round(overquery * k)))
     k_ret = min(ef, max(k, rerank_k))  # rerank pool per partition
     use_nvq = manifest.rerank == "nvq" or index._slim
-    if steer not in ("pq", "exact"):
-        raise ValueError(f"unknown steer {steer!r} (use 'pq' or 'exact')")
-    if steer == "exact" and use_nvq:
-        raise ValueError(
-            "steer='exact' needs stored fp32 vectors — this index is "
-            "slim/NVQ-reranked (store_fp32='none' or rerank='nvq'); "
-            "use the default PQ steering"
-        )
-    batch = route_query_batch(
-        queries_df, query_id_col, query_vec_col, "graph_search", strategy,
-        m_hint=m_hint,
-    )
-    if batch is None and strategy != "distributed" and not _bulk_traversal_pays(
-        index, ef
-    ):
-        # auto, over the cap, SMALL partitions: the beam would visit a
-        # large fraction of each partition anyway, and the fused tile
-        # scan's GEMMs beat per-query traversal by 3-10x at that shape
-        # (measured r7: 1M x 64, 2000-row partitions, ef40 — 1153 s
-        # traversal vs 110-390 s tile). Route to the fused scan with a
-        # matched candidate pool (rerank_k = ef); it reranks through
-        # the SAME exact/NVQ kernels, so scores live in the same
-        # space and recall is >= the beam's (it scans whole probed
-        # partitions instead of approximating within them). r7
-        # VERDICT item 3: auto must not hand a user the 10x penalty.
-        # The matched pool is the caller's RERANK budget (overquery*k),
-        # not the beam width ef — ef is a traversal concept (candidate
-        # frontier), and mapping from it doubled the fused rerank pool
-        # at default knobs (r8: auto 266.5 s vs direct fused 238.0 s
-        # at the 1M bench shape). The route is already decided, so the
-        # fused search does not re-read the query side to route.
-        return index.search(
-            queries_df, k, n_probe=n_probe,
-            overquery=max(overquery, rerank_k / max(k, 1)),
-            query_id_col=query_id_col, query_vec_col=query_vec_col,
-            probe_ratio=probe_ratio, strategy="distributed", m_hint=m_hint,
-            telemetry=telemetry,
-        )
     tel_acc = telemetry.counters() if telemetry is not None else None
     t = index.tombstones()
     # Per-partition EMITTED rows: the global top-k over the union of
@@ -1371,65 +1253,12 @@ def graph_search(
     # the final window's shuffle 4x (the r7 16 GB-driver pressure point
     # on the 1M corpus-as-queries shape).
     emit_k = k_ret if t is not None else min(k, k_ret)
-
-    if batch is not None:
-        qids, qmat = batch
-        if not len(qids):
-            return empty_ranked(index.spark)
-        # the collected batch feeds the plan as a local frame, so the
-        # caller's query lineage is evaluated once (by the routing take)
-        queries_df = index.spark.createDataFrame(
-            pd.DataFrame({"qid": qids, "vec": list(qmat.astype(np.float32))}),
-            "qid long, vec array<float>",
-        )
-        query_id_col, query_vec_col = "qid", "vec"
     parts = _traverse_probed_partitions(
-        index, queries_df, query_id_col, query_vec_col, met, emit_k, ef,
-        n_probe, probe_ratio, use_nvq, tel_acc,
-        steer_exact=steer == "exact",
+        index, queries_df, query_id_col, query_vec_col, manifest.metric,
+        emit_k, ef, n_probe, probe_ratio, use_nvq, tel_acc,
     )
     # tombstoned rows are traversed but filtered (two-phase delete, F2)
     return _merge_topk(parts, k, manifest.spill, tombstones=t)
-
-
-def _bulk_traversal_pays(index, ef: int) -> bool:
-    """Route arithmetic for bulk (over-cap) graph searches: traversal wins
-    only when the beam visits a SMALL fraction of an average partition.
-
-    Estimate per-query visited rows as ``ef x mean graph degree`` (each
-    beam slot expands up to ``degree`` neighbors) and compare with the
-    rows-weighted mean stored partition size (manifest arithmetic — no
-    Spark job; r8 manifests record it at build, older ones fall back to
-    the plain average).
-    Calibration point (r7, 1M x 64, 2000-row partitions, ef40 x deg32 ->
-    visited est 1280): the fused tile route won 3-10x even though the
-    partition was only ~1.6x the visit estimate, because the tile GEMMs
-    amortize where per-query beams cannot; traversal needs partitions
-    an order of magnitude past the estimate before its asymptotic
-    O(visited) beats the scan's O(partition). Threshold: partitions must
-    exceed 16x the visit estimate. Hot-skew corpora (zipf partitions at
-    tens-of-% of the corpus) and real-network shapes clear it; uniform
-    small-partition layouts route to the tile scan."""
-    rows = 0
-    sized = 0.0
-    degs = []
-    for seg in index.manifest.segments:
-        seg_rows = seg.n_rows * max(1, index.manifest.spill)
-        rows += seg_rows
-        # rows-weighted mean partition size when the manifest records it
-        # (r8 builds): on skewed layouts the PLAIN average hides hot
-        # cells (zipf-1.5: avg 2k rows, hottest ~380k — and most ROWS,
-        # hence most per-row work, live in the hot cells)
-        w = seg.wmean_part_rows if getattr(seg, "wmean_part_rows", None) else (
-            seg_rows / max(1, seg.n_partitions)
-        )
-        sized += seg_rows * w
-        meta = graph_meta(index, seg.name)
-        if meta is not None:
-            degs.append(meta["degree"])
-    part_rows = sized / max(1, rows)
-    visited_est = ef * (sum(degs) / max(1, len(degs)) if degs else 32)
-    return part_rows > 16 * visited_est
 
 
 def _read_partition(dirs: tuple, part: int):
@@ -1450,7 +1279,7 @@ def _read_partition(dirs: tuple, part: int):
 
 def _traverse_probed_partitions(
     index, queries_df, query_id_col, query_vec_col, met, k_ret, ef, n_probe,
-    probe_ratio, use_nvq, tel_acc, steer_exact=False,
+    probe_ratio, use_nvq, tel_acc,
 ) -> list[DataFrame]:
     """The one graph search plan, per segment: ``_assign_probes`` maps each
     query to its probed partitions (map-only, where the queries live),
@@ -1467,9 +1296,7 @@ def _traverse_probed_partitions(
     parts_out = []
     for seg in index.manifest.segments:
         info = index._segments[seg.name]
-        # exact steering: stage-1 codes unused — no LUTs, no residual math
-        codec = None if steer_exact else info["pq"]
-        res_mode = bool(info.get("residual")) and not steer_exact
+        res_mode = bool(info.get("residual"))
         assigned = index._assign_probes(
             queries_df, info, n_probe, query_id_col, query_vec_col,
             metric=met, probe_ratio=probe_ratio,
@@ -1492,7 +1319,7 @@ def _traverse_probed_partitions(
             )
         cents = info["centroids"] if res_mode else None
         b = index.spark.sparkContext.broadcast(
-            (codec, met, k_ret, ef, index._nvq_codec(use_nvq),
+            (info["pq"], met, k_ret, ef, index._nvq_codec(use_nvq),
              res_mode, cents)
         )
         # hive part_id lives in the dir name, so it is not a data column
@@ -1532,11 +1359,7 @@ def _traverse_probed_partitions(
                     r = _traverse_rerank(
                         pack, m_, kk, ef_,
                         q_ids[lo:hi], qm, qnrm[lo:hi],
-                        (
-                            cdc.query_stage1(qm, m_, residual=res_m)
-                            if cdc is not None
-                            else None
-                        ),
+                        cdc.query_stage1(qm, m_, residual=res_m),
                         qc_vec[lo:hi] if qc_vec is not None else None,
                         nvq_c, tel_acc,
                     )

@@ -1575,19 +1575,8 @@ class IVFIndexBuilder:
                 vec_format=self.vec_format,
                 store_fp32=self.store_fp32,
             )
-        tot_copies = int(part_counts.sum())
         manifest.segments.append(
-            SegmentInfo(
-                name=seg_name, n_rows=n, n_partitions=int(len(centroids)),
-                max_part_rows=int(part_counts.max(initial=0)),
-                wmean_part_rows=round(
-                    float(
-                        (part_counts.astype(np.float64) ** 2).sum()
-                        / max(1, tot_copies)
-                    ),
-                    1,
-                ),
-            )
+            SegmentInfo(name=seg_name, n_rows=n, n_partitions=int(len(centroids)))
         )
         return manifest
 

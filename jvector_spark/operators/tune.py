@@ -17,6 +17,13 @@ the table). Two Spark-first differences:
   of the full lattice, and every evaluated point is returned so the caller
   can see the frontier it walked.
 
+The walk is one sequential loop (``_shape_walk``): each lattice point is a
+sampled search whose Spark jobs already spread over the cores, so running
+shape ladders concurrently on driver threads only adds contention (on a
+4-core host, ``tests/test_tune.py``'s fixture at target 0.97 tuned slower
+with three concurrent ladders than with this loop, at the same evaluated
+points).
+
 Ground truth comes from the exact brute-force join over the index's own
 live vectors on a driver-pinned query sample — self-contained: no external
 GT file, unlike the reference's precomputed ivecs
@@ -36,7 +43,7 @@ if TYPE_CHECKING:  # pragma: no cover
     from jvector_spark.operators.index import IVFIndex
 
 
-def _speculative_shape_walk(
+def _shape_walk(
     shapes: list,
     ladder: list,
     eval_point,
@@ -44,99 +51,35 @@ def _speculative_shape_walk(
     max_evals: int,
     plateau_eps: float,
 ) -> tuple[list[dict], dict | None]:
-    """Run the cheapest-first shape walk with SPECULATIVE shape ladders.
+    """The cheapest-first walk: shapes in order, each climbing its ladder
+    until the target is hit (stop, that point is ``best``), the ladder
+    plateaus (gain under ``plateau_eps``: widen probes, not rerank), or
+    its optimistic bound ``recall + gain x steps_left`` cannot reach the
+    target (abandon the shape). At most ``max_evals`` points are
+    evaluated.
 
-    The sequential walk leaves the cluster idle inside every per-eval
-    fixed cost (job submit, broadcast, collect — ~1-2 s per lattice point
-    at bench scale, x ~39 points). Ladder steps WITHIN a shape depend on
-    that shape's own previous recalls, but different shapes' ladders are
-    independent — so up to ``JVS_TUNE_SPECULATE`` (default 3) shape
-    ladders run concurrently (guide §2.6: overlap independent jobs;
-    Spark's FIFO scheduler back-fills the tail of one eval's job with the
-    next one's tasks) and their results are COMMITTED in walk order:
-
-    - each ladder walks its own plateau/abandon rules from its own evals
-      (identical decisions to the sequential walk);
-    - the committed ``evaluated`` list is truncated at ``max_evals`` and
-      at the first target hit, exactly where the sequential walk stopped
-      — speculative evals past that point are discarded, never recorded;
-    - therefore the returned (evaluated, best) are IDENTICAL to the
-      sequential walk's (``test_tune.py`` pins parity), only the wall
-      changes.
-
-    ``eval_point(shape, rung) -> (point_dict, raw_recall)``;
-    raw (unrounded) recall drives the decisions, the dict is recorded.
-    A shared stop event bounds post-stop waste to one in-flight eval per
-    worker. ``JVS_TUNE_SPECULATE=1`` forces the sequential path.
-    """
-    import os
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    workers = max(1, int(os.environ.get("JVS_TUNE_SPECULATE", "3")))
-    stop = threading.Event()
-
-    def walk_shape(shape) -> list[tuple[dict, float]]:
-        pts: list[tuple[dict, float]] = []
+    ``eval_point(shape, rung) -> (point_dict, raw_recall)``; raw
+    (unrounded) recall drives the decisions, the dict is recorded.
+    Returns (every evaluated point in walk order, best or None)."""
+    evaluated: list[dict] = []
+    for shape in shapes:
         prev_rec: float | None = None
         gain: float | None = None
         for j, rung in enumerate(ladder):
-            if stop.is_set():
-                break  # walk already committed a stop — result discarded
+            if len(evaluated) >= max_evals:
+                return evaluated, None
             if prev_rec is not None and gain is not None:
                 if gain < plateau_eps:
-                    break  # saturated ladder: widen probes, not rerank
-                steps_left = len(ladder) - j
-                if prev_rec + max(gain, 0.0) * steps_left < target_recall:
-                    break  # coverage-bounded shape: can't reach target
+                    break
+                if prev_rec + max(gain, 0.0) * (len(ladder) - j) < target_recall:
+                    break
             point, rec = eval_point(shape, rung)
-            pts.append((point, rec))
+            evaluated.append(point)
             if rec >= target_recall:
-                break
+                return evaluated, point
             gain = rec - prev_rec if prev_rec is not None else None
             prev_rec = rec
-        return pts
-
-    evaluated: list[dict] = []
-    best: dict | None = None
-    if workers == 1:
-        for shape in shapes:
-            for point, rec in walk_shape(shape):
-                if len(evaluated) >= max_evals:
-                    return evaluated, best
-                evaluated.append(point)
-                if rec >= target_recall:
-                    return evaluated, point
-        return evaluated, best
-    with ThreadPoolExecutor(max_workers=workers) as pool:
-        futs = {}
-        done = False
-        try:
-            nxt = 0
-            while nxt < len(shapes) and len(futs) < workers:
-                futs[nxt] = pool.submit(walk_shape, shapes[nxt])
-                nxt += 1
-            for i in range(len(shapes)):
-                if done:
-                    break
-                pts = futs.pop(i).result()
-                if nxt < len(shapes):
-                    futs[nxt] = pool.submit(walk_shape, shapes[nxt])
-                    nxt += 1
-                for point, rec in pts:
-                    if len(evaluated) >= max_evals:
-                        done = True
-                        break
-                    evaluated.append(point)
-                    if rec >= target_recall:
-                        best = point
-                        done = True
-                        break
-        finally:
-            stop.set()
-            for f in futs.values():
-                f.cancel()
-    return evaluated, best
+    return evaluated, None
 
 
 def tune_search(
@@ -264,7 +207,7 @@ def tune_search(
             "wall_s": round(time.perf_counter() - t0, 3),
         }, rec
 
-    evaluated, best = _speculative_shape_walk(
+    evaluated, best = _shape_walk(
         shapes, ladder, eval_point, target_recall, max_evals, plateau_eps
     )
     gt.unpersist()
@@ -379,7 +322,7 @@ def tune_graph_search(
             "wall_s": round(time.perf_counter() - t0, 3),
         }, rec
 
-    evaluated, best = _speculative_shape_walk(
+    evaluated, best = _shape_walk(
         shapes, ef_grid, eval_point, target_recall, max_evals, plateau_eps
     )
     gt.unpersist()

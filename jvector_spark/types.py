@@ -38,14 +38,6 @@ class SegmentInfo:
     name: str
     n_rows: int
     n_partitions: int
-    # build-time STORED-copy partition-size stats (None on pre-r8
-    # manifests). wmean is the rows-weighted mean partition size
-    # (sum s_i^2 / sum s_i) — the size of the partition a random ROW
-    # lives in, which is the right signal for per-row work estimates on
-    # skewed layouts where the plain average hides corpus-scale hot
-    # cells (zipf: avg 2k rows, hottest 380k).
-    max_part_rows: int | None = None
-    wmean_part_rows: float | None = None
 
 
 @dataclass
@@ -128,10 +120,16 @@ class IndexManifest:
 
     @classmethod
     def from_json(cls, s: str) -> "IndexManifest":
+        def known(dc, d: dict) -> dict:
+            # unknown keys (fields of other versions) are dropped, so older
+            # and newer manifests still load
+            return {k: v for k, v in d.items() if k in dc.__dataclass_fields__}
+
         d = json.loads(s)
-        d["segments"] = [SegmentInfo(**seg) for seg in d.get("segments", [])]
-        known = {f for f in cls.__dataclass_fields__}
-        return cls(**{k: v for k, v in d.items() if k in known})
+        d["segments"] = [
+            SegmentInfo(**known(SegmentInfo, seg)) for seg in d.get("segments", [])
+        ]
+        return cls(**known(cls, d))
 
     def save(self, index_path: str) -> None:
         """Atomic manifest swap: readers holding the old manifest keep a

@@ -1,4 +1,4 @@
-"""The engine reads exactly four environment variables, all deployment
+"""The engine reads exactly three environment variables, all deployment
 settings. Measurement belongs to perfbench (from outside) and
 SearchTelemetry (inside the kernels), so a new env-var switch — a stderr
 tracer, a debug branch, a tuning knob — fails here first."""
@@ -13,7 +13,6 @@ DEPLOYMENT_ENV = {
     "SPARK_GRAFT_CPUS",
     "JVS_DRIVER_MEMORY",
     "JVS_DRIVER_THREADS",
-    "JVS_TUNE_SPECULATE",
 }
 
 

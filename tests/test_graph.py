@@ -236,25 +236,6 @@ def test_build_graph_incremental_method_e2e(spark, sf_dir):
     assert _recall(rows, gt.collect()) >= 0.9
 
 
-def test_graph_search_exact_steer(spark, graph_index):
-    """steer='exact': fp32-steered beams, no second pass — recall is
-    graph-limited, and the broadcast/distributed routes agree
-    bit-for-bit (same kernel, same score space)."""
-    idx, corpus = graph_index
-    q = corpus.limit(8).selectExpr("id as qid", "vec")
-    gt = exact.knn_join(corpus, q, 5, metric="COSINE", strategy="numpy")
-    r_b = idx.search_graph(q, 5, n_probe=8, ef_search=64, steer="exact")
-    rows_b = r_b.collect()
-    assert _recall(rows_b, gt.collect()) >= 0.9
-    r_d = idx.search_graph(
-        q, 5, n_probe=8, ef_search=64, steer="exact",
-        strategy="distributed", m_hint=10**9,
-    )
-    assert sorted(map(tuple, rows_b)) == sorted(map(tuple, r_d.collect()))
-    with pytest.raises(ValueError, match="steer"):
-        idx.search_graph(q, 5, steer="cosine-ish")
-
-
 def test_graph_search_recall_and_exact_scores(spark, graph_index):
     idx, corpus = graph_index
     queries = corpus.filter(F.col("id") < 16).selectExpr("id as qid", "vec")
@@ -436,30 +417,16 @@ def test_tune_graph_route(spark, graph_index):
         bare.tune(route="graph", k=5)
 
 
-def test_graph_search_distributed_route_parity(spark, graph_index):
-    """The distributed (bulk) graph route returns IDENTICAL rows to the
-    broadcast route — same traversal core, same rerank kernel, the only
-    difference is where stage-1 payloads are computed."""
-    idx, corpus = graph_index
-    queries = corpus.filter(F.col("id") < 32).selectExpr("id as qid", "vec")
-    a = idx.search_graph(
-        queries, k=10, n_probe=4, ef_search=40, strategy="broadcast"
-    ).collect()
-    b = idx.search_graph(
-        queries, k=10, n_probe=4, ef_search=40, strategy="distributed"
-    ).collect()
-    ka = sorted((r["qid"], r["id"], round(r["score"], 12)) for r in a)
-    kb = sorted((r["qid"], r["id"], round(r["score"], 12)) for r in b)
-    assert ka == kb
+def test_graph_search_input_layout_tiny_partitions(spark):
+    """The query frame's layout does not change the rows: the same 48
+    queries as a one-partition local frame and as a frame shuffled into
+    4 partitions return identical (qid, id, score, rank). Tiny partitions
+    (~12 rows each, far smaller than ef_search) leave every beam short of
+    the rerank pool, so chunk composition (which follows the input
+    layout) would leak other queries' beam members in without
+    strict_mask."""
+    import pandas as pd
 
-
-def test_graph_search_route_parity_tiny_partitions(spark):
-    """Route parity where refill WOULD have engaged (r7 ADVICE): many
-    partitions each far smaller than ef_search, so every query's beam
-    holds fewer than rerank_k members. strict_mask restricts each query's
-    candidates to ITS OWN beam, so chunk composition (which differs
-    between routes) can no longer leak other queries' beam members in —
-    the two routes must return bit-identical rows."""
     n, dim = 400, 8
     # private rng: the shared session-scoped `rng` fixture feeds later
     # modules' corpora — consuming draws here would shift their data and
@@ -475,24 +442,30 @@ def test_graph_search_route_parity_tiny_partitions(spark):
         corpus, tmp
     )
     idx.build_graph(degree=8, ef_construction=16)
-    queries = corpus.filter(F.col("id") < 48).selectExpr("id as qid", "vec")
-    a = idx.search_graph(
-        queries, k=10, n_probe=6, ef_search=64, strategy="broadcast"
-    ).collect()
-    b = idx.search_graph(
-        queries, k=10, n_probe=6, ef_search=64, strategy="distributed"
-    ).collect()
-    ka = sorted((r["qid"], r["id"], round(r["score"], 12)) for r in a)
-    kb = sorted((r["qid"], r["id"], round(r["score"], 12)) for r in b)
-    assert ka == kb
-    assert len(ka) > 0
+    q_local = spark.createDataFrame(
+        pd.DataFrame({
+            "qid": np.arange(48, dtype=np.int64),
+            "vec": list(mat[:48].astype(np.float32)),
+        }),
+        "qid long, vec array<float>",
+    ).coalesce(1)
+    q_shuf = (
+        corpus.filter(F.col("id") < 48).selectExpr("id as qid", "vec")
+        .orderBy(F.rand(7)).repartition(4)
+    )
+    assert q_local.rdd.getNumPartitions() == 1
+    assert q_shuf.rdd.getNumPartitions() == 4
+    kw = dict(k=10, n_probe=6, ef_search=64)
+    a = sorted(map(tuple, idx.search_graph(q_local, **kw).collect()))
+    b = sorted(map(tuple, idx.search_graph(q_shuf, **kw).collect()))
+    assert a == b
+    assert len(a) == 48 * 10
 
 
 def test_graph_search_distributed_on_auto_sized_index(spark, sf_dir):
     """An index whose partition count was left to the builder (the
-    manifest records None) serves the distributed strategy with the auto
-    route's rows: the group salt is sized from the segment's own
-    partition count."""
+    manifest records None) serves graph search: the group salt is sized
+    from the segment's own partition count."""
     corpus = _corpus(spark, sf_dir)
     idx = IVFIndexBuilder(metric="COSINE", pq_m=8).fit(
         corpus, tempfile.mkdtemp(prefix="jvs_graph_autosz_")
@@ -500,53 +473,8 @@ def test_graph_search_distributed_on_auto_sized_index(spark, sf_dir):
     assert idx.manifest.n_partitions is None
     idx.build_graph(degree=16, ef_construction=32)
     queries = corpus.filter(F.col("id") < 16).selectExpr("id as qid", "vec")
-    kw = dict(k=10, n_probe=4, ef_search=40)
-    auto = idx.search_graph(queries, **kw).collect()
-    dist = idx.search_graph(queries, strategy="distributed", **kw).collect()
-    assert len(auto) == 160
-    assert sorted(map(tuple, auto)) == sorted(map(tuple, dist))
-
-
-def test_graph_bulk_auto_routes_to_tile_on_small_partitions(spark, graph_index):
-    """r7 VERDICT item 3: strategy='auto' with a bulk query load over
-    SMALL partitions must not pay the 3-10x traversal penalty — it routes
-    to the fused tile scan (same rerank kernels, recall >= the beam's).
-    The sf fixtures' partitions (~hundreds of rows) sit far below the
-    16x beam-visit threshold, so auto+large m_hint takes the tile path;
-    results must carry the same schema and fill k rows per query."""
-    from jvector_spark.operators.graph import _bulk_traversal_pays
-
-    idx, corpus = graph_index
-    assert not _bulk_traversal_pays(idx, ef=40)
-    queries = corpus.filter(F.col("id") < 24).selectExpr("id as qid", "vec")
-    res = idx.search_graph(
-        queries, k=5, n_probe=8, ef_search=40,
-        m_hint=exact.BROADCAST_QUERY_CAP + 1,
-    )
-    rows = res.collect()
-    assert {r["qid"] for r in rows} == set(range(24))
-    assert all(r["rank"] <= 5 for r in rows)
-    # exact-score contract holds on the tile path too
-    gt = exact.knn_join(
-        corpus, queries, k=5, metric="COSINE", strategy="numpy"
-    ).collect()
-    assert _recall(rows, gt) >= 0.8
-    # a huge-partition estimate flips the decision arithmetic
-    class _FakeSeg:
-        n_rows = 50_000_000
-        n_partitions = 10
-        name = idx.manifest.segments[0].name
-
-    class _FakeManifest:
-        segments = [_FakeSeg()]
-        spill = 1
-
-    class _FakeIdx:
-        manifest = _FakeManifest()
-        _segments = idx._segments
-        path = idx.path
-
-    assert _bulk_traversal_pays(_FakeIdx(), ef=40)
+    res = idx.search_graph(queries, k=10, n_probe=4, ef_search=40).collect()
+    assert len(res) == 160
 
 
 def test_graph_emit_k_reduction_is_lossless(spark, graph_index):
@@ -585,9 +513,21 @@ def test_graph_search_ef_below_k_raises(spark, graph_index):
         idx.search_graph(queries, k=10, ef_search=5)
 
 
+@pytest.mark.parametrize(
+    "knob", [{"strategy": "distributed"}, {"m_hint": 10**6}, {"steer": "exact"}]
+)
+def test_graph_search_has_one_path(spark, graph_index, knob):
+    """Graph search takes no route, batch-size or steering knob: every
+    batch runs the one traversal plan."""
+    idx, corpus = graph_index
+    queries = corpus.filter(F.col("id") < 4).selectExpr("id as qid", "vec")
+    with pytest.raises(TypeError):
+        idx.search_graph(queries, k=5, **knob)
+
+
 def test_graph_search_distributed_bulk(spark, sf_dir):
-    """Corpus-as-queries through the distributed graph route (residual
-    index): recall vs the exact self-join on a sampled slice."""
+    """Corpus-as-queries through graph search (residual index): recall vs
+    the exact self-join on a sampled slice."""
     corpus = _corpus(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="jvs_graph_bulk_")
     idx = IVFIndexBuilder(
@@ -595,10 +535,7 @@ def test_graph_search_distributed_bulk(spark, sf_dir):
     ).fit(corpus, tmp)
     idx.build_graph(degree=16, ef_construction=32)
     queries = corpus.selectExpr("id as qid", "vec")
-    res = idx.search_graph(
-        queries, k=5, n_probe=4, ef_search=40, strategy="distributed",
-        m_hint=1_000_000,  # force the bulk route regardless of size
-    )
+    res = idx.search_graph(queries, k=5, n_probe=4, ef_search=40)
     sample = res.filter(F.col("qid") < 16).collect()
     gt = exact.knn_join(
         corpus, corpus.filter(F.col("id") < 16).selectExpr("id as qid", "vec"),
@@ -665,16 +602,16 @@ def test_batch_beam_pilot_seeding_topef():
             xnn[np.maximum(cand, 0)],
         )
 
+    def beam_scores(beam):
+        return np.where(beam >= 0, score_fn(np.arange(8), beam), -np.inf)
+
     ents = np.atleast_1d(np.asarray(entry, dtype=np.int64))
-    base, base_sc = _batch_beam(
-        score_fn, nbr_mat, ents, 8, n, ef, return_scores=True
-    )
+    base = _batch_beam(score_fn, nbr_mat, ents, 8, n, ef)
     pil = _pilot_entries(ents, n, ef)
     assert len(pil) > ef  # the seeding path under test
     psc = _exact_sims_block("COSINE", q, x[pil], qnn, xnn[pil])
-    seeded, seeded_sc = _batch_beam(
-        score_fn, nbr_mat, pil, 8, n, ef, seed_sc=psc, return_scores=True
-    )
+    seeded = _batch_beam(score_fn, nbr_mat, pil, 8, n, ef, seed_sc=psc)
+    base_sc, seeded_sc = beam_scores(base), beam_scores(seeded)
     # each query's own row is its best hit on both paths (self top-1)
     assert np.array_equal(base[:, 0], np.arange(8))
     assert np.array_equal(seeded[:, 0], np.arange(8))

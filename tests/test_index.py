@@ -1184,3 +1184,24 @@ def test_stream_ingest_tiered_compaction(spark, rng, tmp_path):
         [(0, list(tgt.vec))], "qid long, vec array<float>"
     )
     assert reloaded.search(qdf, 3, n_probe=8, overquery=8.0).collect()[0].id == 1205
+
+
+def test_manifest_drops_unknown_segment_keys():
+    """A manifest written by another version loads: segment keys this
+    version does not know (the retired build-time partition-size stats
+    and any future key) are dropped, as unknown top-level keys are."""
+    import json
+
+    from jvector_spark.types import IndexManifest, SegmentInfo
+
+    doc = {
+        "dim": 8, "metric": "COSINE", "pq_m": 4, "pq_clusters": 256,
+        "future_top_level": 1,
+        "segments": [{
+            "name": "seg-0", "n_rows": 10, "n_partitions": 2,
+            "max_part_rows": 7, "wmean_part_rows": 5.8, "future_key": [1, 2],
+        }],
+    }
+    m = IndexManifest.from_json(json.dumps(doc))
+    assert m.segments == [SegmentInfo(name="seg-0", n_rows=10, n_partitions=2)]
+    assert IndexManifest.from_json(m.to_json()).segments == m.segments

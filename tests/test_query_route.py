@@ -1,6 +1,8 @@
 """The query-side front end shared by every point-query-batch operator
 (``exact.route_query_batch``): empty query sides, over-cap auto routing,
-and the Spark-job cost of ``strategy="auto"``."""
+and the Spark-job cost of ``strategy="auto"``. ``search_graph`` and
+``hard_negative`` run one plan for every batch (no ``strategy``); they
+keep the empty-query and job-budget checks."""
 
 import tempfile
 
@@ -49,7 +51,9 @@ def setup(spark):
 
 def _ops(corpus, idx, pq, codes):
     """name -> (call(queries, **strategy kw), broadcast and distributed
-    strategy names, result columns) for every routed operator."""
+    strategy names, result columns) for every routed operator; an
+    operator with one plan for every batch (no ``strategy``) has
+    ``(None, None)``."""
     return {
         "knn_join": (
             lambda q, **kw: exact.knn_join(corpus, q, K, **kw),
@@ -65,7 +69,7 @@ def _ops(corpus, idx, pq, codes):
         ),
         "search_graph": (
             lambda q, **kw: idx.search_graph(q, K, n_probe=4, ef_search=16, **kw),
-            ("broadcast", "distributed"), RANKED,
+            (None, None), RANKED,
         ),
         "rp_lsh": (
             lambda q, **kw: rp_lsh_knn_join(corpus, q, K, n_planes=4, n_hint=N, **kw),
@@ -120,7 +124,7 @@ def test_probe_io_stats_empty_query_side(spark, setup):
     }
 
 
-@pytest.mark.parametrize("op", ["ivf_search", "threshold_search", "search_graph", "rp_lsh"])
+@pytest.mark.parametrize("op", ["ivf_search", "threshold_search", "rp_lsh"])
 def test_auto_over_cap_matches_distributed(spark, setup, monkeypatch, op):
     """Above a (patched) cap and without ``m_hint``, auto takes the
     distributed route with the same rows as an explicit distributed call,
@@ -130,22 +134,13 @@ def test_auto_over_cap_matches_distributed(spark, setup, monkeypatch, op):
     call, (bcast, dist), _ = _ops(corpus, idx, pq, codes)[op]
     monkeypatch.setattr(exact, "BROADCAST_QUERY_CAP", M // 2)
     auto = _rows(call(queries))
-    if op == "search_graph":
-        # over the cap on small partitions, auto serves graph search with
-        # the fused distributed scan at the matched rerank pool
-        want = idx.search(
-            queries, K, n_probe=4, overquery=4.0, strategy="distributed"
-        )
-    else:
-        want = call(queries, strategy=dist)
-    assert auto == _rows(want) and len(auto) > 0
+    assert auto == _rows(call(queries, strategy=dist)) and len(auto) > 0
     with pytest.raises(ValueError, match="point-query-batch operator"):
         call(queries, strategy=bcast)
 
 
 @pytest.mark.parametrize(
-    "op", ["knn_join", "ivf_search", "threshold_search", "search_graph", "rp_lsh",
-           "two_phase"],
+    "op", ["knn_join", "ivf_search", "threshold_search", "rp_lsh", "two_phase"],
 )
 def test_auto_route_costs_no_extra_jobs(spark, setup, op):
     """Routing is free on a point batch: auto runs exactly as many Spark

@@ -119,12 +119,13 @@ def test_tune_sweeps_probe_ratio(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Speculative shape walk (r9): result-parity with the sequential walk
+# The engine's shape walk against a reference sequential double loop
 # ---------------------------------------------------------------------------
 
 
 def _sequential_walk(shapes, ladder, eval_point, target, max_evals, eps):
-    """Verbatim port of the pre-r9 sequential double loop."""
+    """Reference port of the sequential double loop: plateau, abandon,
+    max_evals and first-hit rules."""
     evaluated, best, done = [], None, False
     for shape in shapes:
         if done:
@@ -151,12 +152,12 @@ def _sequential_walk(shapes, ladder, eval_point, target, max_evals, eps):
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
-@pytest.mark.parametrize("workers", ["2", "4"])
-def test_speculative_walk_matches_sequential(seed, workers, monkeypatch):
-    """Property parity over random recall landscapes: the committed
-    (evaluated, best) must be exactly the sequential walk's, including
-    max_evals truncation and first-target-hit stop."""
-    from jvector_spark.operators.tune import _speculative_shape_walk
+def test_shape_walk_matches_sequential(seed):
+    """Property check over random recall landscapes: the engine walk's
+    (evaluated, best) is exactly the reference loop's, including
+    max_evals truncation and first-target-hit stop, and it evaluates no
+    point it does not return."""
+    from jvector_spark.operators.tune import _shape_walk
 
     rng = np.random.default_rng(seed)
     shapes = [(i,) for i in range(8)]
@@ -165,35 +166,16 @@ def test_speculative_walk_matches_sequential(seed, workers, monkeypatch):
     land = {
         (s[0], r): float(rng.uniform(0.2, 1.0)) for s in shapes for r in ladder
     }
+    calls = []
 
     def eval_point(shape, rung):
+        calls.append((shape[0], rung))
         rec = land[(shape[0], rung)]
         return {"shape": shape[0], "rung": rung, "recall": rec}, rec
 
     for target, max_evals in [(0.9, 100), (0.95, 7), (1.5, 9), (0.6, 3)]:
         ref = _sequential_walk(shapes, ladder, eval_point, target, max_evals, 0.005)
-        monkeypatch.setenv("JVS_TUNE_SPECULATE", workers)
-        got = _speculative_shape_walk(
-            shapes, ladder, eval_point, target, max_evals, 0.005
-        )
-        assert got == ref, (seed, workers, target, max_evals)
-
-
-def test_tune_speculative_matches_sequential_on_index(tuned_index, monkeypatch):
-    """End-to-end parity on a real index: identical evaluated lattice
-    points and best config (wall_s is timing, excluded)."""
-    idx, _ = tuned_index
-
-    def strip(out):
-        return (
-            [{k: v for k, v in p.items() if k != "wall_s"} for p in out["evaluated"]],
-            {k: v for k, v in out["best"].items() if k != "wall_s"}
-            if out["best"]
-            else None,
-        )
-
-    monkeypatch.setenv("JVS_TUNE_SPECULATE", "1")
-    seq = idx.tune(k=10, target_recall=0.8, sample=24)
-    monkeypatch.setenv("JVS_TUNE_SPECULATE", "3")
-    spec = idx.tune(k=10, target_recall=0.8, sample=24)
-    assert strip(spec) == strip(seq)
+        calls.clear()
+        got = _shape_walk(shapes, ladder, eval_point, target, max_evals, 0.005)
+        assert got == ref, (seed, target, max_evals)
+        assert len(calls) == len(got[0])
