@@ -417,7 +417,26 @@ def test_tune_graph_route(spark, graph_index):
         bare.tune(route="graph", k=5)
 
 
-def test_graph_search_input_layout_tiny_partitions(spark):
+def test_graph_search_distributed_route_parity(spark, graph_index):
+    """The query frame's layout does not change the rows on the sf index:
+    the same 32 queries as a one-partition local frame (what the deleted
+    broadcast route rebuilt from the collected batch) and as the caller's
+    frame shuffled into 4 partitions return identical (qid, id, score,
+    rank) — one traversal core, one rerank kernel."""
+    idx, corpus = graph_index
+    queries = corpus.filter(F.col("id") < 32).selectExpr("id as qid", "vec")
+    q_local = spark.createDataFrame(queries.collect(), queries.schema).coalesce(1)
+    q_shuf = queries.orderBy(F.rand(7)).repartition(4)
+    assert q_local.rdd.getNumPartitions() == 1
+    assert q_shuf.rdd.getNumPartitions() == 4
+    kw = dict(k=10, n_probe=4, ef_search=40)
+    a = sorted(map(tuple, idx.search_graph(q_local, **kw).collect()))
+    b = sorted(map(tuple, idx.search_graph(q_shuf, **kw).collect()))
+    assert a == b
+    assert len(a) == 32 * 10
+
+
+def test_graph_search_route_parity_tiny_partitions(spark):
     """The query frame's layout does not change the rows: the same 48
     queries as a one-partition local frame and as a frame shuffled into
     4 partitions return identical (qid, id, score, rank). Tiny partitions

@@ -152,16 +152,19 @@ def _sequential_walk(shapes, ladder, eval_point, target, max_evals, eps):
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
-def test_shape_walk_matches_sequential(seed):
+@pytest.mark.parametrize("rungs", [2, 4])
+def test_speculative_walk_matches_sequential(seed, rungs):
     """Property check over random recall landscapes: the engine walk's
     (evaluated, best) is exactly the reference loop's, including
     max_evals truncation and first-target-hit stop, and it evaluates no
-    point it does not return."""
+    point it does not return. The name predates the removal of the
+    speculative walk; `rungs` runs the check on a 2-rung ladder (no
+    plateau or abandon step can fire) and on the full 4-rung one."""
     from jvector_spark.operators.tune import _shape_walk
 
     rng = np.random.default_rng(seed)
     shapes = [(i,) for i in range(8)]
-    ladder = [1.0, 2.0, 4.0, 8.0]
+    ladder = [1.0, 2.0, 4.0, 8.0][:rungs]
     # deterministic random landscape: recall per (shape, rung)
     land = {
         (s[0], r): float(rng.uniform(0.2, 1.0)) for s in shapes for r in ladder
@@ -177,5 +180,5 @@ def test_shape_walk_matches_sequential(seed):
         ref = _sequential_walk(shapes, ladder, eval_point, target, max_evals, 0.005)
         calls.clear()
         got = _shape_walk(shapes, ladder, eval_point, target, max_evals, 0.005)
-        assert got == ref, (seed, target, max_evals)
+        assert got == ref, (seed, rungs, target, max_evals)
         assert len(calls) == len(got[0])
