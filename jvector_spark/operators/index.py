@@ -3029,6 +3029,21 @@ class IVFIndex:
         _, qmat = route_query_batch(
             queries_df, query_id_col, query_vec_col, "IVFIndex.probe_io_stats"
         )
+        return self._probe_io_model(
+            qmat, n_probe, n_probe_fine, probe_ratio, npf_per_probe
+        )
+
+    def _probe_io_model(
+        self,
+        qmat: np.ndarray,
+        n_probe: int,
+        n_probe_fine: int | None = None,
+        probe_ratio: float | None = None,
+        npf_per_probe: bool = False,
+    ) -> dict:
+        """``probe_io_stats`` over a query matrix already on the driver
+        (``tune`` holds its sample there): no job once the segment's
+        cached partition / cell counts exist."""
         nq = len(qmat)
         visited = np.zeros(nq, dtype=np.int64)
         stored = 0

@@ -34,6 +34,7 @@ from __future__ import annotations
 import time
 from typing import TYPE_CHECKING
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -80,6 +81,26 @@ def _shape_walk(
             gain = rec - prev_rec if prev_rec is not None else None
             prev_rec = rec
     return evaluated, None
+
+
+def _sample_matrix(rows: list) -> np.ndarray:
+    """The (m, d) f64 matrix of the pinned sample as ``qdf`` holds it
+    (``vec array<float>``): the same values ``route_query_batch`` would
+    collect from ``qdf``, without a job."""
+    return np.asarray([v for _, v in rows], dtype=np.float32).astype(np.float64)
+
+
+def _io_model(index: "IVFIndex", qmat: np.ndarray, shapes: list) -> dict:
+    """``visited_fraction`` per ``(n_probe, n_probe_fine, probe_ratio)``
+    shape, from the sample already on the driver: driver arithmetic over
+    the segments' cached partition / cell counts (the first call on a
+    loaded two-level index runs the one cell-histogram job per segment)."""
+    return {
+        (np_, npf, ratio): index._probe_io_model(
+            qmat, np_, npf, probe_ratio=ratio
+        )["visited_fraction"]
+        for np_, npf, ratio in shapes
+    }
 
 
 def tune_search(
@@ -157,23 +178,20 @@ def tune_search(
     if probe_ratio_grid is None:
         probe_ratio_grid = [1.2, 1.5, None]
 
-    # IO model once per (n_probe, n_probe_fine, probe_ratio) shape; the
-    # cell histogram behind it is cached on the segment, so this is
-    # driver arithmetic. Adaptive shapes are modeled with the SAME keep
-    # rule the search applies (r7), so the cheapest-first walk orders
+    # IO model once per (n_probe, n_probe_fine, probe_ratio) shape, over
+    # the sample already on the driver: driver arithmetic, no job once the
+    # cell histograms are cached. Adaptive shapes are modeled with the SAME
+    # keep rule the search applies (r7), so the cheapest-first walk orders
     # them by their true predicted IO, not the fixed-depth upper bound.
-    io_frac = {
-        (np_, npf, ratio): index.probe_io_stats(
-            qdf, np_, npf, probe_ratio=ratio
-        )["visited_fraction"]
+    grid = [
+        (np_, npf, ratio)
         for np_ in n_probe_grid
         for npf in n_probe_fine_grid
         for ratio in probe_ratio_grid
-    }
+    ]
+    io_frac = _io_model(index, _sample_matrix(rows), grid)
     shapes = sorted(
-        ((io_frac[(np_, npf, ratio)], np_, npf, ratio)
-         for np_ in n_probe_grid for npf in n_probe_fine_grid
-         for ratio in probe_ratio_grid),
+        ((io_frac[shape], *shape) for shape in grid),
         key=lambda t: (t[0], t[3] if t[3] is not None else float("inf")),
     )
     ladder = sorted(overquery_grid)
@@ -271,7 +289,7 @@ def tune_graph_search(
     metric = index.manifest.metric
     gt = exact.knn_join(corpus, qdf, k, metric=metric, strategy="numpy").cache()
     gt.count()
-    qmat = np.stack([np.asarray(v, dtype=np.float64) for _, v in rows])
+    qmat = _sample_matrix(rows)
 
     n_parts = max(
         len(index._segments[s.name]["centroids"])

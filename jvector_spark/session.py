@@ -5,6 +5,16 @@ real cluster (AQE, Arrow, sensible shuffle partitioning). On a 1000-executor
 cluster only ``master`` and memory sizing change — the plan shapes stay valid
 because every operator is expressed declaratively and scales with input
 partitioning, not driver state.
+
+Every session runs its Python workers through ``jvector_spark._daemon``
+(``spark.python.daemon.module``): pyspark's daemon with a cheaper
+``importlib.invalidate_caches``, which pyspark calls before every task
+(about 0.2 s per task without it; see that module for the one semantic
+change). The workers import that module, so ``get_spark`` also puts the
+directory holding ``jvector_spark`` on their path
+(``spark.executorEnv.PYTHONPATH``), whatever the caller's cwd. A session
+whose workers cannot import ``jvector_spark`` fails every Python task,
+user UDFs included.
 """
 
 from __future__ import annotations
@@ -14,6 +24,8 @@ import os
 from pyspark.sql import SparkSession
 
 _MAX_DRIVER_MB = 16 << 10
+# the directory holding the jvector_spark package, for the workers' path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -39,6 +51,17 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's SparkSession (``getOrCreate``): ``local[N]`` with
+    ``N = SPARK_GRAFT_CPUS`` unless ``master`` is given, and the defaults
+    above; ``extra_conf`` entries are set last and win.
+
+    Python workers start from ``jvector_spark._daemon``
+    (``spark.python.daemon.module``), and ``spark.executorEnv.PYTHONPATH``
+    gets the directory holding ``jvector_spark``, so the workers import it
+    from any cwd. A ``spark.executorEnv.PYTHONPATH`` in ``extra_conf`` is
+    kept: the package directory is appended to it. If the workers still
+    cannot import ``jvector_spark`` (say, a cluster whose executors lack
+    the package), every Python task of the session fails."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
@@ -71,8 +94,15 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.awt.headless=true")
+        .config("spark.python.daemon.module", "jvector_spark._daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p
+        for p in (conf.get("spark.executorEnv.PYTHONPATH"), _PACKAGE_PARENT)
+        if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -4,6 +4,7 @@ n_probe_fine, overquery) lattice under the index's own IO model."""
 
 import numpy as np
 import pytest
+from conftest import count_jobs
 
 from jvector_spark.operators import exact
 from jvector_spark.operators.index import IVFIndexBuilder
@@ -84,6 +85,60 @@ def test_tune_best_config_holds_on_heldout_queries(tuned_index, spark):
         n_probe_fine=best["n_probe_fine"],
     )
     assert recall_at_k(r, gt, 10) >= 0.85 - 0.15  # generalization tolerance
+
+
+def _default_io_shapes():
+    """tune's default (n_probe, n_probe_fine, probe_ratio) grid for a
+    32-partition two-level index: 5 x 4 x 3 = 60 shapes."""
+    return [
+        (np_, npf, ratio)
+        for np_ in (1, 2, 4, 8, 16)
+        for npf in (None, 8, 16, 32)
+        for ratio in (1.2, 1.5, None)
+    ]
+
+
+def _tune_sample(spark, df, n=24):
+    from pyspark.sql import functions as F
+
+    rows = [
+        (int(r[0]), [float(x) for x in r[1]])
+        for r in df.orderBy(F.xxhash64("id")).limit(n).collect()
+    ]
+    return rows, spark.createDataFrame(rows, "qid long, vec array<float>")
+
+
+def test_tune_io_model_matches_probe_io_stats(tuned_index, spark):
+    """The driver-side IO model ``tune`` runs over its pinned sample gives
+    ``probe_io_stats``' visited fraction for every default shape."""
+    from jvector_spark.operators.tune import _io_model, _sample_matrix
+
+    idx, df = tuned_index
+    rows, qdf = _tune_sample(spark, df)
+    shapes = _default_io_shapes()
+    got = _io_model(idx, _sample_matrix(rows), shapes)
+    for np_, npf, ratio in shapes:
+        want = idx.probe_io_stats(qdf, np_, npf, probe_ratio=ratio)
+        assert got[(np_, npf, ratio)] == want["visited_fraction"], (np_, npf, ratio)
+
+
+def test_tune_io_model_runs_no_job(tuned_index, spark):
+    """Once the segments' cell histograms are cached (one job per loaded
+    segment), the whole IO-model phase of ``tune`` is driver arithmetic:
+    it used to run one ``take`` job over the sample per shape."""
+    from jvector_spark.operators.tune import _io_model, _sample_matrix
+
+    idx, df = tuned_index
+    for seg in idx.manifest.segments:
+        idx._cell_counts(seg.name)
+    rows, _ = _tune_sample(spark, df)
+    shapes = _default_io_shapes()
+    out = {}
+    jobs = count_jobs(
+        spark, lambda: out.update(_io_model(idx, _sample_matrix(rows), shapes))
+    )
+    assert jobs == 0
+    assert len(out) == len(shapes)
 
 
 def test_tune_sweeps_probe_ratio(spark, tmp_path):
