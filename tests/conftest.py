@@ -50,11 +50,9 @@ def random_vectors(spark, rng):
     return df, mat
 
 
-def count_jobs(spark, fn) -> int:
-    """Spark jobs started while ``fn()`` runs: ``fn`` runs under a fresh
-    job group and the status tracker counts the group's jobs once the
-    listener bus has delivered every event. ``fn`` must materialize what
-    it builds (``collect()``, ``count()``) — a lazy plan starts no job."""
+def _run_in_job_group(spark, fn) -> list[int]:
+    """Run ``fn()`` under a fresh job group; the ids of the jobs it
+    started, read once the listener bus has delivered every event."""
     sc = spark.sparkContext
     group = f"count_jobs_{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -64,4 +62,31 @@ def count_jobs(spark, fn) -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def count_jobs(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs: ``fn`` runs under a fresh
+    job group and the status tracker counts the group's jobs once the
+    listener bus has delivered every event. ``fn`` must materialize what
+    it builds (``collect()``, ``count()``) — a lazy plan starts no job."""
+    return len(_run_in_job_group(spark, fn))
+
+
+def stage_tasks(spark, fn) -> list[int]:
+    """Task count of each stage that ``fn()`` started, in stage-id order
+    (same job-group pattern as :func:`count_jobs`). A stage a job skipped
+    because its shuffle output already existed started no task and is
+    left out."""
+    tracker = spark.sparkContext.statusTracker()
+    stage_ids = set()
+    for j in _run_in_job_group(spark, fn):
+        info = tracker.getJobInfo(j)
+        if info is not None:
+            stage_ids.update(info.stageIds)
+    out = []
+    for s in sorted(stage_ids):
+        st = tracker.getStageInfo(s)
+        if st is not None and st.numCompletedTasks > 0:
+            out.append(st.numTasks)
+    return out

@@ -8,10 +8,12 @@ Reference semantics under test:
   (graph/GraphIndexBuilder.java markDeleted -> removeDeletedNodes)
 """
 
+import math
 import tempfile
 
 import numpy as np
 import pytest
+from conftest import stage_tasks
 from pyspark.sql import functions as F
 
 from jvector_spark.operators import exact
@@ -542,6 +544,31 @@ def test_graph_search_has_one_path(spark, graph_index, knob):
     queries = corpus.filter(F.col("id") < 4).selectExpr("id as qid", "vec")
     with pytest.raises(TypeError):
         idx.search_graph(queries, k=5, **knob)
+
+
+def test_graph_traversal_fills_the_cores(spark, graph_index):
+    """The traversal exchange keeps one partition per core: a 16-query
+    batch probing all 8 partitions walks them in min(defaultParallelism,
+    groups) tasks, where AQE's byte-sized coalescing of the few-KB replica
+    shuffle would fold every walk into one task. The query frame is one
+    partition, so the traversal is the call's widest stage."""
+    par = spark.sparkContext.defaultParallelism
+    if par == 1:
+        pytest.skip("one core: one traversal task is already one per core")
+    idx, corpus = graph_index
+    n_parts = len(idx._segments[idx.manifest.segments[0].name]["centroids"])
+    assert n_parts == 8
+    n_groups = n_parts * max(1, math.ceil(2 * par / n_parts))
+    queries = spark.createDataFrame(
+        corpus.filter(F.col("id") < 16).selectExpr("id as qid", "vec").collect(),
+        "qid long, vec array<float>",
+    ).coalesce(1)
+    tasks = stage_tasks(
+        spark,
+        lambda: idx.search_graph(queries, k=10, n_probe=n_parts, ef_search=40)
+        .collect(),
+    )
+    assert max(tasks) == min(par, n_groups)
 
 
 def test_graph_search_distributed_bulk(spark, sf_dir):
