@@ -46,9 +46,10 @@ Search (``GraphSearcher.java:222-507`` beam semantics, batched) has ONE
 path, like the reference's one ``GraphSearcher``: the caller's query
 DataFrame probes its ``n_probe`` nearest centroids exactly like IVF search
 (the hierarchical-descent analog), then a ZERO-CORPUS-SHUFFLE pass over
-the probed partitions (query replicas are grouped by partition; each group
-task direct-reads its partition's data/edges dirs) runs a vectorized
-multi-query best-first beam search per partition — ADC/hamming
+the probed partitions (query replicas are grouped by partition; each
+traversal task direct-reads its groups' data/edges dirs) runs ONE
+vectorized multi-query best-first beam search over all of a task's
+partitions at once, as a disjoint-union graph — ADC/hamming
 approximate scores steer the traversal (the reference's
 compressed-first-pass search), and the surviving beam reranks
 through the same fused exact-scoring kernel every other route uses, so
@@ -58,9 +59,10 @@ Tombstoned rows are traversed but filtered from RESULTS (the reference's
 two-phase delete: deleted nodes keep routing until cleanup,
 GraphIndexBuilder.java markDeleted -> removeDeletedNodes).
 
-Scale shape: the searcher holds ONE partition's (codes + adjacency)
-resident per task — exactly DiskANN's memory contract, bounded by the
-builder's partition sizing, and visits ``O(ef x degree)`` rows per
+Scale shape: the searcher holds one wave of partitions' (codes +
+adjacency) resident per task — bounded by the wave budgets (query rows,
+and query rows x union rows), or by one partition when that partition
+alone fills a wave — and visits ``O(ef x degree)`` rows per
 (query, partition) independent of partition size: the graph route is the
 low-latency point-query path where even fine-cell masks read too much.
 """
@@ -71,7 +73,7 @@ import json
 import math
 import os
 import tempfile
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -947,45 +949,91 @@ def _batch_beam(
     across queries, so the per-(q, c) gathered form wastes bandwidth.
     Pilots that miss the kept beam stay marked visited: they scored
     under ef in-beam rows, so best-first would never expand them.
-    Returns (n_q, ef) local ordinals, -1 padded."""
-    w = max(1, ef // 64)
+    Returns (n_q, ef) local ordinals, -1 padded.
+
+    This is ``_seed_rows`` + ``_walk`` over one graph. Graph search does
+    not call it per partition: a traversal task seeds the rows of every
+    probed partition it holds into one disjoint-union graph and runs ONE
+    ``_walk`` (``_walk_union``). Each hop is a Python step with a fixed
+    cost, and a point batch's groups hold 1-3 queries each, so one hop
+    loop per group would pay that constant ~100 hops x every group of
+    the task; a query's beam only ever reaches rows of its own partition, so
+    the union walk returns the same beams."""
+    state = _beam_state(n_q, n_local, ef)
+    _seed_rows(
+        score_fn, state, 0, n_q, entries, n_local, ef, counters, seed_sc
+    )
+    return _walk(score_fn, nbr_mat, state, ef, counters)
+
+
+def _beam_state(n_q: int, n_cols: int, ef: int) -> tuple:
+    """Empty beams for ``n_q`` query rows over an ``n_cols``-row graph:
+    (beam ids, beam scores, expanded flags, visited bitmap)."""
     beam_id = np.full((n_q, ef), -1, dtype=np.int64)
     beam_sc = np.full((n_q, ef), -np.inf, dtype=np.float32)
     beam_ex = np.ones((n_q, ef), dtype=bool)  # padding counts as expanded
     # reused scratch: a fresh (n_q, n_local) bool costs seconds of page
     # faults at bulk shapes on the build host; memset on resident pages
     # does not
-    visited = _scratch("beam_visited", (n_q, n_local), bool)
+    visited = _scratch("beam_visited", (n_q, n_cols), bool)
     visited[:] = False
+    return beam_id, beam_sc, beam_ex, visited
+
+
+def _seed_rows(
+    score_fn,
+    state: tuple,
+    lo: int,
+    hi: int,
+    entries: np.ndarray,
+    n_local: int,
+    ef: int,
+    counters=None,
+    seed_sc: np.ndarray | None = None,
+) -> None:
+    """Seed beam rows ``lo:hi`` of ``state`` from ``entries`` (ordinals of
+    the walked graph, so offset by the partition's first row when that
+    graph is a union; ``n_local`` is the partition's own row count).
+    ``score_fn`` is called with those row numbers; ``seed_sc`` holds the
+    rows' seed scores when the caller has them (see ``_batch_beam``)."""
+    beam_id, beam_sc, beam_ex, visited = state
+    n_q = hi - lo
+    rows = np.arange(lo, hi)
     entries = np.asarray(entries, dtype=np.int64)
     if seed_sc is not None or len(entries) > ef:
         sc = (
             seed_sc
             if seed_sc is not None
-            else score_fn(np.arange(n_q), np.tile(entries, (n_q, 1)))
+            else score_fn(rows, np.tile(entries, (n_q, 1)))
         )
         p = len(entries)
         if p > ef:
             top = np.argpartition(-sc, ef - 1, axis=1)[:, :ef]
-            beam_id[:] = entries[top]
-            beam_sc[:] = np.take_along_axis(sc, top, axis=1)
-            beam_ex[:] = False
+            beam_id[lo:hi] = entries[top]
+            beam_sc[lo:hi] = np.take_along_axis(sc, top, axis=1)
+            beam_ex[lo:hi] = False
         else:
-            beam_id[:, :p] = entries[None, :]
-            beam_sc[:, :p] = sc
-            beam_ex[:, :p] = False
-        visited[:, entries] = True
+            beam_id[lo:hi, :p] = entries[None, :]
+            beam_sc[lo:hi, :p] = sc
+            beam_ex[lo:hi, :p] = False
+        visited[lo:hi, entries] = True
     else:
         e = entries[: min(len(entries), ef)]
         seed = np.tile(e, (n_q, 1))
-        beam_sc[:, : len(e)] = score_fn(np.arange(n_q), seed)
-        beam_id[:, : len(e)] = seed
-        beam_ex[:, : len(e)] = False
-        visited[:, e] = True
+        beam_sc[lo:hi, : len(e)] = score_fn(rows, seed)
+        beam_id[lo:hi, : len(e)] = seed
+        beam_ex[lo:hi, : len(e)] = False
+        visited[lo:hi, e] = True
     if counters is not None:  # seed scores are visits too (recall-per-IO)
         counters[0].add(int(n_q * min(len(entries), n_local)))
+
+
+def _walk(score_fn, nbr_mat: np.ndarray, state: tuple, ef: int, counters=None):
+    """The best-first hop loop over seeded beams (see ``_batch_beam``);
+    returns (n_q, ef) ordinals of ``nbr_mat``'s graph, -1 padded."""
+    beam_id, beam_sc, beam_ex, visited = state
+    w = max(1, ef // 64)
     max_hops = 8 * ef + 16  # safety rail; best-first converges in ~ef/w hops
-    qall = np.arange(n_q)
     deg = nbr_mat.shape[1]
     for _ in range(max_hops):
         cand_sc = np.where(~beam_ex & (beam_id >= 0), beam_sc, -np.inf)
@@ -1089,86 +1137,148 @@ def _decode_partition(
     return data_pdf, ids, nbr_mat, entries, codes, mags, rsq
 
 
-def _traverse_rerank(
-    part_pack,
-    met: str,
-    kk: int,
-    ef: int,
-    q_ids: np.ndarray,
-    q_mat: np.ndarray,
-    q_nrm: np.ndarray,
-    s1_sel,
-    qc_vec: np.ndarray | None,
-    nvq_c,
+# Traversal wave budgets: a wave holds at most this many query rows, which
+# bounds the stage-1 LUT footprint (rows x m x 256 f32) ...
+_WAVE_ROWS = 8192
+# ... and at most this many visited-bitmap cells, query rows x union rows.
+_WAVE_CELLS = 128 << 20
+
+
+class _WalkRows(NamedTuple):
+    """One partition's query rows in a traversal wave: ``pack`` is its
+    ``_decode_partition`` output, ``s1`` the codec's ``query_stage1``
+    payload for exactly these queries and ``qc`` the per-query q.centroid
+    dot (residual decomposition)."""
+
+    pack: tuple
+    q_ids: np.ndarray
+    q_mat: np.ndarray
+    q_nrm: np.ndarray
+    s1: tuple
+    qc: np.ndarray | None
+
+
+def _walk_union(
+    wave: list[_WalkRows], met: str, ef: int, tel_acc
+) -> list[np.ndarray]:
+    """Beam-walk every partition of ``wave`` as ONE disjoint-union graph:
+    codes, magnitudes and neighbor lists are concatenated with each
+    partition's ordinals offset by its first union row (-1 stays -1), each
+    partition's query rows are seeded from its own pilots
+    (``_pilot_entries``), and one ``_walk`` runs the hops for all of them.
+    A beam never leaves its own
+    partition's rows, so each beam equals that partition's own
+    ``_batch_beam``, and the visited counts sum to the same totals.
+    Returns each partition's beams in its local ordinals."""
+    n_loc = [len(w.pack[1]) for w in wave]
+    offs = np.cumsum([0] + n_loc)
+    rows = np.cumsum([0] + [len(w.q_ids) for w in wave])
+    first = wave[0]
+    codes = np.concatenate([w.pack[4] for w in wave])
+    mags = None if first.pack[5] is None else np.concatenate(
+        [w.pack[5] for w in wave]
+    )
+    rsq = None if first.pack[6] is None else np.concatenate(
+        [w.pack[6] for w in wave]
+    )
+    deg = max(w.pack[2].shape[1] for w in wave)
+    nbr_mat = np.full((int(offs[-1]), deg), -1, dtype=np.int64)
+    for w, off, n in zip(wave, offs, n_loc):
+        nb = w.pack[2]
+        nbr_mat[off: off + n, : nb.shape[1]] = np.where(nb >= 0, nb + off, -1)
+    kind, _, aux = first.s1
+    s1 = (kind, np.concatenate([w.s1[1] for w in wave]), aux)
+    q_nrm = np.concatenate([w.q_nrm for w in wave])
+    qc = None if first.qc is None else np.concatenate([w.qc for w in wave])
+
+    def score_fn(aq: np.ndarray, cand: np.ndarray) -> np.ndarray:
+        return _traverse_scores(
+            met, s1, aq, q_nrm, codes, mags, cand, rsq,
+            qc[aq] if qc is not None else None,
+        )
+
+    state = _beam_state(int(rows[-1]), int(offs[-1]), ef)
+    for i, w in enumerate(wave):
+        _seed_rows(
+            score_fn, state, rows[i], rows[i + 1],
+            _pilot_entries(w.pack[3], n_loc[i], ef) + offs[i], n_loc[i], ef,
+            tel_acc,
+        )
+    beams = _walk(score_fn, nbr_mat, state, ef, tel_acc)
+    return [
+        np.where(b >= 0, b - off, -1)
+        for b, off in zip(np.split(beams, rows[1:-1]), offs)
+    ]
+
+
+def _rerank_beams(
+    w: _WalkRows, beams: np.ndarray, met: str, kk: int, ef: int, nvq_c,
     tel_acc,
-) -> pd.DataFrame:
-    """Batched beam traversal + fused exact rerank of ONE partition for
-    the GIVEN (already selected) queries. ``s1_sel`` is the codec's
-    ``query_stage1`` payload for exactly these queries (aligned with
-    ``q_ids``); ``qc_vec`` is the per-query
-    q.centroid dot for residual decomposition. The per-group core of the
-    one search plan (``_traverse_probed_partitions``)."""
+) -> list[pd.DataFrame]:
+    """Fused exact rerank of one partition's beams: each query's top ``kk``
+    of ITS beam (``strict_mask``), scored as the IVF routes score."""
     from jvector_spark.operators.index import (
         _fused_block_topk,
         _rerank_rows,
         _stage1_rows,
     )
 
-    data_pdf, ids, nbr_mat, entries, codes, mags, rsq = part_pack
-    n_local = len(ids)
-    n_q = len(q_ids)
-
-    def score_fn(aq: np.ndarray, cand: np.ndarray) -> np.ndarray:
-        return _traverse_scores(
-            met, s1_sel, aq, q_nrm, codes, mags, cand, rsq,
-            qc_vec[aq] if qc_vec is not None else None,
-        )
-
-    # chunk the query axis so visited (Qc, n_local) stays bounded
-    qc_chunk = max(1, int((128 << 20) // max(n_local, 1)))
+    data_pdf, ids, _, _, codes, _, rsq = w.pack
+    n_q = len(w.q_ids)
     # rerank sub-chunk: the (Qr, uniq) mask/score matrices are dense and
     # uniq grows toward min(n_local, Qr x ef) — on LARGE partitions
-    # (coarse layouts) a whole qc_chunk's combined beam covers most of
+    # (coarse layouts) a whole query chunk's combined beam covers most of
     # the partition and the matrices blow past worker memory (measured:
     # worker OOM-crash at n_local ~40k, 3.3k queries/chunk). Bound
     # Qr x uniq to ~2^25 f32 cells (128 MB), min 64 queries per pass.
-    out = []
-    pil = _pilot_entries(entries, n_local, ef)
+    r_chunk = max(64, int((1 << 25) // max(min(len(ids), n_q * ef), 1)))
     rerank_rows = _rerank_rows(data_pdf, nvq_c, block=False)
-    for lo in range(0, n_q, qc_chunk):
-        hi = min(lo + qc_chunk, n_q)
-        sub = np.arange(lo, hi)
-        beams = _batch_beam(
-            lambda a, c: score_fn(sub[a], c),
-            nbr_mat, pil, hi - lo, n_local, ef,
+    out = []
+    for r0 in range(0, n_q, r_chunk):
+        r1 = min(r0 + r_chunk, n_q)
+        rsub = np.arange(r0, r1)
+        rbeams = beams[r0:r1]
+        uniq = np.unique(rbeams[rbeams >= 0])
+        if len(uniq) == 0:
+            continue
+        # membership mask: each query reranks only ITS beam
+        mask = np.zeros((r1 - r0, len(uniq)), dtype=bool)
+        for qi in range(r1 - r0):
+            bm = rbeams[qi][rbeams[qi] >= 0]
+            mask[qi, np.searchsorted(uniq, bm)] = True
+        oq, oi, osc = _fused_block_topk(
+            met, kk, ef, w.q_ids[rsub], w.q_mat[rsub],
+            _stage1_rows(w.s1, rsub), w.q_nrm[rsub], ids[uniq],
+            codes[uniq], lambda idx: rerank_rows(uniq[idx]),
+            mask=mask,
             counters=tel_acc,
+            residual=(w.qc[rsub], rsq[uniq]) if w.qc is not None else None,
+            strict_mask=True,  # results come ONLY from this query's beam
         )
-        r_chunk = max(64, int((1 << 25) // max(min(n_local, (hi - lo) * ef), 1)))
-        for r0 in range(lo, hi, r_chunk):
-            r1 = min(r0 + r_chunk, hi)
-            rsub = np.arange(r0, r1)
-            rbeams = beams[r0 - lo: r1 - lo]
-            uniq = np.unique(rbeams[rbeams >= 0])
-            if len(uniq) == 0:
-                continue
-            # membership mask: each query reranks only ITS beam
-            mask = np.zeros((r1 - r0, len(uniq)), dtype=bool)
-            for qi in range(r1 - r0):
-                bm = rbeams[qi][rbeams[qi] >= 0]
-                mask[qi, np.searchsorted(uniq, bm)] = True
-            oq, oi, osc = _fused_block_topk(
-                met, kk, ef, q_ids[rsub], q_mat[rsub],
-                _stage1_rows(s1_sel, rsub), q_nrm[rsub], ids[uniq],
-                codes[uniq], lambda idx: rerank_rows(uniq[idx]),
-                mask=mask,
-                counters=tel_acc,
-                residual=(
-                    (qc_vec[rsub], rsq[uniq]) if qc_vec is not None else None
-                ),
-                strict_mask=True,  # results come ONLY from this query's beam
-            )
-            out.append(pd.DataFrame({"qid": oq, "id": oi, "score": osc}))
-    return pd.concat(out, ignore_index=True) if out else empty_hits()
+        out.append(pd.DataFrame({"qid": oq, "id": oi, "score": osc}))
+    return out
+
+
+def _sorted_groups(
+    batches: Iterator[pd.DataFrame], cols: list[str]
+) -> Iterator[tuple[tuple, pd.DataFrame]]:
+    """(key, rows) per run of equal ``cols`` in a stream of frames sorted
+    on ``cols``; a run that spans frames is joined before it is yielded."""
+    held, held_key = [], None
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        keys = pdf[cols].to_numpy()
+        cuts = np.flatnonzero((keys[1:] != keys[:-1]).any(axis=1)) + 1
+        for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, len(pdf)]):
+            key = tuple(int(v) for v in keys[lo])
+            if held and key != held_key:
+                yield held_key, pd.concat(held, ignore_index=True)
+                held = []
+            held_key = key
+            held.append(pdf.iloc[lo:hi])
+    if held:
+        yield held_key, pd.concat(held, ignore_index=True)
 
 
 def graph_search(
@@ -1190,16 +1300,22 @@ def graph_search(
     map-only probe assignment (the same ``_assign_probes`` the IVF tile
     route uses), query replicas shuffle to their probed part_ids (Q x
     n_probe rows — the ONLY exchange; salted by qid hash on coarse layouts
-    so a few partitions still fill the cores), and each group task
-    pyarrow-reads ITS partition's data/edges dirs and runs the shared
+    so a few partitions still fill the cores), and each traversal task
+    pyarrow-reads its groups' data/edges dirs and runs the shared
     traversal/rerank core (fp32-exact or dequantized-NVQ reported scores).
     Corpus bytes never move and the driver collects nothing, so the
     exchange is sized by the query side alone, whatever the batch size.
     That exchange has an explicit partition count, ``min(defaultParallelism,
     groups)`` (never more than the (part_id[, salt]) groups): AQE sizes
     partitions by bytes and would fold the few KB of replicas into one
-    task, but this stage's cost is per group (a partition read and a beam
-    walk), so one task per core runs the walks side by side.
+    task, but this stage's cost grows with its groups (a partition read
+    and decode per group), so one task per core runs them side by side.
+    A task walks ALL of its groups in ONE beam: their partitions form one
+    disjoint-union graph, so the hop loop runs once per task (per wave of
+    groups, see ``_waves``), not once per group. Each hop is a Python step
+    with a fixed cost, and a point batch's groups hold 1-3 queries each, so
+    a loop per group would pay that constant ~100 hops x every group of
+    the task. The union walk returns the same beams (``_walk_union``).
     The beam is steered by the index's stage-1 codes (PQ/BQ, the
     reference's compressed-first-pass search).
 
@@ -1282,6 +1398,60 @@ def _read_partition(dirs: tuple, part: int):
     )
 
 
+def _group_walk_rows(
+    dirs: tuple, part: int, qpdf: pd.DataFrame, cdc, met: str, ef: int,
+    res_m: bool, cents,
+) -> Iterator[_WalkRows]:
+    """One (part_id[, salt]) group's queries as wave rows: reads and decodes
+    the partition, then splits the queries into LUT steps of
+    ``_WAVE_ROWS`` and those into chunks whose visited bitmap over the
+    partition alone stays under ``_WAVE_CELLS``, so a group over a wave's
+    budget on its own walks in query chunks."""
+    data_pdf, edge_pdf = _read_partition(dirs, part)
+    if data_pdf is None:
+        return
+    pack = _decode_partition(
+        data_pdf, edge_pdf, cdc, met == "COSINE" and not res_m, res_m
+    )
+    if pack is None:
+        return
+    n_local = len(pack[1])
+    q_ids = qpdf["qid"].to_numpy(dtype=np.int64)
+    qmat = kernels.as_matrix(qpdf["vec"])
+    qnrm = np.linalg.norm(qmat, axis=1)
+    qc_vec = (qmat @ cents[part]) if res_m else None
+    step = max(1, _WAVE_CELLS // max(n_local, 1))
+    for lo in range(0, len(q_ids), _WAVE_ROWS):
+        hi = min(lo + _WAVE_ROWS, len(q_ids))
+        kind, q_side, aux = cdc.query_stage1(qmat[lo:hi], met, residual=res_m)
+        for c0 in range(lo, hi, step):
+            c1 = min(c0 + step, hi)
+            yield _WalkRows(
+                pack, q_ids[c0:c1], qmat[c0:c1], qnrm[c0:c1],
+                (kind, q_side[c0 - lo: c1 - lo], aux),
+                qc_vec[c0:c1] if res_m else None,
+            )
+
+
+def _waves(rows: Iterator[_WalkRows]) -> Iterator[list[_WalkRows]]:
+    """Pack wave rows, in stream order, into waves of at most
+    ``_WAVE_ROWS`` query rows and ``_WAVE_CELLS`` visited cells (query
+    rows x union rows); a row chunk that fills a wave alone is one wave."""
+    wave, n_rows, n_cols = [], 0, 0
+    for w in rows:
+        r, c = len(w.q_ids), len(w.pack[1])
+        if wave and (
+            n_rows + r > _WAVE_ROWS or (n_rows + r) * (n_cols + c) > _WAVE_CELLS
+        ):
+            yield wave
+            wave, n_rows, n_cols = [], 0, 0
+        wave.append(w)
+        n_rows += r
+        n_cols += c
+    if wave:
+        yield wave
+
+
 def _traverse_probed_partitions(
     index, queries_df, query_id_col, query_vec_col, met, k_ret, ef, n_probe,
     probe_ratio, use_nvq, tel_acc,
@@ -1289,9 +1459,15 @@ def _traverse_probed_partitions(
     """The one graph search plan, per segment: ``_assign_probes`` maps each
     query to its probed partitions (map-only, where the queries live),
     the (part_id, qid, vec) replicas shuffle into one group per probed
-    partition (Q x n_probe rows — the ONLY exchange), and each group task
-    pyarrow-reads ITS partition's data/edges dirs and runs the shared
-    traversal core, building stage-1 payloads per query chunk in-task.
+    partition (Q x n_probe rows — the ONLY exchange), sorted by group key
+    within each shuffle partition, and each traversal task streams its
+    groups in key order (``_sorted_groups``): it pyarrow-reads each group's
+    partition data/edges dirs, builds stage-1 payloads per query chunk
+    in-task, and packs the groups into waves (``_waves``) that it walks as
+    ONE disjoint-union beam each (``_walk_union``), then reranks per group.
+    One hop loop per task, not per group: a hop's Python constant is paid
+    once for every query of the wave, where a loop per group would pay it
+    once per group for arrays of 1-3 queries.
     Corpus bytes never shuffle: cogrouping data with edges on part_id was
     measured 5x slower at 100k (it re-shuffles the probed corpus per
     batch), and the fused tile route replicates corpus blocks per query
@@ -1321,13 +1497,15 @@ def _traverse_probed_partitions(
         # partitions by bytes, and this exchange is tiny (Q x n_probe
         # replica rows, ~33 KB for a 16-query batch), so it would coalesce
         # every group into ONE task; yet each group costs a partition read
-        # plus a beam walk (~55 ms), whatever its bytes. AQE leaves an
-        # explicit-count repartition alone, and the group-by reuses its
-        # hash partitioning (still one exchange). One shuffle partition
-        # per core, never more than there are groups: on a 4-core host and
-        # a 100-partition 10k x 64 index, 16-query p50 read 1.90 s in one
-        # task, 0.91 s at 4 partitions, 0.95 s at 8 and 1.44 s at one per
-        # group.
+        # (~5.5 ms), a decode (~2.5 ms) and a rerank (~2 ms), whatever its
+        # bytes, and the union walks of a 16-query batch's ~40 groups cost
+        # 0.12-0.21 s in all (~120 hops; 10k x 64 point index, 100
+        # partitions, 4-core host). AQE leaves an explicit-count
+        # repartition alone, and the sort within its partitions adds no
+        # exchange. One shuffle partition per core, never more than there
+        # are groups: on that index, with one hop loop per group, 16-query
+        # p50 read 1.90 s in one task, 0.91 s at 4 partitions, 0.95 s at 8
+        # and 1.44 s at one per group.
         par = index.spark.sparkContext.defaultParallelism
         n_parts = len(info["centroids"])
         group_salt = max(1, int(math.ceil(2.0 * par / n_parts)))
@@ -1353,50 +1531,32 @@ def _traverse_probed_partitions(
         # factory binds THIS segment's broadcast — the plan runs lazily,
         # and a free `b` in a loop-shared scope would resolve to the LAST
         # segment's broadcast for every segment
-        def _make_traverse(b, tel_acc, dirs):
-            def traverse(key: tuple, qpdf: pd.DataFrame) -> pd.DataFrame:
+        def _make_walk_task(b, tel_acc, dirs, group_cols):
+            def walk_task(
+                batches: Iterator[pd.DataFrame],
+            ) -> Iterator[pd.DataFrame]:
                 cdc, m_, kk, ef_, nvq_c, res_m, cents_ = b.value
-                part = int(key[0])
-                data_pdf, edge_pdf = _read_partition(dirs, part)
-                if data_pdf is None or len(qpdf) == 0:
-                    return empty_hits()
-                pack = _decode_partition(
-                    data_pdf, edge_pdf, cdc, m_ == "COSINE" and not res_m, res_m
-                )
-                if pack is None:
-                    return empty_hits()
-                q_ids = qpdf["qid"].to_numpy(dtype=np.int64)
-                qmat = kernels.as_matrix(qpdf["vec"])
-                qnrm = np.linalg.norm(qmat, axis=1)
-                qc_vec = (qmat @ cents_[part]) if res_m else None
-                # outer chunk bounds the per-chunk LUT footprint
-                # (Qc x m x 256 f32); the core chunks again on the
-                # visited bitmap
-                out = []
-                step = 8192
-                for lo in range(0, len(q_ids), step):
-                    hi = min(lo + step, len(q_ids))
-                    qm = qmat[lo:hi]
-                    r = _traverse_rerank(
-                        pack, m_, kk, ef_,
-                        q_ids[lo:hi], qm, qnrm[lo:hi],
-                        cdc.query_stage1(qm, m_, residual=res_m),
-                        qc_vec[lo:hi] if qc_vec is not None else None,
-                        nvq_c, tel_acc,
+                rows = (
+                    w
+                    for key, qpdf in _sorted_groups(batches, group_cols)
+                    for w in _group_walk_rows(
+                        dirs, key[0], qpdf, cdc, m_, ef_, res_m, cents_
                     )
-                    if len(r):
-                        out.append(r)
-                return (
-                    pd.concat(out, ignore_index=True) if out else empty_hits()
                 )
+                for wave in _waves(rows):
+                    beams = _walk_union(wave, m_, ef_, tel_acc)
+                    for w, wb in zip(wave, beams):
+                        yield from _rerank_beams(
+                            w, wb, m_, kk, ef_, nvq_c, tel_acc
+                        )
 
-            return traverse
+            return walk_task
 
         parts_out.append(
             assigned.repartition(n_shuffle, *group_cols)
-            .groupby(*group_cols)
-            .applyInPandas(
-                _make_traverse(b, tel_acc, dirs),
+            .sortWithinPartitions(*group_cols)
+            .mapInPandas(
+                _make_walk_task(b, tel_acc, dirs, group_cols),
                 schema="qid long, id long, score double",
             )
         )

@@ -434,7 +434,7 @@ def _fused_block_topk(
     the broadcast two-phase join (``search.two_phase_knn_join``, one call
     per Arrow batch), the tile scorer ``_tile_topk`` (the IVF tile scan
     and the blocked two-phase join, both on ``exact.tile_join``), and
-    graph-traversal rerank (``graph._traverse_rerank``). Returns (qid,
+    graph-traversal rerank (``graph._rerank_beams``). Returns (qid,
     id, score) arrays.
 
     ``counters``: (visited_acc, reranked_acc) or (visited_acc,

@@ -665,6 +665,110 @@ def test_batch_beam_pilot_seeding_topef():
     assert float(seeded_sc[:, :5].mean()) >= float(base_sc[:, :5].mean()) - 1e-6
 
 
+class _Count:
+    def __init__(self):
+        self.value = 0
+
+    def add(self, v):
+        self.value += v
+
+
+@pytest.mark.parametrize(
+    "codec_kind,met,residual",
+    [("pq", "COSINE", False), ("pq", "EUCLIDEAN", True), ("bq", "COSINE", False)],
+)
+@pytest.mark.parametrize("ef", [16, 130])
+def test_union_walk_matches_per_partition_beams(
+    monkeypatch, codec_kind, met, residual, ef
+):
+    """A traversal wave walks its partitions as one disjoint-union graph;
+    every partition's beams must be bit-identical to its own
+    ``_batch_beam``, with the same visited-row total."""
+    from jvector_spark.operators import graph
+    from jvector_spark.operators.quantize.bq import BinaryQuantizer
+    from jvector_spark.operators.quantize.pq import ProductQuantizer
+
+    rng = np.random.default_rng(11)
+    d = 16
+    if codec_kind == "pq":
+        codec = ProductQuantizer.fit_numpy(
+            rng.normal(size=(512, d)).astype(np.float32),
+            m=4, clusters=16, iterations=3, seed=7,
+        )
+    else:
+        codec = BinaryQuantizer(dim=d)
+    # (rows, degree, queries); the largest has rows > 16 x ef, so its
+    # pilots outnumber ef (the top-ef seeding branch)
+    shapes = [(90, 8, 2), (16 * ef + 300, 12, 5), (300, 16, 1), (150, 10, 3)]
+    rows, ref, pil_n, ref_visits = [], [], [], _Count()
+    for n, deg, nq in shapes:
+        x = rng.normal(size=(n, d)).astype(np.float32)
+        nbrs, entry = _build_partition_graph(x, deg, 1.2, 1.2, 2 * deg, met)
+        nbr_mat = np.full((n, max(len(a) for a in nbrs)), -1, np.int64)
+        for i, a in enumerate(nbrs):
+            nbr_mat[i, : len(a)] = a
+        codes = codec.encode_numpy(x)
+        if codec_kind == "pq":
+            codes = codes.astype(np.int64)
+        mags = codec.row_magnitudes(codes) if met == "COSINE" and not residual else None
+        rsq = np.einsum("ij,ij->i", x, x).astype(np.float32) if residual else None
+        q = x[:nq] + 0.1 * rng.normal(size=(nq, d)).astype(np.float32)
+        q_nrm = np.linalg.norm(q, axis=1)
+        qc = (q @ x.mean(axis=0)) if residual else None
+        s1 = codec.query_stage1(q, met, residual=residual)
+        entries = np.atleast_1d(np.asarray(entry, dtype=np.int64))
+        pil = graph._pilot_entries(entries, n, ef)
+        pil_n.append(len(pil))
+        pack = (None, np.arange(n), nbr_mat, entries, codes, mags, rsq)
+        rows.append(graph._WalkRows(pack, np.arange(nq), q, q_nrm, s1, qc))
+
+        def score_fn(aq, cand, s1=s1, q_nrm=q_nrm, codes=codes, mags=mags,
+                     rsq=rsq, qc=qc):
+            return graph._traverse_scores(
+                met, s1, aq, q_nrm, codes, mags, cand, rsq,
+                qc[aq] if qc is not None else None,
+            )
+
+        ref.append(_batch_beam(
+            score_fn, nbr_mat, pil, nq, n, ef, counters=(ref_visits,)
+        ))
+    assert pil_n[1] > ef and pil_n[0] <= ef
+    # budget: the first three partitions' cells fit, the fourth's do not
+    budget = 10 * sum(n for n, _, _ in shapes[:3])
+    monkeypatch.setattr(graph, "_WAVE_CELLS", budget)
+    waves = list(graph._waves(iter(rows)))
+    assert len(waves) >= 2 and max(len(w) for w in waves) >= 2
+    got, visits = [], _Count()
+    for wave in waves:
+        got += graph._walk_union(wave, met, ef, (visits,))
+    assert len(got) == len(ref)
+    for a, b in zip(got, ref):
+        assert np.array_equal(a, b)
+    assert visits.value == ref_visits.value
+
+
+def test_sorted_groups_joins_runs_across_frames():
+    """A traversal task's groups arrive as key-sorted Arrow batches; a
+    group split across batches comes out whole, once, in key order."""
+    import pandas as pd
+
+    from jvector_spark.operators.graph import _sorted_groups
+
+    frames = [
+        pd.DataFrame({"part_id": [1, 1, 2], "_gs": [0, 1, 1], "qid": [10, 11, 12]}),
+        pd.DataFrame({"part_id": [], "_gs": [], "qid": []}),
+        pd.DataFrame({"part_id": [2, 2, 5], "_gs": [1, 1, 0], "qid": [13, 14, 15]}),
+        pd.DataFrame({"part_id": [5], "_gs": [0], "qid": [16]}),
+    ]
+    got = [
+        (key, g["qid"].tolist())
+        for key, g in _sorted_groups(iter(frames), ["part_id", "_gs"])
+    ]
+    assert got == [
+        ((1, 0), [10]), ((1, 1), [11]), ((2, 1), [12, 13, 14]), ((5, 0), [15, 16]),
+    ]
+
+
 def test_graph_meta_write_is_atomic(tmp_path, monkeypatch):
     """A meta write that dies mid-way leaves the previous ``meta.json``
     readable and no temp file behind."""
