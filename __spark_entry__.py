@@ -959,15 +959,17 @@ def _stream_ingest_search_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = corpus.filter(F.col("id") < 16).selectExpr("id as qid", "vec")
     exhaustive = dict(n_probe=4096, overquery=float(n) / 10.0)
     pre = idx.search(queries, k=10, **exhaustive)
-    pre_rows = [
+    # top-k results are ranked, not ordered: compare the rows, not the
+    # order a plan happens to return them in
+    pre_rows = sorted(
         (r["qid"], r["id"], round(r["score"], 6), r["rank"]) for r in pre.collect()
-    ]
+    )
     idx = idx.compact()
     assert len(idx.manifest.segments) == 1
     post = idx.search(queries, k=10, **exhaustive)
-    post_rows = [
+    post_rows = sorted(
         (r["qid"], r["id"], round(r["score"], 6), r["rank"]) for r in post.collect()
-    ]
+    )
     assert pre_rows == post_rows, "compaction changed exhaustive results"
     return post.select(
         "qid", "id", F.round("score", 6).alias("score"),

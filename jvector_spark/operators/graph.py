@@ -1384,18 +1384,14 @@ def graph_search(
 
 def _read_partition(dirs: tuple, part: int):
     """One partition's data and edge tables, read straight from the hive
-    dirs; ``dirs`` is (data dir, edges dir, data columns)."""
-    import pyarrow.parquet as papq
+    dirs with the IVF search's reader; ``dirs`` is (data dir, edges dir,
+    data columns). ``(None, None)`` unless both exist."""
+    from jvector_spark.operators.index import _read_part
 
     data_dir, graph_dir, dcols = dirs
-    dpath = os.path.join(data_dir, f"part_id={int(part)}")
-    epath = os.path.join(graph_dir, f"part_id={int(part)}")
-    if not (os.path.exists(dpath) and os.path.exists(epath)):
-        return None, None
-    return (
-        papq.read_table(dpath, columns=list(dcols)).to_pandas(),
-        papq.read_table(epath, columns=["id", "neighbors", "entry"]).to_pandas(),
-    )
+    edges = _read_part(graph_dir, part, ("id", "neighbors", "entry"))
+    data = _read_part(data_dir, part, dcols) if edges is not None else None
+    return (data, edges) if data is not None else (None, None)
 
 
 def _group_walk_rows(

@@ -18,23 +18,25 @@ pruning:
   rerank, GraphSearcher.java:222-507): queries are assigned to their
   ``n_probe`` nearest centroids on the driver (the descent analog —
   centroids are broadcast like the RAM-cached upper layers,
-  OnDiskGraphIndex.java:119-161). ONE fused scan of the probed ``part_id``
-  partitions then does both phases per Arrow batch: ADC-score the codes,
-  keep ``rerankK = overquery*k`` batch-local candidates, exact-rerank just
-  those rows at fp32 (the vectors are in the same batch — no join), and
-  emit the batch-local exact top-k. A single global window merges.
-  Batch-local reranking can only ADD candidates relative to the
-  reference's global-rerankK protocol, so recall at a given overquery is
-  >= the reference contract.
-- **IO shape at scale**: the fused scan reads (codes + vec) of
+  OnDiskGraphIndex.java:119-161). A point batch then runs ONE Spark stage
+  (``IVFIndex._probe_stage``): each task owns a chunk of the queries,
+  reads the partitions they probe with pyarrow and does both phases per
+  (partition, probing queries): ADC-score the codes, keep ``rerankK =
+  overquery*k`` partition-local candidates, exact-rerank just those rows
+  at fp32 (the vectors are in the same read — no join), then ranks each
+  of its qids itself. No exchange, no merge job. Partition-local
+  reranking can only ADD candidates relative to the reference's
+  global-rerankK protocol, so recall at a given overquery is >= the
+  reference contract.
+- **IO shape at scale**: a search reads (codes + vec) of
   n_probe/n_partitions of the corpus — the same bytes the classic
   two-stage plan reads in total (codes scan + fp32 rerank join), with one
-  scan, one shuffle, and one Python stage fewer. A survivor-only fp32
-  read buys nothing in Spark: the classic plan's survivor join (a 20k x
-  64 parquet corpus, broadcast survivors) pushed only ``IsNotNull(id)``
-  into the fp32 scan and held no runtime filter, so it read every vector
-  row anyway. ``operators/search.two_phase_knn_join`` (no index) runs
-  this same fused kernel over codes joined to vectors.
+  read per (task, probed partition) and no shuffle on the point route. A
+  survivor-only fp32 read buys nothing in Spark: the classic plan's
+  survivor join (a 20k x 64 parquet corpus, broadcast survivors) pushed
+  only ``IsNotNull(id)`` into the fp32 scan and held no runtime filter, so
+  it read every vector row anyway. ``operators/search.two_phase_knn_join``
+  (no index) runs this same fused kernel over codes joined to vectors.
 - **segments + compaction**: streaming appends accumulate segment dirs;
   search unions segments (J6 multi-index merge, free in a batch engine);
   ``compact()`` rewrites N segments as one with retrained PQ (ref
@@ -430,7 +432,8 @@ def _fused_block_topk(
     cells are a recall lever, not a visited-set contract.
 
     Every two-phase route runs this kernel, so they all score
-    identically: the IVF broadcast scan (``IVFIndex._segment_fused_scan``),
+    identically: the IVF point search (``IVFIndex.search``'s broadcast
+    route, one call per (task, probed partition) in ``_probe_stage``),
     the broadcast two-phase join (``search.two_phase_knn_join``, one call
     per Arrow batch), the tile scorer ``_tile_topk`` (the IVF tile scan
     and the blocked two-phase join, both on ``exact.tile_join``), and
@@ -627,7 +630,7 @@ def _tile_topk(
             t_mark = now
         chunk_mask = None
         if n_fine:
-            # same semantics as the broadcast scan's mask — each query
+            # same semantics as the broadcast stage's mask — each query
             # ranks only rows from its OWN probed fine cells
             subs_list = [
                 np.asarray(s, dtype=np.int64) for s in qs["subs"].iloc[lo : lo + 512]
@@ -731,7 +734,7 @@ def _hier_fine_subs(
     partition the search actually scans.
 
     Returns one int32 array per query (<= npf ids; fewer when the probed
-    cells own fewer than npf fine cells). Shared by the broadcast scan,
+    cells own fewer than npf fine cells). Shared by the broadcast stage,
     the distributed assignment, and probe_io_stats so every route selects
     identically (bit-parity across routes). ``keep`` (``_select_probes``'
     mask, same shape as ``probe_cells``) is false for probes DROPPED by
@@ -1626,7 +1629,7 @@ def _select_probes(
     info: dict, qmat: np.ndarray, n_probe: int, probe_ratio: float | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
     """The top-k probe rule of every search route — the driver-side plan
-    of the broadcast scans, ``probe_io_stats`` and tuning, and the
+    of the broadcast stage, ``probe_io_stats`` and tuning, and the
     map-side assignment pass of distributed IVF search and every graph
     search, so all routes probe identically.
 
@@ -1674,14 +1677,14 @@ def _threshold_probes(
     return np.nonzero(bound + 1e-9 >= threshold)  # -inf = empty partition
 
 
-def _part_queries(qi: np.ndarray, pi: np.ndarray) -> dict[int, list[int]]:
-    """part_id -> ascending query positions, from (query, partition)
-    pairs in query order (``np.nonzero(keep)[0], probe[keep]`` for top-k
-    probes) — the broadcast scans' task routing table."""
-    out: dict[int, list[int]] = {}
-    for q, p in zip(qi.tolist(), pi.tolist()):
-        out.setdefault(p, []).append(q)
-    return out
+def _part_queries(qi: np.ndarray, pi: np.ndarray) -> dict[int, np.ndarray]:
+    """part_id (ascending) -> ascending int64 query positions, from
+    (query, partition) pairs in query order (``np.nonzero(keep)[0],
+    probe[keep]`` for top-k probes) — the broadcast stage's routing
+    table."""
+    order = np.argsort(pi, kind="stable")
+    parts, starts = np.unique(pi[order], return_index=True)
+    return dict(zip(parts.tolist(), np.split(qi[order].astype(np.int64), starts[1:])))
 
 
 def _threshold_hits(
@@ -1707,14 +1710,96 @@ def _threshold_hits(
     return pd.concat(frames, ignore_index=True)
 
 
-def _probed_groups(batches: Iterator[pd.DataFrame], part_to_queries: dict):
-    """``(part_id, rows, query positions)`` for every group of a
-    broadcast scan's batch stream that some query probes."""
-    for pdf in batches:
-        for part, grp in pdf.groupby("part_id"):
-            q_idx = part_to_queries.get(int(part))
-            if q_idx:
-                yield int(part), grp, np.asarray(q_idx)
+def _read_part(table_dir: str, part: int, columns, filters=None) -> pd.DataFrame | None:
+    """One ``part_id=`` directory of a segment table (index data or graph
+    edges), read with pyarrow: only ``columns``, with ``filters`` pushed
+    into the reader, so row groups whose min/max stats miss them are
+    skipped. None when the partition has no directory. The hive key lives
+    in the directory name, so ``part_id`` is not a column here."""
+    import pyarrow.parquet as papq
+
+    path = os.path.join(table_dir, f"part_id={int(part)}")
+    if not os.path.exists(path):
+        return None
+    return papq.read_table(path, columns=list(columns), filters=filters).to_pandas()
+
+
+def _is_member(ids: np.ndarray, sorted_vals: np.ndarray) -> np.ndarray:
+    """``ids`` found in the sorted array ``sorted_vals`` (one binary search
+    per id, so a large tombstone or accept set is never re-sorted)."""
+    if not len(sorted_vals):
+        return np.zeros(len(ids), dtype=bool)
+    at = np.minimum(np.searchsorted(sorted_vals, ids), len(sorted_vals) - 1)
+    return sorted_vals[at] == ids
+
+
+def _query_chunks(qids: np.ndarray, near: np.ndarray, n: int) -> np.ndarray:
+    """Chunk index (0..n-1) of every query position: the distinct qids,
+    ordered by (nearest centroid ``near`` of their first position, qid),
+    cut into ``n`` contiguous runs. Neighbouring queries probe overlapping
+    partitions, so a chunk reads fewer of them; positions sharing a qid
+    share a chunk, so a chunk ranks each of its qids alone."""
+    uq, first, inv = np.unique(qids, return_index=True, return_inverse=True)
+    chunk = np.empty(len(uq), dtype=np.int64)
+    for c, run in enumerate(np.array_split(np.lexsort((uq, near[first])), n)):
+        chunk[run] = c
+    return chunk[inv]
+
+
+def _chunk_rows(call: dict, c: int):
+    """``(plan, part_id, rows, qsel)`` for every partition that chunk
+    ``c``'s queries probe (``IVFIndex._probe_stage``): the partition read
+    with ``_read_part``, minus tombstoned rows (``tombstones.parquet`` is
+    read once, ``id`` only) and rows outside the accept sets; ``qsel`` is
+    the chunk's probing query positions, ascending."""
+    import pyarrow.parquet as papq
+
+    tomb, accept = call["tombstones"], call.get("accept_list")
+    dead = (
+        np.unique(papq.read_table(tomb, columns=["id"]).column("id").to_numpy())
+        if tomb is not None else None
+    )
+    in_chunk = call["chunk_of"] == c
+    for plan in call["plans"]:
+        for part, pos in plan["p2q"].items():
+            qsel = pos[in_chunk[pos]]
+            rows = (
+                _read_part(plan["dir"], part, plan["cols"], plan["filters"])
+                if len(qsel) else None
+            )
+            if rows is None:
+                continue
+            ids = rows["id"].to_numpy(dtype=np.int64)
+            keep = np.ones(len(ids), dtype=bool)
+            if dead is not None:
+                keep &= ~_is_member(ids, dead)
+            if accept is not None:
+                keep &= _is_member(ids, accept)
+            if "accepted" in plan:
+                keep &= _is_member(ids, plan["accepted"].get(part, ids[:0]))
+            if keep.any():
+                yield plan, part, (rows if keep.all() else rows[keep]), qsel
+
+
+def _rank_hits(hits: pd.DataFrame, k: int, spill: int) -> pd.DataFrame:
+    """``_merge_topk`` inside one task that holds every query position of
+    its qids: drop spilled copies (identical rows, ``spill > 1``), then
+    rank each qid by score desc, id asc and keep ranks ``<= k``."""
+    if spill > 1:
+        hits = hits.drop_duplicates(["qid", "id"])
+    q = hits["qid"].to_numpy(dtype=np.int64)
+    i = hits["id"].to_numpy(dtype=np.int64)
+    s = hits["score"].to_numpy(dtype=np.float64)
+    order = np.lexsort((i, -s, q))
+    q, i, s = q[order], i[order], s[order]
+    pos = np.arange(len(q))
+    starts = np.flatnonzero(np.diff(q, prepend=q[:1] - 1))
+    rank = pos - np.repeat(starts, np.diff(np.append(starts, len(q)))) + 1
+    keep = rank <= k
+    return pd.DataFrame(
+        {"qid": q[keep], "id": i[keep], "score": s[keep],
+         "rank": rank[keep].astype(np.int32)}
+    )
 
 
 def _merge_topk(
@@ -2129,9 +2214,13 @@ class IVFIndex:
         GraphSearcher.java:222; neither do we):
 
         - ``broadcast``: queries are collected + broadcast, per-query ADC
-          LUTs are precomputed on the driver, and ONE fused scan of the
-          probed partitions scores them (point-query-batch path; capped at
-          ``BROADCAST_QUERY_CAP`` rows).
+          LUTs are precomputed on the driver, and ONE Spark stage scores
+          them (point-query-batch path; capped at ``BROADCAST_QUERY_CAP``
+          rows): ``min(cores, distinct qids)`` tasks, each owning a chunk
+          of the queries, contiguous in nearest-centroid order. A task
+          pyarrow-reads every partition its queries probe, scores it and
+          ranks its own qids; no exchange, no merge job. A partition
+          probed by t tasks is read t times.
         - ``distributed``: NO driver collect of either side. Probe
           assignment runs as a map-only pass over the query DataFrame
           (centroids broadcast), queries shuffle to their probed
@@ -2150,15 +2239,18 @@ class IVFIndex:
         ``n_probe_fine`` works on BOTH routes: the
         distributed route computes the probed fine-sub union with a
         map-only pass (no query collect) and pushes the same
-        ``sub_id IN (...)`` scan filter the broadcast route uses, so
+        ``sub_id IN (...)`` filter the broadcast route passes to its
+        pyarrow reads, so
         mid-size bulk batches keep sublinear per-probe IO (a
         corpus-as-queries union approaches everything and degrades
         gracefully to plain IVF).
 
         On a two-level index (``fine_factor > 0``), ``n_probe_fine`` probes
         only the union of each query's nearest fine sub-clusters: the
-        ``sub_id IN (...)`` filter is pushed into the sorted parquet scan,
-        so row groups outside the probed sub-clusters are skipped — IO per
+        batch-wide ``sub_id IN (...)`` filter is pushed into the reads of
+        the sorted partition files (pyarrow ``filters=`` on the broadcast
+        route, the parquet scan on the distributed one), so row groups
+        outside the probed sub-clusters are skipped — IO per
         probe becomes sublinear in coarse-partition size (the lever that
         matters when a partition is tens of millions of rows). Tightest
         for small query batches; a large batch's union degrades gracefully
@@ -2175,10 +2267,14 @@ class IVFIndex:
         the stored fp32 column; ``rerank="nvq"`` requires the index to have
         been built with NVQ bytes.
 
-        Per probed Arrow batch: ADC approximate scores -> top
-        ``overquery*k`` batch-local candidates -> high-resolution rerank of
-        just those rows -> batch-local top-k. One global window merges
-        batch/segment results (J6). With fp32 rerank (the default) reported
+        Per (probed partition, probing queries of a task): ADC approximate
+        scores -> top ``overquery*k`` partition-local candidates ->
+        high-resolution rerank of just those rows -> partition-local top-k.
+        The kernel is independent per query, so each (query, partition)
+        pool is the same whichever task scores it, and the same as the
+        distributed route's tile. The task then drops spilled copies and
+        ranks each of its qids across partitions and segments (J6),
+        score desc then id asc. With fp32 rerank (the default) reported
         scores are exact (GraphSearcher.java:471-507 contract); with
         ``rerank="nvq"`` they are near-exact dequantized-NVQ scores (the
         reference's default feature — ordering can differ from fp32 by ~1%).
@@ -2187,15 +2283,25 @@ class IVFIndex:
         GraphSearcher.java:145-152,215-218):
 
         - ``predicate``: a Column over the index data table (id, vec,
-          codes, part_id), applied to the scan BEFORE candidate selection
-          — pushed into the Parquet read, exact w.r.t. the filtered corpus.
+          codes, part_id), applied BEFORE candidate selection, so results
+          are exact w.r.t. the filtered corpus.
         - ``accept_ids``: the accept-list. A list/set/ndarray of ids at or
           below ``FILTER_PIVOT_ROWS`` pivots to the exact filter-first
           plan (score only accepted live rows — the low-cardinality path);
-          larger collections and DataFrames (an ``id`` column) are
-          semi-joined against the scan inside each probed segment, before
-          the batch-local top-k, so candidate selection is exact over the
-          accepted subset of probed partitions.
+          larger collections and DataFrames (an ``id`` column) filter the
+          probed rows before the partition-local top-k, so candidate
+          selection is exact over the accepted subset of probed
+          partitions.
+
+        On the broadcast route a list ``accept_ids`` rides the stage's
+        broadcast as a sorted id array (no job). A ``predicate`` or a
+        DataFrame ``accept_ids`` costs one Spark job before the stage (plus
+        any job AQE runs for the semi-join with a DataFrame): it collects
+        the accepted ``(segment, part_id, id)`` rows of the
+        probed partitions (``_accepted_ids``), and each task keeps only
+        those rows. The driver holds them, so its memory is bounded by
+        the accepted rows of the probed partitions. The distributed route
+        filters and semi-joins inside its scan.
         """
         if probe_ratio is not None and probe_ratio < 1:
             raise ValueError(
@@ -2222,7 +2328,7 @@ class IVFIndex:
                 "rerank='fp32' is unavailable — search with rerank='nvq' "
                 "(the manifest default) or rebuild with store_fp32='all'"
             )
-        accept_df = None
+        accept_df = accept_list = None
         if accept_ids is not None and not isinstance(accept_ids, DataFrame):
             ids = [int(i) for i in accept_ids]
             if len(ids) <= self.FILTER_PIVOT_ROWS and predicate is None:
@@ -2233,7 +2339,7 @@ class IVFIndex:
                     corpus, queries_df, k, metric=metric,
                     query_id_col=query_id_col, query_vec_col=query_vec_col,
                 )
-            accept_df = self.spark.createDataFrame([(i,) for i in ids], "id long")
+            accept_list = ids
         elif isinstance(accept_ids, DataFrame):
             accept_df = accept_ids.select("id")
 
@@ -2243,6 +2349,10 @@ class IVFIndex:
             strategy, m_hint=m_hint,
         )
         if batch is None:
+            if accept_list is not None:
+                accept_df = self.spark.createDataFrame(
+                    [(i,) for i in accept_list], "id long"
+                )
             return self._search_distributed(
                 queries_df, metric, k, rerank_k, n_probe,
                 query_id_col, query_vec_col, predicate, accept_df, rerank, m_hint,
@@ -2252,16 +2362,90 @@ class IVFIndex:
         qids, qmat = batch
         if not len(qids):
             return empty_ranked(self.spark)
-        parts = [
-            self._segment_fused_scan(
-                self._segments[seg.name], qids, qmat, metric, k, rerank_k, n_probe,
-                predicate=predicate, accept_df=accept_df, rerank=rerank,
-                n_probe_fine=n_probe_fine, telemetry=telemetry,
-                probe_ratio=probe_ratio, npf_per_probe=npf_per_probe,
+        use_nvq = rerank == "nvq"
+        plans = []
+        for seg in self.manifest.segments:
+            info = self._segments[seg.name]
+            res_mode = bool(info.get("residual"))
+            probe, keep = _select_probes(info, qmat, n_probe, probe_ratio)
+            p2q = _part_queries(np.nonzero(keep)[0], probe[keep])
+            cols = ["id", "codes", *_rerank_cols(use_nvq)]
+            filters = q_fine_mask = None
+            # two-level probe: the BATCH-wide union of the queries' fine
+            # cells is pushed into the read (files are sorted by sub_id
+            # within each partition, so row groups outside it are skipped),
+            # and a per-(query, row) mask lets each query RANK only rows of
+            # its OWN cells. The union also bounds the mask's refill pool.
+            if n_probe_fine and info.get("fine") is not None:
+                fine_c = info["fine"]
+                # hierarchical selection, shared with the distributed
+                # assignment pass (bit-parity across routes)
+                subs_list = _hier_fine_subs(
+                    qmat, probe, fine_c, self._fine_own_pad(info),
+                    min(int(n_probe_fine), len(fine_c)), keep,
+                    per_probe=npf_per_probe,
+                )
+                union = sorted({int(s) for a in subs_list for s in a})
+                filters = [("sub_id", "in", union)]
+                if not union:
+                    p2q = {}
+                # (m, n_fine) membership bitmap; guarded so a huge query
+                # batch over a huge fine level keeps the union filter alone
+                if len(qids) * len(fine_c) <= 1 << 28:
+                    q_fine_mask = _cell_mask(subs_list, len(fine_c))
+                    cols.append("sub_id")
+            if res_mode:
+                cols.append("rsq")
+            plans.append({
+                "dir": os.path.join(info["dir"], "data.parquet"),
+                "p2q": p2q,
+                "cols": cols,
+                "filters": filters,
+                "codec": info["pq"],
+                "stage1": info["pq"].query_stage1(qmat, metric, residual=res_mode),
+                # residual mode: the per-(query, cell) dot table, Q x n_cells
+                "qc": qmat @ info["centroids"].T if res_mode else None,
+                "fine_mask": q_fine_mask,
+            })
+        if predicate is not None or accept_df is not None:
+            accepted = self._accepted_ids(
+                [sorted(p["p2q"]) for p in plans], predicate, accept_df
             )
-            for seg in self.manifest.segments
-        ]
-        return _merge_topk(parts, k, self.manifest.spill)
+            for plan, acc in zip(plans, accepted):
+                plan["accepted"] = acc
+        tel_acc = telemetry.counters() if telemetry is not None else None
+
+        def score(call, c, plan, part, rows, qsel):
+            if tel_acc is not None and c == plan["owner"][part]:
+                tel_acc[0].add(int(len(rows)))  # stage-1 visited, once per call
+            qfm = plan["fine_mask"]
+            oq, oi, osc = _fused_block_topk(
+                call["metric"], call["k"], call["rerank_k"],
+                call["q_ids"][qsel], call["q_mat"][qsel],
+                _stage1_rows(plan["stage1"], qsel), call["q_norms"][qsel],
+                rows["id"].to_numpy(dtype=np.int64),
+                plan["codec"].decode_codes(rows["codes"]),
+                _rerank_rows(rows, call["nvq"], block=False),
+                mask=(
+                    qfm[qsel][:, rows["sub_id"].to_numpy(dtype=np.int64)]
+                    if qfm is not None else None
+                ),
+                counters=tel_acc,
+                residual=(
+                    (plan["qc"][qsel, part], rows["rsq"].to_numpy(np.float32))
+                    if plan["qc"] is not None else None
+                ),
+            )
+            return pd.DataFrame({"qid": oq, "id": oi, "score": osc})
+
+        return self._probe_stage(
+            qids, qmat, plans, score,
+            lambda call, hits: _rank_hits(hits, call["k"], call["spill"]),
+            "qid long, id long, score double, rank int",
+            metric=metric, k=k, rerank_k=rerank_k, spill=self.manifest.spill,
+            q_norms=np.linalg.norm(qmat, axis=1), nvq=self._nvq_codec(use_nvq),
+            accept_list=accept_list,
+        )
 
     def search_page(
         self,
@@ -2303,116 +2487,75 @@ class IVFIndex:
         ranked = self.search(queries_df, int(page_size) * int(pages), **kwargs)
         return SearchCursor(ranked, page_size, pages)
 
-    def _segment_fused_scan(
-        self,
-        info: dict,
-        qids: np.ndarray,
-        qmat: np.ndarray,
-        metric: str,
-        k: int,
-        rerank_k: int,
-        n_probe: int,
-        predicate=None,
-        accept_df: DataFrame | None = None,
-        rerank: str | None = None,
-        n_probe_fine: int | None = None,
-        telemetry=None,
-        probe_ratio: float | None = None,
-        npf_per_probe: bool = False,
+    def _accepted_ids(
+        self, probed: list[list[int]], predicate, accept_df: DataFrame | None
+    ) -> list[dict[int, np.ndarray]]:
+        """The accepted rows of the probed partitions, per segment:
+        ``{part_id: sorted ids}``, from ONE Spark job over every segment
+        (``part_id IN`` the probed set, then the ``predicate`` and the
+        semi-join with ``accept_df``). The key includes ``part_id``: a
+        predicate may name it, and spilled copies of one id sit in two
+        partitions. The driver holds these ids, so its memory is bounded
+        by the accepted rows of the probed partitions."""
+        frames = []
+        for s, (seg, parts) in enumerate(zip(self.manifest.segments, probed)):
+            if not parts:
+                continue
+            data = self._segment_data(seg.name).filter(in_list("part_id", parts))
+            if predicate is not None:
+                data = data.filter(predicate)
+            if accept_df is not None:
+                data = data.join(accept_df, "id", "semi")
+            frames.append(data.select(F.lit(s).alias("seg"), "part_id", "id"))
+        out: list[dict[int, np.ndarray]] = [{} for _ in probed]
+        if not frames:
+            return out
+        union = frames[0]
+        for d in frames[1:]:
+            union = union.unionByName(d)
+        for (s, part), grp in union.toPandas().groupby(["seg", "part_id"]):
+            out[int(s)][int(part)] = np.unique(grp["id"].to_numpy(dtype=np.int64))
+        return out
+
+    def _probe_stage(
+        self, qids, qmat, plans: list[dict], score, finish, schema: str, **call
     ) -> DataFrame:
-        codec = info["pq"]
-        probe, keep = _select_probes(info, qmat, n_probe, probe_ratio)
-        part_to_queries = _part_queries(np.nonzero(keep)[0], probe[keep])
-        probed_parts = sorted(part_to_queries)
-        if not probed_parts:
-            return self.spark.createDataFrame([], "qid long, id long, score double")
+        """The broadcast routes' ONE Spark stage:
+        ``spark.range(n, numPartitions=n).mapInPandas``, one task per chunk
+        of the batch's queries (``_query_chunks``, n = min(cores, distinct
+        qids)). A task takes every partition its chunk probes from
+        ``_chunk_rows`` and scores it with ``score(call, chunk, plan,
+        part_id, rows, qsel)``; ``finish(call, hits)`` turns the task's
+        hits into its output rows. ``call`` is broadcast: the keyword
+        entries, the queries (``q_ids``, ``q_mat``), ``chunk_of``, the
+        ``plans``, a sorted ``accept_list`` and the tombstone path.
 
-        data = self._segment_data(info["name"])
-        # Catalyst partition-prunes the scan to the probed part_ids
-        data = data.filter(in_list("part_id", probed_parts))
-        data = self._apply_liveness(data)  # F2 tombstones, in-plan anti-join
-        # two-level probe: pushed sub_id filter -> parquet row-group skip
-        # (files are sorted by sub_id within each partition at write time),
-        # PLUS a per-(query, row) candidate mask so each query only RANKS
-        # rows from its OWN probed fine cells (the union filter prunes IO;
-        # the mask keeps a big batch's union from diluting each query's
-        # rerank budget — per-query recall matches the point-query model).
-        q_fine_mask = None
-        if n_probe_fine and info.get("fine") is not None:
-            fine_c = info["fine"]
-            npf = min(int(n_probe_fine), len(fine_c))
-            # hierarchical selection (shared with the distributed route's
-            # assignment pass — bit-parity across routes): top-npf among
-            # the fine cells OWNED by each query's probed coarse cells,
-            # so every selected cell lies in a partition this query scans
-            subs_list = _hier_fine_subs(
-                qmat, probe, fine_c, self._fine_own_pad(info), npf,
-                keep, per_probe=npf_per_probe,
-            )
-            data = data.filter(in_list("sub_id", (s for a in subs_list for s in a)))
-            # (m, n_fine) membership bitmap; guarded so a huge query batch
-            # over a huge fine level degrades to the union filter alone
-            if len(qids) * len(fine_c) <= 1 << 28:
-                q_fine_mask = _cell_mask(subs_list, len(fine_c))
-        # F1 accept filter BEFORE candidate selection: batch-local top-k then
-        # only ever ranks accepted rows — exact w.r.t. the filtered corpus
-        # (the reference applies acceptOrds the same way, never as traversal
-        # pruning — GraphSearcher.java:129-139).
-        if predicate is not None:
-            data = data.filter(predicate)
-        if accept_df is not None:
-            # semi-join; AQE turns it into a broadcast join when the accept
-            # side is small, and a shuffled join when it is corpus-sized
-            data = data.join(accept_df, "id", "semi")
-
-        res_mode = bool(info.get("residual"))
-        stage1 = codec.query_stage1(qmat, metric, residual=res_mode)
-        # residual mode: the per-(query, cell) dot table — Q x n_cells,
-        # driver-tiny (see _fused_block_topk)
-        qc_all = qmat @ info["centroids"].T if res_mode else None
-        qnorms = np.linalg.norm(qmat, axis=1)
-        use_nvq = (rerank or self.manifest.rerank) == "nvq"
-        nvq_codec = self._nvq_codec(use_nvq)
+        A plan holds ``dir`` (the segment's data table), ``p2q``
+        (``_part_queries``), the read's ``cols`` and
+        ``filters`` and optionally ``accepted`` (``_accepted_ids``).
+        ``owner`` (part_id -> the chunk of its lowest probing position) is
+        added here, so a once-per-call counter has one task to count it."""
+        n = min(self.spark.sparkContext.defaultParallelism, len(np.unique(qids)))
+        first = self._segments[self.manifest.segments[0].name]
+        chunk_of = _query_chunks(qids, _select_probes(first, qmat, 1)[0][:, 0], n)
+        for plan in plans:
+            plan["owner"] = {p: int(chunk_of[pos[0]]) for p, pos in plan["p2q"].items()}
+        if call.get("accept_list") is not None:
+            call["accept_list"] = np.unique(np.asarray(call["accept_list"], dtype=np.int64))
+        tomb = os.path.join(self.path, "tombstones.parquet")
         b = self.spark.sparkContext.broadcast(
-            (codec, stage1, qids, qmat, qnorms, metric, k, rerank_k,
-             part_to_queries, nvq_codec, q_fine_mask, qc_all)
+            dict(call, q_ids=qids, q_mat=qmat, chunk_of=chunk_of, plans=plans,
+                 tombstones=tomb if os.path.exists(tomb) else None)
         )
-        tel_acc = telemetry.counters() if telemetry is not None else None
 
-        def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            (cdc, s1, q_ids, q_mat, q_norms, met, kk, keep, p2q, nvq_c, qfm,
-             qc_a) = b.value
-            for part, grp, qsel in _probed_groups(batches, p2q):
-                if tel_acc is not None:
-                    tel_acc[0].add(int(len(grp)))  # stage-1 visited rows
-                mask = (
-                    qfm[qsel][:, grp["sub_id"].to_numpy(dtype=np.int64)]
-                    if qfm is not None
-                    else None
-                )
-                res_pack = (
-                    (qc_a[qsel, part], grp["rsq"].to_numpy(np.float32))
-                    if qc_a is not None
-                    else None
-                )
-                oq, oi, osc = _fused_block_topk(
-                    met, kk, keep, q_ids[qsel], q_mat[qsel],
-                    _stage1_rows(s1, qsel), q_norms[qsel],
-                    grp["id"].to_numpy(dtype=np.int64),
-                    cdc.decode_codes(grp["codes"]),
-                    _rerank_rows(grp, nvq_c, block=False),
-                    mask=mask, counters=tel_acc, residual=res_pack,
-                )
-                yield pd.DataFrame({"qid": oq, "id": oi, "score": osc})
+        def task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            cv = b.value
+            for pdf in batches:
+                for c in pdf["id"].tolist():
+                    hits = [score(cv, c, *r) for r in _chunk_rows(cv, c)]
+                    yield finish(cv, pd.concat([empty_hits(), *hits], ignore_index=True))
 
-        cols = ["part_id", "id", "codes", *_rerank_cols(use_nvq)]
-        if q_fine_mask is not None:
-            cols.append("sub_id")
-        if res_mode:
-            cols.append("rsq")
-        return data.select(*cols).mapInPandas(
-            scan, schema="qid long, id long, score double"
-        )
+        return self.spark.range(n, numPartitions=n).mapInPandas(task, schema=schema)
 
     # ------------------------------------------- distributed query side
     def _assign_probes(
@@ -2537,10 +2680,10 @@ class IVFIndex:
 
         Per segment: distributed probe assignment, then an
         ``exact.tile_join`` with ONE tile per probed partition, running
-        the same fused two-phase scoring as the broadcast scan. Per-tile
-        rerank_k can only ADD candidates relative to a global rerank_k, so
-        recall at a given overquery is >= the broadcast path's (same
-        argument as the Arrow-batch-local rerank).
+        the same fused two-phase scoring as the broadcast stage. Each
+        probed partition is one rerank pool on both routes, so they return
+        the same rows; a per-partition rerank_k can only ADD candidates
+        relative to a global rerank_k.
 
         ``threshold`` set: threshold mode. Assignment is bound-pruned
         (``_threshold_probes``), survivors are scored exactly at fp32
@@ -2713,7 +2856,14 @@ class IVFIndex:
         (ScoreTracker.java:80-147), which trades recall.
 
         ``strategy``: ``broadcast`` collects + broadcasts the query side
-        (capped at ``BROADCAST_QUERY_CAP``); ``distributed`` runs probe
+        (capped at ``BROADCAST_QUERY_CAP``) and runs the top-k route's ONE
+        Spark stage (``_probe_stage``) with ``_threshold_hits``. A
+        partition is scored against ALL its probing queries, as the
+        distributed tile does: BLAS rounds a GEMM's last bit differently
+        for another query count, so each task sharing a partition repeats
+        its GEMM. Of a spilled pair's two hits (their last bits can differ
+        with the partition size) a task keeps the lower ``part_id``'s.
+        ``distributed`` runs probe
         assignment and scoring fully distributed (the corpus-as-queries
         dedup path — exactness is preserved because pruning uses the same
         bounds and survivors are scored identically); ``auto`` routes on
@@ -2746,46 +2896,35 @@ class IVFIndex:
         qids, qmat = batch
         if not len(qids):
             return self.spark.createDataFrame([], "qid long, id long, score double")
-        parts = [
-            self._segment_threshold_scan(
-                self._segments[seg.name], qids, qmat, metric, threshold
-            )
-            for seg in self.manifest.segments
+        plans = [
+            {
+                "dir": os.path.join(info["dir"], "data.parquet"),
+                "p2q": _part_queries(*_threshold_probes(info, qmat, metric, threshold)),
+                "cols": ["id", "vec"],
+                "filters": None,
+            }
+            for info in (self._segments[seg.name] for seg in self.manifest.segments)
         ]
-        return _merge_threshold(parts, self.manifest.spill)
 
-    def _segment_threshold_scan(
-        self,
-        info: dict,
-        qids: np.ndarray,
-        qmat: np.ndarray,
-        metric: str,
-        threshold: float,
-    ) -> DataFrame:
-        part_to_queries = _part_queries(
-            *_threshold_probes(info, qmat, metric, threshold)
-        )
-        probed_parts = sorted(part_to_queries)
-        if not probed_parts:
-            return self.spark.createDataFrame([], "qid long, id long, score double")
+        def score(call, c, plan, part, rows, qsel):
+            # ALL the partition's probing queries (see the docstring): the
+            # scores must not depend on how the batch is chunked
+            probing = plan["p2q"][part]
+            hits = _threshold_hits(
+                call["metric"], call["threshold"],
+                call["q_ids"][probing], call["q_mat"][probing],
+                rows["id"].to_numpy(dtype=np.int64), kernels.as_matrix(rows["vec"]),
+            )
+            if len(qsel) < len(probing):
+                hits = hits[np.isin(hits["qid"].to_numpy(), call["q_ids"][qsel])]
+            return hits
 
-        data = self._segment_data(info["name"])
-        data = data.filter(in_list("part_id", probed_parts))
-        data = self._apply_liveness(data)  # F2 tombstones, in-plan anti-join
-        b = self.spark.sparkContext.broadcast(
-            (qids, qmat, metric, threshold, part_to_queries)
-        )
+        def finish(call, hits):
+            return hits.drop_duplicates(["qid", "id"]) if call["spill"] > 1 else hits
 
-        def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            q_ids, q_mat, met, t, p2q = b.value
-            for _, grp, qsel in _probed_groups(batches, p2q):
-                yield _threshold_hits(
-                    met, t, q_ids[qsel], q_mat[qsel],
-                    grp["id"].to_numpy(dtype=np.int64), kernels.as_matrix(grp["vec"]),
-                )
-
-        return data.select("part_id", "id", "vec").mapInPandas(
-            scan, schema="qid long, id long, score double"
+        return self._probe_stage(
+            qids, qmat, plans, score, finish, "qid long, id long, score double",
+            metric=metric, threshold=threshold, spill=self.manifest.spill,
         )
 
     # -------------------------------------------------------------- mutation

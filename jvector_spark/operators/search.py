@@ -83,8 +83,8 @@ class SearchScoreProvider:
 class SearchTelemetry:
     """Search-cost counters (ref ``SearchResult`` telemetry —
     visited/expanded/reranked node counts, SearchResult.java:25-86),
-    gathered with Spark accumulators from inside the fused scan / tile
-    kernels.
+    gathered with Spark accumulators from inside the fused kernel of the
+    point stage and the tiles.
 
     Usage::
 
@@ -100,13 +100,16 @@ class SearchTelemetry:
     documented Spark accumulator contract; treat as telemetry, not
     results.
 
-    Route-dependent ``visited_rows`` semantics: the broadcast scan counts
-    each stored row once per scanned partition group, while the
-    distributed TILE route counts each row once per probed partition
-    (one tile each, holding every query that probed it), because the
-    counter measures scan work actually done. Do not compare the
-    raw counter across routes; for the point-query IO model use
-    ``IVFIndex.probe_io_stats`` instead."""
+    Route notes: both IVF routes count ``visited_rows`` once per probed
+    partition per call. The distributed TILE route scores each probed
+    partition in one tile, holding every query that probed it; the
+    broadcast route can read a partition in several tasks (one per query
+    chunk that probes it) and counts it only in the task that holds its
+    lowest probing query position. ``reranked_rows`` counts the work
+    each task did, so on the broadcast route it can rise with the task
+    count: a row reranked for queries of two chunks counts twice. Do not
+    compare the raw counters across routes; for the point-query IO model
+    use ``IVFIndex.probe_io_stats`` instead."""
 
     STAGES = ("setup", "lut", "mask", "adc", "topk", "rerank")
 

@@ -45,6 +45,18 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     return f"{_MAX_DRIVER_MB}m"
 
 
+def default_cpus() -> int:
+    """Task slots of a ``local[N]`` session when ``SPARK_GRAFT_CPUS`` is
+    unset: the CPUs this process may run on (its affinity mask, which a
+    container's cpuset narrows), so a 4-core host starts 4 Python workers
+    at a time, not 32. Platforms without ``sched_getaffinity`` fall back
+    to ``os.cpu_count()``."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "jvector_spark",
     master: str | None = None,
@@ -52,8 +64,9 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """The engine's SparkSession (``getOrCreate``): ``local[N]`` with
-    ``N = SPARK_GRAFT_CPUS`` unless ``master`` is given, and the defaults
-    above; ``extra_conf`` entries are set last and win.
+    ``N = SPARK_GRAFT_CPUS`` (``default_cpus()`` when unset) unless
+    ``master`` is given, and the defaults above; ``extra_conf`` entries
+    are set last and win.
 
     Python workers start from ``jvector_spark._daemon``
     (``spark.python.daemon.module``), and ``spark.executorEnv.PYTHONPATH``
@@ -62,7 +75,7 @@ def get_spark(
     kept: the package directory is appended to it. If the workers still
     cannot import ``jvector_spark`` (say, a cluster whose executors lack
     the package), every Python task of the session fails."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
 

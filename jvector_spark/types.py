@@ -85,7 +85,7 @@ class IndexManifest:
         carries, mapped to the Parquet columns / sub-tables that implement
         them. The reference enumerates features in the index header and
         readers dispatch on the set; here the manifest config determines
-        the set, and readers (the fused scan's column list, the codec
+        the set, and readers (the search reads' column list, the codec
         loader) dispatch the same way — this accessor is the introspection
         surface that keeps the mapping explicit and testable.
         """

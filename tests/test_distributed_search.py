@@ -600,3 +600,57 @@ def test_probe_io_stats_models_adaptive(spark, tmp_path):
     c_fixed = idx.probe_io_stats(q, 6)
     c_tight = idx.probe_io_stats(q, 6, probe_ratio=1.1)
     assert c_tight["mean_visited_rows"] <= c_fixed["mean_visited_rows"]
+
+
+def _exact_rows(df):
+    """(qid, rank, id, score) rows with the score's exact bits."""
+    return sorted(
+        (r["qid"], r["rank"], r["id"], float(r["score"]).hex()) for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "cfg, search_kw",
+    [
+        ({"pq_residual": False}, {}),
+        ({"first_pass": "bq"}, {}),
+        ({"rerank": "nvq"}, {}),
+        ({"pq_residual": True}, {}),
+        ({"fine_factor": 4}, {"n_probe_fine": 2}),
+    ],
+    ids=["pq", "bq", "nvq", "residual", "fine"],
+)
+def test_routes_return_identical_rows(spark, big_setup, cfg, search_kw, tmp_path):
+    """Both routes score each (query, probed partition) pool once, with
+    the same kernel: at a partial rerank pool (overquery 1 and 4) the
+    broadcast and distributed routes return the same rows, scores
+    bit for bit."""
+    corpus, _, n = big_setup
+    idx = IVFIndexBuilder(
+        metric="COSINE", n_partitions=16, pq_m=4, **cfg
+    ).fit(corpus, str(tmp_path / "index"))
+    queries = corpus.limit(64).selectExpr("id as qid", "vec")
+    for overquery in (1.0, 4.0):
+        kw = dict(n_probe=4, overquery=overquery, **search_kw)
+        got = _exact_rows(idx.search(queries, 10, strategy="broadcast", **kw))
+        assert len(got) == 64 * 10
+        assert got == _exact_rows(idx.search(queries, 10, strategy="distributed", **kw))
+
+
+def test_routes_rank_a_large_partition_as_one_pool(spark, tmp_path_factory):
+    """A 20,000-row partition (two 10,000-record Arrow batches) is one
+    rerank pool on both routes: at overquery 1 the broadcast route's rows
+    equal the distributed route's, scores bit for bit."""
+    n, k = 20_000, 10
+    corpus = _mk_corpus(spark, np.random.default_rng(20_001), n).cache()
+    path = str(tmp_path_factory.mktemp("ivf_one_pool") / "index")
+    idx = IVFIndexBuilder(
+        metric="COSINE", n_partitions=1, spill=1, pq_m=4
+    ).fit(corpus, path)
+    queries = corpus.filter("id < 16").selectExpr("id as qid", "vec").cache()
+    kw = dict(n_probe=1, overquery=1.0)
+    got = _exact_rows(idx.search(queries, k, strategy="broadcast", **kw))
+    assert len(got) == 16 * k
+    assert got == _exact_rows(idx.search(queries, k, strategy="distributed", **kw))
+    queries.unpersist()
+    corpus.unpersist()

@@ -14,6 +14,7 @@ from conftest import count_jobs
 from jvector_spark.metrics import recall_at_k
 from jvector_spark.operators import exact
 from jvector_spark.operators.index import IVFIndex, IVFIndexBuilder
+from jvector_spark.operators.search import SearchTelemetry
 
 N, DIM, K = 4000, 32, 10
 
@@ -248,8 +249,14 @@ def test_two_level_fine_pruning(spark, tmp_path_factory):
         gt = exact.knn_join(df, queries_df, K, metric="COSINE", strategy="numpy").cache()
 
         fine = idx.search(queries_df, K, n_probe=16, overquery=8.0, n_probe_fine=24)
-        plan = fine._jdf.queryExecution().executedPlan().toString()
-        assert "sub_id" in plan  # pushed probe filter reached the scan
+        # the pushed probe filter reached the read: a one-query batch
+        # scores exactly the stored rows of its own probed fine cells
+        one, tel = queries_df.limit(1), SearchTelemetry(spark)
+        idx.search(
+            one, K, n_probe=16, overquery=8.0, n_probe_fine=24, telemetry=tel
+        ).count()
+        io = idx.probe_io_stats(one, 16, n_probe_fine=24)
+        assert tel.visited_rows == io["mean_visited_rows"] < io["stored_rows"]
         r_fine = recall_at_k(fine, gt, K)
         r_fines.append(r_fine)
 

@@ -9,6 +9,7 @@ import tempfile
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from conftest import count_jobs
 from jvector_spark.operators import exact
@@ -155,8 +156,8 @@ def test_auto_route_costs_no_extra_jobs(spark, setup, op):
 
 
 def test_job_budgets(spark, setup):
-    """Absolute Spark-job budgets for a small build, a point IVF search,
-    a point graph search, a threshold search, both two-phase routes and
+    """Absolute Spark-job budgets for a small build, a point IVF search
+    (plain, and with a predicate), a point graph search, a threshold search, both two-phase routes and
     the three other blocked routes (the per-call fixed cost the engine
     pays whatever the data size). The blocked budgets catch a plan that
     broadcast-joins a local table: that costs a job."""
@@ -174,6 +175,12 @@ def test_job_budgets(spark, setup):
         ),
         "search": count_jobs(
             spark, lambda: idx.search(queries, K, n_probe=4).collect()
+        ),
+        "search_predicate": count_jobs(
+            spark,
+            lambda: idx.search(
+                queries, K, n_probe=4, predicate=F.col("id") % 2 == 0
+            ).collect(),
         ),
         "search_graph": count_jobs(
             spark,
@@ -210,7 +217,8 @@ def test_job_budgets(spark, setup):
         ),
     }
     budget = {
-        "build": 7, "search": 2, "search_graph": 3, "threshold": 2,
+        "build": 7, "search": 1, "search_predicate": 2, "search_graph": 3,
+        "threshold": 1,
         "knn_join_blocked": 3,
         "search_distributed": 3, "threshold_distributed": 3,
         "two_phase": 3, "two_phase_blocked": 4,

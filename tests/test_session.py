@@ -1,6 +1,6 @@
 """Session defaults that depend on the host."""
 
-from jvector_spark.session import default_driver_memory
+from jvector_spark.session import default_cpus, default_driver_memory
 
 
 def _meminfo(tmp_path, total_kb: int) -> str:
@@ -18,6 +18,18 @@ def test_default_driver_memory_sized_from_host(tmp_path):
     assert default_driver_memory(str(tmp_path / "missing")) == "16384m"
     (tmp_path / "garbled").write_text("MemTotal: lots\n")
     assert default_driver_memory(str(tmp_path / "garbled")) == "16384m"
+
+
+def test_default_cpus_follow_the_affinity_mask(monkeypatch):
+    """One task slot per CPU the process may run on; ``os.cpu_count()``
+    where the platform has no affinity call."""
+    import os
+
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5}, raising=False)
+    assert default_cpus() == 3
+    monkeypatch.delattr(os, "sched_getaffinity")
+    monkeypatch.setattr(os, "cpu_count", lambda: 6)
+    assert default_cpus() == 6
 
 
 # --- the worker daemon (jvector_spark._daemon) ------------------------------
