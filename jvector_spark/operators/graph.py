@@ -42,19 +42,23 @@ segment's graph when every merged segment had one — the reference
 rebuilds its graph at compaction the same way
 (OnDiskGraphIndexCompactor.java:296).
 
-Search (``GraphSearcher.java:222-507`` beam semantics, batched) has ONE
-path, like the reference's one ``GraphSearcher``: the caller's query
-DataFrame probes its ``n_probe`` nearest centroids exactly like IVF search
-(the hierarchical-descent analog), then a ZERO-CORPUS-SHUFFLE pass over
-the probed partitions (query replicas are grouped by partition; each
-traversal task direct-reads its groups' data/edges dirs) runs ONE
-vectorized multi-query best-first beam search over all of a task's
-partitions at once, as a disjoint-union graph — ADC/hamming
-approximate scores steer the traversal (the reference's
-compressed-first-pass search), and the surviving beam reranks
-through the same fused exact-scoring kernel every other route uses, so
-reported scores carry identical semantics (fp32-exact or dequantized-NVQ).
-No route choice, collect or fallback depends on the batch size.
+Search (``GraphSearcher.java:222-507`` beam semantics, batched): each
+query probes its ``n_probe`` nearest centroids exactly like IVF search
+(the hierarchical-descent analog), then ONE vectorized multi-query
+best-first beam search walks all of a task's probed partitions at once,
+as a disjoint-union graph — ADC/hamming approximate scores steer the
+traversal (the reference's compressed-first-pass search), and the
+surviving beam reranks through the same fused exact-scoring kernel every
+other route uses, so reported scores carry identical semantics
+(fp32-exact or dequantized-NVQ). Corpus bytes never move: a task reads
+its partitions' data/edges dirs directly. The batch size picks one of
+two plans, by the rule of every point-query-batch operator (one
+``take(BROADCAST_QUERY_CAP + 1)``): a point batch runs the IVF broadcast
+route's one Spark stage (``IVFIndex._probe_stage``; query chunks, each
+task walks its chunk's probes and ranks its own qids), and a larger one
+shuffles query replicas to their probed partitions and merges the
+results by qid (``_traverse_probed_partitions`` + ``_merge_topk``).
+Both return the same rows.
 Tombstoned rows are traversed but filtered from RESULTS (the reference's
 two-phase delete: deleted nodes keep routing until cleanup,
 GraphIndexBuilder.java markDeleted -> removeDeletedNodes).
@@ -81,7 +85,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jvector_spark.functions import kernels
-from jvector_spark.operators.exact import empty_hits
+from jvector_spark.operators.exact import empty_ranked, route_query_batch
 
 __all__ = ["build_graph", "graph_search"]
 
@@ -1294,30 +1298,45 @@ def graph_search(
     telemetry=None,
 ) -> DataFrame:
     """Graph-traversal ANN over the index's per-partition Vamana graphs.
+    Returns ``(qid, id, score, rank)`` rows, ranked per query under score
+    desc / id asc, not ordered.
 
-    One physical plan serves every batch (``_traverse_probed_partitions``;
-    jvector's one ``GraphSearcher``): the caller's query DataFrame feeds a
-    map-only probe assignment (the same ``_assign_probes`` the IVF tile
-    route uses), query replicas shuffle to their probed part_ids (Q x
-    n_probe rows — the ONLY exchange; salted by qid hash on coarse layouts
-    so a few partitions still fill the cores), and each traversal task
-    pyarrow-reads its groups' data/edges dirs and runs the shared
-    traversal/rerank core (fp32-exact or dequantized-NVQ reported scores).
-    Corpus bytes never move and the driver collects nothing, so the
-    exchange is sized by the query side alone, whatever the batch size.
-    That exchange has an explicit partition count, ``min(defaultParallelism,
-    groups)`` (never more than the (part_id[, salt]) groups): AQE sizes
-    partitions by bytes and would fold the few KB of replicas into one
-    task, but this stage's cost grows with its groups (a partition read
-    and decode per group), so one task per core runs them side by side.
-    A task walks ALL of its groups in ONE beam: their partitions form one
-    disjoint-union graph, so the hop loop runs once per task (per wave of
-    groups, see ``_waves``), not once per group. Each hop is a Python step
-    with a fixed cost, and a point batch's groups hold 1-3 queries each, so
-    a loop per group would pay that constant ~100 hops x every group of
-    the task. The union walk returns the same beams (``_walk_union``).
-    The beam is steered by the index's stage-1 codes (PQ/BQ, the
-    reference's compressed-first-pass search).
+    Every query probes its ``n_probe`` nearest centroids (``_select_probes``,
+    the IVF probe rule) and walks the graph of each probed partition; the
+    walk is jvector's one ``GraphSearcher``, and two physical plans run it.
+    ``exact.route_query_batch`` picks the plan with the rule of every
+    point-query-batch operator: ONE ``take(BROADCAST_QUERY_CAP + 1)`` of
+    the query side, no parameter.
+
+    - **Point route** (at most ``BROADCAST_QUERY_CAP`` query rows, which
+      that take collects): the IVF broadcast route's one Spark stage
+      (``IVFIndex._probe_stage``), ``min(defaultParallelism, distinct
+      qids)`` tasks, each owning a chunk of the queries (contiguous in
+      nearest-centroid order). The driver picks the probes; a task reads
+      the data and edges dirs of every partition its chunk probes, walks
+      them per segment as one disjoint-union beam, reranks, drops
+      tombstoned ids and ranks its own qids (``_walk_chunk``,
+      ``_rank_chunk``). One job, no exchange. A partition probed by t
+      chunks is read t times.
+    - **Exchange route** (more rows, which the driver must not collect):
+      ``_traverse_probed_partitions`` maps each query of the caller's
+      DataFrame to its probed partitions where it lives
+      (``_assign_probes``), the (part_id, qid, vec) replicas shuffle into
+      ``min(defaultParallelism, groups)`` tasks (salted by qid hash on
+      coarse layouts so a few partitions still fill the cores; an explicit
+      count, which AQE does not coalesce), and each task reads its groups'
+      data and edges dirs and walks them as one beam per wave; then
+      ``_merge_topk`` drops spilled copies and tombstoned ids and ranks
+      per qid across tasks and segments.
+
+    Corpus bytes never move on either route. Both return the same rows:
+    a beam never leaves its own partition, so how queries are grouped into
+    tasks and waves changes no beam (``_walk_union``), and each query
+    reranks only its own beam. The beam is steered by the index's stage-1
+    codes (PQ/BQ, the reference's compressed-first-pass search) and
+    expands ``max(1, ef_search // 64)`` nodes per hop (``_batch_beam``);
+    the survivors rerank through the IVF routes' fused kernel
+    (fp32-exact or dequantized-NVQ reported scores).
 
     For bulk batches over small partitions, ``IVFIndex.search(strategy=
     "distributed")`` is the cheaper operator: its tile GEMMs scan whole
@@ -1325,9 +1344,11 @@ def graph_search(
     1M x 64-d, 2000-row partitions, np4/ef40, 32 cores: 318 s vs 3,213 s
     for traversal).
 
-    Query vectors ride the plan in the index's f32 layout (the
-    ``_assign_probes`` schema), so ``array<double>`` queries are scored
-    as their f32 roundings.
+    Query vectors are walked in the index's f32 layout on both routes
+    (the point route casts the collected batch through float32, the
+    exchange route's replicas have the ``_assign_probes`` schema), so
+    ``array<double>`` queries are scored as their f32 roundings; probes
+    are picked from the vectors as given.
 
     Tombstoned rows are traversed but filtered from results (two-phase
     delete semantics); ``compact()`` removes them AND rebuilds the merged
@@ -1337,9 +1358,7 @@ def graph_search(
     use ``IVFIndex.search(predicate=..., accept_ids=...)``.
 
     ``ef_search`` defaults to ``max(2k, overquery*k)`` (the beam width /
-    per-partition candidate pool — GraphSearcher's rerankK analog); the
-    beam expands ``max(1, ef_search // 64)`` nodes per hop
-    (``_batch_beam``)."""
+    per-partition candidate pool — GraphSearcher's rerankK analog)."""
     from jvector_spark.operators.index import _merge_topk
 
     manifest = index.manifest
@@ -1363,23 +1382,124 @@ def graph_search(
     k_ret = min(ef, max(k, rerank_k))  # rerank pool per partition
     use_nvq = manifest.rerank == "nvq" or index._slim
     tel_acc = telemetry.counters() if telemetry is not None else None
-    t = index.tombstones()
+    # the point route reads tombstones in its tasks; the file's presence
+    # is all the driver needs (a tombstone DataFrame costs ~20 ms to plan)
+    dead = os.path.exists(os.path.join(index.path, "tombstones.parquet"))
     # Per-partition EMITTED rows: the global top-k over the union of
     # per-partition results is provably contained in each partition's own
     # top-k (a row below its partition's k-th best is beaten by >= k rows
     # from that partition alone), so emitting k per partition is
     # bit-identical to emitting the whole rerank pool — the pool (k_ret)
     # only needs to survive as emitted rows when the tombstone filter
-    # below can remove winners afterwards. At default overquery this cuts
+    # can remove winners afterwards. At default overquery this cuts
     # the final window's shuffle 4x (the r7 16 GB-driver pressure point
     # on the 1M corpus-as-queries shape).
-    emit_k = k_ret if t is not None else min(k, k_ret)
-    parts = _traverse_probed_partitions(
-        index, queries_df, query_id_col, query_vec_col, manifest.metric,
-        emit_k, ef, n_probe, probe_ratio, use_nvq, tel_acc,
+    emit_k = k_ret if dead else min(k, k_ret)
+    batch = route_query_batch(
+        queries_df, query_id_col, query_vec_col, "graph_search", "auto"
     )
-    # tombstoned rows are traversed but filtered (two-phase delete, F2)
-    return _merge_topk(parts, k, manifest.spill, tombstones=t)
+    if batch is None:
+        parts = _traverse_probed_partitions(
+            index, queries_df, query_id_col, query_vec_col, manifest.metric,
+            emit_k, ef, n_probe, probe_ratio, use_nvq, tel_acc,
+        )
+        # tombstoned rows are traversed but filtered (two-phase delete, F2)
+        return _merge_topk(parts, k, manifest.spill, tombstones=index.tombstones())
+    qids, qmat = batch
+    if not len(qids):
+        return empty_ranked(index.spark)
+    return _search_point(
+        index, qids, qmat, k, emit_k, ef, n_probe, probe_ratio, use_nvq, tel_acc
+    )
+
+
+def _search_point(
+    index, qids, qmat, k, emit_k, ef, n_probe, probe_ratio, use_nvq, tel_acc,
+) -> DataFrame:
+    """The point route of ``graph_search`` on ``IVFIndex._probe_stage``:
+    one plan per segment holds its ``p2q`` (the driver-side probes of the
+    collected batch), its ``_read_partition`` dirs and its stage-1 codec."""
+    from jvector_spark.operators.index import _part_queries, _select_probes
+
+    plans = []
+    for seg in index.manifest.segments:
+        info = index._segments[seg.name]
+        res_mode = bool(info.get("residual"))
+        probe, keep = _select_probes(info, qmat, n_probe, probe_ratio)
+        plans.append({
+            "p2q": _part_queries(np.nonzero(keep)[0], probe[keep]),
+            "dirs": _walk_dirs(index, seg.name, use_nvq),
+            "codec": info["pq"],
+            "residual": res_mode,
+            "cents": info["centroids"] if res_mode else None,
+        })
+    return index._probe_stage(
+        qids,
+        # the exchange route's replica layout (see graph_search)
+        qmat.astype(np.float32).astype(np.float64),
+        lambda call, c: _walk_chunk(call, c, tel_acc),
+        _rank_chunk,
+        "qid long, id long, score double, rank int",
+        plans=plans, metric=index.manifest.metric, k=k, kk=emit_k, ef=ef,
+        spill=index.manifest.spill, nvq=index._nvq_codec(use_nvq),
+    )
+
+
+def _walk_chunk(call: dict, c: int, tel_acc) -> Iterator[pd.DataFrame]:
+    """Hits of point-route chunk ``c``: per segment, every partition its
+    queries probe becomes wave rows in part_id order, walked and reranked
+    as an exchange task walks its groups (``_walk_waves``)."""
+    in_chunk = call["chunk_of"] == c
+    met, ef = call["metric"], call["ef"]
+    for plan in call["plans"]:
+        probes = ((part, pos[in_chunk[pos]]) for part, pos in plan["p2q"].items())
+        rows = (
+            w
+            for part, qsel in probes
+            if len(qsel)
+            for w in _group_walk_rows(
+                plan["dirs"], part, call["q_ids"][qsel], call["q_mat"][qsel],
+                plan["codec"], met, ef, plan["residual"], plan["cents"],
+            )
+        )
+        yield from _walk_waves(rows, met, ef, call["kk"], call["nvq"], tel_acc)
+
+
+def _rank_chunk(call: dict, hits: pd.DataFrame) -> pd.DataFrame:
+    """A point-route task's output: its hits minus tombstoned ids (the
+    walk routes through deleted rows), ranked per qid (``_rank_hits``)."""
+    from jvector_spark.operators.index import _is_member, _rank_hits, _read_tombstones
+
+    dead = _read_tombstones(call["tombstones"])
+    if dead is not None:
+        hits = hits[~_is_member(hits["id"].to_numpy(dtype=np.int64), dead)]
+    return _rank_hits(hits, call["k"], call["spill"])
+
+
+def _walk_dirs(index, seg_name: str, use_nvq: bool) -> tuple:
+    """A segment's ``_read_partition`` dirs: (data dir, edges dir, data
+    columns). The hive part_id lives in the dir name, so it is not a data
+    column."""
+    from jvector_spark.operators.index import _rerank_cols
+
+    info = index._segments[seg_name]
+    return (
+        os.path.join(info["dir"], "data.parquet"),
+        os.path.join(_graph_dir(index, seg_name), "edges.parquet"),
+        ("id", "codes", *_rerank_cols(use_nvq))
+        + (("rsq",) if info.get("residual") else ()),
+    )
+
+
+def _walk_waves(
+    rows: Iterator[_WalkRows], met: str, ef: int, kk: int, nvq_c, tel_acc
+) -> Iterator[pd.DataFrame]:
+    """The traversal core of both routes: pack wave rows into waves
+    (``_waves``), walk each as one disjoint-union beam (``_walk_union``)
+    and rerank every partition's beams (``_rerank_beams``)."""
+    for wave in _waves(rows):
+        for w, wb in zip(wave, _walk_union(wave, met, ef, tel_acc)):
+            yield from _rerank_beams(w, wb, met, kk, ef, nvq_c, tel_acc)
 
 
 def _read_partition(dirs: tuple, part: int):
@@ -1395,14 +1515,15 @@ def _read_partition(dirs: tuple, part: int):
 
 
 def _group_walk_rows(
-    dirs: tuple, part: int, qpdf: pd.DataFrame, cdc, met: str, ef: int,
-    res_m: bool, cents,
+    dirs: tuple, part: int, q_ids: np.ndarray, qmat: np.ndarray, cdc,
+    met: str, ef: int, res_m: bool, cents,
 ) -> Iterator[_WalkRows]:
-    """One (part_id[, salt]) group's queries as wave rows: reads and decodes
-    the partition, then splits the queries into LUT steps of
-    ``_WAVE_ROWS`` and those into chunks whose visited bitmap over the
-    partition alone stays under ``_WAVE_CELLS``, so a group over a wave's
-    budget on its own walks in query chunks."""
+    """One partition's probing queries (a (part_id[, salt]) group of the
+    exchange route, or a query chunk's probes of the point route) as wave
+    rows: reads and decodes the partition, then splits the queries into
+    LUT steps of ``_WAVE_ROWS`` and those into chunks whose visited bitmap
+    over the partition alone stays under ``_WAVE_CELLS``, so a group over
+    a wave's budget on its own walks in query chunks."""
     data_pdf, edge_pdf = _read_partition(dirs, part)
     if data_pdf is None:
         return
@@ -1412,8 +1533,6 @@ def _group_walk_rows(
     if pack is None:
         return
     n_local = len(pack[1])
-    q_ids = qpdf["qid"].to_numpy(dtype=np.int64)
-    qmat = kernels.as_matrix(qpdf["vec"])
     qnrm = np.linalg.norm(qmat, axis=1)
     qc_vec = (qmat @ cents[part]) if res_m else None
     step = max(1, _WAVE_CELLS // max(n_local, 1))
@@ -1452,7 +1571,8 @@ def _traverse_probed_partitions(
     index, queries_df, query_id_col, query_vec_col, met, k_ret, ef, n_probe,
     probe_ratio, use_nvq, tel_acc,
 ) -> list[DataFrame]:
-    """The one graph search plan, per segment: ``_assign_probes`` maps each
+    """The exchange route of ``graph_search`` (batches over
+    ``BROADCAST_QUERY_CAP``), per segment: ``_assign_probes`` maps each
     query to its probed partitions (map-only, where the queries live),
     the (part_id, qid, vec) replicas shuffle into one group per probed
     partition (Q x n_probe rows — the ONLY exchange), sorted by group key
@@ -1468,8 +1588,6 @@ def _traverse_probed_partitions(
     measured 5x slower at 100k (it re-shuffles the probed corpus per
     batch), and the fused tile route replicates corpus blocks per query
     block."""
-    from jvector_spark.operators.index import _rerank_cols
-
     parts_out = []
     for seg in index.manifest.segments:
         info = index._segments[seg.name]
@@ -1517,12 +1635,7 @@ def _traverse_probed_partitions(
             (info["pq"], met, k_ret, ef, index._nvq_codec(use_nvq),
              res_mode, cents)
         )
-        # hive part_id lives in the dir name, so it is not a data column
-        dirs = (
-            os.path.join(info["dir"], "data.parquet"),
-            os.path.join(_graph_dir(index, seg.name), "edges.parquet"),
-            ("id", "codes", *_rerank_cols(use_nvq)) + (("rsq",) if res_mode else ()),
-        )
+        dirs = _walk_dirs(index, seg.name, use_nvq)
 
         # factory binds THIS segment's broadcast — the plan runs lazily,
         # and a free `b` in a loop-shared scope would resolve to the LAST
@@ -1536,15 +1649,12 @@ def _traverse_probed_partitions(
                     w
                     for key, qpdf in _sorted_groups(batches, group_cols)
                     for w in _group_walk_rows(
-                        dirs, key[0], qpdf, cdc, m_, ef_, res_m, cents_
+                        dirs, key[0], qpdf["qid"].to_numpy(dtype=np.int64),
+                        kernels.as_matrix(qpdf["vec"]), cdc, m_, ef_, res_m,
+                        cents_,
                     )
                 )
-                for wave in _waves(rows):
-                    beams = _walk_union(wave, m_, ef_, tel_acc)
-                    for w, wb in zip(wave, beams):
-                        yield from _rerank_beams(
-                            w, wb, m_, kk, ef_, nvq_c, tel_acc
-                        )
+                yield from _walk_waves(rows, m_, ef_, kk, nvq_c, tel_acc)
 
             return walk_task
 

@@ -1712,16 +1712,67 @@ def _threshold_hits(
 
 def _read_part(table_dir: str, part: int, columns, filters=None) -> pd.DataFrame | None:
     """One ``part_id=`` directory of a segment table (index data or graph
-    edges), read with pyarrow: only ``columns``, with ``filters`` pushed
-    into the reader, so row groups whose min/max stats miss them are
-    skipped. None when the partition has no directory. The hive key lives
-    in the directory name, so ``part_id`` is not a column here."""
+    edges), read with pyarrow: only ``columns`` of each part file, in
+    sorted file order (what ``read_table`` on the directory returns,
+    without building a dataset per call). ``filters`` is a list of
+    ``(column, "in", values)``: row groups whose min/max stats miss the
+    values are skipped, then rows are masked exactly. None when the
+    partition has no directory. The hive key lives in the directory name,
+    so ``part_id`` is not a column here."""
+    import pyarrow as pa
     import pyarrow.parquet as papq
 
     path = os.path.join(table_dir, f"part_id={int(part)}")
     if not os.path.exists(path):
         return None
-    return papq.read_table(path, columns=list(columns), filters=filters).to_pandas()
+    columns = list(columns)
+    wanted = [(c, np.unique(np.asarray(list(v)))) for c, _, v in filters or ()]
+    need = columns + [c for c, _ in wanted if c not in columns]
+    tables = []
+    for name in sorted(os.listdir(path)):
+        if name.startswith((".", "_")):  # read_table's ignored prefixes
+            continue
+        pf = papq.ParquetFile(os.path.join(path, name))
+        if not wanted:
+            tables.append(pf.read(columns))
+            continue
+        meta = pf.metadata
+        groups = [
+            g for g in range(meta.num_row_groups)
+            if all(_row_group_may_hold(meta.row_group(g), c, v) for c, v in wanted)
+        ]
+        t = pf.read_row_groups(groups, columns=need)
+        for c, v in wanted:
+            t = t.filter(pa.array(np.isin(t.column(c).to_numpy(), v)))
+        tables.append(t.select(columns))
+    if not tables:
+        return None
+    return pa.concat_tables(tables).to_pandas()
+
+
+def _row_group_may_hold(rg, col: str, vals: np.ndarray) -> bool:
+    """False when a row group's min/max statistics of ``col`` hold none of
+    the sorted ``vals``."""
+    for j in range(rg.num_columns):
+        meta = rg.column(j)
+        if meta.path_in_schema != col:
+            continue
+        st = meta.statistics
+        if st is None or not st.has_min_max:
+            return True
+        at = np.searchsorted(vals, st.min)
+        return bool(at < len(vals) and vals[at] <= st.max)
+    return True
+
+
+def _read_tombstones(path: str | None) -> np.ndarray | None:
+    """The sorted tombstoned ids of ``tombstones.parquet`` (``id`` only),
+    or None when ``path`` is None (the index has no tombstones)."""
+    import pyarrow.parquet as papq
+
+    if path is None:
+        return None
+    return np.unique(papq.read_table(path, columns=["id"]).column("id").to_numpy())
 
 
 def _is_member(ids: np.ndarray, sorted_vals: np.ndarray) -> np.ndarray:
@@ -1749,16 +1800,13 @@ def _query_chunks(qids: np.ndarray, near: np.ndarray, n: int) -> np.ndarray:
 def _chunk_rows(call: dict, c: int):
     """``(plan, part_id, rows, qsel)`` for every partition that chunk
     ``c``'s queries probe (``IVFIndex._probe_stage``): the partition read
-    with ``_read_part``, minus tombstoned rows (``tombstones.parquet`` is
-    read once, ``id`` only) and rows outside the accept sets; ``qsel`` is
-    the chunk's probing query positions, ascending."""
-    import pyarrow.parquet as papq
-
-    tomb, accept = call["tombstones"], call.get("accept_list")
-    dead = (
-        np.unique(papq.read_table(tomb, columns=["id"]).column("id").to_numpy())
-        if tomb is not None else None
-    )
+    with ``_read_part``, minus tombstoned rows (``_read_tombstones``, once
+    per chunk) and rows outside the accept sets; ``qsel`` is
+    the chunk's probing query positions, ascending. The IVF routes' plans
+    hold ``dir`` (the segment's data table), ``p2q``, the read's ``cols``
+    and ``filters`` and optionally ``accepted`` (``_accepted_ids``)."""
+    accept = call.get("accept_list")
+    dead = _read_tombstones(call["tombstones"])
     in_chunk = call["chunk_of"] == c
     for plan in call["plans"]:
         for part, pos in plan["p2q"].items():
@@ -2439,10 +2487,11 @@ class IVFIndex:
             return pd.DataFrame({"qid": oq, "id": oi, "score": osc})
 
         return self._probe_stage(
-            qids, qmat, plans, score,
+            qids, qmat,
+            lambda call, c: [score(call, c, *r) for r in _chunk_rows(call, c)],
             lambda call, hits: _rank_hits(hits, call["k"], call["spill"]),
             "qid long, id long, score double, rank int",
-            metric=metric, k=k, rerank_k=rerank_k, spill=self.manifest.spill,
+            plans=plans, metric=metric, k=k, rerank_k=rerank_k, spill=self.manifest.spill,
             q_norms=np.linalg.norm(qmat, axis=1), nvq=self._nvq_codec(use_nvq),
             accept_list=accept_list,
         )
@@ -2518,33 +2567,35 @@ class IVFIndex:
         return out
 
     def _probe_stage(
-        self, qids, qmat, plans: list[dict], score, finish, schema: str, **call
+        self, qids, qmat, chunk_hits, finish, schema: str, **call
     ) -> DataFrame:
-        """The broadcast routes' ONE Spark stage:
+        """The ONE Spark stage of every point (broadcast) probed search:
         ``spark.range(n, numPartitions=n).mapInPandas``, one task per chunk
         of the batch's queries (``_query_chunks``, n = min(cores, distinct
-        qids)). A task takes every partition its chunk probes from
-        ``_chunk_rows`` and scores it with ``score(call, chunk, plan,
-        part_id, rows, qsel)``; ``finish(call, hits)`` turns the task's
-        hits into its output rows. ``call`` is broadcast: the keyword
-        entries, the queries (``q_ids``, ``q_mat``), ``chunk_of``, the
-        ``plans``, a sorted ``accept_list`` and the tombstone path.
+        qids)). A task gets its chunk's ``(qid, id, score)`` hit frames from
+        ``chunk_hits(call, chunk)``, and ``finish(call, hits)`` turns them
+        into its output rows. Two callers pass ``chunk_hits``: the IVF
+        broadcast routes (``search`` and ``threshold_search``) score every
+        partition that ``_chunk_rows`` yields, and ``graph.graph_search``'s
+        point route walks the chunk's probed partitions as one beam
+        (``graph._walk_chunk``). ``call`` is broadcast: the keyword entries,
+        the queries (``q_ids``, ``q_mat``), ``chunk_of``, a sorted
+        ``accept_list`` and the tombstone path (``tombstones``).
 
-        A plan holds ``dir`` (the segment's data table), ``p2q``
-        (``_part_queries``), the read's ``cols`` and
-        ``filters`` and optionally ``accepted`` (``_accepted_ids``).
-        ``owner`` (part_id -> the chunk of its lowest probing position) is
-        added here, so a once-per-call counter has one task to count it."""
+        ``call["plans"]`` holds one plan per segment, each with ``p2q``
+        (``_part_queries``: part_id -> probing query positions); ``owner``
+        (part_id -> the chunk of its lowest probing position) is added
+        here, so a once-per-call counter has one task to count it."""
         n = min(self.spark.sparkContext.defaultParallelism, len(np.unique(qids)))
         first = self._segments[self.manifest.segments[0].name]
         chunk_of = _query_chunks(qids, _select_probes(first, qmat, 1)[0][:, 0], n)
-        for plan in plans:
+        for plan in call["plans"]:
             plan["owner"] = {p: int(chunk_of[pos[0]]) for p, pos in plan["p2q"].items()}
         if call.get("accept_list") is not None:
             call["accept_list"] = np.unique(np.asarray(call["accept_list"], dtype=np.int64))
         tomb = os.path.join(self.path, "tombstones.parquet")
         b = self.spark.sparkContext.broadcast(
-            dict(call, q_ids=qids, q_mat=qmat, chunk_of=chunk_of, plans=plans,
+            dict(call, q_ids=qids, q_mat=qmat, chunk_of=chunk_of,
                  tombstones=tomb if os.path.exists(tomb) else None)
         )
 
@@ -2552,8 +2603,8 @@ class IVFIndex:
             cv = b.value
             for pdf in batches:
                 for c in pdf["id"].tolist():
-                    hits = [score(cv, c, *r) for r in _chunk_rows(cv, c)]
-                    yield finish(cv, pd.concat([empty_hits(), *hits], ignore_index=True))
+                    hits = [empty_hits(), *chunk_hits(cv, c)]
+                    yield finish(cv, pd.concat(hits, ignore_index=True))
 
         return self.spark.range(n, numPartitions=n).mapInPandas(task, schema=schema)
 
@@ -2923,8 +2974,10 @@ class IVFIndex:
             return hits.drop_duplicates(["qid", "id"]) if call["spill"] > 1 else hits
 
         return self._probe_stage(
-            qids, qmat, plans, score, finish, "qid long, id long, score double",
-            metric=metric, threshold=threshold, spill=self.manifest.spill,
+            qids, qmat,
+            lambda call, c: [score(call, c, *r) for r in _chunk_rows(call, c)],
+            finish, "qid long, id long, score double",
+            plans=plans, metric=metric, threshold=threshold, spill=self.manifest.spill,
         )
 
     # -------------------------------------------------------------- mutation

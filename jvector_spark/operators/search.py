@@ -109,7 +109,14 @@ class SearchTelemetry:
     each task did, so on the broadcast route it can rise with the task
     count: a row reranked for queries of two chunks counts twice. Do not
     compare the raw counters across routes; for the point-query IO model
-    use ``IVFIndex.probe_io_stats`` instead."""
+    use ``IVFIndex.probe_io_stats`` instead.
+
+    Graph search counts ``visited_rows`` as the rows its beams scored
+    (seeds and newly visited neighbours), per (query, probed partition).
+    Each such pair is walked in exactly one task on both graph routes
+    (the point stage's query chunk, or the exchange's group), so the
+    count does not depend on the route. Its ``reranked_rows`` follows how
+    queries are grouped into tasks, as on the IVF broadcast route."""
 
     STAGES = ("setup", "lut", "mask", "adc", "topk", "rerank")
 

@@ -419,12 +419,13 @@ def test_tune_graph_route(spark, graph_index):
         bare.tune(route="graph", k=5)
 
 
-def test_graph_search_distributed_route_parity(spark, graph_index):
+def test_graph_search_distributed_route_parity(spark, graph_index, monkeypatch):
     """The query frame's layout does not change the rows on the sf index:
-    the same 32 queries as a one-partition local frame (what the deleted
-    broadcast route rebuilt from the collected batch) and as the caller's
+    the same 32 queries as a one-partition local frame and as the caller's
     frame shuffled into 4 partitions return identical (qid, id, score,
-    rank) — one traversal core, one rerank kernel."""
+    rank) — one traversal core, one rerank kernel. Both run the point
+    route; the shuffled frame over a patched cap runs the exchange route
+    and returns the same rows too."""
     idx, corpus = graph_index
     queries = corpus.filter(F.col("id") < 32).selectExpr("id as qid", "vec")
     q_local = spark.createDataFrame(queries.collect(), queries.schema).coalesce(1)
@@ -434,17 +435,21 @@ def test_graph_search_distributed_route_parity(spark, graph_index):
     kw = dict(k=10, n_probe=4, ef_search=40)
     a = sorted(map(tuple, idx.search_graph(q_local, **kw).collect()))
     b = sorted(map(tuple, idx.search_graph(q_shuf, **kw).collect()))
-    assert a == b
+    monkeypatch.setattr(exact, "BROADCAST_QUERY_CAP", 16)
+    c = sorted(map(tuple, idx.search_graph(q_shuf, **kw).collect()))
+    assert a == b == c
     assert len(a) == 32 * 10
 
 
-def test_graph_search_route_parity_tiny_partitions(spark):
+def test_graph_search_route_parity_tiny_partitions(spark, monkeypatch):
     """The query frame's layout does not change the rows: the same 48
     queries as a one-partition local frame and as a frame shuffled into
-    4 partitions return identical (qid, id, score, rank). Tiny partitions
+    4 partitions return identical (qid, id, score, rank), on the point
+    route and, over a patched cap, on the exchange route. Tiny partitions
     (~12 rows each, far smaller than ef_search) leave every beam short of
-    the rerank pool, so chunk composition (which follows the input
-    layout) would leak other queries' beam members in without
+    the rerank pool, so group composition (which follows the input
+    layout on the exchange route, and the query chunks on the point
+    route) would leak other queries' beam members in without
     strict_mask."""
     import pandas as pd
 
@@ -479,8 +484,60 @@ def test_graph_search_route_parity_tiny_partitions(spark):
     kw = dict(k=10, n_probe=6, ef_search=64)
     a = sorted(map(tuple, idx.search_graph(q_local, **kw).collect()))
     b = sorted(map(tuple, idx.search_graph(q_shuf, **kw).collect()))
-    assert a == b
+    monkeypatch.setattr(exact, "BROADCAST_QUERY_CAP", 32)
+    c = sorted(map(tuple, idx.search_graph(q_local, **kw).collect()))
+    d = sorted(map(tuple, idx.search_graph(q_shuf, **kw).collect()))
+    assert a == b == c == d
     assert len(a) == 48 * 10
+
+
+_ROUTE_PARITY_BUILDS = {
+    "pq_cosine_residual_fine": dict(
+        metric="COSINE", pq_m=8, n_partitions=8, pq_residual=True, fine_factor=4
+    ),
+    "pq_euclidean": dict(metric="EUCLIDEAN", pq_m=8, n_partitions=8, pq_residual=False),
+    "bq": dict(metric="COSINE", first_pass="bq", n_partitions=8),
+    "nvq_rerank": dict(
+        metric="COSINE", pq_m=8, n_partitions=8, store_fp32="none", rerank="nvq"
+    ),
+    "two_segments_tombstones": dict(metric="COSINE", pq_m=8, n_partitions=8),
+    # 3 partitions < 2 x cores: the exchange salts its groups by qid (_gs)
+    "coarse_salted": dict(metric="COSINE", pq_m=8, n_partitions=3),
+}
+
+
+@pytest.mark.parametrize("build", sorted(_ROUTE_PARITY_BUILDS))
+def test_graph_point_route_matches_exchange_route(spark, sf_dir, monkeypatch, build):
+    """A batch at or under ``BROADCAST_QUERY_CAP`` runs the one-stage point
+    route; the same batch over a patched cap runs the exchange route. Both
+    return byte-identical (qid, id, score as float hex, rank) rows: the
+    walk, the rerank, the spill dedup and the tombstone filter do not
+    depend on how queries are grouped into tasks."""
+    corpus = _corpus(spark, sf_dir)
+    two_segments = build == "two_segments_tombstones"
+    idx = IVFIndexBuilder(**_ROUTE_PARITY_BUILDS[build]).fit(
+        corpus.filter(F.col("id") < 400) if two_segments else corpus,
+        tempfile.mkdtemp(prefix="jvs_graph_routes_"),
+    )
+    idx.build_graph(degree=16, ef_construction=32)
+    if two_segments:
+        idx.append(corpus.filter(F.col("id") >= 400))
+        idx.build_graph(degree=16, ef_construction=32)
+        idx.delete(list(range(0, 60, 3)))  # some are top-1 hits of queries
+        assert len(idx.manifest.segments) == 2
+    queries = corpus.filter(F.col("id") < 24).selectExpr("id as qid", "vec")
+
+    def rows():
+        res = idx.search_graph(queries, k=10, n_probe=4, ef_search=40)
+        return sorted(
+            (r["qid"], r["id"], float(r["score"]).hex(), r["rank"])
+            for r in res.collect()
+        )
+
+    point = rows()
+    monkeypatch.setattr(exact, "BROADCAST_QUERY_CAP", 8)
+    assert rows() == point
+    assert len(point) == 24 * 10
 
 
 def test_graph_search_distributed_on_auto_sized_index(spark, sf_dir):
@@ -538,23 +595,27 @@ def test_graph_search_ef_below_k_raises(spark, graph_index):
     "knob", [{"strategy": "distributed"}, {"m_hint": 10**6}, {"steer": "exact"}]
 )
 def test_graph_search_has_one_path(spark, graph_index, knob):
-    """Graph search takes no route, batch-size or steering knob: every
-    batch runs the one traversal plan."""
+    """Graph search takes no route, batch-size or steering knob: the
+    batch size alone picks its plan (the point stage at or under
+    ``BROADCAST_QUERY_CAP`` query rows, the exchange above it), and both
+    run the one traversal core."""
     idx, corpus = graph_index
     queries = corpus.filter(F.col("id") < 4).selectExpr("id as qid", "vec")
     with pytest.raises(TypeError):
         idx.search_graph(queries, k=5, **knob)
 
 
-def test_graph_traversal_fills_the_cores(spark, graph_index):
+def test_graph_traversal_fills_the_cores(spark, graph_index, monkeypatch):
     """The traversal exchange keeps one partition per core: a 16-query
-    batch probing all 8 partitions walks them in min(defaultParallelism,
-    groups) tasks, where AQE's byte-sized coalescing of the few-KB replica
-    shuffle would fold every walk into one task. The query frame is one
-    partition, so the traversal is the call's widest stage."""
+    batch over a patched cap (so it takes the exchange route) probing all
+    8 partitions walks them in min(defaultParallelism, groups) tasks,
+    where AQE's byte-sized coalescing of the few-KB replica shuffle would
+    fold every walk into one task. The query frame is one partition, so
+    the traversal is the call's widest stage."""
     par = spark.sparkContext.defaultParallelism
     if par == 1:
         pytest.skip("one core: one traversal task is already one per core")
+    monkeypatch.setattr(exact, "BROADCAST_QUERY_CAP", 8)
     idx, corpus = graph_index
     n_parts = len(idx._segments[idx.manifest.segments[0].name]["centroids"])
     assert n_parts == 8
@@ -571,9 +632,11 @@ def test_graph_traversal_fills_the_cores(spark, graph_index):
     assert max(tasks) == min(par, n_groups)
 
 
-def test_graph_search_distributed_bulk(spark, sf_dir):
-    """Corpus-as-queries through graph search (residual index): recall vs
-    the exact self-join on a sampled slice."""
+def test_graph_search_distributed_bulk(spark, sf_dir, monkeypatch):
+    """Corpus-as-queries through graph search (residual index) on the
+    exchange route (the 500-row corpus is over the patched cap): recall
+    vs the exact self-join on a sampled slice."""
+    monkeypatch.setattr(exact, "BROADCAST_QUERY_CAP", 100)
     corpus = _corpus(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="jvs_graph_bulk_")
     idx = IVFIndexBuilder(

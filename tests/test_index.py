@@ -269,6 +269,44 @@ def test_two_level_fine_pruning(spark, tmp_path_factory):
     assert np.mean(r_fines) >= 0.8, f"two-level recall@{K} per seed {r_fines}"
 
 
+def test_read_part_matches_read_table(tmp_path):
+    """The partition reader returns the rows, columns and row order of
+    ``pyarrow.parquet.read_table`` on the ``part_id=`` directory, with and
+    without a ``sub_id`` filter, on part files of several small row groups
+    (sorted by sub_id, as the build writes them) next to the files a
+    dataset read ignores."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from jvector_spark.operators.index import _read_part
+
+    part = tmp_path / "part_id=3"
+    part.mkdir()
+    gen = np.random.default_rng(5)
+    for f, n in (("part-00001.parquet", 70), ("part-00000.parquet", 45)):
+        sub = np.sort(gen.integers(0, 12, n)).astype(np.int32)
+        papq.write_table(
+            pa.table({
+                "id": gen.permutation(1000)[:n].astype(np.int64),
+                "sub_id": sub,
+                "codes": [bytes(gen.integers(0, 256, 4, dtype=np.uint8)) for _ in sub],
+            }),
+            part / f, row_group_size=8,
+        )
+    (part / ".part-00000.parquet.crc").write_bytes(b"x")
+    (part / "_SUCCESS").write_bytes(b"")
+    assert papq.ParquetFile(part / "part-00001.parquet").metadata.num_row_groups == 9
+    cols = ["id", "codes"]
+    for filters in (None, [("sub_id", "in", [2, 3, 9])], [("sub_id", "in", [5])],
+                    [("sub_id", "in", [40])], [("sub_id", "in", [])]):
+        want = papq.read_table(part, columns=cols, filters=filters).to_pandas()
+        pd.testing.assert_frame_equal(_read_part(str(tmp_path), 3, cols, filters), want)
+    got = _read_part(str(tmp_path), 3, ["id", "sub_id"], [("sub_id", "in", [0, 11])])
+    assert set(got["sub_id"]) <= {0, 11} and len(got)
+    assert _read_part(str(tmp_path), 4, cols) is None
+
+
 def test_two_level_survives_append_and_compact(spark, corpus_df, queries_df, tmp_path_factory):
     """The fine level must propagate through append and compaction —
     the compacted index still answers fine-probed searches."""

@@ -1,8 +1,10 @@
 """The query-side front end shared by every point-query-batch operator
 (``exact.route_query_batch``): empty query sides, over-cap auto routing,
 and the Spark-job cost of ``strategy="auto"``. ``search_graph`` and
-``hard_negative`` run one plan for every batch (no ``strategy``); they
-keep the empty-query and job-budget checks."""
+``hard_negative`` take no ``strategy``: graph search always routes by
+the auto rule (its point stage at or under the cap, its exchange above,
+pinned in ``tests/test_graph.py``) and ``hard_negative`` runs one plan
+for every batch; both keep the empty-query and job-budget checks."""
 
 import tempfile
 
@@ -11,7 +13,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import count_jobs
+from conftest import count_jobs, stage_tasks
 from jvector_spark.operators import exact
 from jvector_spark.operators.index import IVFIndex, IVFIndexBuilder
 from jvector_spark.operators.lsh import rp_lsh_knn_join
@@ -53,8 +55,7 @@ def setup(spark):
 def _ops(corpus, idx, pq, codes):
     """name -> (call(queries, **strategy kw), broadcast and distributed
     strategy names, result columns) for every routed operator; an
-    operator with one plan for every batch (no ``strategy``) has
-    ``(None, None)``."""
+    operator without a ``strategy`` has ``(None, None)``."""
     return {
         "knn_join": (
             lambda q, **kw: exact.knn_join(corpus, q, K, **kw),
@@ -160,7 +161,8 @@ def test_job_budgets(spark, setup):
     (plain, and with a predicate), a point graph search, a threshold search, both two-phase routes and
     the three other blocked routes (the per-call fixed cost the engine
     pays whatever the data size). The blocked budgets catch a plan that
-    broadcast-joins a local table: that costs a job."""
+    broadcast-joins a local table: that costs a job. A point graph search
+    is one stage of min(defaultParallelism, distinct qids) tasks."""
     corpus, idx, pq, codes, queries = setup
     # a segment's DataFrame is read once per loaded index (schema
     # inference + directory listing); the budgets are per search call
@@ -217,13 +219,18 @@ def test_job_budgets(spark, setup):
         ),
     }
     budget = {
-        "build": 7, "search": 1, "search_predicate": 2, "search_graph": 3,
+        "build": 7, "search": 1, "search_predicate": 2, "search_graph": 1,
         "threshold": 1,
         "knn_join_blocked": 3,
         "search_distributed": 3, "threshold_distributed": 3,
         "two_phase": 3, "two_phase_blocked": 4,
     }
     assert all(jobs[op] <= budget[op] for op in budget), jobs
+    par = spark.sparkContext.defaultParallelism
+    assert stage_tasks(
+        spark,
+        lambda: idx.search_graph(queries, K, n_probe=4, ef_search=16).collect(),
+    ) == [min(par, M)]
 
 
 def test_segment_data_read_once(spark, setup):
