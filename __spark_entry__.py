@@ -1456,12 +1456,12 @@ SELECT qid, id, ROUND(_s, 6) AS score, rank FROM r WHERE rank > 10 AND rank <= 2
 @_register("knn_topk_ivf_distributed")
 def _knn_topk_ivf_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DISTRIBUTED top-k route under the full hash oracle: exhaustive
-    probes + rerank_k = |corpus| make the tile-join search provably exact
-    (stage 1 keeps every probed row), so the uncapped plan — probe
-    assignment as a map-only pass, a tile join with one tile per probed
-    partition, no driver collect of either side — must hash-match
-    DuckDB's exact top-10. The same route's threshold mode is oracle'd
-    by dedup_embedding_ivf; this row pins the top-k mode (ref
+    probes + rerank_k = |corpus| make the distributed search provably
+    exact (stage 1 keeps every probed row), so the uncapped plan — probe
+    assignment as a map-only pass, the probe exchange with one group per
+    probed partition read in its task, no driver collect of either side —
+    must hash-match DuckDB's exact top-10. The same route's threshold
+    mode is oracle'd by dedup_embedding_ivf; this row pins the top-k mode (ref
     GraphSearcher.java:222 — searches are uncapped streams)."""
     import tempfile
 
@@ -1676,7 +1676,8 @@ def _dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the blocked-matmul dedup_embedding) while only scanning partitions
     that can contain a pair. The corpus-as-queries side runs on the
     DISTRIBUTED route (no driver collect, no query cap — probe assignment
-    and scoring both shuffle-local tile joins), so the same plan holds at
+    is map-only and the probe exchange shuffles only query replicas, each
+    task reading its partitions itself), so the same plan holds at
     100 TB: index-pruned work per query instead of the O(n^2/blocks)
     matmul."""
     import tempfile

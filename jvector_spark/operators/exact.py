@@ -400,8 +400,8 @@ _Q_TILE = 2048
 def flat_blocks(
     corpus: DataFrame, queries: DataFrame, n_hint: int | None, m_hint: int | None
 ) -> tuple[int, int]:
-    """``tile_join`` block counts of an un-indexed blocked join (one
-    partition, ``part_id`` 0): ``ceil(m / _Q_TILE)`` query blocks ×
+    """``tile_join`` block counts of an un-indexed blocked join:
+    ``ceil(m / _Q_TILE)`` query blocks ×
     ``ceil(n / _C_TILE)`` corpus blocks. ``n_hint`` / ``m_hint`` replace
     the sizing ``count()`` of their side (approximate is fine — they only
     set granularity)."""
@@ -414,26 +414,23 @@ def tile_join(
     c_side: DataFrame,
     q_side: DataFrame,
     blocks: tuple[int, int],
-    score_tile: Callable[[tuple, pd.DataFrame, pd.DataFrame], pd.DataFrame],
-    n_parts: int = 1,
+    score_tile: Callable[[pd.DataFrame, pd.DataFrame], pd.DataFrame],
 ) -> DataFrame:
-    """The 2-D blocked tile join behind every uncapped route: the exact
-    blocked k-NN join, the blocked two-phase join and the IVF tile scan
-    (top-k and threshold). No driver collect of either side.
+    """The 2-D blocked tile join of the un-indexed uncapped joins: the
+    exact blocked k-NN join and the blocked two-phase join. No driver
+    collect of either side. (Indexed bulk searches do not shuffle corpus
+    rows: they run ``IVFIndex._probe_exchange``.)
 
     ``c_side`` / ``q_side``: corpus rows and query rows, each with
-    ``part_id``, ``rid`` and its own payload columns (a column only one
-    side carries is null on the other). ``blocks``: (q_blocks, c_blocks),
-    the same for every partition. Corpus rows hash into c-blocks by
+    ``rid`` and its own payload columns (a column only one side carries is
+    null on the other). ``blocks``: (q_blocks, c_blocks), from
+    ``flat_blocks``. Corpus rows hash into c-blocks by
     ``pmod(xxhash64(rid), c_blocks)`` and replicate to each q-block;
-    query rows do the transpose. Every (part_id, qb, cb) tile holding rows
-    of both sides is scored by ``score_tile(key, qs, cs)``, which returns
-    (qid, id, score) rows. Shuffle volume is O(corpus·q_blocks +
-    queries·c_blocks) — the standard all-pairs shape (cf.
-    ``dedup.embedding_neardup``) — and no task holds more than ~one tile.
-    The un-indexed joins pass ``flat_blocks`` over one partition; the IVF
-    scan passes (1, 1) over its ``n_parts`` probed partitions, one tile
-    each.
+    query rows do the transpose. Every (qb, cb) tile holding rows of both
+    sides is scored by ``score_tile(qs, cs)``, which returns (qid, id,
+    score) rows. Shuffle volume is O(corpus·q_blocks + queries·c_blocks)
+    — the standard all-pairs shape (cf. ``dedup.embedding_neardup``) —
+    and no task holds more than ~one tile.
 
     One tile ≈ one task: the session default (shuffle.partitions =
     n_cores) hashes many tiles into few shuffle partitions, and the
@@ -457,20 +454,19 @@ def tile_join(
         F.lit(True).alias("is_q"),
     )
 
-    def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def tile(pdf: pd.DataFrame) -> pd.DataFrame:
         qs = pdf[pdf["is_q"]]
         cs = pdf[~pdf["is_q"]]
         if len(qs) == 0 or len(cs) == 0:
             return empty_hits()
-        return score_tile(key, qs, cs)
+        return score_tile(qs, cs)
 
-    n_tiles = n_parts * qbn * cbn
     spark = c_side.sparkSession
-    n_shuffle = int(min(4096, max(spark.sparkContext.defaultParallelism, n_tiles)))
+    n_shuffle = int(min(4096, max(spark.sparkContext.defaultParallelism, qbn * cbn)))
     return (
         c.unionByName(q, allowMissingColumns=True)
-        .repartition(n_shuffle, "part_id", "qb", "cb")
-        .groupBy("part_id", "qb", "cb")
+        .repartition(n_shuffle, "qb", "cb")
+        .groupBy("qb", "cb")
         .applyInPandas(tile, schema="qid long, id long, score double")
     )
 
@@ -497,7 +493,7 @@ def _knn_join_blocked(
     # scorer's closure (registry functions do not pickle through a broadcast)
     kernel = resolve_kernel(metric)
 
-    def score_tile(key, qs: pd.DataFrame, cs: pd.DataFrame) -> pd.DataFrame:
+    def score_tile(qs: pd.DataFrame, cs: pd.DataFrame) -> pd.DataFrame:
         cids = cs["rid"].to_numpy(dtype=np.int64)
         qids = qs["rid"].to_numpy(dtype=np.int64)
         cmat = kernels.as_matrix(cs["v"])
@@ -521,9 +517,7 @@ def _knn_join_blocked(
         return pd.concat(out, ignore_index=True)
 
     def side(df: DataFrame, rid: str, vec: str) -> DataFrame:
-        return df.select(
-            F.lit(0).alias("part_id"), F.col(rid).alias("rid"), F.col(vec).alias("v")
-        )
+        return df.select(F.col(rid).alias("rid"), F.col(vec).alias("v"))
 
     candidates = tile_join(
         side(corpus, id_col, vec_col),

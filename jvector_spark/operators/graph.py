@@ -56,8 +56,10 @@ two plans, by the rule of every point-query-batch operator (one
 ``take(BROADCAST_QUERY_CAP + 1)``): a point batch runs the IVF broadcast
 route's one Spark stage (``IVFIndex._probe_stage``; query chunks, each
 task walks its chunk's probes and ranks its own qids), and a larger one
-shuffles query replicas to their probed partitions and merges the
-results by qid (``_traverse_probed_partitions`` + ``_merge_topk``).
+shuffles query replicas to their probed partitions on the bulk probe
+exchange that distributed IVF search shares (``IVFIndex._probe_exchange``)
+and merges the results by qid (``_traverse_probed_partitions`` +
+``_merge_topk``).
 Both return the same rows.
 Tombstoned rows are traversed but filtered from RESULTS (the reference's
 two-phase delete: deleted nodes keep routing until cleanup,
@@ -82,7 +84,6 @@ from typing import Iterator, NamedTuple
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from jvector_spark.functions import kernels
 from jvector_spark.operators.exact import empty_ranked, route_query_batch
@@ -1263,28 +1264,6 @@ def _rerank_beams(
     return out
 
 
-def _sorted_groups(
-    batches: Iterator[pd.DataFrame], cols: list[str]
-) -> Iterator[tuple[tuple, pd.DataFrame]]:
-    """(key, rows) per run of equal ``cols`` in a stream of frames sorted
-    on ``cols``; a run that spans frames is joined before it is yielded."""
-    held, held_key = [], None
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        keys = pdf[cols].to_numpy()
-        cuts = np.flatnonzero((keys[1:] != keys[:-1]).any(axis=1)) + 1
-        for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, len(pdf)]):
-            key = tuple(int(v) for v in keys[lo])
-            if held and key != held_key:
-                yield held_key, pd.concat(held, ignore_index=True)
-                held = []
-            held_key = key
-            held.append(pdf.iloc[lo:hi])
-    if held:
-        yield held_key, pd.concat(held, ignore_index=True)
-
-
 def graph_search(
     index,
     queries_df: DataFrame,
@@ -1321,13 +1300,15 @@ def graph_search(
     - **Exchange route** (more rows, which the driver must not collect):
       ``_traverse_probed_partitions`` maps each query of the caller's
       DataFrame to its probed partitions where it lives
-      (``_assign_probes``), the (part_id, qid, vec) replicas shuffle into
+      (``_assign_probes``), and the (part_id, qid, vec) replicas run
+      through the bulk probe exchange that distributed IVF search also
+      runs (``IVFIndex._probe_exchange``): they shuffle into
       ``min(defaultParallelism, groups)`` tasks (salted by qid hash on
       coarse layouts so a few partitions still fill the cores; an explicit
       count, which AQE does not coalesce), and each task reads its groups'
-      data and edges dirs and walks them as one beam per wave; then
-      ``_merge_topk`` drops spilled copies and tombstoned ids and ranks
-      per qid across tasks and segments.
+      data and edges dirs, walks them as one beam per wave and drops
+      tombstoned ids (``_exchange_walk``); then ``_merge_topk`` drops
+      spilled copies and ranks per qid across tasks and segments.
 
     Corpus bytes never move on either route. Both return the same rows:
     a beam never leaves its own partition, so how queries are grouped into
@@ -1339,7 +1320,7 @@ def graph_search(
     (fp32-exact or dequantized-NVQ reported scores).
 
     For bulk batches over small partitions, ``IVFIndex.search(strategy=
-    "distributed")`` is the cheaper operator: its tile GEMMs scan whole
+    "distributed")`` is the cheaper operator: its GEMMs scan whole
     probed partitions where the beam approximates within them (r8 A/B,
     1M x 64-d, 2000-row partitions, np4/ef40, 32 cores: 318 s vs 3,213 s
     for traversal).
@@ -1403,8 +1384,7 @@ def graph_search(
             index, queries_df, query_id_col, query_vec_col, manifest.metric,
             emit_k, ef, n_probe, probe_ratio, use_nvq, tel_acc,
         )
-        # tombstoned rows are traversed but filtered (two-phase delete, F2)
-        return _merge_topk(parts, k, manifest.spill, tombstones=index.tombstones())
+        return _merge_topk(parts, k, manifest.spill)
     qids, qmat = batch
     if not len(qids):
         return empty_ranked(index.spark)
@@ -1468,11 +1448,9 @@ def _walk_chunk(call: dict, c: int, tel_acc) -> Iterator[pd.DataFrame]:
 def _rank_chunk(call: dict, hits: pd.DataFrame) -> pd.DataFrame:
     """A point-route task's output: its hits minus tombstoned ids (the
     walk routes through deleted rows), ranked per qid (``_rank_hits``)."""
-    from jvector_spark.operators.index import _is_member, _rank_hits, _read_tombstones
+    from jvector_spark.operators.index import _live_rows, _rank_hits, _read_tombstones
 
-    dead = _read_tombstones(call["tombstones"])
-    if dead is not None:
-        hits = hits[~_is_member(hits["id"].to_numpy(dtype=np.int64), dead)]
+    hits = _live_rows(hits, _read_tombstones(call["tombstones"]))
     return _rank_hits(hits, call["k"], call["spill"])
 
 
@@ -1573,21 +1551,11 @@ def _traverse_probed_partitions(
 ) -> list[DataFrame]:
     """The exchange route of ``graph_search`` (batches over
     ``BROADCAST_QUERY_CAP``), per segment: ``_assign_probes`` maps each
-    query to its probed partitions (map-only, where the queries live),
-    the (part_id, qid, vec) replicas shuffle into one group per probed
-    partition (Q x n_probe rows — the ONLY exchange), sorted by group key
-    within each shuffle partition, and each traversal task streams its
-    groups in key order (``_sorted_groups``): it pyarrow-reads each group's
-    partition data/edges dirs, builds stage-1 payloads per query chunk
-    in-task, and packs the groups into waves (``_waves``) that it walks as
-    ONE disjoint-union beam each (``_walk_union``), then reranks per group.
-    One hop loop per task, not per group: a hop's Python constant is paid
-    once for every query of the wave, where a loop per group would pay it
-    once per group for arrays of 1-3 queries.
-    Corpus bytes never shuffle: cogrouping data with edges on part_id was
-    measured 5x slower at 100k (it re-shuffles the probed corpus per
-    batch), and the fused tile route replicates corpus blocks per query
-    block."""
+    query to its probed partitions where it lives, and the replicas run
+    through the bulk probe exchange (``IVFIndex._probe_exchange``,
+    salted) with ``_exchange_walk``. Corpus bytes never shuffle:
+    cogrouping data with edges on part_id was measured 5x slower at 100k
+    (it re-shuffles the probed corpus per batch)."""
     parts_out = []
     for seg in index.manifest.segments:
         info = index._segments[seg.name]
@@ -1596,74 +1564,41 @@ def _traverse_probed_partitions(
             queries_df, info, n_probe, query_id_col, query_vec_col,
             metric=met, probe_ratio=probe_ratio,
         )
-        # COARSE layouts put the whole query load on a handful of
-        # (partition) groups — far fewer tasks than cores (measured:
-        # 6 tasks on 32 cores at n_partitions=8). Salt the group key by
-        # query hash so every partition's queries spread across enough
-        # tasks to fill the cluster; each salted group re-reads its
-        # partition (tens of MB, trivial next to the traversal) and the
-        # union of per-group top-k sets still contains the global top-k
-        # per (query, partition), so results are identical. Sized from
-        # the segment's own partition count (the manifest's is None
-        # under auto sizing).
-        #
-        # The exchange gets an explicit partition count. AQE sizes shuffle
-        # partitions by bytes, and this exchange is tiny (Q x n_probe
-        # replica rows, ~33 KB for a 16-query batch), so it would coalesce
-        # every group into ONE task; yet each group costs a partition read
-        # (~5.5 ms), a decode (~2.5 ms) and a rerank (~2 ms), whatever its
-        # bytes, and the union walks of a 16-query batch's ~40 groups cost
-        # 0.12-0.21 s in all (~120 hops; 10k x 64 point index, 100
-        # partitions, 4-core host). AQE leaves an explicit-count
-        # repartition alone, and the sort within its partitions adds no
-        # exchange. One shuffle partition per core, never more than there
-        # are groups: on that index, with one hop loop per group, 16-query
-        # p50 read 1.90 s in one task, 0.91 s at 4 partitions, 0.95 s at 8
-        # and 1.44 s at one per group.
-        par = index.spark.sparkContext.defaultParallelism
-        n_parts = len(info["centroids"])
-        group_salt = max(1, int(math.ceil(2.0 * par / n_parts)))
-        group_cols = ["part_id"]
-        if group_salt > 1:
-            assigned = assigned.withColumn(
-                "_gs", F.pmod(F.xxhash64(F.col("qid")), F.lit(group_salt))
-            )
-            group_cols.append("_gs")
-        n_shuffle = min(par, n_parts * group_salt)
-        cents = info["centroids"] if res_mode else None
         b = index.spark.sparkContext.broadcast(
-            (info["pq"], met, k_ret, ef, index._nvq_codec(use_nvq),
-             res_mode, cents)
+            (info["pq"], met, k_ret, ef, index._nvq_codec(use_nvq), res_mode,
+             info["centroids"] if res_mode else None)
         )
-        dirs = _walk_dirs(index, seg.name, use_nvq)
-
-        # factory binds THIS segment's broadcast — the plan runs lazily,
-        # and a free `b` in a loop-shared scope would resolve to the LAST
-        # segment's broadcast for every segment
-        def _make_walk_task(b, tel_acc, dirs, group_cols):
-            def walk_task(
-                batches: Iterator[pd.DataFrame],
-            ) -> Iterator[pd.DataFrame]:
-                cdc, m_, kk, ef_, nvq_c, res_m, cents_ = b.value
-                rows = (
-                    w
-                    for key, qpdf in _sorted_groups(batches, group_cols)
-                    for w in _group_walk_rows(
-                        dirs, key[0], qpdf["qid"].to_numpy(dtype=np.int64),
-                        kernels.as_matrix(qpdf["vec"]), cdc, m_, ef_, res_m,
-                        cents_,
-                    )
-                )
-                yield from _walk_waves(rows, m_, ef_, kk, nvq_c, tel_acc)
-
-            return walk_task
-
         parts_out.append(
-            assigned.repartition(n_shuffle, *group_cols)
-            .sortWithinPartitions(*group_cols)
-            .mapInPandas(
-                _make_walk_task(b, tel_acc, dirs, group_cols),
-                schema="qid long, id long, score double",
+            index._probe_exchange(
+                info, assigned,
+                _exchange_walk(b, tel_acc, _walk_dirs(index, seg.name, use_nvq)),
+                "qid long, id long, score double", salt=True,
             )
         )
     return parts_out
+
+
+def _exchange_walk(b, tel_acc, dirs: tuple):
+    """An exchange-route task, bound to one segment's broadcast ``b`` and
+    ``_read_partition`` dirs: it packs its groups' wave rows into waves
+    and walks each as ONE disjoint-union beam (``_walk_waves``), so a
+    hop's Python constant is paid once per wave, not once per group of
+    1-3 queries; then it drops tombstoned ids (the walk routes through
+    deleted rows)."""
+
+    from jvector_spark.operators.index import _live_rows
+
+    def walk(groups, dead) -> Iterator[pd.DataFrame]:
+        cdc, met, kk, ef, nvq_c, res_m, cents = b.value
+        rows = (
+            w
+            for (part, *_), qpdf in groups
+            for w in _group_walk_rows(
+                dirs, part, qpdf["qid"].to_numpy(dtype=np.int64),
+                kernels.as_matrix(qpdf["vec"]), cdc, met, ef, res_m, cents,
+            )
+        )
+        for hits in _walk_waves(rows, met, ef, kk, nvq_c, tel_acc):
+            yield _live_rows(hits, dead)
+
+    return walk

@@ -70,7 +70,6 @@ from jvector_spark.operators.exact import (
     empty_ranked,
     in_list,
     route_query_batch,
-    tile_join,
 )
 from jvector_spark.operators.quantize.pq import ProductQuantizer
 from jvector_spark.types import MANIFEST_VERSION, IndexManifest, SegmentInfo
@@ -365,7 +364,7 @@ def _rerank_rows(frame: pd.DataFrame, nvq_c, block: bool):
     default rerank feature, NVQScorer.java; parquet column pruning means
     the 4-bytes/dim fp32 column is never read in that mode).
 
-    ``block=True`` decodes the WHOLE frame once, for tiles (and
+    ``block=True`` decodes the WHOLE frame once, for blocks (and
     two-phase join batches) whose expected candidate coverage reaches the
     row count (r9: bulk corpus-as-queries tiles re-gathered the same rows
     in every 512-query chunk — the per-chunk pandas iloc + bytes-join was
@@ -435,8 +434,9 @@ def _fused_block_topk(
     identically: the IVF point search (``IVFIndex.search``'s broadcast
     route, one call per (task, probed partition) in ``_probe_stage``),
     the broadcast two-phase join (``search.two_phase_knn_join``, one call
-    per Arrow batch), the tile scorer ``_tile_topk`` (the IVF tile scan
-    and the blocked two-phase join, both on ``exact.tile_join``), and
+    per Arrow batch), the block scorer ``_tile_topk`` (distributed IVF
+    search's partition groups on ``IVFIndex._probe_exchange`` and the
+    blocked two-phase join's ``exact.tile_join`` tiles), and
     graph-traversal rerank (``graph._rerank_beams``). Returns (qid,
     id, score) arrays.
 
@@ -584,19 +584,19 @@ def _tile_topk(
     n_fine: int | None = None,
     counters=None,
 ) -> pd.DataFrame:
-    """Fused two-phase top-k of one tile-join tile: query rows ``qs``
-    (rid, vec[, subs]) against corpus rows ``cs`` (rid, codes, then vec
-    or nvq/nvq_params[, rsq][, sub_id]), both non-empty: the top-k scorer
-    of every ``exact.tile_join`` caller that reads codes — the IVF tile
-    scan and the blocked two-phase join.
+    """Fused two-phase top-k of one block: query rows ``qs`` (rid,
+    vec[, subs]) against corpus rows ``cs`` (rid, codes, then vec or
+    nvq/nvq_params[, rsq][, sub_id]), both non-empty. It scores a
+    distributed IVF search's partition group (``IVFIndex._probe_exchange``:
+    one probed partition against every query that probed it) and a
+    blocked two-phase join's ``exact.tile_join`` tile.
 
-    ``res_cent``: residual-PQ mode's coarse centroid for this tile (one
-    coarse cell per IVF tile — part_id is the leading group key — so the
-    per-(query, cell) dot is a vector); None otherwise. ``n_fine``: the
-    fine-level size on a two-level index, for per-query cell masks.
-    ``counters`` as in ``_fused_block_topk``; on the IVF tile route each
-    corpus row of a probed partition is visited once (one tile per
-    partition)."""
+    ``res_cent``: residual-PQ mode's coarse centroid for this block (an
+    IVF group is one coarse cell, so the per-(query, cell) dot is a
+    vector); None otherwise. ``n_fine``: the fine-level size on a
+    two-level index, for per-query cell masks. ``counters`` as in
+    ``_fused_block_topk``; on distributed IVF search each corpus row of a
+    probed partition is visited once (one group per partition)."""
     stages = counters[2] if counters is not None else None
     t_mark = time.perf_counter() if stages is not None else 0.0
     if counters is not None:
@@ -1586,8 +1586,8 @@ class IVFIndexBuilder:
 
 def _persist_assignment(assigned: DataFrame) -> DataFrame:
     """Materialize-once storage for a distributed probe-assignment pass
-    that is read twice: the two-level fine-sub union job, then the tile
-    join. No other call persists its assignment.
+    that is read twice: the two-level fine-sub union job, then the probe
+    exchange. No other call persists its assignment.
 
     Replaces ``localCheckpoint(eager=False)`` (r7, the 10M driver-heap
     lever): localCheckpoint stores the RDD's deserialized Java row
@@ -1797,6 +1797,20 @@ def _query_chunks(qids: np.ndarray, near: np.ndarray, n: int) -> np.ndarray:
     return chunk[inv]
 
 
+def _live_rows(rows: pd.DataFrame, dead, *accepted) -> pd.DataFrame:
+    """``rows`` (a partition read or a hit frame) minus the tombstoned ids
+    ``dead`` and the ids missing from any ``accepted`` array; each is a
+    sorted id array or None (no filter)."""
+    ids = rows["id"].to_numpy(dtype=np.int64)
+    keep = np.ones(len(ids), dtype=bool)
+    if dead is not None:
+        keep &= ~_is_member(ids, dead)
+    for acc in accepted:
+        if acc is not None:
+            keep &= _is_member(ids, acc)
+    return rows if keep.all() else rows[keep]
+
+
 def _chunk_rows(call: dict, c: int):
     """``(plan, part_id, rows, qsel)`` for every partition that chunk
     ``c``'s queries probe (``IVFIndex._probe_stage``): the partition read
@@ -1817,16 +1831,72 @@ def _chunk_rows(call: dict, c: int):
             )
             if rows is None:
                 continue
-            ids = rows["id"].to_numpy(dtype=np.int64)
-            keep = np.ones(len(ids), dtype=bool)
-            if dead is not None:
-                keep &= ~_is_member(ids, dead)
-            if accept is not None:
-                keep &= _is_member(ids, accept)
-            if "accepted" in plan:
-                keep &= _is_member(ids, plan["accepted"].get(part, ids[:0]))
-            if keep.any():
-                yield plan, part, (rows if keep.all() else rows[keep]), qsel
+            rows = _live_rows(
+                rows, dead, accept,
+                plan["accepted"].get(part, np.empty(0, np.int64)) if "accepted" in plan else None,
+            )
+            if len(rows):
+                yield plan, part, rows, qsel
+
+
+def _sorted_groups(
+    batches: Iterator[pd.DataFrame], cols: list[str]
+) -> Iterator[tuple[tuple, pd.DataFrame]]:
+    """(key, rows) per run of equal ``cols`` in a stream of frames sorted
+    on ``cols``; a run that spans frames is joined before it is yielded."""
+    held, held_key = [], None
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        keys = pdf[cols].to_numpy()
+        cuts = np.flatnonzero((keys[1:] != keys[:-1]).any(axis=1)) + 1
+        for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, len(pdf)]):
+            key = tuple(int(v) for v in keys[lo])
+            if held and key != held_key:
+                yield held_key, pd.concat(held, ignore_index=True)
+                held = []
+            held_key = key
+            held.append(pdf.iloc[lo:hi])
+    if held:
+        yield held_key, pd.concat(held, ignore_index=True)
+
+
+def _group_scorer(b, tel_acc):
+    """Distributed IVF search's per-task function on ``_probe_exchange``,
+    bound to one segment's broadcast ``b``: per ``part_id`` group it reads
+    the partition (``_read_part``), drops tombstoned rows and rows outside
+    the group's ``acc`` ids, and scores the group's queries against the
+    rest (``_tile_topk``, or ``_threshold_hits`` with ``part_id``)."""
+
+    def score_groups(groups, dead) -> Iterator[pd.DataFrame]:
+        codec, met, k, rerank_k, thr, nvq_c, n_fine, cents, table, cols, filt = b.value
+        for (part, *_), g in groups:
+            accepted = None
+            if "acc" in g:
+                acc = g["acc"].to_numpy(dtype=bool)
+                accepted = np.unique(g["qid"].to_numpy(dtype=np.int64)[acc])
+                g = g[~acc]
+            rows = _read_part(table, part, cols, filt) if len(g) else None
+            if rows is None:
+                continue
+            rows = _live_rows(rows, dead, accepted)
+            if not len(rows):
+                continue
+            if thr is not None:
+                yield _threshold_hits(
+                    met, thr, g["qid"].to_numpy(dtype=np.int64),
+                    kernels.as_matrix(g["vec"]),
+                    rows["id"].to_numpy(dtype=np.int64), kernels.as_matrix(rows["vec"]),
+                ).assign(part_id=np.int32(part))
+                continue
+            yield _tile_topk(
+                g.rename(columns={"qid": "rid"}), rows.rename(columns={"id": "rid"}),
+                codec, met, k, rerank_k, nvq_c,
+                res_cent=cents[part] if cents is not None else None,
+                n_fine=n_fine, counters=tel_acc,
+            )
+
+    return score_groups
 
 
 def _rank_hits(hits: pd.DataFrame, k: int, spill: int) -> pd.DataFrame:
@@ -1850,42 +1920,44 @@ def _rank_hits(hits: pd.DataFrame, k: int, spill: int) -> pd.DataFrame:
     )
 
 
-def _merge_topk(
-    parts: list[DataFrame], k: int, spill: int, tombstones: DataFrame | None = None
-) -> DataFrame:
+def _merge_topk(parts: list[DataFrame], k: int, spill: int) -> DataFrame:
     """Final merge of per-segment (qid, id, score) candidates: J6 segment
     union, the U3 visited-set dedup across spilled copies (identical
-    rows), then the per-query top-k window. ``tombstones`` (graph
-    traversal, which walks deleted rows) are anti-joined before the
-    window.
+    rows), then the per-query top-k window.
 
     The dedup repartitions by qid FIRST so the dedup aggregate and the
     top-k window share ONE exchange: hash(qid) satisfies the aggregate's
     (qid, id) clustering requirement, and the aggregate preserves it for
     the window — the plain dropDuplicates paid Exchange(qid, id) +
     Exchange(qid) back to back (guide §2.4; duplicates only arise across
-    part_id tiles, i.e. across tasks, so the lost map-side partial dedup
-    was removing ~nothing)."""
+    part_id groups, mostly across tasks, so the lost map-side partial
+    dedup was removing ~nothing)."""
     scanned = parts[0]
     for d in parts[1:]:
         scanned = scanned.unionByName(d)
     if spill > 1:
         scanned = scanned.repartition("qid").dropDuplicates(["qid", "id"])
-    if tombstones is not None:
-        scanned = scanned.join(tombstones.select("id"), "id", "left_anti")
     return _rank_topk(scanned, k)
 
 
 def _merge_threshold(parts: list[DataFrame], spill: int) -> DataFrame:
-    """Threshold-route merge: segment union, then the spill dedup as a
-    plain dropDuplicates ON PURPOSE (no repartition("qid") first): unlike
-    the k-NN routes, no qid window follows the dedup here, so there is no
-    downstream exchange to share — forcing one would ADD a shuffle (r9
-    ADVICE asked for this asymmetry to be documented, not "fixed")."""
-    out = parts[0]
-    for d in parts[1:]:
-        out = out.unionByName(d)
-    return out.dropDuplicates(["qid", "id"]) if spill > 1 else out
+    """Threshold-route merge of per-segment (qid, id, score, part_id)
+    hits: segment union, then the spill dedup as a plain aggregate ON
+    PURPOSE (no repartition("qid") first): unlike the k-NN routes, no qid
+    window follows the dedup here, so there is no downstream exchange to
+    share — forcing one would ADD a shuffle (r9 ADVICE asked for this
+    asymmetry to be documented, not "fixed"). The two copies of a spilled
+    pair can differ in the score's last bit (each partition's GEMM rounds
+    on its own), so the dedup keeps the copy of the lowest (segment,
+    part_id), as the broadcast route's task does."""
+    out = parts[0].withColumn("seg", F.lit(0))
+    for s, d in enumerate(parts[1:], 1):
+        out = out.unionByName(d.withColumn("seg", F.lit(s)))
+    if spill > 1:
+        return out.groupBy("qid", "id").agg(
+            F.min_by("score", F.struct("seg", "part_id")).alias("score")
+        )
+    return out.select("qid", "id", "score")
 
 
 def _partition_score_bounds(
@@ -2180,13 +2252,6 @@ class IVFIndex:
             return self.spark.read.schema("id long").parquet(p)
         return None
 
-    def _apply_liveness(self, data: DataFrame) -> DataFrame:
-        """F2 liveness: anti-join the scan against the tombstone table IN
-        THE PLAN (AQE broadcasts the small side) — never materialized on
-        the driver, so a billion tombstones cannot OOM anything."""
-        t = self.tombstones()
-        return data.join(t.select("id"), "id", "left_anti") if t is not None else data
-
     def live_vectors(self) -> DataFrame:
         """F2 liveness filter: anti-join against the tombstone table."""
         v = self.vectors()
@@ -2271,11 +2336,14 @@ class IVFIndex:
           probed by t tasks is read t times.
         - ``distributed``: NO driver collect of either side. Probe
           assignment runs as a map-only pass over the query DataFrame
-          (centroids broadcast), queries shuffle to their probed
-          ``part_id``s, and the shared tile join (``exact.tile_join``,
-          one tile per probed partition) runs the same fused ADC→rerank
-          scoring per tile. The corpus-as-queries path: bulk embedding
-          joins, semantic dedup.
+          (centroids broadcast), and the query replicas shuffle to their
+          probed ``part_id``s on the bulk probe exchange that graph
+          search's exchange route also runs (``_probe_exchange``):
+          ``min(cores, partitions)`` tasks, each pyarrow-reading the
+          partitions of its groups and running the same fused
+          ADC→rerank scoring per partition. Corpus rows never shuffle.
+          The corpus-as-queries path: bulk embedding joins, semantic
+          dedup.
         - ``auto``: ``broadcast`` at or below ``BROADCAST_QUERY_CAP`` query
           rows, else ``distributed`` — decided by ``m_hint``, or by the
           same ``take(cap + 1)`` that collects the broadcast side.
@@ -2348,8 +2416,10 @@ class IVFIndex:
         the accepted ``(segment, part_id, id)`` rows of the
         probed partitions (``_accepted_ids``), and each task keeps only
         those rows. The driver holds them, so its memory is bounded by
-        the accepted rows of the probed partitions. The distributed route
-        filters and semi-joins inside its scan.
+        the accepted rows of the probed partitions. On the distributed
+        route the accepted ``(part_id, id)`` rows are selected in Spark
+        and ride the probe exchange with the query replicas (ids only),
+        so neither side reaches the driver.
         """
         if probe_ratio is not None and probe_ratio < 1:
             raise ValueError(
@@ -2629,7 +2699,7 @@ class IVFIndex:
         GraphSearcher.java:222). Emits one (part_id, qid, vec) row per
         (query, probed partition); with ``fine_npf`` each row also carries
         the query's probed fine-sub set (``subs``) for per-query candidate
-        masking in the tile join.
+        masking in the probe exchange's groups.
 
         ``threshold is None``: ``_select_probes`` (the broadcast routes'
         top-k probe rule). Otherwise ``_threshold_probes``: every
@@ -2646,9 +2716,9 @@ class IVFIndex:
         fine = info.get("fine") if fine_npf else None
         npf = int(min(int(fine_npf), len(fine))) if fine is not None else 0
         own_pad = self._fine_own_pad(info) if fine is not None else None
-        # query replicas ride the tile shuffle in the INDEX's vec layout so
-        # the corpus/query union is type-uniform; both layouts carry the
-        # same f32 values (this schema always cast to float), so scores are
+        # query replicas ride the exchange in the INDEX's vec layout (packed
+        # f32 bytes are the compact one); both layouts carry the same f32
+        # values (this schema always cast to float), so scores are
         # bit-identical across formats
         packed = self.manifest.vec_format == "packed_f32"
         schema = (
@@ -2707,6 +2777,66 @@ class IVFIndex:
         )
         return qin.mapInPandas(assign, schema=schema)
 
+    def _probe_exchange(
+        self, info: dict, assigned: DataFrame, group_hits, schema: str,
+        salt: bool = False, accepted: DataFrame | None = None,
+    ) -> DataFrame:
+        """The ONE exchange of every bulk probed search (distributed IVF
+        top-k and threshold, graph search's exchange route), over one
+        segment's ``_assign_probes`` replicas: they shuffle by ``part_id``
+        (plus ``_gs`` when salted) into ``min(defaultParallelism, groups)``
+        tasks, sorted by group key, and each task streams its groups
+        (``_sorted_groups``) through ``group_hits(groups, dead)``, which
+        yields ``schema`` frames; ``dead`` is the sorted tombstoned ids
+        (read once per task) or None. A task reads its groups' partitions
+        itself, so corpus bytes never move.
+
+        The count is explicit: AQE sizes by bytes and would coalesce this
+        tiny exchange into ONE task, yet a group costs a partition read and
+        its scoring whatever its bytes (a 16-query graph batch, 10k x 64,
+        100 partitions, 4 cores: 1.90 s p50 in one task, 0.91 s at 4,
+        0.95 s at 8, 1.44 s at one per group).
+
+        ``salt`` (graph): on a coarse layout each partition's queries split
+        by qid hash into ``ceil(2 x cores / n_parts)`` groups; a beam does
+        not depend on its group's other queries. IVF groups are whole
+        partitions: a threshold GEMM holds all of a partition's probing
+        queries in the query frame's order, as on the broadcast route (BLAS
+        rounds the last bit differently for another query count).
+
+        ``accepted`` (IVF filters): accepted ``(part_id, id)`` rows, which
+        ride the exchange id-only (``qid`` holds the id, ``acc`` is true)
+        into their partition's group."""
+        par = self.spark.sparkContext.defaultParallelism
+        n_parts = len(info["centroids"])
+        group_salt = max(1, int(math.ceil(2.0 * par / n_parts))) if salt else 1
+        group_cols = ["part_id"]
+        if group_salt > 1:
+            assigned = assigned.withColumn(
+                "_gs", F.pmod(F.xxhash64(F.col("qid")), F.lit(group_salt))
+            )
+            group_cols.append("_gs")
+        if accepted is not None:
+            assigned = assigned.withColumn("acc", F.lit(False)).unionByName(
+                accepted.select(
+                    F.col("part_id").cast("int"), F.col("id").alias("qid"),
+                    F.lit(True).alias("acc"),
+                ),
+                allowMissingColumns=True,
+            )
+        tomb = os.path.join(self.path, "tombstones.parquet")
+        tomb = tomb if os.path.exists(tomb) else None
+
+        def task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            groups = _sorted_groups(batches, group_cols)
+            yield from group_hits(groups, _read_tombstones(tomb))
+
+        return (
+            assigned.repartition(min(par, n_parts * group_salt), *group_cols)
+            .sortWithinPartitions(*group_cols)
+            .mapInPandas(task, schema=schema)
+        )
+
     def _search_distributed(
         self,
         queries_df: DataFrame,
@@ -2729,52 +2859,40 @@ class IVFIndex:
         """Uncapped k-NN or threshold search: neither side is ever
         driver-collected.
 
-        Per segment: distributed probe assignment, then an
-        ``exact.tile_join`` with ONE tile per probed partition, running
-        the same fused two-phase scoring as the broadcast stage. Each
-        probed partition is one rerank pool on both routes, so they return
-        the same rows; a per-partition rerank_k can only ADD candidates
-        relative to a global rerank_k.
+        Per segment: distributed probe assignment, then the bulk probe
+        exchange (``_probe_exchange``) with ``_group_scorer``: a group is
+        one probed partition, read with pyarrow in its task minus its
+        tombstoned rows and scored against ALL its probing queries by
+        ``_tile_topk`` — one rerank pool per probed partition, as on the
+        broadcast route, so both return the same rows. ``threshold`` set:
+        bound-pruned assignment (``_threshold_probes``), exact fp32 scores
+        (``_threshold_hits``) and ``_merge_threshold``; the caller passes
+        no ``m_hint`` or ``n_probe_fine``.
 
-        ``threshold`` set: threshold mode. Assignment is bound-pruned
-        (``_threshold_probes``), survivors are scored exactly at fp32
-        (``_threshold_hits``), so results remain EXACT — pruning only ever
-        saves IO — and segments merge with ``_merge_threshold``. The
-        caller passes no ``m_hint`` or ``n_probe_fine``.
+        A ``predicate`` or ``accept_df`` selects the segment's accepted
+        ``(part_id, id)`` rows in Spark; they ride the exchange, ids only,
+        and a group scores only its accepted rows.
 
-        The query lineage runs exactly once: the tile join reads the
-        assignment once, and only a call that derives the fine-sub union
-        (below) reads it twice, so only that call persists it (columnar
-        compressed, disk-spilling — see ``_persist_assignment``). Every
-        other call persists nothing and scans every non-empty partition
-        through its static ``part_id`` filter (a safe superset of the
-        probed set; a partition no query probed meets no query rows).
-
-        On a two-level index the probed fine-sub union (the pushed
-        ``sub_id IN (...)`` scan filter) is derived from the ``subs``
-        column the assignment pass already computed — never a second pass
-        over the query side (r6 ADVICE). ONE job over the persisted
-        assignment returns both the union and the EXACT probed ``part_id``
-        set, which then replaces the all-non-empty ``part_id`` filter
-        (r9 ADVICE). Both are INDEX-METADATA sized (<= n_fine ids, <=
-        65536), the same driver-residency class as the centroids. When
-        ``m_hint`` predicts the union saturates the fine level
-        (corpus-as-queries bulk), the union is skipped outright: it would
-        prune ~nothing while costing the persist + that job — the
-        per-query mask alone carries the fine semantics there."""
-        use_nvq = rerank == "nvq"
+        The query lineage runs once: only a call that derives the fine-sub
+        union reads the assignment twice, so only it persists it
+        (``_persist_assignment``). On a two-level index ONE job over the
+        assignment's ``subs`` returns the probed fine-sub union (the
+        ``sub_id IN (...)`` read filter, as on the broadcast route) and the
+        EXACT probed ``part_id`` set, which prunes a filtered call's
+        accepted rows (r6, r9 ADVICE; both are index-metadata sized). The
+        union is batch-wide, not per group: a query's refill pool depends
+        on which rows are read. When ``m_hint`` predicts the union
+        saturates the fine level (corpus-as-queries bulk: 7,879 of 8,000
+        cells at 200k queries), it is skipped: it would prune ~nothing at
+        the cost of the persist + that job, and the per-query mask alone
+        carries the fine semantics."""
+        use_nvq = rerank == "nvq" and threshold is None
+        tel_acc = telemetry.counters() if telemetry is not None else None
         parts = []
         for seg in self.manifest.segments:
             info = self._segments[seg.name]
             fine_npf = n_probe_fine if info.get("fine") is not None else None
-            # The sub_id IN (...) pushdown is an IO optimization only (the
-            # per-query mask preserves ranking semantics) — at bulk
-            # corpus-as-queries scale the union saturates the fine level
-            # (measured 7,879/8,000 cells at 200k queries), so the
-            # row-group skip prunes ~nothing while deriving it costs a
-            # full persist + explode-collect.
-            # Skip it when the EXPECTED coverage saturates (m_hint x npf
-            # >= 4x the fine level); small m_hint batches keep the filter.
+            # the union saturates when m_hint x npf >= 4x the fine level
             derive_subfilter = bool(fine_npf) and (
                 m_hint is None
                 or int(m_hint) * int(fine_npf) < 4 * len(info["fine"])
@@ -2784,109 +2902,50 @@ class IVFIndex:
                 threshold=threshold, fine_npf=fine_npf, probe_ratio=probe_ratio,
                 npf_per_probe=npf_per_probe,
             )
-            part_ids = np.flatnonzero(self._part_counts(seg.name)).tolist()
-            sub_filter = None
+            part_ids = filters = accepted = None
             if derive_subfilter:
                 assigned = _persist_assignment(assigned)
                 probed = assigned.select(
                     "part_id", F.explode_outer("subs").alias("sub_id")
                 ).agg(F.collect_set("part_id"), F.collect_set("sub_id")).first()
-                part_ids, sub_filter = sorted(probed[0]), sorted(probed[1])
+                part_ids = sorted(probed[0])
+                filters = [("sub_id", "in", sorted(probed[1]))]
+            if predicate is not None or accept_df is not None:
+                accepted = self._segment_data(seg.name)
+                if part_ids is not None:
+                    accepted = accepted.filter(in_list("part_id", part_ids))
+                if predicate is not None:
+                    accepted = accepted.filter(predicate)
+                if accept_df is not None:
+                    accepted = accepted.join(accept_df, "id", "semi")  # F1
+            res_mode = bool(info.get("residual"))
+            if threshold is None:
+                # NVQ rerank never reads the fp32 column
+                cols = ["id", "codes", *_rerank_cols(use_nvq)]
+                if res_mode:
+                    cols.append("rsq")  # reconstructed ‖c+r̂‖² for residual ADC
+            else:
+                cols = ["id", "vec"]
+            n_fine = len(info["fine"]) if fine_npf else None
+            if n_fine:
+                cols.append("sub_id")  # rows' fine cell, for per-query masking
+            b = self.spark.sparkContext.broadcast(
+                (info["pq"], metric, k, rerank_k, threshold,
+                 self._nvq_codec(use_nvq), n_fine,
+                 info["centroids"] if res_mode else None,
+                 os.path.join(info["dir"], "data.parquet"), cols, filters)
+            )
             parts.append(
-                self._segment_tile_scan(
-                    info, assigned, metric, k, rerank_k, part_ids,
-                    predicate, accept_df, use_nvq, threshold, sub_filter=sub_filter,
-                    n_fine=(len(info["fine"]) if fine_npf else None),
-                    telemetry=telemetry,
+                self._probe_exchange(
+                    info, assigned, _group_scorer(b, tel_acc),
+                    "qid long, id long, score double"
+                    + (", part_id int" if threshold is not None else ""),
+                    accepted=accepted,
                 )
             )
         if threshold is not None:
             return _merge_threshold(parts, self.manifest.spill)
         return _merge_topk(parts, k, self.manifest.spill)
-
-    def _segment_tile_scan(
-        self,
-        info: dict,
-        assigned: DataFrame,
-        metric: str,
-        k: int,
-        rerank_k: int,
-        part_ids: list[int],
-        predicate,
-        accept_df: DataFrame | None,
-        use_nvq: bool,
-        threshold: float | None,
-        sub_filter: list[int] | None = None,
-        n_fine: int | None = None,
-        telemetry=None,
-    ) -> DataFrame:
-        """``exact.tile_join`` between probe assignments and the scan of
-        ``part_ids``, ONE tile per partition: each ``part_id`` group scores
-        all its assignments against all its rows with the fused
-        ADC->rerank kernel (threshold mode: exact fp32 scores + filter).
-
-        ``part_ids`` is a STATIC partition filter, already on the driver:
-        planner-time pruning on the ``part_id`` directory column, so no
-        broadcast semi-join re-evaluates the assignment lineage (at the 1M
-        corpus-as-queries shape that semi-join re-ran the full query
-        pass, 725 of 5,639 executor core-seconds, to produce part_ids the
-        driver already had).
-
-        ``sub_filter`` (two-level index): the probed fine-sub union as a
-        STATIC pushed ``sub_id IN (...)`` filter — parquet row-group
-        min/max stats skip unprobed sub-clusters (files are sorted by
-        (part_id, sub_id) at write time), and pruned rows never enter the
-        tile shuffle."""
-        data = self._segment_data(info["name"])
-        data = data.filter(in_list("part_id", part_ids))
-        if sub_filter is not None:
-            data = data.filter(in_list("sub_id", sub_filter))
-        data = self._apply_liveness(data)  # F2 tombstones
-        if predicate is not None:
-            data = data.filter(predicate)
-        if accept_df is not None:
-            data = data.join(accept_df, "id", "semi")  # F1 accept list
-
-        res_mode = bool(info.get("residual"))
-        if threshold is None:
-            # NVQ rerank never reads the fp32 column (parquet prunes it)
-            cols = ["codes", *_rerank_cols(use_nvq)]
-            if res_mode:
-                cols.append("rsq")  # reconstructed ‖c+r̂‖² for residual ADC
-        else:
-            cols = ["vec"]
-        if n_fine:
-            cols.append("sub_id")  # rows' fine cell, for per-query masking
-        c_side = data.select("part_id", F.col("id").alias("rid"), *cols)
-        # query side: the query's vec and, on a two-level index, its probed
-        # fine-sub set
-        q_side = assigned.select(
-            "part_id", F.col("qid").alias("rid"), "vec", *(["subs"] if n_fine else [])
-        )
-        bt = self.spark.sparkContext.broadcast(
-            (info["pq"], metric, k, rerank_k, threshold,
-             self._nvq_codec(use_nvq and threshold is None), n_fine,
-             info["centroids"] if res_mode else None)
-        )
-        tel_acc = telemetry.counters() if telemetry is not None else None
-
-        def score_tile(key, qs: pd.DataFrame, cs: pd.DataFrame) -> pd.DataFrame:
-            codec, met, kk, keep, thr, nvq_c, n_fine_, res_cents = bt.value
-            if thr is None:
-                return _tile_topk(
-                    qs, cs, codec, met, kk, keep, nvq_c,
-                    res_cent=(
-                        res_cents[int(key[0])] if res_cents is not None else None
-                    ),
-                    n_fine=n_fine_, counters=tel_acc,
-                )
-            return _threshold_hits(
-                met, thr,
-                qs["rid"].to_numpy(dtype=np.int64), kernels.as_matrix(qs["vec"]),
-                cs["rid"].to_numpy(dtype=np.int64), kernels.as_matrix(cs["vec"]),
-            )
-
-        return tile_join(c_side, q_side, (1, 1), score_tile, n_parts=len(part_ids))
 
     def threshold_search(
         self,
@@ -2908,18 +2967,22 @@ class IVFIndex:
 
         ``strategy``: ``broadcast`` collects + broadcasts the query side
         (capped at ``BROADCAST_QUERY_CAP``) and runs the top-k route's ONE
-        Spark stage (``_probe_stage``) with ``_threshold_hits``. A
-        partition is scored against ALL its probing queries, as the
-        distributed tile does: BLAS rounds a GEMM's last bit differently
-        for another query count, so each task sharing a partition repeats
-        its GEMM. Of a spilled pair's two hits (their last bits can differ
-        with the partition size) a task keeps the lower ``part_id``'s.
-        ``distributed`` runs probe
-        assignment and scoring fully distributed (the corpus-as-queries
-        dedup path — exactness is preserved because pruning uses the same
-        bounds and survivors are scored identically); ``auto`` routes on
-        query-side size — ``m_hint``, or the same ``take(cap + 1)`` that
-        collects the broadcast side.
+        Spark stage (``_probe_stage``) with ``_threshold_hits``.
+        ``distributed`` runs probe assignment as a map-only pass and
+        scores on the top-k route's bulk probe exchange
+        (``_probe_exchange``): one group per probed partition, read with
+        pyarrow in its task (the corpus-as-queries dedup path; no driver
+        collect of either side). ``auto`` routes on query-side size —
+        ``m_hint``, or the same ``take(cap + 1)`` that collects the
+        broadcast side.
+
+        Both routes return the same rows, to the last bit: both prune with
+        the same bounds and score a partition against ALL its probing
+        queries (BLAS rounds a GEMM's last bit differently for another
+        query count, so each broadcast task sharing a partition repeats
+        its GEMM, and an exchange group is a whole partition), and of a
+        spilled pair's two hits (their last bits can differ with the
+        partition size) both keep the lower ``part_id``'s.
 
         Bounds per metric (c = centroid, r/theta/M = stored stats):
           EUCLIDEAN:   d(q,x) >= max(0, ||q-c|| - r)  -> 1/(1+d^2) bound
@@ -2988,8 +3051,9 @@ class IVFIndex:
         The tombstone table is merged and written driver-side via pyarrow
         (the ``ids`` argument is a driver list by signature, and the merge
         is a set union of longs — megabytes at hundreds of millions of
-        tombstones). The SCAN-side liveness anti-join stays fully
-        distributed (``_apply_liveness``), which is where scale matters.
+        tombstones). Readers filter on their own side: every search task
+        reads the file's ``id`` column itself (``_read_tombstones``, once
+        per task), and compaction anti-joins it in the plan.
 
         The merged table is written as ONE parquet file next to the old
         one and swapped in with ``os.replace``, so a reader or a crash
@@ -3077,10 +3141,11 @@ class IVFIndex:
             if len(sel) < 2:
                 raise ValueError("subset compaction needs >= 2 segments")
         full = set(sel) == set(all_names)
+        dead = self.tombstones()  # F2: anti-joined in the plan
         live_all = [
-            self._apply_liveness(self.vectors(segment=s, decode=False))
+            (v.join(dead, "id", "left_anti") if dead is not None else v)
             .select("id", "vec")
-            for s in sel
+            for v in (self.vectors(segment=s, decode=False) for s in sel)
         ]
         live = live_all[0]
         for d_ in live_all[1:]:

@@ -84,7 +84,7 @@ class SearchTelemetry:
     """Search-cost counters (ref ``SearchResult`` telemetry —
     visited/expanded/reranked node counts, SearchResult.java:25-86),
     gathered with Spark accumulators from inside the fused kernel of the
-    point stage and the tiles.
+    point stage and the probe exchange's groups.
 
     Usage::
 
@@ -101,11 +101,12 @@ class SearchTelemetry:
     results.
 
     Route notes: both IVF routes count ``visited_rows`` once per probed
-    partition per call. The distributed TILE route scores each probed
-    partition in one tile, holding every query that probed it; the
-    broadcast route can read a partition in several tasks (one per query
-    chunk that probes it) and counts it only in the task that holds its
-    lowest probing query position. ``reranked_rows`` counts the work
+    partition per call. The distributed route's exchange
+    (``IVFIndex._probe_exchange``) scores each probed partition in one
+    group, holding every query that probed it; the broadcast route can
+    read a partition in several tasks (one per query chunk that probes
+    it) and counts it only in the task that holds its lowest probing
+    query position. ``reranked_rows`` counts the work
     each task did, so on the broadcast route it can rise with the task
     count: a row reranked for queries of two chunks counts twice. Do not
     compare the raw counters across routes; for the point-query IO model
@@ -125,7 +126,7 @@ class SearchTelemetry:
         self._reranked = spark.sparkContext.accumulator(0)
         # per-stage kernel wall (microseconds, summed across all tasks —
         # i.e. CORE-seconds, not wall-clock): setup = Arrow->numpy
-        # conversion of a tile's pandas frames; lut = per-chunk ADC LUT
+        # conversion of a block's pandas frames; lut = per-chunk ADC LUT
         # construction; mask = per-chunk fine-cell mask scatter; adc =
         # stage-1 code scoring; topk = candidate selection (incl. mask
         # apply); rerank = stage-2 exact re-scoring. Populated by the
@@ -244,9 +245,10 @@ def two_phase_knn_join(
     ``strategy``: ``broadcast`` collects + broadcasts the query side
     (point-query-batch path, capped) and scores every Arrow batch of the
     corpus side in one ``mapInPandas``; ``blocked`` runs
-    ``exact.tile_join`` — no driver collect of either side (the
-    un-indexed sibling of ``IVFIndex.search(strategy="distributed")``:
-    one partition, so every tile scans every corpus block); ``auto``
+    ``exact.tile_join`` — no driver collect of either side (an
+    un-indexed corpus is one partition, so unlike
+    ``IVFIndex.search(strategy="distributed")`` it shuffles corpus rows
+    and every tile scans every corpus block); ``auto``
     routes on query-side size (``m_hint``, or the same ``take(cap + 1)``
     that collects the broadcast side). ``m_hint``/``n_hint`` skip the
     sizing jobs.
@@ -279,18 +281,14 @@ def two_phase_knn_join(
 
     if batch is None:
         q_side = queries_df.select(
-            F.lit(0).alias("part_id"),
             F.col(query_id_col).alias("rid"),
             F.col(query_vec_col).cast("array<float>").alias("vec"),
         )
         bt = sc.broadcast((pq, metric, k, rerank_k, nvq_codec))
 
-        def score_tile(key, qs: pd.DataFrame, cs: pd.DataFrame) -> pd.DataFrame:
-            return _tile_topk(qs, cs, *bt.value)
-
         scored = tile_join(
-            c_side.withColumn("part_id", F.lit(0)), q_side,
-            flat_blocks(codes_df, queries_df, n_hint, m_hint), score_tile,
+            c_side, q_side, flat_blocks(codes_df, queries_df, n_hint, m_hint),
+            lambda qs, cs: _tile_topk(qs, cs, *bt.value),
         )
     else:
         qids, qmat = batch

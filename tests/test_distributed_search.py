@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from jvector_spark.operators import exact
 from jvector_spark.operators.exact import BROADCAST_QUERY_CAP
 from jvector_spark.operators.index import IVFIndexBuilder
+from jvector_spark.operators.search import SearchTelemetry
 
 DIM = 8
 
@@ -48,10 +49,11 @@ def big_setup(spark, rng, tmp_path_factory):
 
 
 def test_search_auto_routes_over_cap_exact_parity(spark, big_setup):
-    """Corpus-as-queries (> cap) auto-routes to the distributed tile join;
-    with exhaustive probes and rerank_k >= any tile's rows, stage 1 keeps
-    everything, so the result equals the exact blocked k-NN join bit for
-    bit (same fp32-storage inputs, same fp64 scoring, same T4 tie-break)."""
+    """Corpus-as-queries (> cap) auto-routes to the distributed probe
+    exchange; with exhaustive probes and rerank_k >= any partition's rows,
+    stage 1 keeps everything, so the result equals the exact blocked k-NN
+    join bit for bit (same fp32-storage inputs, same fp64 scoring, same T4
+    tie-break)."""
     corpus, idx, n = big_setup
     k = 5
     queries = corpus.selectExpr("id as qid", "vec")
@@ -116,17 +118,27 @@ def test_search_distributed_matches_broadcast(spark, big_setup, cfg, tmp_path):
     assert sorted(ga) == sorted(gb)
 
 
-def test_threshold_distributed_matches_broadcast(spark, big_setup):
-    """Threshold search is exact on BOTH routes -> identical result sets."""
+def test_threshold_distributed_matches_broadcast(spark, big_setup, tmp_path):
+    """Threshold search is exact on BOTH routes -> identical result sets,
+    to the last bit of every score. The spill-2 build stores most rows in
+    two partitions, whose GEMMs can round a pair's score differently:
+    both routes keep the lower part_id's copy."""
     corpus, idx, _ = big_setup
+    spilled = IVFIndexBuilder(
+        metric="COSINE", n_partitions=16, pq_m=4, spill=2
+    ).fit(corpus, str(tmp_path / "index"))
     queries = corpus.limit(500).selectExpr("id as qid", "vec")
     t = 0.97  # normalized cosine score
-    a = idx.threshold_search(queries, t, strategy="distributed")
-    b = idx.threshold_search(queries, t, strategy="broadcast")
-    ga = sorted((r["qid"], r["id"], round(r["score"], 9)) for r in a.collect())
-    gb = sorted((r["qid"], r["id"], round(r["score"], 9)) for r in b.collect())
-    assert len(ga) > 0
-    assert ga == gb
+    for index in (idx, spilled):
+        got = {
+            strategy: sorted(
+                (r["qid"], r["id"], float(r["score"]).hex())
+                for r in index.threshold_search(queries, t, strategy=strategy).collect()
+            )
+            for strategy in ("distributed", "broadcast")
+        }
+        assert len(got["distributed"]) > 0
+        assert got["distributed"] == got["broadcast"]
 
 
 def test_single_large_partition_matches_broadcast(spark, tmp_path_factory):
@@ -187,16 +199,29 @@ def test_threshold_auto_routes_over_cap(spark, big_setup):
 
 
 def test_search_distributed_respects_filters(spark, big_setup):
-    """predicate + accept-list DataFrames flow through the distributed
-    route: results only ever contain accepted, live ids."""
+    """A predicate and an accept-list DataFrame ride the distributed
+    route's exchange as (part_id, id) rows: its rows equal the broadcast
+    route's, which filters the same probed rows before the
+    partition-local top-k, and hold only accepted ids."""
     corpus, idx, _ = big_setup
     queries = corpus.limit(32).selectExpr("id as qid", "vec")
     accept = corpus.select("id").filter(F.col("id") % 2 == 0)
-    res = idx.search(
-        queries, 5, n_probe=8, strategy="distributed", accept_ids=accept
-    ).collect()
-    assert len(res) > 0
-    assert all(r["id"] % 2 == 0 for r in res)
+    for kw, kept in (
+        ({"accept_ids": accept}, lambda i: i % 2 == 0),
+        ({"predicate": F.col("id") % 3 != 0}, lambda i: i % 3 != 0),
+    ):
+        got = {
+            strategy: sorted(
+                (r["qid"], r["rank"], r["id"], float(r["score"]).hex())
+                for r in idx.search(
+                    queries, 5, n_probe=8, strategy=strategy, **kw
+                ).collect()
+            )
+            for strategy in ("distributed", "broadcast")
+        }
+        assert len(got["distributed"]) == 32 * 5
+        assert got["distributed"] == got["broadcast"]
+        assert all(kept(i) for _, _, i, _ in got["distributed"])
 
 
 def test_lsh_distributed_matches_broadcast(spark, big_setup):
@@ -268,7 +293,7 @@ def test_two_phase_blocked_matches_broadcast(spark, big_setup):
 def test_distributed_sizing_reads_query_lineage_once(spark, big_setup):
     """The distributed route must not re-run the query lineage (r4
     verdict: it full-counted the query side a second time). Without
-    ``m_hint`` and without a fine level the tile join is the one reader
+    ``m_hint`` and without a fine level the probe exchange is the one reader
     of the probe assignment — an accumulator on the query lineage proves
     exactly ONE evaluation end to end, for both top-k and threshold
     routes."""
@@ -308,34 +333,32 @@ def fine_setup(spark, big_setup, tmp_path_factory):
 def test_fine_pruning_distributed_matches_broadcast(spark, fine_setup):
     """r4 verdict Missing #2: the distributed route must honor
     n_probe_fine. The probed fine-sub union is computed map-only (no query
-    collect) and pushed as the SAME static ``sub_id IN (...)`` filter the
+    collect) and pushed as the SAME ``sub_id IN (...)`` read filter the
     broadcast route uses — with rerank covering every surviving row the
-    two routes are bit-identical, and the formatted plan shows the filter
-    pushed into the parquet scan (row-group skipping)."""
-    import contextlib
-    import io
-
+    two routes are bit-identical, and the filter reaches the reads: both
+    routes visit the same rows, fewer than the probed partitions hold."""
     corpus, idx, n = fine_setup
     queries = corpus.limit(20).selectExpr("id as qid", "vec")
     oq = float(n) / 10
-    a = idx.search(
-        queries, 10, n_probe=4, n_probe_fine=2, overquery=oq,
-        strategy="distributed",
-    )
-    b = idx.search(
-        queries, 10, n_probe=4, n_probe_fine=2, overquery=oq,
-        strategy="broadcast",
-    )
-    ga = [(r["qid"], r["rank"], r["id"], round(r["score"], 9)) for r in a.collect()]
-    gb = [(r["qid"], r["rank"], r["id"], round(r["score"], 9)) for r in b.collect()]
-    assert len(ga) > 0
-    assert sorted(ga) == sorted(gb)
 
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        a.explain("formatted")
-    plan = buf.getvalue()
-    assert "In(sub_id" in plan, "fine-sub filter not pushed into the parquet scan"
+    def run(strategy, npf):
+        tel = SearchTelemetry(spark)
+        res = idx.search(
+            queries, 10, n_probe=4, n_probe_fine=npf, overquery=oq,
+            strategy=strategy, telemetry=tel,
+        )
+        rows = sorted(
+            (r["qid"], r["rank"], r["id"], float(r["score"]).hex())
+            for r in res.collect()
+        )
+        return rows, tel.visited_rows
+
+    ga, visited = run("distributed", 2)
+    gb, visited_bcast = run("broadcast", 2)
+    assert len(ga) > 0
+    assert ga == gb
+    _, visited_unfiltered = run("distributed", None)
+    assert visited == visited_bcast < visited_unfiltered
 
 
 def test_fine_pruning_uncapped_query_side(spark, fine_setup):
@@ -351,46 +374,31 @@ def test_fine_pruning_uncapped_query_side(spark, fine_setup):
 
 def test_mhint_fine_batch_prunes_to_probed_partitions(spark, fine_setup):
     """r9 ADVICE item 1: an m_hint batch that derives the fine-sub filter
-    has its assignment persisted anyway, so the static part_id pruning
-    must use the EXACT probed set from the checkpoint — not the m_hint
-    superset (all non-empty partitions). Clustered queries with a small
-    n_probe probe a strict subset of partitions; the plan's part_id
-    filter must shrink to it, and results must stay bit-identical to the
-    broadcast route."""
-    import contextlib
-    import io
-    import re
-
+    must read only the partitions its queries probe, through the same
+    fine-sub filter as the broadcast route — not the m_hint superset (all
+    non-empty partitions). Clustered queries with a small n_probe probe a
+    strict subset of partitions; the distributed route must visit exactly
+    the broadcast route's rows (which reads only probed partitions), and
+    results must stay bit-identical to it."""
     corpus, idx, n = fine_setup
     # 5 queries x n_probe=2 -> at most 10 probed partitions of 16, so
     # exact pruning is distinguishable from the all-non-empty superset
     queries = corpus.orderBy("id").limit(5).selectExpr("id as qid", "vec")
     oq = float(n) / 10
-    a = idx.search(
-        queries, 10, n_probe=2, n_probe_fine=2, overquery=oq,
-        strategy="distributed", m_hint=5,
-    )
-    b = idx.search(
-        queries, 10, n_probe=2, n_probe_fine=2, overquery=oq,
-        strategy="broadcast",
-    )
-    ga = [(r["qid"], r["rank"], r["id"], round(r["score"], 9)) for r in a.collect()]
-    gb = [(r["qid"], r["rank"], r["id"], round(r["score"], 9)) for r in b.collect()]
-    assert len(ga) > 0
-    assert sorted(ga) == sorted(gb)
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        a.explain("formatted")
-    plan = buf.getvalue()
-    m = re.search(r"part_id(?:#\d+)? INSET ((?:\d+, )*\d+)", plan) or re.search(
-        r"part_id(?:#\d+)? IN \(([^)]*)\)", plan
-    )
-    assert m, f"static part_id pruning filter missing from the plan:\n{plan[:2000]}"
-    probed = {int(x) for x in m.group(1).split(",")}
-    assert len(probed) <= 10, (
-        f"m_hint+fine batch did not prune to the probed set: {sorted(probed)}"
-    )
+    got = {}
+    for strategy, m_hint in (("distributed", 5), ("broadcast", None)):
+        tel = SearchTelemetry(spark)
+        res = idx.search(
+            queries, 10, n_probe=2, n_probe_fine=2, overquery=oq,
+            strategy=strategy, m_hint=m_hint, telemetry=tel,
+        )
+        rows = sorted(
+            (r["qid"], r["rank"], r["id"], float(r["score"]).hex())
+            for r in res.collect()
+        )
+        got[strategy] = (rows, tel.visited_rows)
+    assert len(got["distributed"][0]) > 0
+    assert got["distributed"] == got["broadcast"]
 
 
 def test_adaptive_probe_ratio_parity_and_trim(spark, big_setup):

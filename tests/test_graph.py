@@ -815,7 +815,7 @@ def test_sorted_groups_joins_runs_across_frames():
     group split across batches comes out whole, once, in key order."""
     import pandas as pd
 
-    from jvector_spark.operators.graph import _sorted_groups
+    from jvector_spark.operators.index import _sorted_groups
 
     frames = [
         pd.DataFrame({"part_id": [1, 1, 2], "_gs": [0, 1, 1], "qid": [10, 11, 12]}),

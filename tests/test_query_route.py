@@ -162,7 +162,9 @@ def test_job_budgets(spark, setup):
     the three other blocked routes (the per-call fixed cost the engine
     pays whatever the data size). The blocked budgets catch a plan that
     broadcast-joins a local table: that costs a job. A point graph search
-    is one stage of min(defaultParallelism, distinct qids) tasks."""
+    is one stage of min(defaultParallelism, distinct qids) tasks, and no
+    stage of a distributed IVF search runs more tasks than there are
+    cores."""
     corpus, idx, pq, codes, queries = setup
     # a segment's DataFrame is read once per loaded index (schema
     # inference + directory listing); the budgets are per search call
@@ -231,6 +233,13 @@ def test_job_budgets(spark, setup):
         spark,
         lambda: idx.search_graph(queries, K, n_probe=4, ef_search=16).collect(),
     ) == [min(par, M)]
+    # the distributed routes' probe exchange runs one task per core at
+    # most (its groups are the index's 8 partitions), not one per group
+    for search in (
+        lambda: idx.search(queries, K, n_probe=4, strategy="distributed"),
+        lambda: idx.threshold_search(queries, T, strategy="distributed"),
+    ):
+        assert max(stage_tasks(spark, lambda: search().collect())) <= par
 
 
 def test_segment_data_read_once(spark, setup):
